@@ -14,8 +14,29 @@ import org.apache.spark.sql.SparkSession
   * coalescing of over-partitioned shuffles, and skew-join splitting for
   * the hot keys every real corpus has. UTC session time zone keeps
   * event-time semantics engine-independent (and oracle-comparable).
+  *
+  * `file://` goes through graft's own local file system
+  * ([[graft.util.LocalFs]], installed by [[LocalFsConf]]). Without
+  * Hadoop's native library the stock one forks a `chmod` for every
+  * file, `.crc` sidecar and directory it writes, an `ls -ld` for every
+  * status whose permissions are read, and a `readlink` per file of a
+  * streaming checkpoint commit; graft's does the same in-process. The
+  * rest is the stock code: `.crc` checksums are written and verified
+  * on read as before, the on-disk layout and every output byte are the
+  * same, and the permission bits are the ones the stock `chmod` sets
+  * (umask included).
   */
 object GraftSession {
+
+  /** Hadoop settings that route `file://` through [[graft.util.LocalFs]],
+    * for both the `FileSystem` and the `FileContext` API. Hadoop caches
+    * one `FileSystem` per scheme and user, not per configuration, so
+    * they take effect only if no stock `file://` instance was cached
+    * before the session was built; [[create]] warns when one was.
+    */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.util.LocalFs.Checked].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.util.LocalFs.Context].getName)
 
   def builder(master: String = s"local[$defaultCpus]"): SparkSession.Builder =
     SparkSession.builder()
@@ -31,6 +52,7 @@ object GraftSession {
       // elsewhere; a no-op for micros/millis parquet)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFsConf)
 
   /** Core count for local mode: SPARK_GRAFT_CPUS env, else 32 (the
     * driver contract's `local[32]`).
@@ -41,6 +63,23 @@ object GraftSession {
   def create(master: String = s"local[$defaultCpus]"): SparkSession = {
     val spark = builder(master).getOrCreate()
     graft.functions.GraftFunctions.register(spark)
+    warnIfStockLocalFs(spark)
     spark
+  }
+
+  /** One WARN line when `file://` does not resolve to graft's file
+    * system in this session: a stock instance cached before the session
+    * was built wins over [[LocalFsConf]], and every write then forks
+    * again. Returns whether it warned.
+    */
+  def warnIfStockLocalFs(spark: SparkSession): Boolean = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val stock = !fs.isInstanceOf[graft.util.LocalFs.Checked]
+    if (stock) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"file:// resolves to the cached ${fs.getClass.getName}, not graft's " +
+        s"${classOf[graft.util.LocalFs.Checked].getName}: a stock instance was cached " +
+        "before this session was built, so local writes fork a chmod per file")
+    stock
   }
 }

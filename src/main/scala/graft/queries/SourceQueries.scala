@@ -309,13 +309,16 @@ object SourceQueries {
   def bucketJoin(s: SparkSession, dir: String): DataFrame = {
     val t = Tables(s, dir)
     val warehouse = graft.util.Staging.dir(s, "bucket_warehouse")
-    // bucket count derived from the LARGER side's scan size (plan
-    // statistics — metadata, no job), not a constant: ~256 MB of fact
-    // table per bucket, floored at 8. Both sides MUST share the count
-    // or the join shuffles; at test scale this resolves to 8, at 100 TB
-    // to ~400k-per-100TB — a bucket file per core-day, not a 8-bucket
-    // bottleneck.
-    val factBytes = t.lineitem.queryExecution.optimizedPlan.stats.sizeInBytes
+    val orders = t.orders.select(col("o_orderkey"), col("o_orderpriority"))
+    val lineitem = t.lineitem.select(col("l_orderkey"), col("l_extendedprice"))
+    // bucket count derived from the LARGER side's written size (plan
+    // statistics of the projected frame — metadata, no job; the
+    // unpruned table would size buckets for columns never written), not
+    // a constant: ~256 MB of fact table per bucket, floored at 8. Both
+    // sides MUST share the count or the join shuffles; at test scale
+    // this resolves to 8, at 100 TB to ~400k-per-100TB — a bucket file
+    // per core-day, not a 8-bucket bottleneck.
+    val factBytes = lineitem.queryExecution.optimizedPlan.stats.sizeInBytes
     val buckets = (factBytes / (256L << 20)).toLong.max(8L)
       .min(Int.MaxValue.toLong).toInt
     def writeBucketed(df: DataFrame, name: String, key: String): Unit = {
@@ -327,10 +330,8 @@ object SourceQueries {
     // disjoint outputs — overlap them (guide §2.6 / graft.util.Par):
     // each write's tail waves otherwise leave the cluster idle
     graft.util.Par.both(
-      writeBucketed(t.orders.select(col("o_orderkey"), col("o_orderpriority")),
-        "graft_bk_orders", "o_orderkey"),
-      writeBucketed(t.lineitem.select(col("l_orderkey"), col("l_extendedprice")),
-        "graft_bk_lineitem", "l_orderkey"))
+      writeBucketed(orders, "graft_bk_orders", "o_orderkey"),
+      writeBucketed(lineitem, "graft_bk_lineitem", "l_orderkey"))
     s.table("graft_bk_orders")
       .hint("merge")
       .join(s.table("graft_bk_lineitem"),
@@ -506,8 +507,10 @@ object SourceQueries {
     // zeroed prices; good months arrive clean. ONE filtered pass (row
     // kept unless it is an odd key of a bad month; price zeroed where
     // bad) — the union-of-two-filters spelling this replaces scanned
-    // orders twice for the same rows
-    orders.filter(!isBad || col("o_orderkey") % 2 === 0)
+    // orders twice for the same rows. NULL-explicit: both union arms
+    // dropped a NULL-date row, and `!isBad || even` alone would keep
+    // an even-key one (NULL OR true is true)
+    orders.filter(isBad.isNotNull && (!isBad || col("o_orderkey") % 2 === 0))
       .withColumn("o_totalprice",
         when(isBad, lit(0.0)).otherwise(col("o_totalprice")))
       .repartition(col("o_month"))

@@ -149,6 +149,24 @@ class SourceSpec extends SparkSpec {
       .foreach(r => assert(r.getDouble(2) > 0.0))
   }
 
+  test("source_backfill: a NULL order date drops out of the publish, as in " +
+    "the two-filter union the fused filter replaced") {
+    import org.apache.spark.sql.functions._
+    val orders = graft.util.Tables(spark, sf).orders
+    val maxKey = orders.agg(max(col("o_orderkey"))).head().getAs[Number](0).longValue
+    // one extra order: an even key (the fused filter keeps even keys)
+    // with a NULL date
+    val extra = orders.limit(1)
+      .withColumn("o_orderkey",
+        lit((maxKey / 2 + 1) * 2).cast(orders.schema("o_orderkey").dataType))
+      .withColumn("o_orderdate", lit(null).cast(orders.schema("o_orderdate").dataType))
+    val dir = graft.util.Staging.dir(spark, "backfill_null_date")
+    orders.unionByName(extra).write.parquet(s"$dir/orders.parquet")
+    val got = SourceQueries.sourceBackfill(spark, dir).collect()
+    assert(!got.exists(_.isNullAt(0)))
+    assert(got.toSeq === SourceQueries.sourceBackfill(spark, sf).collect().toSeq)
+  }
+
   test("dynamic partition overwrite replaces ONLY the incoming partitions; " +
     "untouched partition files survive byte-identical") {
     import org.apache.spark.sql.functions._

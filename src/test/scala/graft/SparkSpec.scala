@@ -11,6 +11,7 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.LocalFsConf)
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
 }

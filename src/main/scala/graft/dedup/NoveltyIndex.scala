@@ -12,7 +12,7 @@ import graft.util.Epochs
   * that index: the corpus's distinct 60-bit gram hashes (the SAME
   * tokenize → word-n-gram → md5-prefix arithmetic the full recompute
   * uses — [[gramHashes]] is the single definition both ride), written
-  * once, bucketed by hash prefix, and maintained under the
+  * once, bucketed by hash, and maintained under the
   * [[graft.util.Epochs]] snapshot/lease machinery exactly like
   * [[MinHashIndex]]/[[SnapshotIndex]]:
   *
@@ -27,6 +27,22 @@ import graft.util.Epochs
   *    [[Epochs.rewriteToNextChecked]] — the checked-rewrite fence);
   *    readers pin an epoch and are never disturbed.
   *
+  * Layout of one epoch: `grams/b=<i>/` holds the buckets `init` and
+  * `compact` write — `b = pmod(gh, nb)` with nb = [[filesFor]] of the
+  * distinct gram count, one file per bucket; `delta/` holds the
+  * appends, flat, one file per [[GramsPerFile]] novel grams (one file
+  * for a daily crawl); `bloom/` holds the sketch rows. A read is
+  * buckets ∪ delta. Appends stay out of the bucket directories so a
+  * crawl batch adds one file, not one per bucket it touches (every
+  * later probe opens every file), and the bucket count follows the
+  * data so that an index under 32 buckets (~128 M grams) sits below
+  * Spark's parallel-discovery threshold and is listed on the driver
+  * instead of by a listing job per load. Larger indexes still get the
+  * parallel listing, where the scan dwarfs it. An epoch written with a
+  * different bucket count (the old fixed 64, appended files inside the
+  * buckets) reads, appends and compacts through the same paths — the
+  * bucket column is never a join key.
+  *
   * Physical-duplicate contract (the snapshot indexes' retry contract,
   * restated for a SET): the logical content is the distinct gram set;
   * files may transiently carry duplicates (a crash-retried append, or
@@ -36,8 +52,8 @@ import graft.util.Epochs
   * append-≡-rebuild and compaction-invariance pins live in DedupSpec.
   *
   * At 100 TB the index is gram-scale (the honest floor for corpus-level
-  * novelty) but the DAILY job touches it through one bucketed
-  * equi-join — the corpus text is never re-read. The CHEAPER tier on
+  * novelty) but the DAILY job touches it through one anti-join on the
+  * 8-byte gh — the corpus text is never re-read. The CHEAPER tier on
   * top of that join is the epoch's **bloom membership sketch** over
   * the same gh column (dedup_bloom's [[graft.functions.BloomFilter]]
   * machinery), persisted beside the gram files and OR-merged on load:
@@ -59,20 +75,29 @@ import graft.util.Epochs
   */
 object NoveltyIndex {
 
-  /** Hash-prefix bucket count for the persisted layout: one directory
-    * per bucket, so compaction targets one file per bucket and a
-    * future bucket-wise join can co-locate without an extra shuffle.
+  /** Upper bound on the bucket count (one directory per bucket, one
+    * file each after `init`/`compact`) and on the files one append
+    * writes. The actual bucket count is [[filesFor]] of the epoch's
+    * distinct gram count, so only an index past ~264 M grams reaches
+    * it; past 32 buckets Spark lists the grams with a parallel job.
     */
   val NBuckets = 64
 
-  /** Target gh rows per write task for a fused-path append (~32 MB of
-    * longs before encoding): the write-task count derives from the
-    * probe's own novel-gram count, so a small daily crawl writes one
-    * file wave instead of a full shuffle-partition wave of near-empty
-    * parquet writers, and a huge one still caps at one task per
-    * bucket.
+  /** Target gh rows per written file (~32 MB of longs before
+    * encoding) — the one constant that sets file size, for buckets
+    * and appended delta files alike (see [[filesFor]]).
     */
-  val AppendGramsPerTask = 4L << 20
+  val GramsPerFile = 4L << 20
+
+  /** Files that `grams` distinct grams are written as:
+    * ceil(grams / [[GramsPerFile]]) clamped to [1, [[NBuckets]]]. It
+    * is the bucket count at `init`/`compact` and the write-task count
+    * of an append, so a daily crawl appends one file and a small
+    * index has one bucket.
+    */
+  private[graft] def filesFor(grams: Long): Int =
+    math.max(1L, math.min(NBuckets.toLong,
+      (grams + GramsPerFile - 1) / GramsPerFile)).toInt
 
   /** False-positive rate the epoch blooms are sized for. The filter
     * for n grams costs ~1.2 bytes/gram at 0.005 — a 1e9-gram corpus
@@ -113,34 +138,48 @@ object NoveltyIndex {
   private def gh(g: org.apache.spark.sql.Column) =
     conv(substring(md5(g), 1, 15), 16, 10).cast("long")
 
-  private def bucketed(grams: DataFrame): DataFrame =
-    grams.withColumn("b", pmod(col("gh"), lit(NBuckets)))
-
   private def gramsPath(epochDir: String) = s"$epochDir/grams"
+
+  private def deltaPath(epochDir: String) = s"$epochDir/delta"
 
   private def bloomPath(epochDir: String) = s"$epochDir/bloom"
 
-  /** The epoch's gram set, empty-tree-safe: an epoch whose write left
-    * no data files (empty corpus) reads as the EMPTY gram set — the
-    * semantically right answer ("nothing has been seen") — instead of
-    * dying in parquet schema inference on a _SUCCESS-only directory.
+  /** The epoch's gram set, buckets ∪ delta, empty-tree-safe: a part
+    * whose writes left no data files (empty corpus, no append yet) is
+    * left out, and an epoch with neither reads as the EMPTY gram set —
+    * the semantically right answer ("nothing has been seen") — instead
+    * of dying in parquet schema inference on a _SUCCESS-only directory.
     */
   private def epochGrams(spark: SparkSession, epochDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(gramsPath(epochDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(epochDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // globStatus returns null when no path component matches at all
-    if (Option(fs.globStatus(new org.apache.hadoop.fs.Path(p, "*/*.parquet")))
-        .forall(_.isEmpty))
-      spark.range(0).select(col("id").as("gh"))
-    else
-      // schema pinned (gh data column + b partition dir): the layout is
-      // this object's own, so inference would re-read a footer per load
-      // for a schema that never changes — the streaming loop loads the
-      // epoch once per batch, and at corpus scale inference is an extra
-      // driver-side footer read on every probe
+    def hasFiles(glob: String) =
+      Option(fs.globStatus(new org.apache.hadoop.fs.Path(glob)))
+        .exists(_.nonEmpty)
+    // schemas pinned (gh data column, + the b partition dir for the
+    // buckets): the layout is this object's own, so inference would
+    // re-read a footer per load for a schema that never changes — the
+    // streaming loop loads the epoch once per batch, and at corpus
+    // scale inference is an extra driver-side footer read on every probe
+    val buckets = Option.when(hasFiles(s"${gramsPath(epochDir)}/*/*.parquet"))(
       spark.read.schema("gh BIGINT, b INT").parquet(gramsPath(epochDir))
-        .select(col("gh"))
+        .select(col("gh")))
+    val delta = Option.when(hasFiles(s"${deltaPath(epochDir)}/*.parquet"))(
+      spark.read.schema("gh BIGINT").parquet(deltaPath(epochDir)))
+    (buckets ++ delta).reduceOption(_ union _)
+      .getOrElse(spark.range(0).select(col("id").as("gh")))
   }
+
+  /** Append a distinct novel gram set of at most `n` grams to the
+    * epoch's `delta/` as [[filesFor]]`(n)` files — one for a daily
+    * crawl. Nothing is written for n = 0: an empty unpartitioned write
+    * would still leave a schema-only file behind.
+    */
+  private def appendDelta(grams: DataFrame, n: Long, epochDir: String): Unit =
+    if (n > 0L)
+      grams.coalesce(filesFor(n))
+        .write.mode("append").parquet(deltaPath(epochDir))
 
   /** One bloom row (serialized filter, header-carrying) over `grams`'
     * gh column, appended to the epoch's bloom table. gh is already a
@@ -156,24 +195,44 @@ object NoveltyIndex {
       .write.mode("append").parquet(bloomPath(epochDir))
   }
 
-  /** Build the epoch's sketch fresh from its written gram files —
-    * init's and compact's path (right-sized: n is the actual distinct
-    * gram count, read from the parquet footers). Degenerate-corpus
-    * guards: an epoch with NO gram files (empty corpus — the write
-    * left only _SUCCESS) stays sketchless (probe's documented
+  /** Build the epoch's sketch fresh over its pinned distinct gram set
+    * of `n0` grams — init's and compact's path (right-sized: n0 is the
+    * actual distinct gram count). Degenerate-corpus guards: an empty
+    * gram set (empty corpus) stays sketchless (probe's documented
     * pre-sketch fallback), and the sizing n is floored at 64 keys so
     * optimalNumHashes never exceeds [[graft.functions.BloomFilterAgg]]'s
     * k ≤ 32 bound on a near-empty gram set (n = 1 would size k = 44;
     * flooring only over-sizes the filter, which tightens fpp).
     */
-  private def writeFreshBloom(spark: SparkSession, epochDir: String): Unit = {
-    val grams = epochGrams(spark, epochDir)
-    val n0 = grams.count()
+  private def writeFreshBloom(spark: SparkSession, epochDir: String,
+      grams: DataFrame, n0: Long): Unit = {
     if (n0 == 0L) return
     val n = math.max(64L, n0)
     val m = graft.functions.BloomUtil.optimalNumBits(n, BloomFpp)
     val k = math.min(32, graft.functions.BloomUtil.optimalNumHashes(m, n))
     appendBloomRow(spark, epochDir, grams, m, k)
+  }
+
+  /** Write a fresh epoch (init's and compact's path): the distinct gram
+    * set is pinned and counted ONCE, and the buckets (sized from the
+    * count) and the right-sized sketch both read the pin — no re-read
+    * of the files just written.
+    */
+  private def writeEpoch(spark: SparkSession, distinctGrams: DataFrame,
+      epochDir: String): Unit = {
+    val grams = distinctGrams.localCheckpoint(true)
+    try {
+      val n = grams.count()
+      val nb = filesFor(n)
+      // co-locate each bucket before the partitioned write so it lands
+      // as ONE file (without the exchange every upstream task writes
+      // into every bucket dir)
+      grams.withColumn("b", pmod(col("gh"), lit(nb)))
+        .repartition(nb, col("b"))
+        .write.mode("overwrite").partitionBy("b")
+        .parquet(gramsPath(epochDir))
+      writeFreshBloom(spark, epochDir, grams, n)
+    } finally graft.util.Caches.release(grams)
   }
 
   /** The epoch's membership sketch: all bloom rows OR-merged (an
@@ -209,22 +268,16 @@ object NoveltyIndex {
     }
   }
 
-  /** Index a corpus: distinct grams, bucketed, published as epoch 0
-    * (with the epoch's membership sketch built from the written
-    * files, BEFORE publish — an unpublished torn init is invisible).
+  /** Index a corpus: distinct grams pinned and counted once, written
+    * as [[filesFor]]`(count)` buckets of one file each (the compact
+    * layout, from birth), with the epoch's membership sketch built
+    * from the same pin, and published as epoch 0 — sketch BEFORE
+    * publish, so an unpublished torn init is invisible.
     */
   def init(spark: SparkSession, docs: DataFrame, dir: String,
       textCol: String, n: Int): Unit = {
-    val epochDir = Epochs.epochPath(dir, 0L)
-    // co-locate each bucket before the partitioned write (the compact
-    // layout, from birth): without this every distinct-exchange task
-    // writes into every bucket dir — tasks × NBuckets small files,
-    // and every later probe/append lists and opens all of them
-    bucketed(gramHashes(docs, textCol, n).distinct())
-      .repartition(col("b"))
-      .write.mode("overwrite").partitionBy("b")
-      .parquet(gramsPath(epochDir))
-    writeFreshBloom(spark, epochDir)
+    writeEpoch(spark, gramHashes(docs, textCol, n).distinct(),
+      Epochs.epochPath(dir, 0L))
     Epochs.publish(spark, dir, 0L)
   }
 
@@ -347,9 +400,10 @@ object NoveltyIndex {
     * batch's frames drop) and every consumer reads the pinned copy:
     * the probe rollups, the admit's bloom row, and the admit's gram
     * files. Output rows and LOGICAL on-disk state are identical to
-    * `probe()` followed by `append()` (file sizing differs — the write
-    * task count is derived from the novel count instead of the shuffle
-    * default; every read path is layout-insensitive):
+    * `probe()` followed by `append()` (both write their novel set to
+    * `delta/` as [[filesFor]] of its count; here the count is the
+    * probe rollup's, an upper bound, so file sizing may differ — every
+    * read path is layout-insensitive):
     *
     *  - the gh set admit writes IS `distinct gh` of the probe's novel
     *    (source, gh) pairs — same anti-join, same epoch;
@@ -431,21 +485,12 @@ object NoveltyIndex {
         appendBloomRow(spark, epochDir, novelG.select(col("gh")),
           words.length * 64, k)
       }
-      // write-task count derived from the DATA (the probe rollup already
-      // counted the novel grams — free): ~[[AppendGramsPerTask]] gh rows
-      // per task, capped at one task per bucket. A fixed
-      // shuffle-partition count here costs a daily-crawl append a full
-      // task wave of near-empty parquet writers at small crawls and
-      // still bottlenecks at NBuckets distinct keys at huge ones —
-      // deriving from the count is right at every scale.
-      val novelUB = rows.iterator.map(_.getLong(2)).sum
-      val nWrite = math.max(1L,
-        math.min(NBuckets.toLong,
-          (novelUB + AppendGramsPerTask - 1) / AppendGramsPerTask)).toInt
-      bucketed(novelGh)
-        .repartition(nWrite, col("b"))
-        .write.mode("append").partitionBy("b")
-        .parquet(gramsPath(epochDir))
+      // delta file count derived from the DATA (the probe rollup already
+      // counted the novel grams — free; Σ per-source counts bounds the
+      // distinct gh count from above): a daily crawl appends ONE file,
+      // where a fixed shuffle-partition count would write a task wave
+      // of near-empty parquet files
+      appendDelta(novelGh, rows.iterator.map(_.getLong(2)).sum, epochDir)
       Epochs.awaitNoMaintenance(spark, snapshot.dir)
       val now = Epochs.current(spark, snapshot.dir)
       if (now != snapshot.epoch)
@@ -457,7 +502,9 @@ object NoveltyIndex {
   }
 
   /** Admit a crawl: append its NOVEL grams (vs the current epoch) into
-    * the current epoch. Runs the appenders' half of the maintenance
+    * the current epoch's `delta/` — bucket files are never touched, so
+    * an append adds [[filesFor]] of its novel count (one file for a
+    * daily crawl). Runs the appenders' half of the maintenance
     * fence verbatim ([[Epochs.awaitNoMaintenance]] — write, wait out
     * any in-flight lease, re-read the epoch, re-append on advance):
     * a compaction that raced this append either captured the files in
@@ -480,48 +527,47 @@ object NoveltyIndex {
     while (!stable) {
       val epochDir = Epochs.epochPath(dir, e)
       val idx = epochGrams(spark, epochDir)
+      // pinned (crawl-scale) and counted: the count sizes the delta
+      // write, and the sketch row and the gram files both read the pin
+      // instead of re-deriving the novel set from the raw text
       val novel = gramHashes(newDocs, textCol, n).distinct()
         .join(idx, Seq("gh"), "left_anti")
-      // sketch row FIRST (same geometry as the epoch's existing rows),
-      // gram files second: a crash between the two leaves extra bloom
-      // bits (bounded fpp drift), never a file gram the sketch denies —
-      // the one ordering under which prefilter ≡ plain survives a torn
-      // append. The novel set is consumed twice (crawl-scale; the probe
-      // doc's small-side-twice trade, restated).
-      loadBloom(spark, dir, e).foreach { bf =>
-        val (k, words) = graft.functions.BloomUtil.deserializeWords(bf)
-        appendBloomRow(spark, epochDir, novel, words.length * 64, k)
-      }
-      bucketed(novel)
-        .repartition(col("b"))
-        .write.mode("append").partitionBy("b")
-        .parquet(gramsPath(epochDir))
+        .localCheckpoint(true)
+      try {
+        val nNovel = novel.count()
+        // sketch row FIRST (same geometry as the epoch's existing rows),
+        // gram files second: a crash between the two leaves extra bloom
+        // bits (bounded fpp drift), never a file gram the sketch denies —
+        // the one ordering under which prefilter ≡ plain survives a torn
+        // append
+        loadBloom(spark, dir, e).foreach { bf =>
+          val (k, words) = graft.functions.BloomUtil.deserializeWords(bf)
+          appendBloomRow(spark, epochDir, novel, words.length * 64, k)
+        }
+        appendDelta(novel, nNovel, epochDir)
+      } finally graft.util.Caches.release(novel)
       Epochs.awaitNoMaintenance(spark, dir)
       val now = Epochs.current(spark, dir)
       if (now == e) stable = true else e = now
     }
   }
 
-  /** Rewrite the current epoch's accreted files into epoch N+1 —
-    * re-distincted (the physical-duplicate contract's restore point)
-    * and one file per bucket directory — and publish it under the
+  /** Rewrite the current epoch's buckets ∪ delta into epoch N+1 —
+    * re-distincted (the physical-duplicate contract's restore point),
+    * pinned and counted once, re-bucketed to [[filesFor]]`(count)`
+    * buckets of one file each, no `delta/` — and publish it under the
     * maintenance lease + checked-rewrite fence. Probe results are
     * byte-identical before/after (spec-pinned); only the layout
-    * changes. Returns the published epoch.
+    * changes. The sketch is right-sized from the same pin: appends only
+    * ever accrete rows at epoch-birth geometry, so compaction is where
+    * fpp drift resets (and where a pre-sketch epoch gains its bloom).
+    * Returns the published epoch.
     */
   def compact(spark: SparkSession, dir: String,
       retainEpochs: Int = 1): Long =
     Epochs.withMaintenanceLease(spark, dir) {
       Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        bucketed(epochGrams(spark, cur).distinct())
-          .repartition(col("b"))
-          .write.mode("overwrite").partitionBy("b")
-          .parquet(gramsPath(next))
-        // right-size the sketch from the rewritten files: appends only
-        // ever accrete rows at epoch-birth geometry, so compaction is
-        // where fpp drift resets (and where a pre-sketch epoch gains
-        // its bloom)
-        writeFreshBloom(spark, next)
+        writeEpoch(spark, epochGrams(spark, cur).distinct(), next)
       }
     }
 }

@@ -1694,7 +1694,9 @@ object CurationQueries {
     * base resolves to the full corpus at every shipped SF). The face
     * then reads the SAVED epoch-0 gram table back and reports one
     * summary row; the gram-hash XOR makes the hash sensitive to WHICH
-    * grams were indexed, and n_buckets pins the partitioned layout.
+    * grams were indexed, and n_buckets counts the 64 hash residues the
+    * grams cover (a property of the gram set, not of the on-disk bucket
+    * count, which follows the gram count).
     */
   def qNoveltyIndexBuild(s: SparkSession, dir: String): DataFrame = {
     val d = graft.util.Staging.dir(s, "novelty_index_build")

@@ -936,13 +936,10 @@ object Streams {
         // scan-parallelism floor for the batch's gram pass: a memory /
         // file-source micro-batch arrives in as few as ONE partition,
         // and the tokenize → n-gram → md5 derivation below the distinct
-        // exchange then runs on one core (the Fanout story, applied by
-        // hand — foreachBatch frames are exchange-free LogicalRDDs, so
-        // the split-count probe is job-free). No-op when the batch
-        // already arrives wide.
-        val p = spark.sparkContext.defaultParallelism
-        val fanned =
-          if (batch.rdd.getNumPartitions < p) batch.repartition(p) else batch
+        // exchange would then run on one core. foreachBatch frames are
+        // LogicalRDDs, so Fanout's split-count probe is job-free; no-op
+        // when the batch already arrives wide.
+        val fanned = graft.util.Fanout.ensure(batch)
         // fused probe+admit: one shared gram pass per batch (the
         // unfused pair re-derives the batch's gram set up to 6× and
         // re-reads the epoch's files once more for the append's

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.dedup.{BloomMembership, Dedup, MinHashLSH, NgramJaccard, SimHash}
 import graft.queries.DedupQueries
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
 
@@ -990,6 +991,183 @@ class DedupSpec extends SparkSpec {
         "source", "text", 3)
     }
     assert(noSketch.getMessage.contains("no membership sketch"))
+  }
+
+  /** Relative path → bytes of every parquet file under `root`. */
+  private def parquetBytes(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    if (!java.nio.file.Files.exists(base)) Map.empty
+    else {
+      val s = java.nio.file.Files.walk(base)
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq)
+        .toMap
+      finally s.close()
+    }
+  }
+
+  /** Bucket directory → parquet file count under an epoch's grams/. */
+  private def bucketFileCounts(epochDir: String): Map[String, Int] =
+    new java.io.File(s"$epochDir/grams").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("b="))
+      .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  /** q_crawl_novelty's full-recompute arithmetic: per-source novelty of
+    * `crawl` against every gram of `seen`.
+    */
+  private def recomputedNovelty(crawl: org.apache.spark.sql.DataFrame,
+      seen: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Long)] = {
+    import graft.dedup.NoveltyIndex
+    NoveltyIndex.sourceGramHashes(crawl, "source", "text", 3).distinct()
+      .join(NoveltyIndex.gramHashes(seen, "text", 3).distinct()
+        .withColumn("seen", lit(1)), Seq("gh"), "left")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_grams"),
+        sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
+      .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
+      .orderBy("source").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+  }
+
+  private def noveltyRows(rows: Iterable[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq.sortBy(_._1)
+
+  test("NoveltyIndex layout: each small append (fused and append()) adds " +
+      "exactly ONE delta/ file and leaves the bucket files byte-identical; " +
+      "compaction folds delta back into one file per bucket; the bucket " +
+      "count follows the gram count") {
+    import graft.dedup.NoveltyIndex
+    import NoveltyIndex.{GramsPerFile, NBuckets, filesFor}
+    assert(Seq(0L, 1L, GramsPerFile, GramsPerFile + 1, 1000000000L)
+      .map(filesFor) === Seq(1, 1, 1, 2, NBuckets))
+
+    val docs = util.Tables(spark, sf).documents
+    val old = docs.filter(col("doc_id") % 10 < 6)
+    val crawls = (6 to 9).map(m => docs.filter(col("doc_id") % 10 === m))
+    val dir = java.nio.file.Files.createTempDirectory("graft-nvlayout").toString
+    val e0 = s"$dir/epoch=0"
+    NoveltyIndex.init(spark, old, dir, "text", 3)
+    assert(bucketFileCounts(e0) === Map("b=0" -> 1),
+      "a test-scale index is one bucket of one file")
+    val buckets0 = parquetBytes(s"$e0/grams")
+
+    def probeRows(crawl: org.apache.spark.sql.DataFrame, pf: Boolean) =
+      noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, dir), crawl,
+        "source", "text", 3, prefilter = pf).collect())
+
+    var seen = old
+    crawls.zipWithIndex.foreach { case (crawl, i) =>
+      val want = recomputedNovelty(crawl, seen)
+      assert(want.exists(_._3 > 0L), s"crawl $i must plant novelty")
+      assert(probeRows(crawl, pf = false) === want)
+      assert(probeRows(crawl, pf = true) === want)
+      if (i % 2 == 0) {
+        val got = NoveltyIndex.probeAndAdmit(spark,
+          NoveltyIndex.load(spark, dir), crawl, "source", "text", 3,
+          prefilter = true)
+        assert(noveltyRows(got) === want)
+      } else NoveltyIndex.append(spark, crawl, dir, "text", 3)
+      seen = seen.unionByName(crawl)
+      assert(parquetBytes(s"$e0/grams") === buckets0,
+        s"append $i rewrote or added bucket files")
+      assert(parquetBytes(s"$e0/delta").size === i + 1,
+        s"append $i must add exactly one delta file")
+      // the next probe sees the admission: the crawl is fully seen
+      assert(probeRows(crawl, pf = true).forall(_._3 === 0L))
+    }
+    // every probe tier over buckets ∪ delta ≡ the full recompute
+    val all = docs.filter(col("doc_id") % 2 === 0)
+    assert(probeRows(all, pf = true) === recomputedNovelty(all, seen))
+    assert(probeRows(all, pf = false) === recomputedNovelty(all, seen))
+
+    def gramSet: Set[Long] = NoveltyIndex.load(spark, dir).grams
+      .distinct().collect().map(_.getLong(0)).toSet
+    val before = gramSet
+    assert(before === NoveltyIndex.gramHashes(docs, "text", 3)
+      .distinct().collect().map(_.getLong(0)).toSet)
+    assert(NoveltyIndex.compact(spark, dir) === 1L)
+    assert(parquetBytes(s"$dir/epoch=1/delta").isEmpty,
+      "compaction must fold delta/ into the buckets")
+    assert(filesFor(before.size.toLong) === 1)
+    assert(bucketFileCounts(s"$dir/epoch=1") === Map("b=0" -> 1))
+    assert(gramSet === before)
+    assert(probeRows(all, pf = true) === recomputedNovelty(all, seen))
+  }
+
+  test("NoveltyIndex: an epoch in the fixed-64-bucket layout (appends " +
+      "inside the buckets) loads, probes like a fresh index over the same " +
+      "grams, takes a fused append into delta/, and compacts to the " +
+      "data-sized layout with the identical gram set") {
+    import graft.dedup.NoveltyIndex
+    val docs = util.Tables(spark, sf).documents
+    val old = docs.filter(col("doc_id") % 4 === 0)
+    val admitted = docs.filter(col("doc_id") % 4 === 1)
+    val crawl = docs.filter(col("doc_id") % 4 === 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nv64").toString
+    val e0 = s"$dir/epoch=0"
+
+    // the old writer, by hand: init's 64 co-located buckets, one
+    // appended crawl's novel grams written per bucket, and one bloom row
+    // each at init geometry
+    val oldG = NoveltyIndex.gramHashes(old, "text", 3).distinct()
+    val novelG = NoveltyIndex.gramHashes(admitted, "text", 3).distinct()
+      .join(oldG, Seq("gh"), "left_anti")
+    def writeBuckets(g: org.apache.spark.sql.DataFrame, mode: String): Unit =
+      g.withColumn("b", pmod(col("gh"), lit(64))).repartition(col("b"))
+        .write.mode(mode).partitionBy("b").parquet(s"$e0/grams")
+    writeBuckets(oldG, "overwrite")
+    writeBuckets(novelG, "append")
+    graft.functions.GraftFunctions.register(spark)
+    val n = math.max(64L, oldG.count())
+    val m = graft.functions.BloomUtil.optimalNumBits(n, NoveltyIndex.BloomFpp)
+    val k = math.min(32, graft.functions.BloomUtil.optimalNumHashes(m, n))
+    Seq(oldG, novelG).foreach(g =>
+      g.agg(call_function("graft_bloom_agg", col("gh"), lit(m), lit(k)).as("bf"))
+        .coalesce(1).write.mode("append").parquet(s"$e0/bloom"))
+    util.Epochs.publish(spark, dir, 0L)
+    val oldLayout = bucketFileCounts(e0)
+    assert(oldLayout.size === 64 && oldLayout.values.exists(_ > 1),
+      "fixture must carry 64 buckets with appended files inside them")
+    val buckets0 = parquetBytes(s"$e0/grams")
+
+    def gramSet(d: String): Set[Long] = NoveltyIndex.load(spark, d).grams
+      .distinct().collect().map(_.getLong(0)).toSet
+    val want = NoveltyIndex.gramHashes(old.unionByName(admitted), "text", 3)
+      .distinct().collect().map(_.getLong(0)).toSet
+    assert(gramSet(dir) === want)
+    val snap = NoveltyIndex.load(spark, dir)
+    assert(snap.bloom.nonEmpty)
+
+    val freshDir = java.nio.file.Files.createTempDirectory("graft-nvfresh").toString
+    NoveltyIndex.init(spark, old.unionByName(admitted), freshDir, "text", 3)
+    def probeRows(d: String, pf: Boolean) =
+      noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, d), crawl,
+        "source", "text", 3, prefilter = pf).collect())
+    val freshRows = probeRows(freshDir, pf = false)
+    assert(freshRows.exists(_._3 > 0L), "fixture must plant novelty")
+    assert(probeRows(dir, pf = false) === freshRows)
+    assert(probeRows(dir, pf = true) === freshRows)
+
+    val admitRows = NoveltyIndex.probeAndAdmit(spark, snap, crawl,
+      "source", "text", 3, prefilter = true)
+    assert(noveltyRows(admitRows) === freshRows)
+    assert(parquetBytes(s"$e0/grams") === buckets0,
+      "the fused append must leave the old buckets untouched")
+    assert(parquetBytes(s"$e0/delta").size === 1)
+    val all = want ++ NoveltyIndex.gramHashes(crawl, "text", 3)
+      .distinct().collect().map(_.getLong(0))
+    assert(gramSet(dir) === all)
+
+    assert(NoveltyIndex.compact(spark, dir) === 1L)
+    assert(bucketFileCounts(s"$dir/epoch=1") === Map("b=0" -> 1))
+    assert(parquetBytes(s"$dir/epoch=1/delta").isEmpty)
+    assert(gramSet(dir) === all)
+    assert(probeRows(dir, pf = true).forall(_._3 === 0L))
   }
 
   test("dedup_inline: planted within-doc repeats collapse keep-first; " +

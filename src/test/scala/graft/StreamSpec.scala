@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streams
 import graft.streaming.Streams.Ev
 import graft.queries.StreamQueries
+import org.apache.spark.graftspec.TestBus
+import scala.jdk.CollectionConverters._
 
 class StreamSpec extends SparkSpec {
 
@@ -1229,6 +1231,67 @@ class StreamSpec extends SparkSpec {
     val rebuilt = NoveltyIndex.gramHashes(docs, "text", 3)
       .distinct().collect().map(_.getLong(0)).toSet
     assert(gramSet === rebuilt)
+  }
+
+  test("noveltyStream: loading a small index and running one batch " +
+      "launches no file-listing job, and the batch stays under 64 tasks") {
+    import graft.dedup.NoveltyIndex
+    import org.apache.spark.scheduler._
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = util.Tables(spark, sf).documents
+    val idxDir = java.nio.file.Files
+      .createTempDirectory("graft-nvlist-idx").toString
+    NoveltyIndex.init(spark, docs.filter(col("doc_id") % 2 === 0),
+      idxDir, "text", 3)
+
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    def listings(): Seq[String] = descriptions.asScala.toSeq
+      .filter(_.startsWith("Listing leaf files and directories"))
+    sc.addSparkListener(listener)
+    try {
+      // the listener sees listing jobs: a 40-directory table (past
+      // Spark's 32-path threshold) is listed by one
+      val wide = java.nio.file.Files.createTempDirectory("graft-nvlist-wide").toString
+      spark.range(40).select(col("id").as("v"), col("id").as("p"))
+        .write.mode("overwrite").partitionBy("p").parquet(wide)
+      TestBus.drain(sc); descriptions.clear()
+      spark.read.parquet(wide)
+      TestBus.drain(sc)
+      assert(listings().nonEmpty, "control: a 40-bucket read must list by job")
+
+      descriptions.clear()
+      NoveltyIndex.load(spark, idxDir).grams.count()
+      TestBus.drain(sc)
+      assert(listings().isEmpty, s"load listed by job: ${listings()}")
+
+      val feed = MemoryStream[(Long, String, String)]
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+      val q = Streams.noveltyStream(feed.toDS().toDF("doc_id", "source", "text"),
+          idxDir, "source", "text", 3) { (_, rs) => rs.foreach(rows.add) }
+      try {
+        val batch = docs.filter(col("doc_id") % 2 === 1)
+          .select(col("doc_id"), col("source"), col("text")).as[(Long, String, String)]
+          .collect().toSeq
+        TestBus.drain(sc); descriptions.clear(); tasks.set(0)
+        feed.addData(batch)
+        q.processAllAvailable()
+        TestBus.drain(sc)
+      } finally q.stop()
+      assert(!rows.isEmpty, "the batch must reach the sink")
+      assert(listings().isEmpty, s"the batch listed by job: ${listings()}")
+      assert(tasks.get() < 64, s"the batch ran ${tasks.get()} tasks")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("manifestStream: streamed batch partials merge to the EXACT " +

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Completeness inherits the same S-curve: a true pair at Jaccard 0.9
   * is missed with P ≈ 4·10⁻⁸.
   */
-object MinHashIndex {
+object MinHashIndex extends graft.util.Epochs.Layout {
 
   /** In-memory handle: `bands` and `shingles` for the indexed corpus. */
   final case class Index(bands: DataFrame, shingles: DataFrame)
@@ -112,68 +112,74 @@ object MinHashIndex {
     } finally graft.util.Caches.release(sh)
   }
 
-  /** Rewrite the saved index's accreted small files into right-sized
-    * ones: bands → one file per band directory (hash repartition on
-    * band_id, so each write task holds whole bands), shingles →
-    * ⌈rows∕rowsPerFile⌉ files. Staged into `<table>_tmp` then swapped
-    * via FileSystem rename — parquet can't overwrite a path it is
-    * lazily reading. Probe results are byte-identical before/after
-    * (spec-pinned); only the file layout changes.
+  /** A doc counts as held only when BOTH tables hold it: [[append]]
+    * commits the two tables in no order, so a rewrite can capture a
+    * batch's shingles without its bands, and the store must then
+    * re-append the batch (a shingle row twice is harmless; a missing
+    * band row loses the admission).
     */
-  def compactSaved(spark: SparkSession, dir: String,
-      rowsPerFile: Long = 1L << 20): Unit = {
-    swap(spark, dir, "bands") { (df, out) =>
-      df.repartition(col("band_id"))
-        .write.mode("overwrite").partitionBy("band_id").parquet(out)
-    }
-    swap(spark, dir, "shingles") { (df, out) =>
-      val nOut = math.max(1L, (df.count() + rowsPerFile - 1) / rowsPerFile).toInt
-      df.repartition(nOut).write.mode("overwrite").parquet(out)
-    }
+  def ids(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/bands").select("doc_id")
+      .intersect(spark.read.parquet(s"$dir/shingles").select("doc_id"))
+
+  /** Rows per shingle file after [[compactRewrite]]. */
+  private val ShinglesPerFile = 1L << 20
+
+  /** Bands → one file per band directory (hash repartition on band_id,
+    * so each write task holds whole bands); shingles →
+    * ⌈rows∕ShinglesPerFile⌉ files. The two table rewrites read
+    * disjoint inputs and write disjoint outputs, so they overlap
+    * ([[graft.util.Par]]). Probe results are byte-identical
+    * before/after (spec-pinned).
+    */
+  def compactRewrite(spark: SparkSession)(cur: String, next: String): Unit = {
+    val idx = load(spark, cur)
+    graft.util.Par.both(
+      idx.bands.repartition(col("band_id"))
+        .write.mode("overwrite").partitionBy("band_id")
+        .parquet(s"$next/bands"),
+      {
+        val nOut = math.max(1L,
+          (idx.shingles.count() + ShinglesPerFile - 1) / ShinglesPerFile).toInt
+        idx.shingles.repartition(nOut)
+          .write.mode("overwrite").parquet(s"$next/shingles")
+      })
+    ()
   }
 
-  /** Takedown maintenance (the governance path a training corpus must
-    * have: DMCA removals, right-to-be-forgotten, contaminated-source
-    * retractions): delete `ids` from the SAVED index so future probes
-    * can never match them. Both tables are rewritten minus the ids —
-    * the removal set ships as an in-list predicate pushed into the
-    * scan (takedown lists are KB-scale against a corpus-scale index;
-    * a lake-scale purge would swap in a broadcast anti-join) — through
-    * the same staged rename [[compactSaved]] uses. Idempotent: removing
-    * an absent id
-    * is a no-op. Note this scrubs the INDEX; scrubbing the exported
-    * corpus shards is the caller's parallel obligation (the
-    * export_manifest checksums change with it).
+  /** Takedown (DMCA removals, right-to-be-forgotten, contaminated-
+    * source retractions): both tables minus `ids`, the removal set
+    * shipped as an in-list predicate pushed into the scan (takedown
+    * lists are KB-scale against a corpus-scale index; a lake-scale
+    * purge would swap in a broadcast anti-join).
+    *
+    * NO repartition on the bands side (unlike compact, whose job IS
+    * re-layout): the band files are already clustered by band_id
+    * directory, so each scan task holds whole bands and the
+    * partitioned write lands ~1 file per (task, band) — a scan →
+    * pushed filter → write plan with zero exchanges, without
+    * shuffling the corpus-scale band table per takedown wave or
+    * bottlenecking the write at NumBands reducers. A takedown
+    * preserves the input layout; compact restores it.
     */
-  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    val drop = ids.toSet
-    swap(spark, dir, "bands") { (df, out) =>
-      // no repartition (SnapshotIndex.remove's note): the saved band
-      // files are clustered by band_id dir already, so the partitioned
-      // write preserves that layout without shuffling the whole band
-      // table per takedown — and without the NumBands-reducer
-      // bottleneck a hash repartition has at any corpus size
-      df.filter(!col("doc_id").isInCollection(drop))
-        .write.mode("overwrite").partitionBy("band_id").parquet(out)
-    }
-    swap(spark, dir, "shingles") { (df, out) =>
-      df.filter(!col("doc_id").isInCollection(drop))
-        .write.mode("overwrite").parquet(out)
-    }
+  def removeRewrite(spark: SparkSession, ids: Seq[Long])(
+      cur: String, next: String): Unit = {
+    val idx = load(spark, cur)
+    graft.util.Par.both(
+      idx.bands.filter(!col("doc_id").isInCollection(ids))
+        .write.mode("overwrite").partitionBy("band_id")
+        .parquet(s"$next/bands"),
+      idx.shingles.filter(!col("doc_id").isInCollection(ids))
+        .write.mode("overwrite").parquet(s"$next/shingles"))
+    ()
   }
 
-  /** Rewrite `<dir>/<table>` through `<dir>/<table>_tmp` + rename:
-    * parquet can't overwrite a path its own plan is lazily reading.
+  /** [[removeRewrite]] of the flat index saved at `dir`. This scrubs
+    * the INDEX; scrubbing exported corpus shards is the caller's
+    * parallel obligation.
     */
-  private def swap(spark: SparkSession, dir: String, table: String)(
-      rewrite: (DataFrame, String) => Unit): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/${table}_tmp")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rewrite(spark.read.parquet(cur.toString), tmp.toString)
-    fs.delete(cur, true)
-    require(fs.rename(tmp, cur), s"index rewrite: rename $tmp -> $cur failed")
-  }
+  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    graft.util.Epochs.rewriteInPlace(spark, dir)(removeRewrite(spark, ids))
 
   /** Near-duplicate pairs between a NEW batch and the indexed corpus:
     * (new_id, seen_id, jaccard ≥ tau), exact Jaccard verified on true

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Same completeness bound as [[SimHash.nearDuplicates]]: 4 blocks are
   * exhaustive for Hamming ≤ 3.
   */
-object SimHashIndex {
+object SimHashIndex extends graft.util.Epochs.Layout {
 
   final case class Index(blocks: DataFrame)
 
@@ -77,37 +77,31 @@ object SimHashIndex {
     blocksOf(SimHash.fingerprints(newDocs, idCol, textCol))
       .write.mode("append").partitionBy("block_id").parquet(s"$dir/blocks")
 
-  /** Rewrite accreted per-append files to one per block directory via
-    * the staged-swap pattern; probe results are byte-identical.
-    */
-  def compactSaved(spark: SparkSession, dir: String): Unit =
-    swap(spark, dir)(_.repartition(col("block_id")))
+  def ids(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/blocks").select("doc_id")
 
-  /** Takedown maintenance — MinHashIndex.removeSaved's twin for the
-    * fingerprint index: rewrite the block table minus `ids` via the
-    * same staged swap. Idempotent on absent ids.
+  /** Rewrite accreted per-append files to one per block directory;
+    * probe results are byte-identical.
     */
-  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    val drop = ids.toSet
-    swap(spark, dir)(df =>
-      df.filter(!col("doc_id").isInCollection(drop))
-        .repartition(col("block_id")))
-  }
+  def compactRewrite(spark: SparkSession)(cur: String, next: String): Unit =
+    relayout(spark.read.parquet(s"$cur/blocks"), next)
 
-  /** Rewrite `<dir>/blocks` through `<dir>/blocks_tmp` + rename —
-    * parquet can't overwrite a path its own plan is lazily reading
-    * (MinHashIndex's private swap, specialized to the one-table index).
+  /** Takedown — MinHashIndex's twin for the fingerprint index: the
+    * block table minus `ids`, relaid one file per block directory.
     */
-  private def swap(spark: SparkSession, dir: String)(
-      rewrite: DataFrame => DataFrame): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/blocks")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/blocks_tmp")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rewrite(spark.read.parquet(cur.toString))
-      .write.mode("overwrite").partitionBy("block_id").parquet(tmp.toString)
-    fs.delete(cur, true)
-    require(fs.rename(tmp, cur), s"index rewrite: rename $tmp -> $cur failed")
-  }
+  def removeRewrite(spark: SparkSession, ids: Seq[Long])(
+      cur: String, next: String): Unit =
+    relayout(spark.read.parquet(s"$cur/blocks")
+      .filter(!col("doc_id").isInCollection(ids)), next)
+
+  /** [[removeRewrite]] of the flat index saved at `dir`. */
+  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    graft.util.Epochs.rewriteInPlace(spark, dir)(removeRewrite(spark, ids))
+
+  private def relayout(blocks: DataFrame, next: String): Unit =
+    blocks.repartition(col("block_id"))
+      .write.mode("overwrite").partitionBy("block_id")
+      .parquet(s"$next/blocks")
 
   /** Near-duplicate pairs between a NEW batch and the indexed corpus:
     * (new_id, seen_id, hamming ≤ maxDist). The batch is fingerprinted

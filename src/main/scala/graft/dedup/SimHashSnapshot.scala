@@ -3,113 +3,23 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated face of [[SimHashIndex]] — [[SnapshotIndex]]'s
-  * guarantees applied to the 64-bit fingerprint index: the flat
-  * [[SimHashIndex.compactSaved]]/[[SimHashIndex.removeSaved]] rewrite
-  * the live `blocks` directory through delete+rename, so a reader
-  * whose lazy plan listed files before the swap dereferences deleted
-  * parquet mid-scan. Here every rewrite lands in a fresh
-  * `epoch=<N+1>/` tree and becomes current only when complete
-  * ([[graft.util.Epochs]]); pinned readers keep their files through
-  * at least `retainEpochs` subsequent publishes.
-  *
-  * Appends carry the same epoch-advance re-append loop as
-  * [[SnapshotIndex.append]]: duplicates a re-append could introduce
-  * are harmless because [[SimHashIndex.probe]] distincts its pairs.
-  *
-  * At 100 TB the data path is unchanged: probes are the same
-  * (block_id, block_val) equi-joins against one epoch's partition
-  * dirs; a swap moves a pointer file.
+/** Snapshot-isolated [[SimHashIndex]] — [[SnapshotIndex]]'s guarantees
+  * ([[graft.util.Epochs.Store]]) applied to the 64-bit fingerprint
+  * index, whose flat [[SimHashIndex.compactSaved]] /
+  * [[SimHashIndex.removeSaved]] swap the live `blocks` directory under
+  * readers.
   */
-object SimHashSnapshot {
+object SimHashSnapshot extends Epochs.Store(SimHashIndex) {
 
-  /** A pinned read handle: `index` plans read only `epoch`'s files. */
-  final case class Snapshot(index: SimHashIndex.Index, epoch: Long,
-      dir: String)
-
-  /** Initialize: save the built block index as epoch 0. */
-  def init(index: SimHashIndex.Index, spark: SparkSession,
-      dir: String): Unit = {
-    SimHashIndex.save(index, Epochs.epochPath(dir, 0L))
-    Epochs.publish(spark, dir, 0L)
-  }
-
-  def currentEpoch(spark: SparkSession, dir: String): Long =
-    Epochs.current(spark, dir)
-
-  def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
-    Epochs.published(spark, dir)
-
-  /** Pin the current epoch and load its index. */
-  def load(spark: SparkSession, dir: String): Snapshot = {
-    val e = Epochs.current(spark, dir)
-    Snapshot(SimHashIndex.load(spark, Epochs.epochPath(dir, e)), e, dir)
-  }
-
-  /** Load a SPECIFIC published epoch (audit / replay reads). */
-  def loadEpoch(spark: SparkSession, dir: String, epoch: Long): Snapshot = {
-    require(Epochs.published(spark, dir).contains(epoch),
-      s"epoch $epoch is not published under $dir")
-    Snapshot(SimHashIndex.load(spark, Epochs.epochPath(dir, epoch)),
-      epoch, dir)
-  }
-
-  /** Append a new batch's blocks into the CURRENT epoch, re-appending
-    * into the new epoch if one published mid-append (see
-    * [[SnapshotIndex.append]] for the race analysis — probe distincts
-    * make duplicate appends harmless here too).
-    */
+  /** Append a new batch's blocks into the CURRENT epoch. */
   def append(spark: SparkSession, newDocs: DataFrame, dir: String,
       idCol: String, textCol: String): Unit =
-    appendFrom(spark, newDocs, dir, Epochs.current(spark, dir),
+    appendFrom(spark, newDocs, dir, currentEpoch(spark, dir),
       idCol, textCol)
 
   private[graft] def appendFrom(spark: SparkSession, newDocs: DataFrame,
       dir: String, startEpoch: Long, idCol: String,
-      textCol: String): Unit = {
-    var e = startEpoch
-    var stable = false
-    while (!stable) {
-      SimHashIndex.append(newDocs, Epochs.epochPath(dir, e), idCol, textCol)
-      // appenders' half of the fence — Epochs.awaitNoMaintenance doc
-      Epochs.awaitNoMaintenance(spark, dir)
-      val now = Epochs.current(spark, dir)
-      if (now == e) stable = true else e = now
-    }
-  }
-
-  /** Compact the current epoch's accreted files into epoch N+1 and
-    * publish it. Readers pinned to N keep their files; new loads see
-    * N+1. Returns the published epoch.
-    */
-  def compact(spark: SparkSession, dir: String,
-      retainEpochs: Int = 1): Long =
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        import org.apache.spark.sql.functions.col
-        spark.read.parquet(s"$cur/blocks")
-          .repartition(col("block_id"))
-          .write.mode("overwrite").partitionBy("block_id")
-          .parquet(s"$next/blocks")
-      }
-    }
-
-  /** Takedown into epoch N+1: probes under the new epoch can never
-    * match `ids`; a reader pinned to N finishes on its snapshot.
-    * Returns the published epoch.
-    */
-  def remove(spark: SparkSession, dir: String, ids: Seq[Long],
-      retainEpochs: Int = 1): Long = {
-    import org.apache.spark.sql.functions.col
-    val drop = ids.toSet
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        spark.read.parquet(s"$cur/blocks")
-          .filter(!col("doc_id").isInCollection(drop))
-          .repartition(col("block_id"))
-          .write.mode("overwrite").partitionBy("block_id")
-          .parquet(s"$next/blocks")
-      }
-    }
-  }
+      textCol: String): Unit =
+    appendBatch(spark, dir, startEpoch, newDocs, idCol)(
+      SimHashIndex.append(_, _, idCol, textCol))
 }

@@ -3,102 +3,24 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated wrapper around the saved [[MinHashIndex]] — the
-  * missing concurrency story for the staged-swap maintenance ops:
-  * [[MinHashIndex.compactSaved]]/[[MinHashIndex.removeSaved]] rewrite
-  * the LIVE `bands`/`shingles` directories through delete+rename, so a
-  * reader whose lazy plan listed files before the swap dereferences
-  * deleted parquet mid-scan. Here maintenance never touches a
-  * published epoch: each rewrite lands in a fresh `epoch=<N+1>/`
-  * directory tree and becomes current only when complete — the
-  * mini-Iceberg pointer-swap pattern at directory granularity,
-  * provided by [[graft.util.Epochs]] (index-agnostic; the same store
-  * snapshot-isolates any rewritten artifact).
+/** Snapshot-isolated [[MinHashIndex]]: the flat
+  * [[MinHashIndex.compactSaved]]/[[MinHashIndex.removeSaved]] swap the
+  * LIVE `bands`/`shingles` directories, so a reader whose lazy plan
+  * listed files before the swap dereferences deleted parquet mid-scan.
+  * Here every rewrite lands in a fresh `epoch=<N+1>/` tree and becomes
+  * current only when complete — the mini-Iceberg pointer-swap pattern
+  * at directory granularity. Pinning, retention, the append loop and
+  * the maintenance fence are [[graft.util.Epochs.Store]]'s.
   *
-  * Guarantees (see Epochs for the pointer/crash/retention mechanics):
-  *  - **Readers pin an epoch**: [[load]] resolves the current epoch
-  *    ONCE and every file its plans touch lives under that epoch dir —
-  *    a compaction or takedown publishing epoch N+1 mid-query cannot
-  *    invalidate it.
-  *  - **Takedown isolation**: in-flight readers finish on the snapshot
-  *    they started with; the NEXT load sees the scrub.
-  *  - **Bounded retention**: the previous epoch survives one full
-  *    maintenance cycle (raise `retainEpochs` for longer readers).
-  *
-  * Appends ([[append]]) stay NON-transactional by design, exactly like
-  * the flat index: they add files inside the current epoch (admissions
-  * are additive and retry-idempotent —
-  * [[graft.streaming.Streams.dedupIndexStream]]'s contract); only the
-  * REWRITING ops (compact, takedown) need epochs, because only they
-  * delete files a reader may hold.
-  *
-  * At 100 TB nothing here adds data-path cost: reads and probes are
-  * the same band-pruned plans against one epoch's directories; an
-  * epoch swap moves a pointer file, not data.
+  * Appends are additive and retry-idempotent like the flat index's
+  * ([[graft.streaming.Streams.dedupIndexStream]]'s contract).
   */
-object SnapshotIndex {
+object SnapshotIndex extends Epochs.Store(MinHashIndex) {
 
-  /** A pinned read handle: `index` plans read only `epoch`'s files. */
-  final case class Snapshot(index: MinHashIndex.Index, epoch: Long,
-      dir: String)
-
-  /** Initialize: save the built corpus index as epoch 0. */
-  def init(index: MinHashIndex.Index, spark: SparkSession,
-      dir: String): Unit = {
-    MinHashIndex.save(index, Epochs.epochPath(dir, 0L))
-    Epochs.publish(spark, dir, 0L)
-  }
-
-  def currentEpoch(spark: SparkSession, dir: String): Long =
-    Epochs.current(spark, dir)
-
-  def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
-    Epochs.published(spark, dir)
-
-  /** Pin the current epoch and load its index. */
-  def load(spark: SparkSession, dir: String): Snapshot = {
-    val e = Epochs.current(spark, dir)
-    Snapshot(MinHashIndex.load(spark, Epochs.epochPath(dir, e)), e, dir)
-  }
-
-  /** Load a SPECIFIC published epoch (audit / reproduce-yesterday's-
-    * probe reads).
-    */
-  def loadEpoch(spark: SparkSession, dir: String, epoch: Long): Snapshot = {
-    require(Epochs.published(spark, dir).contains(epoch),
-      s"epoch $epoch is not published under $dir")
-    Snapshot(MinHashIndex.load(spark, Epochs.epochPath(dir, epoch)),
-      epoch, dir)
-  }
-
-  /** Append admissions into the CURRENT epoch (additive, the flat
-    * index's retry contract — see class doc).
-    *
-    * Epoch-advance handling: if a compaction/takedown published a new
-    * epoch between resolving the current epoch and the append landing,
-    * the new epoch's rewrite may have listed the old epoch's files
-    * BEFORE this append's files appeared — those admissions would
-    * silently vanish when the old epoch retires. So after each append
-    * the current epoch is re-read and, if it advanced, the admissions
-    * are re-appended into the new epoch (looping until stable).
-    * Duplicate appends are harmless by the retry contract (probe
-    * results are distinct-ed). This closes the publish-before-recheck
-    * half of the race; the other half — a rewrite that lists files
-    * before the append lands and publishes only after the re-check —
-    * is closed mechanically from BOTH sides: [[compact]]/[[remove]]
-    * rewrite through [[graft.util.Epochs.rewriteToNextChecked]] (the
-    * source epoch's content signature is re-checked before publish and
-    * the rewrite re-runs over mid-rewrite appends) under
-    * [[graft.util.Epochs.withMaintenanceLease]] (two concurrent
-    * maintainers fail loudly), and the append loop takes its epoch
-    * re-read only after [[graft.util.Epochs.awaitNoMaintenance]] — the
-    * lease is the common linearization point, so an append whose files
-    * landed after the rewrite's final re-list still observes the
-    * publish and re-appends.
-    */
+  /** Append admissions into the CURRENT epoch. */
   def append(spark: SparkSession, newDocs: DataFrame, dir: String,
       idCol: String, textCol: String, n: Int): Unit =
-    appendFrom(spark, newDocs, dir, Epochs.current(spark, dir),
+    appendFrom(spark, newDocs, dir, currentEpoch(spark, dir),
       idCol, textCol, n)
 
   /** [[append]] starting from an already-resolved epoch — exposed for
@@ -107,80 +29,7 @@ object SnapshotIndex {
     */
   private[graft] def appendFrom(spark: SparkSession, newDocs: DataFrame,
       dir: String, startEpoch: Long, idCol: String, textCol: String,
-      n: Int): Unit = {
-    var e = startEpoch
-    var stable = false
-    while (!stable) {
-      MinHashIndex.append(newDocs, Epochs.epochPath(dir, e),
-        idCol, textCol, n)
-      // the appenders' half of the fence (Epochs.awaitNoMaintenance
-      // doc): only an epoch re-read taken while NO rewrite is in
-      // flight proves stability — a rewrite that listed before our
-      // files landed could otherwise publish after this check
-      Epochs.awaitNoMaintenance(spark, dir)
-      val now = Epochs.current(spark, dir)
-      if (now == e) stable = true else e = now
-    }
-  }
-
-  /** Compact the current epoch's accreted files into epoch N+1 and
-    * publish it. Readers pinned to N keep their files (retention);
-    * new loads see N+1. Returns the published epoch.
-    */
-  def compact(spark: SparkSession, dir: String,
-      rowsPerFile: Long = 1L << 20, retainEpochs: Int = 1): Long =
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        val idx = MinHashIndex.load(spark, cur)
-        // the two table rewrites read disjoint inputs and write
-        // disjoint outputs — overlap them (graft.util.Par doc); the
-        // publish happens strictly after both
-        graft.util.Par.both(
-          idx.bands.repartition(org.apache.spark.sql.functions.col("band_id"))
-            .write.mode("overwrite").partitionBy("band_id")
-            .parquet(s"$next/bands"),
-          {
-            val nRows = idx.shingles.count()
-            val nOut =
-              math.max(1L, (nRows + rowsPerFile - 1) / rowsPerFile).toInt
-            idx.shingles.repartition(nOut)
-              .write.mode("overwrite").parquet(s"$next/shingles")
-          })
-        ()
-      }
-    }
-
-  /** Takedown into epoch N+1: future probes under the new epoch can
-    * never match `ids`; a reader pinned to N still sees them until its
-    * epoch retires — the isolation semantics a governance pipeline
-    * wants (in-flight jobs finish on the snapshot they started with,
-    * the NEXT run picks up the scrub). Returns the published epoch.
-    */
-  def remove(spark: SparkSession, dir: String, ids: Seq[Long],
-      retainEpochs: Int = 1): Long = {
-    import org.apache.spark.sql.functions.col
-    val drop = ids.toSet
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        val idx = MinHashIndex.load(spark, cur)
-        // disjoint inputs/outputs — overlap the two rewrites (Par doc).
-        // NO repartition on the bands side (unlike compact, whose job
-        // IS re-layout): the epoch's band files are already clustered
-        // by band_id directory, so each scan task holds whole bands
-        // and the partitioned write lands ~1 file per (task, band) —
-        // a scan → pushed filter → write plan with zero exchanges.
-        // The hash repartition this replaces shuffled the entire
-        // corpus-scale band table per takedown wave AND bottlenecked
-        // the write at NumBands reducers at any corpus size; a
-        // takedown preserves the input layout, compact restores it.
-        graft.util.Par.both(
-          idx.bands.filter(!col("doc_id").isInCollection(drop))
-            .write.mode("overwrite").partitionBy("band_id")
-            .parquet(s"$next/bands"),
-          idx.shingles.filter(!col("doc_id").isInCollection(drop))
-            .write.mode("overwrite").parquet(s"$next/shingles"))
-        ()
-      }
-    }
-  }
+      n: Int): Unit =
+    appendBatch(spark, dir, startEpoch, newDocs, idCol)(
+      MinHashIndex.append(_, _, idCol, textCol, n))
 }

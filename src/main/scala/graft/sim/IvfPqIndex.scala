@@ -45,7 +45,9 @@ final case class IvfPqIndex(
   }
 }
 
-object IvfPqIndex {
+object IvfPqIndex extends graft.util.Epochs.Layout {
+
+  type Index = IvfPqIndex
 
   /** Train both quantizers and encode the corpus. The Lloyd fits are
     * the corpus-scan half; encode+assign is one more map pass.
@@ -87,21 +89,43 @@ object IvfPqIndex {
       .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
   }
 
-  /** Rewrite the cells table's accreted per-append files into one file
-    * per cell directory — staged to `cells_tmp` then swapped (parquet
-    * can't overwrite a path it lazily reads). Search results are
-    * byte-identical before/after; only file layout changes.
+  def save(index: IvfPqIndex, dir: String): Unit = index.save(dir)
+
+  /** The saved cells table's id column — the search contract's
+    * `neighbor_id` ([[Pq.cellCodes]]), whatever id column fed it.
     */
-  def compactSaved(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells_tmp")
-    val fs = cur.getFileSystem(conf)
-    spark.read.parquet(cur.toString)
+  def ids(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/cells").select("neighbor_id")
+
+  /** Rewrite the cells table's accreted per-append files into one file
+    * per cell directory. Search results are byte-identical
+    * before/after; only file layout changes.
+    */
+  def compactRewrite(spark: SparkSession)(cur: String, next: String): Unit =
+    relayout(spark, cur, next)(identity)
+
+  /** Takedown: searches over the rewritten cells never return `ids`. */
+  def removeRewrite(spark: SparkSession, ids: Seq[Long])(
+      cur: String, next: String): Unit =
+    relayout(spark, cur, next)(
+      _.filter(!col("neighbor_id").isInCollection(ids)))
+
+  /** The cells are relaid one file per cell. The KB-scale models ride
+    * an epoch rewrite verbatim (two single-file parquet round-trips);
+    * the flat in-place form (`next` is `cur`'s staging dir) leaves them
+    * in place, so a flat [[append]] reading them never meets a swap.
+    */
+  private def relayout(spark: SparkSession, cur: String, next: String)(
+      keep: DataFrame => DataFrame): Unit = {
+    if (!next.startsWith(s"$cur/"))
+      Seq("codebooks", "centroids").foreach { t =>
+        spark.read.parquet(s"$cur/$t").coalesce(1)
+          .write.mode("overwrite").parquet(s"$next/$t")
+      }
+    keep(spark.read.parquet(s"$cur/cells"))
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    fs.delete(cur, true)
-    require(fs.rename(tmp, cur), s"compact: rename $tmp -> $cur failed")
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$next/cells")
   }
 
   def load(spark: SparkSession, dir: String): IvfPqIndex = {

@@ -1,90 +1,25 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated face of [[IvfPqIndex]] — the serving-index
-  * concurrency story [[graft.dedup.SnapshotIndex]] gives the MinHash
-  * index, applied to the IVFADC artifact: the flat
-  * [[IvfPqIndex.compactSaved]] rewrites the live `cells` table through
-  * delete+rename, so a search whose lazy plan listed cell files before
-  * the swap dereferences deleted parquet mid-scan. Here every rewrite
-  * materializes a complete `epoch=<N+1>/` artifact (codebooks +
-  * centroids + cells) and becomes current only when published
-  * ([[graft.util.Epochs]]); searches pin one epoch's directories for
-  * their whole run and survive any number of concurrent compactions
-  * within the retention window.
-  *
-  * Appends land in the CURRENT epoch; duplicate code rows are NOT
-  * harmless to a top-k search (a duplicated id could occupy two of
-  * the k slots), so the dedup indexes' unconditional re-append loop
-  * is unavailable here. The append/maintenance race is instead closed
-  * MECHANICALLY from both sides (r10 judge item — previously a
-  * documented single-maintainer cadence only): [[compact]]/[[remove]]
-  * run under [[graft.util.Epochs.withMaintenanceLease]] (a second
-  * concurrent maintainer fails loudly) and rewrite through
-  * [[graft.util.Epochs.rewriteToNextChecked]], whose content-signature
-  * re-check re-runs the rewrite when an append's files landed in the
-  * source epoch mid-rewrite; [[append]], after its write, first waits
-  * out any in-flight maintenance lease
-  * ([[graft.util.Epochs.awaitNoMaintenance]] — the lease spans the
-  * rewrite's first listing to post-publish, so it is the two sides'
-  * common linearization point) and THEN re-reads the current epoch,
-  * re-appending on advance ONLY the ids the new epoch is missing
-  * (verified by anti-join — exact-once, never a duplicate slot).
-  * Either the admission survives or something throws; silent loss has
-  * no remaining window. Reads need no cadence — that is the point of
-  * the snapshot.
-  *
-  * At 100 TB nothing here adds search cost: the probed-cell partition
-  * pruning operates on one epoch's `cells` tree exactly as on the flat
-  * layout; the KB-scale models are copied per rewrite (two tiny
-  * parquet round-trips); an epoch swap moves a pointer file.
+/** Snapshot-isolated [[IvfPqIndex]] — the serving-index face of
+  * [[graft.util.Epochs.Store]]: the flat [[IvfPqIndex.compactSaved]]
+  * swaps the live `cells` table under searches, while here every
+  * rewrite materializes a complete `epoch=<N+1>/` artifact (codebooks
+  * + centroids + cells) and searches pin one epoch's directories for
+  * their whole run. The store's re-append rule adds only the ids the
+  * new epoch lacks, so a raced append never leaves a duplicate code
+  * row (which could occupy two of a top-k search's slots).
   */
-object IvfPqSnapshot {
-
-  /** A pinned read handle: `index` plans read only `epoch`'s files. */
-  final case class Snapshot(index: IvfPqIndex, epoch: Long, dir: String)
-
-  /** Initialize: save the fitted index as epoch 0. */
-  def init(index: IvfPqIndex, spark: SparkSession, dir: String): Unit = {
-    index.save(Epochs.epochPath(dir, 0L))
-    Epochs.publish(spark, dir, 0L)
-  }
-
-  def currentEpoch(spark: SparkSession, dir: String): Long =
-    Epochs.current(spark, dir)
-
-  def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
-    Epochs.published(spark, dir)
-
-  /** Pin the current epoch and load its index. */
-  def load(spark: SparkSession, dir: String): Snapshot = {
-    val e = Epochs.current(spark, dir)
-    Snapshot(IvfPqIndex.load(spark, Epochs.epochPath(dir, e)), e, dir)
-  }
-
-  /** Load a SPECIFIC published epoch (reproduce yesterday's search). */
-  def loadEpoch(spark: SparkSession, dir: String, epoch: Long): Snapshot = {
-    require(Epochs.published(spark, dir).contains(epoch),
-      s"epoch $epoch is not published under $dir")
-    Snapshot(IvfPqIndex.load(spark, Epochs.epochPath(dir, epoch)),
-      epoch, dir)
-  }
+object IvfPqSnapshot extends Epochs.Store(IvfPqIndex) {
 
   /** Encode and append a new batch's codes into the CURRENT epoch's
-    * cells table (frozen-quantizer contract, [[IvfPqIndex.append]]),
-    * then re-read the pointer: if maintenance published a new epoch
-    * mid-append, the checked rewrite usually re-ran and captured the
-    * admissions — verify by id and re-append only the MISSING ones
-    * into the new epoch (class doc; exact-once either way). Loops
-    * until the epoch is stable after the write.
+    * cells table (frozen-quantizer contract, [[IvfPqIndex.append]]).
     */
-  def append(spark: SparkSession, dir: String,
-      newVectors: org.apache.spark.sql.DataFrame,
+  def append(spark: SparkSession, dir: String, newVectors: DataFrame,
       idCol: String, vecCol: String): Unit =
-    appendFrom(spark, dir, Epochs.current(spark, dir),
+    appendFrom(spark, dir, currentEpoch(spark, dir),
       newVectors, idCol, vecCol)
 
   /** [[append]] starting from an already-resolved epoch — exposed for
@@ -92,89 +27,8 @@ object IvfPqSnapshot {
     * resolution and the append's files landing).
     */
   private[graft] def appendFrom(spark: SparkSession, dir: String,
-      startEpoch: Long, newVectors: org.apache.spark.sql.DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    var e = startEpoch
-    var pending = newVectors
-    var stable = false
-    while (!stable) {
-      IvfPqIndex.append(spark, Epochs.epochPath(dir, e),
-        pending, idCol, vecCol)
-      // appenders' half of the fence — Epochs.awaitNoMaintenance doc
-      Epochs.awaitNoMaintenance(spark, dir)
-      val now = Epochs.current(spark, dir)
-      if (now == e) stable = true
-      else {
-        // epoch advanced under the append: keep only the ids the new
-        // epoch does NOT already hold (the rewrite may have captured
-        // this batch via the signature re-run) — a duplicate code row
-        // would corrupt top-k, an absent one is a lost admission
-        val cells = spark.read.parquet(
-          s"${Epochs.epochPath(dir, now)}/cells")
-        val cellId = cells.columns.filterNot(Set("cell", "codes")).head
-        val present = cells.select(col(cellId).as(idCol)).distinct()
-        pending = pending.join(present, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        if (pending.isEmpty) stable = true else e = now
-      }
-    }
-  }
-
-  /** The compact rewrite body (codes repartitioned one-file-per-cell,
-    * models copied verbatim) — factored out so the mid-rewrite race
-    * spec can drive it through [[graft.util.Epochs.rewriteToNextChecked]]
-    * with an injected concurrent append.
-    */
-  private[graft] def compactRewrite(spark: SparkSession)(
-      cur: String, next: String): Unit = {
-    copyModels(spark, cur, next)
-    spark.read.parquet(s"$cur/cells")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$next/cells")
-  }
-
-  /** Compact the current epoch's accreted cell files into epoch N+1
-    * and publish it. Fenced: maintenance lease + content-signature
-    * checked rewrite (class doc). Searches pinned to N keep their
-    * files; new loads see N+1. Returns the published epoch.
-    */
-  def compact(spark: SparkSession, dir: String,
-      retainEpochs: Int = 1): Long =
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs)(
-        compactRewrite(spark))
-    }
-
-  /** Takedown into epoch N+1: searches under the new epoch can never
-    * return `ids`; a search pinned to N finishes on its snapshot.
-    * Fenced like [[compact]]. Returns the published epoch.
-    */
-  def remove(spark: SparkSession, dir: String, ids: Seq[Long],
-      retainEpochs: Int = 1): Long = {
-    val drop = ids.toSet
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        copyModels(spark, cur, next)
-        val cells = spark.read.parquet(s"$cur/cells")
-        val idCol = cells.columns.filterNot(Set("cell", "codes")).head
-        cells.filter(!col(idCol).isInCollection(drop))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$next/cells")
-      }
-    }
-  }
-
-  /** The immutable KB-scale models ride each rewrite verbatim: two
-    * single-file parquet round-trips (schema-preserving, no
-    * format-specific knowledge here).
-    */
-  private def copyModels(spark: SparkSession, cur: String,
-      next: String): Unit = {
-    spark.read.parquet(s"$cur/codebooks").coalesce(1)
-      .write.mode("overwrite").parquet(s"$next/codebooks")
-    spark.read.parquet(s"$cur/centroids").coalesce(1)
-      .write.mode("overwrite").parquet(s"$next/centroids")
-  }
+      startEpoch: Long, newVectors: DataFrame, idCol: String,
+      vecCol: String): Unit =
+    appendBatch(spark, dir, startEpoch, newVectors, idCol)((batch, at) =>
+      IvfPqIndex.append(spark, at, batch, idCol, vecCol))
 }

@@ -1261,15 +1261,9 @@ object Streams {
     * flat variant's probe dereferences deleted parquet if compactSaved
     * swaps mid-batch), and appends its admissions via
     * [[graft.dedup.SnapshotIndex.append]], which re-appends into the
-    * new epoch when one published mid-append (duplicates are harmless
-    * by the retry contract). That re-append closes the common race;
-    * the residual window (a rewrite that listed the old epoch's files
-    * before the append landed AND publishes only after the re-check)
-    * is closed MECHANICALLY since r11: SnapshotIndex.compact/remove
-    * rewrite through [[graft.util.Epochs.rewriteToNextChecked]] (the
-    * source epoch's content signature is re-checked before publish,
-    * so a mid-rewrite append re-runs the rewrite and survives) under
-    * [[graft.util.Epochs.withMaintenanceLease]] (two concurrent
+    * new epoch, when one published mid-append, only the admissions it
+    * does not already hold; maintenance is fenced against the append
+    * ([[graft.util.Epochs.Store]]'s race analysis, two concurrent
     * maintainers fail loudly). READS need no cadence (that is the
     * point of the snapshot). Same retry contract as the flat stream
     * (self-match filter + batchId-keyed output overwrite).

@@ -1,14 +1,15 @@
 package graft.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Directory-granularity epoch store — the snapshot-isolation
-  * mechanism behind [[graft.dedup.SnapshotIndex]], factored out
-  * because it is index-agnostic: ANY saved artifact whose maintenance
-  * rewrites files (IVF/PQ codebook indexes, exported shard trees,
-  * packed-sequence snapshots) gets the same guarantees by writing each
-  * rewrite into `epoch=<N+1>/` and publishing through here.
+  * mechanism behind every saved artifact whose maintenance rewrites
+  * files: the dedup and ANN indexes through [[Epochs.Store]], and
+  * [[graft.dedup.NoveltyIndex]] and [[graft.ops.ShardStore]] through
+  * the primitives below. Each rewrite lands in `epoch=<N+1>/` and is
+  * published through here.
   *
   * Layout under a root dir:
   * {{{
@@ -17,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   *   <dir>/_CURRENT              (content: current epoch number)
   * }}}
   *
-  * Invariants (spec-pinned via SnapshotIndex):
+  * Invariants (spec-pinned by DedupSpec's artifact-agnostic spec and
+  * the index stores' specs):
   *  - an epoch without `_PUBLISHED` is invisible — a crashed
   *    half-written rewrite can never become current;
   *  - `_CURRENT` is rewritten delete+create; in the crash window
@@ -122,24 +124,6 @@ object Epochs {
       .foreach(e => fs.delete(new Path(epochPath(dir, e)), true))
   }
 
-  /** Rewrite the current epoch's artifact into the next epoch dir and
-    * publish it; returns the new epoch. `rewrite(currentDir, nextDir)`
-    * must fully materialize the artifact under nextDir.
-    *
-    * UNFENCED: a writer appending into the current epoch while the
-    * rewrite runs can be silently dropped (the rewrite lists the old
-    * files, publishes, the old epoch retires with the append inside).
-    * Index maintenance goes through [[rewriteToNextChecked]].
-    */
-  def rewriteToNext(spark: SparkSession, dir: String, retain: Int = 1)(
-      rewrite: (String, String) => Unit): Long = {
-    val cur = current(spark, dir)
-    val next = cur + 1
-    rewrite(epochPath(dir, cur), epochPath(dir, next))
-    publish(spark, dir, next, retain)
-    next
-  }
-
   /** Order-independent fingerprint of the file tree under `path`:
     * sorted (relative path, byte length) lines. An append adds files
     * and a takedown/compact replaces them, so ANY maintenance-relevant
@@ -163,8 +147,11 @@ object Epochs {
     buf.sorted.mkString("\n")
   }
 
-  /** [[rewriteToNext]] with the append-journal fence (the mechanical
-    * closure of the append/rewrite race): the source epoch's
+  /** Rewrite the current epoch's artifact into the next epoch dir and
+    * publish it; returns the new epoch. `rewrite(currentDir, nextDir)`
+    * must fully materialize the artifact under nextDir.
+    *
+    * Fenced against concurrent appends: the source epoch's
     * [[contentSignature]] is recorded BEFORE the rewrite and re-checked
     * AFTER it, immediately before publish. If an append landed in the
     * source epoch mid-rewrite the signatures differ — the half-built
@@ -174,12 +161,8 @@ object Epochs {
     * After `maxAttempts` signature mismatches the operation fails
     * loudly (an append storm should win over maintenance, not lose to
     * it). The residual window — an append whose files land after the
-    * final re-list — is closed from the append side: appenders wait
-    * out any in-flight lease ([[awaitNoMaintenance]] — the lease spans
-    * first-listing to post-publish, giving the two sides a common
-    * linearization point) and THEN re-read the current epoch,
-    * re-appending on advance (SnapshotIndex/SimHashSnapshot
-    * unconditionally; IvfPqSnapshot verified-by-id).
+    * final re-list — is closed from the append side ([[Store]]'s race
+    * analysis).
     *
     * Cost at 100 TB: two recursive LISTs of one epoch directory per
     * attempt — metadata-only, proportional to file count, zero data
@@ -390,21 +373,13 @@ object Epochs {
   def maintenanceHeld(spark: SparkSession, dir: String): Boolean =
     fsOf(spark, dir).exists(leasePath(dir))
 
-  /** The APPENDERS' half of the maintenance fence. An appender whose
-    * files land after a rewrite's final signature re-check but whose
-    * epoch re-read happens before the publish pointer swing would miss
-    * the swap — the one ordering [[rewriteToNextChecked]] alone cannot
-    * see. Closing it needs a common linearization point, and the lease
-    * is exactly that: maintainers hold it from BEFORE their first
-    * source listing until AFTER publish, so an appender that (files
-    * already visible) observes NO lease knows every future rewrite
-    * will list its files, and every completed rewrite is already
-    * visible through the pointer; it then re-reads the epoch once and
-    * either is stable or re-appends. So the appender protocol is:
-    * write → awaitNoMaintenance → re-read epoch → (advance? verify/
-    * re-append : done). Polls at 100 ms; a stale crashed-maintainer
-    * lock surfaces here as a LOUD timeout (the withMaintenanceLease
-    * doctrine), never as silent loss.
+  /** The APPENDERS' half of the maintenance fence ([[Store]]'s race
+    * analysis): block while a maintainer holds the directory's lease.
+    * The appender protocol is write → awaitNoMaintenance → re-read
+    * epoch → (advance? re-append what the new epoch lacks : done).
+    * Polls at 100 ms; a stale crashed-maintainer lock surfaces here as
+    * a LOUD timeout (the withMaintenanceLease doctrine), never as
+    * silent loss.
     */
   def awaitNoMaintenance(spark: SparkSession, dir: String,
       timeoutMs: Long = 600000L): Unit = {
@@ -420,5 +395,198 @@ object Epochs {
             "the lock file)")
       Thread.sleep(100L)
     }
+  }
+
+  /** The flat, epoch-less form of a rewrite: `rewrite(dir, staged)`
+    * writes the new artifact under `<dir>/_staged`, then each table it
+    * wrote replaces its namesake under `dir` (delete + rename) —
+    * parquet cannot overwrite a path its own plan is lazily reading.
+    * Readers of `dir` are NOT isolated from the swap; [[Store]] is.
+    *
+    * A failed rewrite drops its staging dir (nothing live was touched
+    * yet). A `_staged` already present means an earlier swap died
+    * between a delete and its rename, so its table there may be the
+    * only copy: that fails loudly and is never deleted here.
+    */
+  def rewriteInPlace(spark: SparkSession, dir: String)(
+      rewrite: (String, String) => Unit): Unit = {
+    val fs = fsOf(spark, dir)
+    val staged = new Path(dir, "_staged")
+    if (fs.exists(staged))
+      throw new IllegalStateException(
+        s"Epochs.rewriteInPlace: $staged exists — an earlier rewrite of " +
+          s"$dir died mid-swap; move each table there whose namesake is " +
+          s"missing from $dir back into place, delete $staged, and re-run")
+    try rewrite(dir, staged.toString)
+    catch { case NonFatal(e) => fs.delete(staged, true); throw e }
+    fs.listStatus(staged).foreach { st =>
+      val live = new Path(dir, st.getPath.getName)
+      fs.delete(live, true)
+      require(fs.rename(st.getPath, live),
+        s"rewrite: rename ${st.getPath} -> $live failed")
+    }
+    fs.delete(staged, true)
+  }
+
+  /** A pinned read handle: `index` plans read only `epoch`'s files. */
+  final case class Snapshot[I](index: I, epoch: Long, dir: String)
+
+  /** A saved index's on-disk format as [[Store]] and [[rewriteInPlace]]
+    * see it; `Index` is the in-memory handle. Each rewrite body reads
+    * the complete artifact under `cur` and writes a complete one under
+    * `next`, so ONE body serves both the epoch rewrite (`cur` = epoch
+    * N, `next` = epoch N+1) and the flat in-place
+    * [[compactSaved]] (and the dedup indexes' flat `removeSaved`).
+    */
+  trait Layout {
+    type Index
+    def save(index: Index, dir: String): Unit
+    def load(spark: SparkSession, dir: String): Index
+
+    /** The ids the artifact under `dir` holds, as one column. An
+      * append that writes several tables commits them in no order, so
+      * an id counts only when every such table holds it.
+      */
+    def ids(spark: SparkSession, dir: String): DataFrame
+
+    /** Rewrite accreted per-append files into right-sized ones; reads
+      * are byte-identical before and after.
+      */
+    def compactRewrite(spark: SparkSession)(cur: String, next: String): Unit
+
+    /** Rewrite minus `ids` (takedown): later reads never match them.
+      * Idempotent on absent ids.
+      */
+    def removeRewrite(spark: SparkSession, ids: Seq[Long])(
+        cur: String, next: String): Unit
+
+    /** [[compactRewrite]] of the flat index saved at `dir`. */
+    def compactSaved(spark: SparkSession, dir: String): Unit =
+      rewriteInPlace(spark, dir)(compactRewrite(spark))
+  }
+
+  /** An index's epoch store: publish, pin and retire through
+    * [[Epochs]], plus the append loop and fenced maintenance, over a
+    * [[Layout]] that hides the index format. Each index store is
+    * `object X extends Epochs.Store(<flat index>)` with a typed
+    * `append` adapter over [[appendBatch]].
+    *
+    * Guarantees:
+    *  - **Readers pin an epoch**: [[load]] resolves the current epoch
+    *    ONCE and every file its plans touch lives under that epoch dir,
+    *    so a compaction or takedown publishing N+1 mid-query cannot
+    *    invalidate it; the NEXT load sees the rewrite.
+    *  - **Bounded retention**: a pinned epoch survives `retainEpochs`
+    *    subsequent publishes.
+    *  - **Appends are additive**: they add files inside the current
+    *    epoch. Only the rewriting ops ([[compact]], [[remove]]) need a
+    *    new epoch, because only they delete files a reader may hold.
+    *
+    * The append/rewrite race: a rewrite lists the source epoch's files,
+    * so an append landing after that listing would retire with the old
+    * epoch. Both sides close it.
+    *  - Maintainers hold [[withMaintenanceLease]] from before their
+    *    first listing until after publish (a second maintainer fails
+    *    loudly) and rewrite through [[rewriteToNextChecked]], which
+    *    re-runs the rewrite when an append changed the source epoch's
+    *    content signature under it.
+    *  - The appender writes, waits out any lease
+    *    ([[awaitNoMaintenance]]), then re-reads the current epoch. The
+    *    lease is the common linearization point: with no lease held,
+    *    every future rewrite will list the append's files and every
+    *    finished one is visible through the pointer. If the epoch
+    *    advanced, the appender re-appends into the new epoch ONLY the
+    *    batch ids that epoch does not already hold (a `left_anti` on
+    *    [[Layout.ids]] — the checked rewrite may have captured the
+    *    batch), and loops.
+    * So an admission survives, without a second copy from the
+    * re-append, or something throws.
+    *
+    * At 100 TB nothing here adds data-path cost: reads plan against one
+    * epoch's directories exactly as against the flat index, a publish
+    * moves a pointer file, and the id anti-join runs only when an
+    * append raced a publish.
+    */
+  abstract class Store[I](layout: Layout { type Index = I }) {
+
+    type Snapshot = Epochs.Snapshot[I]
+
+    /** Initialize: save the built index as epoch 0. */
+    def init(index: I, spark: SparkSession, dir: String): Unit = {
+      layout.save(index, epochPath(dir, 0L))
+      publish(spark, dir, 0L)
+    }
+
+    def currentEpoch(spark: SparkSession, dir: String): Long =
+      current(spark, dir)
+
+    def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
+      published(spark, dir)
+
+    /** Pin the current epoch and load its index. */
+    def load(spark: SparkSession, dir: String): Snapshot =
+      loadAt(spark, dir, current(spark, dir))
+
+    /** Load a SPECIFIC published epoch (audit / replay reads). */
+    def loadEpoch(spark: SparkSession, dir: String, epoch: Long): Snapshot = {
+      require(published(spark, dir).contains(epoch),
+        s"epoch $epoch is not published under $dir")
+      loadAt(spark, dir, epoch)
+    }
+
+    private def loadAt(spark: SparkSession, dir: String, epoch: Long) =
+      Epochs.Snapshot(layout.load(spark, epochPath(dir, epoch)), epoch, dir)
+
+    /** The append loop (class doc): `write(batch, epochDir)` appends a
+      * batch into one epoch dir, starting at `startEpoch`; `idCol`
+      * names the batch column that [[Layout.ids]] holds.
+      */
+    protected def appendBatch(spark: SparkSession, dir: String,
+        startEpoch: Long, batch: DataFrame, idCol: String)(
+        write: (DataFrame, String) => Unit): Unit = {
+      var e = startEpoch
+      var pending = batch
+      var stable = false
+      while (!stable) {
+        write(pending, epochPath(dir, e))
+        awaitNoMaintenance(spark, dir)
+        val now = current(spark, dir)
+        if (now == e) stable = true
+        else {
+          val held = layout.ids(spark, epochPath(dir, now)).toDF(idCol)
+          pending = pending.join(held, Seq(idCol), "left_anti")
+            .localCheckpoint(true)
+          if (pending.isEmpty) stable = true else e = now
+        }
+      }
+    }
+
+    /** Compact the current epoch into epoch N+1 and publish it; readers
+      * pinned to N keep their files. Returns the published epoch.
+      */
+    def compact(spark: SparkSession, dir: String,
+        retainEpochs: Int = 1): Long =
+      maintain(spark, dir, retainEpochs)(layout.compactRewrite(spark))
+
+    /** Takedown into epoch N+1: reads under the new epoch never match
+      * `ids`; a reader pinned to N finishes on its snapshot. Returns the
+      * published epoch.
+      */
+    def remove(spark: SparkSession, dir: String, ids: Seq[Long],
+        retainEpochs: Int = 1): Long =
+      maintain(spark, dir, retainEpochs)(layout.removeRewrite(spark, ids))
+
+    /** The compact body, for specs that drive [[rewriteToNextChecked]]
+      * with an injected concurrent append.
+      */
+    private[graft] def compactRewrite(spark: SparkSession)
+        : (String, String) => Unit =
+      layout.compactRewrite(spark)
+
+    private def maintain(spark: SparkSession, dir: String, retain: Int)(
+        rewrite: (String, String) => Unit): Long =
+      withMaintenanceLease(spark, dir) {
+        rewriteToNextChecked(spark, dir, retain)(rewrite)
+      }
   }
 }

@@ -3,6 +3,7 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Range, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 /** Scan-parallelism floor for compute-heavy derivations — the guide's
   * unsplittable-input move (repartition right after the read), made
@@ -42,6 +43,10 @@ object Fanout {
     case f: Filter        => scanShaped(f.child)
     case s: SubqueryAlias => scanShaped(s.child)
     case _: LogicalRelation => true
+    // a read resolved through DataSource V2 (e.g. a file format left
+    // out of `spark.sql.sources.useV1SourceList`); the optimizer turns
+    // every DataSourceV2Relation into this scan node
+    case _: DataSourceV2ScanRelation => true
     case _: LocalRelation   => true
     case _: Range           => true
     // a pinned frame (localCheckpoint) or a micro-batch's LogicalRDD:

@@ -625,6 +625,220 @@ class DedupSpec extends SparkSpec {
       "retiring the stale epoch must not lose re-appended admissions")
   }
 
+  /** Parquet files per partition dir (`band_id=…`, `block_id=…`) of
+    * one saved table, keyed by dir name.
+    */
+  private def filesPerPartition(table: String): Map[String, Int] =
+    new java.io.File(table).listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  private def parquetFiles(table: String): Int =
+    new java.io.File(table).listFiles().count(_.getName.endsWith(".parquet"))
+
+  test("one rewrite body, two paths: flat compactSaved/removeSaved and " +
+      "the epoch store's compact/remove leave the same layout and probes " +
+      "(MinHash, SimHash)") {
+    import graft.dedup.{MinHashIndex, SimHashIndex, SimHashSnapshot, SnapshotIndex}
+    val docs = graft.util.Tables(spark, sf).documents
+    val base = docs.filter(pmod(col("doc_id"), lit(5)) < 2)
+    val batches = Seq(2, 3).map(m => docs.filter(pmod(col("doc_id"), lit(5)) === m))
+    val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
+    def tmp(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).toString
+
+    // MinHash: the same index built once, saved flat and as epoch 0,
+    // the same two batches appended to each
+    def mhProbe(idx: MinHashIndex.Index) =
+      MinHashIndex.probe(idx, fresh, "doc_id", "text", n = 3, tau = 0.7)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val mh = MinHashIndex.build(base, "doc_id", "text", n = 3)
+    val mhFlat = tmp("graft-mh-flat")
+    val mhStore = tmp("graft-mh-store")
+    MinHashIndex.save(mh, mhFlat)
+    SnapshotIndex.init(mh, spark, mhStore)
+    batches.foreach { b =>
+      MinHashIndex.append(b, mhFlat, "doc_id", "text", n = 3)
+      SnapshotIndex.append(spark, b, mhStore, "doc_id", "text", n = 3)
+    }
+    MinHashIndex.compactSaved(spark, mhFlat)
+    assert(SnapshotIndex.compact(spark, mhStore) === 1L)
+    val mhBands = filesPerPartition(s"$mhFlat/bands")
+    assert(mhBands.nonEmpty && mhBands.values.forall(_ == 1),
+      s"one file per band dir after compactSaved: $mhBands")
+    assert(filesPerPartition(s"$mhStore/epoch=1/bands") === mhBands)
+    assert(parquetFiles(s"$mhStore/epoch=1/shingles") ===
+      parquetFiles(s"$mhFlat/shingles"))
+    assert(!new java.io.File(s"$mhFlat/_staged").exists(),
+      "the flat swap must leave no staging dir behind")
+    val mhCompacted = mhProbe(MinHashIndex.load(spark, mhFlat))
+    assert(mhCompacted.nonEmpty)
+    assert(mhProbe(SnapshotIndex.load(spark, mhStore).index) === mhCompacted)
+    val mhRemoved = mhCompacted.map(_._2).take(2).toSeq
+    MinHashIndex.removeSaved(spark, mhFlat, mhRemoved)
+    assert(SnapshotIndex.remove(spark, mhStore, mhRemoved) === 2L)
+    val mhAfterRm = mhProbe(MinHashIndex.load(spark, mhFlat))
+    assert(mhAfterRm === mhCompacted.filterNot(p => mhRemoved.contains(p._2)))
+    assert(mhProbe(SnapshotIndex.load(spark, mhStore).index) === mhAfterRm)
+    assert(filesPerPartition(s"$mhStore/epoch=2/bands") ===
+      filesPerPartition(s"$mhFlat/bands"))
+
+    // SimHash: the same two paths over the one-table block index
+    def shProbe(idx: SimHashIndex.Index) =
+      SimHashIndex.probe(idx, fresh, "doc_id", "text", maxDist = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val sh = SimHashIndex.build(base, "doc_id", "text")
+    val shFlat = tmp("graft-sh-flat")
+    val shStore = tmp("graft-sh-store")
+    SimHashIndex.save(sh, shFlat)
+    SimHashSnapshot.init(sh, spark, shStore)
+    batches.foreach { b =>
+      SimHashIndex.append(b, shFlat, "doc_id", "text")
+      SimHashSnapshot.append(spark, b, shStore, "doc_id", "text")
+    }
+    SimHashIndex.compactSaved(spark, shFlat)
+    assert(SimHashSnapshot.compact(spark, shStore) === 1L)
+    val shBlocks = filesPerPartition(s"$shFlat/blocks")
+    assert(shBlocks.nonEmpty && shBlocks.values.forall(_ == 1),
+      s"one file per block dir after compactSaved: $shBlocks")
+    assert(filesPerPartition(s"$shStore/epoch=1/blocks") === shBlocks)
+    val shCompacted = shProbe(SimHashIndex.load(spark, shFlat))
+    assert(shCompacted.nonEmpty)
+    assert(shProbe(SimHashSnapshot.load(spark, shStore).index) === shCompacted)
+    val shRemoved = shCompacted.map(_._2).take(2).toSeq
+    SimHashIndex.removeSaved(spark, shFlat, shRemoved)
+    assert(SimHashSnapshot.remove(spark, shStore, shRemoved) === 2L)
+    val shAfterRm = shProbe(SimHashIndex.load(spark, shFlat))
+    assert(shAfterRm === shCompacted.filterNot(p => shRemoved.contains(p._2)))
+    assert(shProbe(SimHashSnapshot.load(spark, shStore).index) === shAfterRm)
+    assert(filesPerPartition(s"$shStore/epoch=2/blocks") ===
+      filesPerPartition(s"$shFlat/blocks"))
+  }
+
+  test("dedup stores re-append exactly once: a batch the checked rewrite " +
+      "already captured is not appended again into the new epoch") {
+    import graft.dedup.{MinHashIndex, SimHashIndex, SimHashSnapshot, SnapshotIndex}
+    val docs = graft.util.Tables(spark, sf).documents
+    val base = docs.filter(pmod(col("doc_id"), lit(5)) < 3)
+    val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 3)
+    val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
+    val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
+    // rows per batch doc_id in one epoch's table
+    def rowsPerId(table: String): Map[Long, Long] =
+      spark.read.parquet(table).filter(col("doc_id").isInCollection(batchIds))
+        .groupBy("doc_id").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+    // MinHash: append into epoch e, compact to e+1 (the rewrite
+    // captures the batch), then replay the append as if it had
+    // resolved epoch e before the publish
+    def mhProbe(idx: MinHashIndex.Index) =
+      MinHashIndex.probe(idx, fresh, "doc_id", "text", n = 3, tau = 0.7)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val mhDir = java.nio.file.Files.createTempDirectory("graft-mh-once").toString
+    SnapshotIndex.init(MinHashIndex.build(base, "doc_id", "text", n = 3),
+      spark, mhDir)
+    val e = SnapshotIndex.currentEpoch(spark, mhDir)
+    SnapshotIndex.append(spark, batch, mhDir, "doc_id", "text", n = 3)
+    assert(SnapshotIndex.compact(spark, mhDir) === e + 1)
+    val mhRows = rowsPerId(s"$mhDir/epoch=${e + 1}/shingles")
+    assert(mhRows.nonEmpty && mhRows.values.forall(_ == 1L),
+      "the compact must capture one shingle row per batch doc")
+    val mhProbes = mhProbe(SnapshotIndex.load(spark, mhDir).index)
+    SnapshotIndex.appendFrom(spark, batch, mhDir, e, "doc_id", "text", n = 3)
+    assert(rowsPerId(s"$mhDir/epoch=${e + 1}/shingles") === mhRows,
+      "a captured batch must not be re-appended into the new epoch")
+    assert(mhProbe(SnapshotIndex.load(spark, mhDir).index) === mhProbes)
+
+    // SimHash: the same interleaving over the block table
+    def shProbe(idx: SimHashIndex.Index) =
+      SimHashIndex.probe(idx, fresh, "doc_id", "text", maxDist = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val shDir = java.nio.file.Files.createTempDirectory("graft-sh-once").toString
+    SimHashSnapshot.init(SimHashIndex.build(base, "doc_id", "text"),
+      spark, shDir)
+    val f = SimHashSnapshot.currentEpoch(spark, shDir)
+    SimHashSnapshot.append(spark, batch, shDir, "doc_id", "text")
+    assert(SimHashSnapshot.compact(spark, shDir) === f + 1)
+    val shRows = rowsPerId(s"$shDir/epoch=${f + 1}/blocks")
+    assert(shRows.keySet === batchIds &&
+      shRows.values.forall(_ == SimHash.Blocks.toLong),
+      "the compact must capture every batch doc's blocks once")
+    val shProbes = shProbe(SimHashSnapshot.load(spark, shDir).index)
+    SimHashSnapshot.appendFrom(spark, batch, shDir, f, "doc_id", "text")
+    assert(rowsPerId(s"$shDir/epoch=${f + 1}/blocks") === shRows,
+      "a captured batch must not be re-appended into the new epoch")
+    assert(shProbe(SimHashSnapshot.load(spark, shDir).index) === shProbes)
+  }
+
+  test("MinHash store re-appends a batch whose shingles the new epoch " +
+      "holds without its bands") {
+    import graft.dedup.{MinHashIndex, SnapshotIndex}
+    import graft.util.Epochs
+    val docs = graft.util.Tables(spark, sf).documents
+    val base = docs.filter(pmod(col("doc_id"), lit(5)) < 3)
+    val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 3)
+    val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
+    // batch docs that find themselves through the band join
+    def selfMatched(idx: MinHashIndex.Index): Set[Long] =
+      MinHashIndex.probe(idx, batch, "doc_id", "text", n = 3, tau = 0.7)
+        .filter(col("new_id") === col("seen_id"))
+        .collect().map(_.getLong(0)).toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft-mh-torn").toString
+    val baseIdx = MinHashIndex.build(base, "doc_id", "text", n = 3)
+    SnapshotIndex.init(baseIdx, spark, dir)
+    // epoch 1 as a rewrite that listed the batch's shingles after they
+    // committed and its bands before they did: base plus batch
+    // shingles, no batch bands
+    val e1 = Epochs.epochPath(dir, 1L)
+    MinHashIndex.save(baseIdx, e1)
+    MinHashLSH.shingled(batch, "doc_id", "text", 3)
+      .write.mode("append").parquet(s"$e1/shingles")
+    Epochs.publish(spark, dir, 1L)
+    assert(selfMatched(SnapshotIndex.load(spark, dir).index).isEmpty)
+    SnapshotIndex.appendFrom(spark, batch, dir, 0L, "doc_id", "text", n = 3)
+    assert(SnapshotIndex.currentEpoch(spark, dir) === 1L)
+    val bandIds = spark.read.parquet(s"$e1/bands")
+      .filter(col("doc_id").isInCollection(batchIds))
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(bandIds === batchIds,
+      "the re-append must restore the bands the rewrite missed")
+    assert(selfMatched(SnapshotIndex.load(spark, dir).index) === batchIds,
+      "every batch doc must be probeable in the new epoch")
+  }
+
+  test("Epochs.rewriteInPlace: a failed rewrite leaves no staging dir; a " +
+      "leftover one fails loudly and is kept") {
+    import graft.dedup.MinHashIndex
+    import graft.util.Epochs
+    val docs = graft.util.Tables(spark, sf).documents
+      .filter(pmod(col("doc_id"), lit(5)) === 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-staged").toString
+    MinHashIndex.save(MinHashIndex.build(docs, "doc_id", "text", n = 3), dir)
+    val before = parquetFiles(s"$dir/shingles")
+    val boom = intercept[RuntimeException] {
+      Epochs.rewriteInPlace(spark, dir) { (cur, next) =>
+        spark.read.parquet(s"$cur/shingles").write.parquet(s"$next/shingles")
+        throw new RuntimeException("rewrite failed")
+      }
+    }
+    assert(boom.getMessage === "rewrite failed")
+    assert(!new java.io.File(s"$dir/_staged").exists())
+    assert(parquetFiles(s"$dir/shingles") === before)
+    // a swap that died between delete and rename: the staged table is
+    // the only copy left
+    val orphan = new java.io.File(s"$dir/_staged/shingles")
+    java.nio.file.Files.move(new java.io.File(s"$dir/shingles").toPath,
+      java.nio.file.Files.createDirectories(orphan.toPath.getParent)
+        .resolve("shingles"))
+    val err = intercept[IllegalStateException] {
+      MinHashIndex.compactSaved(spark, dir)
+    }
+    assert(err.getMessage.contains("_staged"))
+    assert(parquetFiles(orphan.toString) === before,
+      "the only copy of a table must survive a refused rewrite")
+  }
+
   test("Epochs is artifact-agnostic: a plain parquet table gets the " +
       "same publish/pin/retire/fallback guarantees the index does") {
     import spark.implicits._
@@ -641,8 +855,8 @@ class DedupSpec extends SparkSpec {
     assert(Epochs.current(spark, dir) === 0L)
     assert(Epochs.published(spark, dir) === Seq(0L))
     // (the junk epoch stays on disk, unpublished — invisible forever)
-    // rewriteToNext: the generic maintenance loop
-    val e1 = Epochs.rewriteToNext(spark, dir) { (cur, next) =>
+    // rewriteToNextChecked: the generic maintenance loop
+    val e1 = Epochs.rewriteToNextChecked(spark, dir) { (cur, next) =>
       spark.read.parquet(s"$cur/t").filter($"id" =!= 2L)
         .write.parquet(s"$next/t")
     }
@@ -650,7 +864,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"${Epochs.epochPath(dir, 1L)}/t")
       .collect().map(_.getLong(0)).toSeq === Seq(1L))
     // retention: a second rewrite retires epoch 0
-    val e2 = Epochs.rewriteToNext(spark, dir) { (cur, next) =>
+    val e2 = Epochs.rewriteToNextChecked(spark, dir) { (cur, next) =>
       spark.read.parquet(s"$cur/t").write.parquet(s"$next/t")
     }
     assert(e2 === 2L)

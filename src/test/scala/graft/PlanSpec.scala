@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.{CurationQueries, Relational, SimQueries, StreamQueries}
+import org.apache.spark.graftspec.TestBus
 
 /** Physical-plan shape assertions: the scale claims in the Scaladoc
   * (broadcast here, WindowGroupLimit there, pushdown everywhere) are
@@ -9,6 +10,37 @@ import graft.queries.{CurationQueries, Relational, SimQueries, StreamQueries}
   * These specs pin the load-bearing plan features.
   */
 class PlanSpec extends SparkSpec {
+
+  test("Fanout.ensure floors a DataSource V2 read's scan parallelism " +
+      "without launching a job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout-v2").toString
+    spark.range(100).coalesce(1).write.mode("overwrite").parquet(dir)
+    val key = "spark.sql.sources.useV1SourceList"
+    val prior = spark.conf.getOption(key)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.conf.set(key, "")
+    try {
+      val df = spark.read.parquet(dir)
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case r: DataSourceV2ScanRelation => r
+      }.nonEmpty, "control: the read must resolve through DataSource V2")
+      TestBus.drain(sc)
+      sc.addSparkListener(listener)
+      val out =
+        try graft.util.Fanout.ensure(df)
+        finally { TestBus.drain(sc); sc.removeSparkListener(listener) }
+      assert(jobs.get() === 0, "ensure must read the split count job-free")
+      assert(out.rdd.getNumPartitions === sc.defaultParallelism)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("sample_stratified pushes partial top-k before the exchange") {
     val plan = planOf(CurationQueries.sampleStratified(spark, sf))

@@ -369,6 +369,53 @@ class SimSpec extends SparkSpec {
     assert(searchSeq(IvfPqSnapshot.load(spark, dir).index) === afterRm)
   }
 
+  test("one rewrite body, two paths: IvfPqIndex.compactSaved and " +
+      "IvfPqSnapshot.compact leave one file per cell and identical " +
+      "searches") {
+    import graft.sim.{IvfPqIndex, IvfPqSnapshot}
+    val e = graft.util.Tables(spark, sf).embeddings
+    val q = e.filter(col("vec_id") < 5)
+    val day1 = e.filter(pmod(col("vec_id"), lit(3)) === 0)
+    val batches = Seq(1, 2).map(m => e.filter(pmod(col("vec_id"), lit(3)) === m))
+    val index = IvfPqIndex.fit(day1, "vec_id", "embedding",
+      c = 8, m = 8, ks = 16, iters = 2)
+    def searchSeq(idx: IvfPqIndex): Seq[Seq[Any]] =
+      idx.search(q, e, "vec_id", "embedding", 5, nProbe = 4,
+          rerankFactor = 5)
+        .orderBy(col("query_id"), col("rank")).collect().map(_.toSeq).toSeq
+    def filesPerCell(cells: String): Map[String, Int] =
+      new java.io.File(cells).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+        .toMap
+    val flat = java.nio.file.Files.createTempDirectory("graft_ivfpq_flat").toString
+    val store = java.nio.file.Files.createTempDirectory("graft_ivfpq_store").toString
+    index.save(flat)
+    def models(dir: String): Seq[String] =
+      Seq("codebooks", "centroids").flatMap(t =>
+        new java.io.File(s"$dir/$t").listFiles().map(f => s"$t/${f.getName}"))
+        .sorted
+    val modelsBefore = models(flat)
+    IvfPqSnapshot.init(index, spark, store)
+    batches.foreach { b =>
+      IvfPqIndex.append(spark, flat, b, "vec_id", "embedding")
+      IvfPqSnapshot.append(spark, store, b, "vec_id", "embedding")
+    }
+    IvfPqIndex.compactSaved(spark, flat)
+    assert(IvfPqSnapshot.compact(spark, store) === 1L)
+    val cells = filesPerCell(s"$flat/cells")
+    assert(cells.nonEmpty && cells.values.forall(_ == 1),
+      s"one file per cell dir after compactSaved: $cells")
+    assert(filesPerCell(s"$store/epoch=1/cells") === cells)
+    val compacted = searchSeq(IvfPqIndex.load(spark, flat))
+    assert(compacted.nonEmpty)
+    assert(searchSeq(IvfPqSnapshot.load(spark, store).index) === compacted)
+    // the flat compact rewrites only the cells: the models a concurrent
+    // flat append reads are never swapped
+    assert(models(flat) === modelsBefore,
+      "the flat compact must leave the model files in place")
+  }
+
   test("PqCodes native encoder matches the distributed encode argmin") {
     // the map-only native encoder is the scale path; the
     // explode/join/groupBy formulation stays the oracle — codes must

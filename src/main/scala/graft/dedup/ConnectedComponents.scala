@@ -48,48 +48,68 @@ object ConnectedComponents {
 
   /** Edge count at or below which [[labels]]/[[labelsStar]] take the
     * driver union-find early exit instead of the iterative distributed
-    * loop. 2²² edges = two longs each ≈ 64 MB collected — the same
-    * data-to-driver class as a broadcast hash join's build side, for a
-    * structure (path-compressed union-find) that labels the graph in
-    * one pass instead of diameter (resp. log²) ROUNDS of join + agg +
-    * checkpoint jobs. A near-dup pair graph at 100 TB exceeds the
-    * threshold and runs the distributed loop unchanged; when it does
-    * NOT — duplicate clusters are rare relative to corpus size more
-    * often than not — collecting beats scheduling dozens of
-    * cluster-wide shuffles over KB of edges. Callers that must pin the
-    * distributed path (specs of the loop itself) pass
-    * `smallCollectMax = 0`.
+    * loop. 2²² edges arrive at the driver as two primitive longs each,
+    * 64 MB; the union-find's sort buffer and node arrays add at most as
+    * much again ([[unionFindLabels]]) — the same data-to-driver class
+    * as a broadcast hash join's build side, for a structure
+    * (path-compressed union-find) that labels the graph in one pass
+    * instead of diameter (resp. log²) ROUNDS of join + agg + checkpoint
+    * jobs. A near-dup pair graph at 100 TB exceeds the threshold and
+    * runs the distributed loop unchanged; when it does NOT — duplicate
+    * clusters are rare relative to corpus size more often than not —
+    * collecting beats scheduling dozens of cluster-wide shuffles over KB
+    * of edges. Callers that must pin the distributed path (specs of the
+    * loop itself) pass `smallCollectMax = 0`.
     */
   val DriverUnionFindMaxEdges: Long = 1L << 22
 
-  /** Driver union-find over a collected edge list (id_a, id_b) —
-    * the small-graph early exit. Union-by-min keeps each tree's root
-    * at the component's minimum id, so `find` IS the label; path
-    * compression makes the whole pass O(E α(E)). Output contract is
-    * exactly [[labels]]': (id, label = min reachable id), one row per
-    * node with at least one edge.
+  /** Driver union-find over the edge list (id_a, id_b) — the
+    * small-graph early exit. Each partition packs its edges into one
+    * primitive `long[]` on the executor, so the driver holds 16 B an
+    * edge, never a boxed row. Nodes are indexed by the sorted distinct
+    * endpoints (8 B a node, plus a 4 B parent); union-by-min over those
+    * indices keeps each root at its component's minimum id, so `find`
+    * IS the label, and path halving makes the pass O(E α(E)). Output
+    * contract is exactly [[labels]]': (id, label = min reachable id),
+    * one row per node with at least one edge, ascending id, as a local
+    * relation, so a consumer's join planning still sizes it by its row
+    * count.
     */
   private def unionFindLabels(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val parent = new scala.collection.mutable.LongMap[Long]()
-    def find(x: Long): Long = {
+    val parts = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1), "null edge endpoint")
+          b += r.getLong(0); b += r.getLong(1)
+        }
+        Iterator.single(b.result())
+      }.collect()
+    val ids = {
+      val all = Array.concat(parts.toIndexedSeq: _*)
+      java.util.Arrays.sort(all)
+      var n = 0
+      all.foreach { v => if (n == 0 || all(n - 1) != v) { all(n) = v; n += 1 } }
+      java.util.Arrays.copyOf(all, n)
+    }
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.collect().foreach { row =>
-      val a = row.getLong(0)
-      val b = row.getLong(1)
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a)
-      val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    parts.foreach { p =>
+      var i = 0
+      while (i < p.length) {
+        val ra = find(java.util.Arrays.binarySearch(ids, p(i)))
+        val rb = find(java.util.Arrays.binarySearch(ids, p(i + 1)))
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        i += 2
+      }
     }
-    parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("id", "label")
+    Seq.tabulate(ids.length)(i => (ids(i), ids(find(i)))).toDF("id", "label")
   }
 
   /** (id, label) for every node of `edges` (columns id_a, id_b); label =
@@ -105,8 +125,7 @@ object ConnectedComponents {
     // diameter rounds of distributed jobs (DriverUnionFindMaxEdges doc);
     // the count doubles as the persist's materialization
     if (e.count() <= smallCollectMax)
-      return try unionFindLabels(e.select(col("id_a"), col("id_b")))
-      finally e.unpersist()
+      return try unionFindLabels(e) finally e.unpersist()
     val sym = e.select(col("id_a").as("u"), col("id_b").as("v"))
       .unionByName(e.select(col("id_b").as("u"), col("id_a").as("v")))
     // round 0 fused into initialization: one aggregation yields both the

@@ -33,13 +33,14 @@ object MinHashLSH {
   val NumBands = 16
   val LanesPerBand: Int = NumLanes / NumBands
 
-  /** (id, shingles) with empty-shingle docs dropped. Tokenization is
-    * bound to an attribute first so the shifted-slice zip_with in
-    * wordNgrams (which references the token array n+1 times) consumes
-    * an attribute, not a re-evaluated derived expression — the SURVEY
-    * §8 higher-order-function pitfall.
-    */
-  /** NOTE on fan-out placement: the scan-parallelism floor
+  /** (id, shingles) with empty-shingle docs dropped. The drop tests
+    * the token count (`tokens` holds no null element, so a doc has a
+    * shingle iff it has ≥ n tokens), not `size(shingles)`: the
+    * optimizer pushes a filter below the projection by inlining the
+    * alias, so a filter on the shingles would build every doc's
+    * n-grams twice, once for the filter and once for the output.
+    *
+    * NOTE on fan-out placement: the scan-parallelism floor
     * (graft.util.Fanout) is applied by the CORPUS-scale entry points
     * ([[nearDuplicates]], [[pairRecallOn]], [[MinHashIndex.build]]),
     * NOT here — shingled is also the per-batch gateway of the probe
@@ -49,11 +50,9 @@ object MinHashLSH {
     */
   def shingled(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     docs
-      .withColumn("graft_toks", TextOps.tokens(col(textCol)))
-      .select(
-        col(idCol).as("doc_id"),
-        TextOps.wordNgrams(col("graft_toks"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
+      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("graft_toks"))
+      .filter(size(col("graft_toks")) >= n)
+      .select(col("doc_id"), TextOps.wordNgrams(col("graft_toks"), n).as("shingles"))
 
   /** (doc_id, lanes array<long>) minhash signatures — MAP-ONLY: all 64
     * lanes fold in one native pass per row (graft.functions

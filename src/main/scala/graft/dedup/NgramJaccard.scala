@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.text.TextOps
 
 /** Exact n-gram Jaccard pair mining via a PREFIX-FILTERED inverted
   * index (the AllPairs/PPJoin family, Xiao et al., WWW'08).
@@ -47,15 +46,12 @@ import graft.text.TextOps
   */
 object NgramJaccard {
 
-  /** (doc_id, shingles) — one codegen'd shingling pass. */
+  /** (doc_id, shingles) — [[MinHashLSH.shingled]] behind the
+    * scan-parallelism floor (graft.util.Fanout doc; a no-op at scale).
+    */
   private[dedup] def shingle(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
-    // scan-parallelism floor (graft.util.Fanout doc) — no-op at scale
-    graft.util.Fanout.ensure(docs)
-      .withColumn("graft_toks", TextOps.tokens(col(textCol)))
-      .select(col(idCol).as("doc_id"),
-        TextOps.wordNgrams(col("graft_toks"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
+    MinHashLSH.shingled(graft.util.Fanout.ensure(docs), idCol, textCol, n)
 
   /** The narrow prefix index (doc_id, sh): the rarest
     * |kept|−⌈τ·|orig|⌉+1 shingles per doc in (df, shingle) order, df=1

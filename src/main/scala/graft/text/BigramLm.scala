@@ -28,16 +28,12 @@ object BigramLm {
 
   private val Ln2 = math.log(2.0)
 
-  /** Occurrence char bigrams of the lowercased text as an array column.
-    * The char array is bound to an attribute by the caller before the
-    * zip_with consumes it (the higher-order-function re-evaluation
-    * pitfall); zip_with pads the shorter side with null → concat turns
-    * the pad into null → array_compact drops it.
+  /** Occurrence char bigrams of a char array as an array column: the
+    * [[TextOps.wordNgramsSep]] kernel with an empty joiner, every
+    * occurrence kept.
     */
   private[graft] def bigramsAll(chars: Column): Column =
-    array_compact(zip_with(chars,
-      slice(chars, lit(2), greatest(size(chars) - 1, lit(0))),
-      (a, b) => concat(a, b)))
+    TextOps.wordNgramsSep(chars, 2, "", distinct = false)
 
   private[graft] def charsOf(text: Column): Column =
     array_remove(split(lower(text), ""), "")
@@ -50,8 +46,7 @@ object BigramLm {
     */
   def fit(docs: DataFrame, textCol: String): Model = {
     val grams = docs
-      .withColumn("graft_chars", charsOf(col(textCol)))
-      .select(explode(bigramsAll(col("graft_chars"))).as("g"))
+      .select(explode(bigramsAll(charsOf(col(textCol)))).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("cg"))
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))

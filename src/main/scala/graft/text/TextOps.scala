@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * tokenization, n-grams, quality metrics, language-ID scoring, and a
   * rolling-hash fingerprint.
   *
-  * Everything here is a pure `Column` expression built from codegen'd
-  * `functions._` (incl. higher-order array functions) — no UDFs, so every
-  * metric stays inside WholeStageCodegen and partial aggregation at
-  * 100 TB. The reference's users would run these as external `-mapper`
+  * Everything here is a pure `Column` expression built from
+  * `functions._` and graft's native codegen'd expressions — no UDFs, so
+  * every metric stays inside WholeStageCodegen and partial aggregation
+  * at 100 TB. The reference's users would run these as external `-mapper`
   * scripts (one process per record stream, MultiPipeMapRed.java); here
   * they are columns you can stack in ONE pass over the corpus.
   */
@@ -45,56 +45,42 @@ object TextOps {
       i => array_join(slice(toks, i * stride + 1, lit(chunkTokens)), " "))
   }
 
-  /** Word n-grams (each gram = n tokens joined by one space), distinct.
-    *
-    * Built by zipping the token array with its own k-shifted slices and
-    * concatenating — ONE pass per shift, each input array evaluated
-    * once. `zip_with` pads the shorter side with nulls, `concat`
-    * null-propagates, and `array_compact` drops the padded tail, which
-    * also makes docs with fewer than n tokens come out empty with no
-    * special-casing.
+  /** Word n-grams (each gram = n tokens joined by one space), distinct,
+    * in first-occurrence order. One native pass per row, the
+    * [[graft.functions.Ngrams]] kernel (see [[wordNgramsSep]]); a doc
+    * with fewer than n tokens comes out empty, a null array null.
     */
-  def wordNgrams(toks: Column, n: Int): Column = {
-    require(n >= 1, "n-gram size must be >= 1")
-    val grams = (1 until n).foldLeft(toks) { (acc, k) =>
-      val shifted = slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0)))
-      zip_with(acc, shifted, (g, t) => concat(g, lit(" "), t))
-    }
-    array_distinct(array_compact(grams))
-  }
+  def wordNgrams(toks: Column, n: Int): Column =
+    wordNgramsSep(toks, n, " ", distinct = true)
 
   /** Word n-grams WITH multiplicity (no dedup): the occurrence stream
     * repetition metrics need — `dup_frac` counts how often the SAME
-    * gram recurs within one doc, which `wordNgrams`' array_distinct
-    * destroys. Same shifted-zip construction, one codegen'd pass per
-    * shift.
+    * gram recurs within one doc, which `wordNgrams`' dedup destroys.
+    * Same kernel, every window kept.
     */
-  def wordNgramsAll(toks: Column, n: Int): Column = {
-    require(n >= 1, "n-gram size must be >= 1")
-    val grams = (1 until n).foldLeft(toks) { (acc, k) =>
-      val shifted = slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0)))
-      zip_with(acc, shifted, (g, t) => concat(g, lit(" "), t))
-    }
-    array_compact(grams)
-  }
+  def wordNgramsAll(toks: Column, n: Int): Column =
+    wordNgramsSep(toks, n, " ", distinct = false)
 
-  /** Character n-grams of the lowercased text, distinct — same
-    * shifted-zip construction over the exploded char array (split("")
-    * leaves a trailing empty string; remove it or the last gram comes
-    * out one char short).
+  /** Character n-grams of the lowercased text, distinct — the same
+    * kernel over the char array with an empty joiner (split("") leaves a
+    * trailing empty string; remove it or the last gram comes out one
+    * char short).
     */
   def charNgrams(text: Column, n: Int): Column =
-    wordNgramsSep(array_remove(split(lower(text), ""), ""), n, "")
+    wordNgramsSep(array_remove(split(lower(text), ""), ""), n, "", distinct = true)
 
-  /** n-grams with a custom joiner (shared by word/char variants). */
-  private def wordNgramsSep(arr: Column, n: Int, sep: String): Column = {
-    val grams = (1 until n).foldLeft(arr) { (acc, k) =>
-      val shifted = slice(arr, lit(k + 1), greatest(size(arr) - k, lit(0)))
-      zip_with(acc, shifted,
-        (g, t) => if (sep.isEmpty) concat(g, t) else concat(g, lit(sep), t))
-    }
-    array_distinct(array_compact(grams))
-  }
+  /** The n-grams of an `array<string>` joined by `sep`, shared by the
+    * word, char and bigram shingles: the native
+    * [[graft.functions.Ngrams]] expression, wrapped directly into the
+    * Column (ColumnBridge). It reads each element once and builds each
+    * gram in one copy, codegen'd; a window holding a null element is
+    * dropped, and `distinct` keeps each gram's first occurrence.
+    */
+  private[graft] def wordNgramsSep(arr: Column, n: Int, sep: String,
+      distinct: Boolean): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.functions.Ngrams(
+        org.apache.spark.sql.graft.ColumnBridge.expression(arr), n, sep, distinct))
 
   /** BPE-pretokenizer-style segmentation count: letter runs, digit runs,
     * and single punctuation marks over the lowercased text (whitespace

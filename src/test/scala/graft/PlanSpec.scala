@@ -42,6 +42,31 @@ class PlanSpec extends SparkSpec {
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("n-gram shingles plan the native Ngrams kernel, no higher-order " +
+      "function") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // a range scan, not a local relation: ConvertToLocalRelation would
+    // fold a local projection away and hide whatever it contained
+    val docs = spark.range(4).select(col("id"),
+      concat(lit("the cat sat on the mat "), col("id").cast("string")).as("text"))
+    def plans(df: DataFrame)(p: Expression => Boolean): Boolean =
+      df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(p)))
+    val shinglers = Seq(
+      "MinHashLSH.shingled" -> graft.dedup.MinHashLSH.shingled(docs, "id", "text", 3),
+      "NoveltyIndex.gramHashes" -> graft.dedup.NoveltyIndex.gramHashes(docs, "text", 3),
+      "TextOps.charNgrams" -> docs.select(graft.text.TextOps.charNgrams(col("text"), 3)),
+      "BigramLm.bigramsAll" -> docs.select(graft.text.BigramLm.bigramsAll(
+        graft.text.BigramLm.charsOf(col("text")))))
+    shinglers.foreach { case (name, df) =>
+      assert(!plans(df)(_.isInstanceOf[HigherOrderFunction]),
+        s"$name plans a higher-order function:\n" + df.queryExecution.optimizedPlan)
+      assert(plans(df)(_.isInstanceOf[graft.functions.Ngrams]),
+        s"$name does not plan the Ngrams kernel:\n" + df.queryExecution.optimizedPlan)
+    }
+  }
+
   test("sample_stratified pushes partial top-k before the exchange") {
     val plan = planOf(CurationQueries.sampleStratified(spark, sf))
     assert(plan.contains("WindowGroupLimit"), plan.take(800))

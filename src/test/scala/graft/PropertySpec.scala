@@ -543,9 +543,68 @@ class PropertySpec extends AnyFunSuite {
         val fastStar = m(graft.dedup.ConnectedComponents.labelsStar(df))
         val slowStar = m(graft.dedup.ConnectedComponents
           .labelsStar(df, smallCollectMax = 0))
-        fast == slow && fastStar == slowStar && fast == fastStar
+        // the threshold edge: smallCollectMax = E takes the union-find,
+        // E - 1 the loop. labels counts the raw edge rows, labelsStar
+        // the distinct canonical (max, min) pairs its loop starts from
+        val e = edges.length.toLong
+        val eStar = edges.map(p => (p._1 max p._2, p._1 min p._2)).distinct.length.toLong
+        val edge = Seq(e, e - 1).map(k => m(graft.dedup.ConnectedComponents
+          .labels(df, smallCollectMax = k)))
+        val edgeStar = Seq(eStar, eStar - 1).map(k => m(graft.dedup.ConnectedComponents
+          .labelsStar(df, smallCollectMax = k)))
+        fast == slow && fastStar == slowStar && fast == fastStar &&
+          edge.forall(_ == slow) && edgeStar.forall(_ == slowStar)
       }
     }, 12)
+  }
+
+  test("Ngrams: the native kernel equals the zip_with construction on " +
+    "arbitrary arrays, codegen'd and interpreted") {
+    import org.apache.spark.sql.Column
+    // the shifted-slice zip_with construction the kernel replaced, kept
+    // as the reference twin: zip_with pads the shorter side with null,
+    // concat null-propagates, array_compact drops the nulls
+    def zipWithNgrams(arr: Column, n: Int, sep: String, distinct: Boolean): Column = {
+      val grams = (1 until n).foldLeft(arr) { (acc, k) =>
+        val shifted = slice(arr, lit(k + 1), greatest(size(arr) - k, lit(0)))
+        zip_with(acc, shifted,
+          (g, t) => if (sep.isEmpty) concat(g, t) else concat(g, lit(sep), t))
+      }
+      if (distinct) array_distinct(array_compact(grams)) else array_compact(grams)
+    }
+    val combos = for {
+      n <- 1 to 4; sep <- Seq(" ", ""); distinct <- Seq(true, false)
+    } yield (n, sep, distinct)
+    // few distinct tokens so windows repeat (distinct has work to do);
+    // non-ASCII of 2, 3 and 4 UTF-8 bytes; "" and " " as tokens
+    val tok = Gen.frequency(
+      1 -> Gen.const(null: String),
+      8 -> Gen.oneOf("a", "b", "ab", "", " ", "é", "ß", "日本", "𝄞x"))
+    val arr = Gen.frequency(
+      1 -> Gen.const(null: List[String]),
+      8 -> Gen.choose(0, 9).flatMap(Gen.listOfN(_, tok)))
+    // a separate session: the factory-mode conf stays off the shared one
+    for ((wholeStage, factory) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      s.conf.set("spark.sql.codegen.factoryMode", factory)
+      // a codegen compile error must fail, not fall back to interpreted
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      import s.implicits._
+      checkProp(forAll(Gen.listOfN(12, arr)) { arrs =>
+        // repartition keeps the projection out of ConvertToLocalRelation,
+        // which would evaluate it interpreted on the driver
+        val df = arrs.zipWithIndex.map(_.swap).toDF("i", "toks").repartition(2)
+        val cols = combos.flatMap { case (n, sep, distinct) => Seq(
+          graft.text.TextOps.wordNgramsSep(col("toks"), n, sep, distinct),
+          zipWithNgrams(col("toks"), n, sep, distinct)) }
+        val rows = df.select(col("i") +: cols: _*).collect()
+        Prop(rows.length == arrs.length && rows.forall { r =>
+          // null == null, else element-wise Seq equality (order included)
+          combos.indices.forall(c => r.get(1 + 2 * c) == r.get(2 + 2 * c))
+        }) :| s"factoryMode=$factory"
+      }, 8)
+    }
   }
 
   test("splitAssign: deterministic, exhaustive, and 97/2/1-shaped on " +

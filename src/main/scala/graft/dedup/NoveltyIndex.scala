@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.util.Epochs
 
 /** Persistent corpus n-gram set — the INCREMENTAL crawl-novelty story:
@@ -42,6 +44,14 @@ import graft.util.Epochs
   * different bucket count (the old fixed 64, appended files inside the
   * buckets) reads, appends and compacts through the same paths — the
   * bucket column is never a join key.
+  *
+  * A fused append ([[probeAndAdmit]], the stream's path) writes its
+  * bloom row and its delta grams in one job under the epoch's
+  * `_append-<uuid>/` staging dir (`part=bloom/`, `part=delta/`) and
+  * publishes them by renames: the bloom file(s) into `bloom/` first,
+  * then the delta file(s) into `delta/`, then the staging dir goes.
+  * No reader lists a staging dir; one left by a crash is dropped with
+  * its epoch.
   *
   * Physical-duplicate contract (the snapshot indexes' retry contract,
   * restated for a SET): the logical content is the distinct gram set;
@@ -144,6 +154,9 @@ object NoveltyIndex {
 
   private def bloomPath(epochDir: String) = s"$epochDir/bloom"
 
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** The epoch's gram set, buckets ∪ delta, empty-tree-safe: a part
     * whose writes left no data files (empty corpus, no append yet) is
     * left out, and an epoch with neither reads as the EMPTY gram set —
@@ -151,11 +164,10 @@ object NoveltyIndex {
     * of dying in parquet schema inference on a _SUCCESS-only directory.
     */
   private def epochGrams(spark: SparkSession, epochDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(epochDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, epochDir)
     // globStatus returns null when no path component matches at all
     def hasFiles(glob: String) =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(glob)))
+      Option(fs.globStatus(new Path(glob)))
         .exists(_.nonEmpty)
     // schemas pinned (gh data column, + the b partition dir for the
     // buckets): the layout is this object's own, so inference would
@@ -242,30 +254,30 @@ object NoveltyIndex {
     */
   def loadBloom(spark: SparkSession, dir: String,
       epoch: Long): Option[Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(
-      bloomPath(Epochs.epochPath(dir, epoch)))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    val p = new Path(bloomPath(Epochs.epochPath(dir, epoch)))
+    if (!fsOf(spark, dir).exists(p)) None
     else {
       // schema pinned for the same reason as the gram read: the bloom
       // table is this object's own one-column layout
       val rows = spark.read.schema("bf BINARY").parquet(p.toString).collect()
         .map(_.getAs[Array[Byte]](0))
-      if (rows.isEmpty) None
-      else {
-        val (k0, acc) = graft.functions.BloomUtil.deserializeWords(rows.head)
-        rows.tail.foreach { b =>
-          val (k, w) = graft.functions.BloomUtil.deserializeWords(b)
-          require(k == k0 && w.length == acc.length,
-            s"NoveltyIndex.loadBloom: mixed filter geometry under $p " +
-              s"(k=$k0/${k}, words=${acc.length}/${w.length}) — the " +
-              "epoch's sketch is unusable; compact to rebuild it")
-          var i = 0
-          while (i < acc.length) { acc(i) |= w(i); i += 1 }
-        }
-        Some(graft.functions.BloomUtil.serialize(acc, k0))
-      }
+      Option.when(rows.nonEmpty)(orMerge(rows.toSeq, p.toString))
     }
+  }
+
+  /** OR-merge sketch rows of one geometry into a fresh filter. */
+  private def orMerge(rows: Seq[Array[Byte]], where: String): Array[Byte] = {
+    val (k0, acc) = graft.functions.BloomUtil.deserializeWords(rows.head)
+    rows.tail.foreach { b =>
+      val (k, w) = graft.functions.BloomUtil.deserializeWords(b)
+      require(k == k0 && w.length == acc.length,
+        s"NoveltyIndex: mixed filter geometry under $where " +
+          s"(k=$k0/${k}, words=${acc.length}/${w.length}) — the " +
+          "epoch's sketch is unusable; compact to rebuild it")
+      var i = 0
+      while (i < acc.length) { acc(i) |= w(i); i += 1 }
+    }
+    graft.functions.BloomUtil.serialize(acc, k0)
   }
 
   /** Index a corpus: distinct grams pinned and counted once, written
@@ -282,11 +294,8 @@ object NoveltyIndex {
   }
 
   /** Pin the current epoch and load its gram set + membership sketch. */
-  def load(spark: SparkSession, dir: String): Snapshot = {
-    val e = Epochs.current(spark, dir)
-    Snapshot(epochGrams(spark, Epochs.epochPath(dir, e)), e, dir,
-      loadBloom(spark, dir, e))
-  }
+  def load(spark: SparkSession, dir: String): Snapshot =
+    new HeldSketch().load(spark, dir)
 
   /** Per-source novelty of a new crawl against the indexed corpus —
     * the EXACT output shape (and arithmetic) of the full recompute:
@@ -298,14 +307,12 @@ object NoveltyIndex {
     * count. Two |sources|-row rollups + one |sources|-row join close
     * it out.
     *
-    * Deliberate plan trade (PlanSpec-pinned): `n_grams` and `n_novel`
-    * each consume the new side, so the new crawl's gram pass runs
-    * TWICE. The alternative — one pass with a left join + seen flag —
-    * needs the INDEX side distinct-exchanged per probe to stay
-    * duplicate-safe, i.e. a shuffle of the corpus-scale gram set to
-    * save a map-side re-derivation of the crawl-scale side. At 100 TB
-    * the corpus set dwarfs any daily crawl; paying the small side
-    * twice is the right plan.
+    * Plan shape (PlanSpec-pinned): `n_grams` and `n_novel` each
+    * consume the new side, so the new crawl's gram pass runs TWICE. A
+    * left join + seen flag would need the INDEX side distinct-exchanged
+    * per probe to stay duplicate-safe; the one-pass form that needs no
+    * such shuffle is the positive `gh IN (grams)` flag (an
+    * ExistenceJoin), which [[probeAndAdmit]] pins for the stream.
     *
     * `prefilter = true` engages the epoch's bloom sketch (the
     * q_bloom_join shape, inverted for an ANTI join): the filter rides
@@ -326,14 +333,7 @@ object NoveltyIndex {
       .agg(count(lit(1)).as("n_grams"))
     val novelG = snapshot.bloom match {
       case Some(bf) if prefilter =>
-        val s = newDocs.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        import s.implicits._
-        val bloomDf = Seq(Tuple1(bf)).toDF("graft_bloom")
-        val flagged = newG.crossJoin(broadcast(bloomDf))
-          .withColumn("maybe_seen", call_function("graft_bloom_contains",
-            col("graft_bloom"), col("gh")))
-          .drop("graft_bloom")
+        val flagged = bloomFlagged(newG, bf)
         flagged.filter(!col("maybe_seen"))
           .select(col(sourceCol), col("gh"))
           .unionByName(flagged.filter(col("maybe_seen"))
@@ -349,6 +349,20 @@ object NoveltyIndex {
       .select(col(sourceCol), col("n_grams"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
       .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
+  }
+
+  /** `newG` with a `maybe_seen` column: the sketch's answer for each
+    * gh, the filter riding ONE one-row broadcast. False proves the gh
+    * novel; true still needs the exact test.
+    */
+  private def bloomFlagged(newG: DataFrame, bf: Array[Byte]): DataFrame = {
+    val s = newG.sparkSession
+    graft.functions.GraftFunctions.register(s)
+    import s.implicits._
+    newG.crossJoin(broadcast(Seq(Tuple1(bf)).toDF("graft_bloom")))
+      .withColumn("maybe_seen", call_function("graft_bloom_contains",
+        col("graft_bloom"), col("gh")))
+      .drop("graft_bloom")
   }
 
   /** The approximate ZERO-JOIN novelty tier — the probe for when the
@@ -389,116 +403,226 @@ object NoveltyIndex {
       .withColumn("novelty_bp_lb", expr("n_novel_lb * 10000 div n_grams"))
   }
 
-  /** Probe + admit FUSED for the streaming acquisition loop — one
-    * shared gram pass instead of the 4–6 the unfused pair pays (probe
-    * derives the batch's gram set for the `n_grams` rollup AND for each
-    * prefilter branch; append then re-derives it from the raw text and
-    * re-reads the epoch's gram files to re-anti-join). Here the batch's
-    * distinct (source, gh) pairs and the novel subset are each
-    * materialized ONCE (eager localCheckpoint — batch-scale by the
-    * O(new crawl) contract, reclaimed by the ContextCleaner when the
-    * batch's frames drop) and every consumer reads the pinned copy:
-    * the probe rollups, the admit's bloom row, and the admit's gram
-    * files. Output rows and LOGICAL on-disk state are identical to
-    * `probe()` followed by `append()` (both write their novel set to
-    * `delta/` as [[filesFor]] of its count; here the count is the
-    * probe rollup's, an upper bound, so file sizing may differ — every
-    * read path is layout-insensitive):
+  /** Probe + admit FUSED for the streaming acquisition loop: one
+    * pinned probe pass, one rollup and one write per batch.
     *
-    *  - the gh set admit writes IS `distinct gh` of the probe's novel
-    *    (source, gh) pairs — same anti-join, same epoch;
-    *  - the bloom row consumes the pinned pairs pre-distinct (bit-set
-    *    idempotence: bloom(multiset) ≡ bloom(set), byte-identical) and
-    *    reuses the snapshot's sketch GEOMETRY (every row under an
-    *    epoch shares (m, k) by construction, so geometry from the
-    *    pinned sketch ≡ geometry from a re-read);
+    *  1. **Pin.** The batch's distinct (source, gh) pairs flagged
+    *     `seen` ([[seenFlagged]]) are materialized ONCE (eager
+    *     localCheckpoint — batch-scale by the O(new crawl) contract,
+    *     released when the call returns). Every later step reads it.
+    *  2. **Rollup.** One `groupBy(source)` over the pin gives `n_grams`
+    *     (`count`) and `n_novel` (`count_if(!seen)`). An
+    *     [[org.apache.spark.sql.Observation]] on its input aggregates
+    *     the batch's bloom row (`graft_bloom_agg` of the unseen gh at
+    *     the snapshot sketch's geometry) in the same job — the
+    *     `Pipes.counted` mechanism, no job of its own.
+    *  3. **Write.** [[stageAppend]] writes the bloom row and the
+    *     novel `distinct gh` in one job under `_append-<uuid>/`;
+    *     [[publishStaged]] renames them in, bloom first, then delta.
+    *     Nothing is written when nothing is novel.
+    *
+    * Output rows and LOGICAL on-disk state are those of `probe()`
+    * followed by `append()` (the delta write is sized from the
+    * rollup's Σ n_novel, an upper bound on the distinct novel count,
+    * so file sizing may differ — every read path is
+    * layout-insensitive):
+    *
+    *  - the gh set admitted IS `distinct gh` of the pin's unseen
+    *    pairs — same snapshot, same exact membership test;
+    *  - the bloom row takes the unseen pairs pre-distinct (bit-set
+    *    idempotence: bloom(multiset) ≡ bloom(set), byte-identical) at
+    *    the snapshot's geometry (every row of an epoch shares (m, k)
+    *    by construction);
     *  - the appenders' maintenance fence is intact: if the epoch
     *    advanced between the snapshot and the admit (or advances while
-    *    admitting), the fused fast path steps aside and the full
-    *    [[append]] recomputation runs against the new epoch — the
+    *    admitting), the fused path steps aside and the full [[append]]
+    *    recomputation runs against the new epoch — the
     *    physical-duplicate contract makes the raced write harmless
     *    exactly as it does for plain append.
     *
+    * The published bloom files and row are folded into `held`, so the
+    * next batch of the same stream reads no sketch. Pin, rollup and
+    * write each run under a job description naming this call site.
     * Returns the probe's rows (collected — |sources|-scale, KB).
     */
   private[graft] def probeAndAdmit(spark: SparkSession, snapshot: Snapshot,
       batch: DataFrame, sourceCol: String, textCol: String, n: Int,
-      prefilter: Boolean): Array[org.apache.spark.sql.Row] = {
-    val newG = sourceGramHashes(batch, sourceCol, textCol, n).distinct()
-      .localCheckpoint(true)
-    try probeAndAdmitPinned(spark, snapshot, batch, newG, sourceCol,
-      textCol, n, prefilter)
-    finally graft.util.Caches.release(newG)
-  }
-
-  private def probeAndAdmitPinned(spark: SparkSession, snapshot: Snapshot,
-      batch: DataFrame, newG: DataFrame, sourceCol: String, textCol: String,
-      n: Int, prefilter: Boolean): Array[org.apache.spark.sql.Row] = {
-    val total = newG.groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("n_grams"))
-    val novelG = (snapshot.bloom match {
-      case Some(bf) if prefilter =>
-        graft.functions.GraftFunctions.register(spark)
-        import spark.implicits._
-        val bloomDf = Seq(Tuple1(bf)).toDF("graft_bloom")
-        val flagged = newG.crossJoin(broadcast(bloomDf))
-          .withColumn("maybe_seen", call_function("graft_bloom_contains",
-            col("graft_bloom"), col("gh")))
-          .drop("graft_bloom")
-        flagged.filter(!col("maybe_seen"))
-          .select(col(sourceCol), col("gh"))
-          .unionByName(flagged.filter(col("maybe_seen"))
-            .select(col(sourceCol), col("gh"))
-            .join(snapshot.grams, Seq("gh"), "left_anti"))
-      case _ =>
-        newG.join(snapshot.grams, Seq("gh"), "left_anti")
-          .select(col(sourceCol), col("gh"))
-    }).localCheckpoint(true)
-    try probeAndAdmitNovel(spark, snapshot, batch, novelG, total,
-      sourceCol, textCol, n)
-    finally graft.util.Caches.release(novelG)
-  }
-
-  private def probeAndAdmitNovel(spark: SparkSession, snapshot: Snapshot,
-      batch: DataFrame, novelG: DataFrame, total: DataFrame,
-      sourceCol: String, textCol: String, n: Int)
-      : Array[org.apache.spark.sql.Row] = {
-    val novel = novelG.groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("n_novel"))
-    val rows = total.join(novel, Seq(sourceCol), "left")
-      .select(col(sourceCol), col("n_grams"),
-        coalesce(col("n_novel"), lit(0L)).as("n_novel"))
-      .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
-      .collect()
-    // admit — fused fast path only while the snapshot's epoch is still
-    // current; any advance (before or during) falls back to the full
-    // append recomputation so the fence semantics are exactly plain
-    // append's
-    if (Epochs.current(spark, snapshot.dir) == snapshot.epoch) {
-      val epochDir = Epochs.epochPath(snapshot.dir, snapshot.epoch)
-      val novelGh = novelG.select(col("gh")).distinct()
-      snapshot.bloom.foreach { bf =>
-        val (k, words) = graft.functions.BloomUtil.deserializeWords(bf)
-        // the bloom is bit-idempotent, so it can consume the pinned
-        // per-(source, gh) pairs directly — same bits as the distinct
-        // set, one distinct-exchange saved
-        appendBloomRow(spark, epochDir, novelG.select(col("gh")),
-          words.length * 64, k)
-      }
-      // delta file count derived from the DATA (the probe rollup already
-      // counted the novel grams — free; Σ per-source counts bounds the
-      // distinct gh count from above): a daily crawl appends ONE file,
-      // where a fixed shuffle-partition count would write a task wave
-      // of near-empty parquet files
-      appendDelta(novelGh, rows.iterator.map(_.getLong(2)).sum, epochDir)
-      Epochs.awaitNoMaintenance(spark, snapshot.dir)
-      val now = Epochs.current(spark, snapshot.dir)
-      if (now != snapshot.epoch)
-        appendFrom(spark, batch, snapshot.dir, now, textCol, n)
-    } else {
-      append(spark, batch, snapshot.dir, textCol, n)
+      prefilter: Boolean, held: HeldSketch = new HeldSketch): Array[Row] = {
+    val pinned = described(spark, "pin") {
+      seenFlagged(snapshot, batch, sourceCol, textCol, n, prefilter)
+        .localCheckpoint(true)
     }
-    rows
+    try {
+      val unseen = !col("seen")
+      val obs = new org.apache.spark.sql.Observation("novelty_bloom_row")
+      val geometry = snapshot.bloom.map(graft.functions.BloomUtil.deserializeWords)
+      val observed = geometry.fold(pinned) { case (k, words) =>
+        graft.functions.GraftFunctions.register(spark)
+        pinned.observe(obs, call_function("graft_bloom_agg",
+          when(unseen, col("gh")), lit(words.length * 64), lit(k)).as("bf"))
+      }
+      val rows = described(spark, "rollup") {
+        observed.groupBy(col(sourceCol))
+          .agg(count(lit(1)).as("n_grams"), count_if(unseen).as("n_novel"))
+          .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
+          .collect()
+      }
+      if (Epochs.current(spark, snapshot.dir) == snapshot.epoch) {
+        val nNovel = rows.iterator.map(_.getLong(2)).sum
+        if (nNovel > 0L) {
+          val epochDir = Epochs.epochPath(snapshot.dir, snapshot.epoch)
+          val bloomRow = geometry.map(_ => obs.get("bf").asInstanceOf[Array[Byte]])
+          val staged = described(spark, "write") {
+            stageAppend(spark, epochDir, bloomRow,
+              pinned.filter(unseen).select(col("gh")).distinct(), nNovel)
+          }
+          val bloomFiles = publishStaged(spark, staged, epochDir, "bloom")
+          publishStaged(spark, staged, epochDir, "delta")
+          fsOf(spark, staged).delete(new Path(staged), true)
+          held.admitted(snapshot.epoch, bloomFiles, bloomRow)
+        }
+        Epochs.awaitNoMaintenance(spark, snapshot.dir)
+        val now = Epochs.current(spark, snapshot.dir)
+        if (now != snapshot.epoch) {
+          held.drop()
+          appendFrom(spark, batch, snapshot.dir, now, textCol, n)
+        }
+      } else {
+        held.drop()
+        append(spark, batch, snapshot.dir, textCol, n)
+      }
+      rows
+    } finally graft.util.Caches.release(pinned)
+  }
+
+  /** The batch's distinct (source, gh) pairs, each flagged `seen` =
+    * held by the snapshot's gram set — the frame [[probeAndAdmit]]
+    * pins. Bloom-negative pairs get `seen = false` map-side (the
+    * sketch has no false negatives); every other pair — all of them
+    * with `prefilter = false` or a sketchless snapshot — takes
+    * `gh IN (grams)`, which plans as an equi-keyed ExistenceJoin, so
+    * duplicate index rows cannot inflate a count. The flag stays
+    * positive on purpose: `NOT IN` is null-aware and plans as a
+    * BroadcastNestedLoopJoin (SURVEY.md, performance notes).
+    */
+  private[graft] def seenFlagged(snapshot: Snapshot, batch: DataFrame,
+      sourceCol: String, textCol: String, n: Int,
+      prefilter: Boolean): DataFrame = {
+    val newG = sourceGramHashes(batch, sourceCol, textCol, n).distinct()
+    def exact(pairs: DataFrame) = pairs.select(col(sourceCol), col("gh"),
+      col("gh").isin(snapshot.grams.select(col("gh"))).as("seen"))
+    snapshot.bloom match {
+      case Some(bf) if prefilter =>
+        val flagged = bloomFlagged(newG, bf)
+        flagged.filter(!col("maybe_seen"))
+          .select(col(sourceCol), col("gh"), lit(false).as("seen"))
+          .unionByName(exact(flagged.filter(col("maybe_seen"))))
+      case _ => exact(newG)
+    }
+  }
+
+  /** Run `body` with its jobs described as this call site's `step`,
+    * restoring the caller's description (a stream's own) afterwards.
+    */
+  private def described[T](spark: SparkSession, step: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"NoveltyIndex.probeAndAdmit $step")
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Write one admitted batch's outputs in ONE job under
+    * `<epochDir>/_append-<uuid>/`: the bloom row (when the epoch has a
+    * sketch) unioned with the distinct novel grams, partitioned by
+    * `part` — the epoch subdirectory each belongs in — into
+    * `part=bloom/` and `part=delta/`, as [[filesFor]]`(nNovel)` tasks.
+    * Each file carries both data columns, the other one all-null;
+    * readers pin one-column schemas and never read it. No reader lists
+    * a staging dir, so one a crash leaves behind is never read and is
+    * dropped with its epoch. Returns the staging dir.
+    */
+  private[graft] def stageAppend(spark: SparkSession, epochDir: String,
+      bloomRow: Option[Array[Byte]], novelGh: DataFrame, nNovel: Long): String = {
+    val staged = s"$epochDir/_append-${java.util.UUID.randomUUID()}"
+    val grams = novelGh.select(col("gh"), lit(null).cast("binary").as("bf"),
+      lit("delta").as("part"))
+    bloomRow.fold(grams) { bf =>
+      spark.createDataFrame(java.util.List.of(Row(null, bf, "bloom")),
+        StructType.fromDDL("gh BIGINT, bf BINARY, part STRING")).unionByName(grams)
+    }.coalesce(filesFor(nNovel)).write.partitionBy("part").parquet(staged)
+    staged
+  }
+
+  /** One publish step of a staged append: rename the files of its
+    * `part=<part>/` into the epoch's `<part>/` (made first). Returns
+    * the published file names. [[probeAndAdmit]] publishes `bloom`
+    * before `delta`, so a bloom row is visible before its grams: a
+    * crash between the two leaves extra bloom bits (bounded fpp
+    * drift), never a gram the sketch denies.
+    */
+  private[graft] def publishStaged(spark: SparkSession, staged: String,
+      epochDir: String, part: String): Seq[String] = {
+    val fs = fsOf(spark, epochDir)
+    val from = new Path(staged, s"part=$part")
+    if (!fs.exists(from)) Seq.empty
+    else {
+      val to = new Path(epochDir, part)
+      fs.mkdirs(to)
+      fs.listStatus(from).toSeq.map(_.getPath).filter(p => visible(p.getName))
+        .map { p =>
+          if (!fs.rename(p, new Path(to, p.getName)))
+            throw new java.io.IOException(
+              s"NoveltyIndex: could not publish $p into $to")
+          p.getName
+        }
+    }
+  }
+
+  private def visible(name: String) =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** Names of the data files in an epoch's `bloom/` (one listing;
+    * empty when the epoch has no sketch).
+    */
+  private def bloomFiles(spark: SparkSession, epochDir: String): Set[String] =
+    try fsOf(spark, epochDir).listStatus(new Path(bloomPath(epochDir)))
+      .iterator.map(_.getPath.getName).filter(visible).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  /** One stream's held sketch: the epoch, its bloom file names and
+    * their OR-merge, kept from one batch to the next by
+    * [[graft.streaming.Streams.noveltyStream]]. It belongs to that one
+    * query; it is not a per-JVM memo. [[load]] reuses it only when
+    * `Epochs.current` and one listing of the epoch's `bloom/` equal
+    * what it holds — bloom files are never modified after they are
+    * written, so equal names mean equal bits — and otherwise reads it
+    * with [[loadBloom]]; a new holder is [[NoveltyIndex.load]].
+    */
+  private[graft] final class HeldSketch {
+    private var held: Option[(Long, Set[String], Option[Array[Byte]])] = None
+
+    def load(spark: SparkSession, dir: String): Snapshot = {
+      val e = Epochs.current(spark, dir)
+      val epochDir = Epochs.epochPath(dir, e)
+      val grams = epochGrams(spark, epochDir)
+      // listed AFTER the gram files: a delta file the gram read lists
+      // had its bloom row published before it, so the listing (and a
+      // reload) covers its bits
+      val files = bloomFiles(spark, epochDir)
+      val bloom = held.collect { case (`e`, `files`, b) => b }
+        .getOrElse(loadBloom(spark, dir, e))
+      held = Some((e, files, bloom))
+      Snapshot(grams, e, dir, bloom)
+    }
+
+    private[NoveltyIndex] def admitted(epoch: Long, files: Seq[String],
+        row: Option[Array[Byte]]): Unit =
+      held = held.collect { case (`epoch`, names, bloom) =>
+        (epoch, names ++ files, (bloom ++ row).reduceOption((a, b) =>
+          orMerge(Seq(a, b), s"the held sketch of epoch $epoch")))
+      }
+
+    private[NoveltyIndex] def drop(): Unit = held = None
   }
 
   /** Admit a crawl: append its NOVEL grams (vs the current epoch) into

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registers graft's native expressions in the session's function
@@ -75,11 +76,16 @@ object GraftFunctions {
   private[graft] def foldableCapacity(k: Expression): Int =
     foldableInt("graft_heavy_hitters capacity", k)
 
+  /** Binds every builder in the session's registry. A name already
+    * bound to the same builder instance is skipped, so repeat calls
+    * (one per operator use) replace nothing and log nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      registry.createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 }

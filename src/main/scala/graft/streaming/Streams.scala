@@ -913,6 +913,15 @@ object Streams {
     * admitted before you". `sink` receives each batch's probe rows
     * (|sources|-scale, collected — KB) keyed by batchId.
     *
+    * Each batch is one [[graft.dedup.NoveltyIndex.probeAndAdmit]]:
+    * one pinned probe pass, one rollup and one write. The query holds
+    * its epoch's sketch from one batch to the next (a
+    * [[graft.dedup.NoveltyIndex.HeldSketch]]: epoch, bloom file names,
+    * merged sketch — this batch's own bloom row folded in), so a batch
+    * reads the sketch only when `Epochs.current` or the listing of the
+    * epoch's `bloom/` differs from what it holds: a foreign append, a
+    * compaction, or the first batch.
+    *
     * Replay caveat (documented, not hidden): append is retry-idempotent
     * (the index's physical-duplicate contract), but a batch RETRIED
     * after its append landed re-probes as fully seen — a production
@@ -928,11 +937,12 @@ object Streams {
       checkpointDir: Option[String] = None)(
       sink: (Long, Seq[org.apache.spark.sql.Row]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val held = new graft.dedup.NoveltyIndex.HeldSketch
     val writer = crawl.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val snap = graft.dedup.NoveltyIndex.load(spark, indexDir)
+        val snap = held.load(spark, indexDir)
         // scan-parallelism floor for the batch's gram pass: a memory /
         // file-source micro-batch arrives in as few as ONE partition,
         // and the tokenize → n-gram → md5 derivation below the distinct
@@ -940,13 +950,8 @@ object Streams {
         // LogicalRDDs, so Fanout's split-count probe is job-free; no-op
         // when the batch already arrives wide.
         val fanned = graft.util.Fanout.ensure(batch)
-        // fused probe+admit: one shared gram pass per batch (the
-        // unfused pair re-derives the batch's gram set up to 6× and
-        // re-reads the epoch's files once more for the append's
-        // anti-join); rows and on-disk state are byte-identical —
-        // see NoveltyIndex.probeAndAdmit
-        val rows = graft.dedup.NoveltyIndex.probeAndAdmit(
-          spark, snap, fanned, sourceCol, textCol, n, prefilter).toSeq
+        val rows = graft.dedup.NoveltyIndex.probeAndAdmit(spark, snap, fanned,
+          sourceCol, textCol, n, prefilter, held).toSeq
         sink(batchId, rows)
       }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()

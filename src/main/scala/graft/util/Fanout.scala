@@ -26,17 +26,17 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   */
 object Fanout {
 
-  /** The split-count probe (`df.rdd.getNumPartitions`) is only safe on
-    * a SCAN-SHAPED frame: under AQE, `.rdd` on a plan containing any
-    * exchange materializes the upstream query stages eagerly — the
-    * shuffles would run once for the probe and again for the real
-    * action. Every ensure() call site passes a (possibly
-    * filtered/projected) base-table read, where `.rdd` just plans the
-    * scan and reads its split count without launching a job; this
-    * check enforces that precondition structurally instead of by
-    * convention, so a future caller handing in a derived frame gets
-    * the identity (its parallelism is already exchange-governed and
-    * AQE-coalesced — a floor there is not this move).
+  /** The split-count probe (`queryExecution.toRdd.getNumPartitions`)
+    * is only safe on a SCAN-SHAPED frame: under AQE, planning the RDD
+    * of a plan containing any exchange materializes the upstream query
+    * stages eagerly — the shuffles would run once for the probe and
+    * again for the real action. Every ensure() call site passes a
+    * (possibly filtered/projected) base-table read, where the probe
+    * just plans the scan and reads its split count without launching
+    * a job; this check enforces that precondition structurally instead
+    * of by convention, so a future caller handing in a derived frame
+    * gets the identity (its parallelism is already exchange-governed
+    * and AQE-coalesced — a floor there is not this move).
     */
   private def scanShaped(plan: LogicalPlan): Boolean = plan match {
     case p: Project       => scanShaped(p.child)
@@ -50,7 +50,8 @@ object Fanout {
     case _: LocalRelation   => true
     case _: Range           => true
     // a pinned frame (localCheckpoint) or a micro-batch's LogicalRDD:
-    // already materialized, so .rdd reads its partition count job-free
+    // already materialized, so the probe reads its partition count
+    // job-free
     case _: org.apache.spark.sql.execution.LogicalRDD => true
     case _ => false
   }
@@ -58,8 +59,9 @@ object Fanout {
   def ensure(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (!scanShaped(df.queryExecution.optimizedPlan)) df
-    // .rdd plans the (exchange-free, see scanShaped) frame without
-    // running a job; its partition count is the scan's real split count
-    else if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    // toRdd plans the (exchange-free, see scanShaped) frame without
+    // running a job or opening a SQL execution (`.rdd` opens one); its
+    // partition count is the scan's real split count
+    else if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p) else df
   }
 }

@@ -1384,6 +1384,74 @@ class DedupSpec extends SparkSpec {
     assert(probeRows(dir, pf = true).forall(_._3 === 0L))
   }
 
+  test("NoveltyIndex publish order: between the bloom rename and the " +
+      "delta rename a reader's prefiltered probe ≡ plain and the sketch " +
+      "denies no index gram; a crash there leaves extra bloom bits only — " +
+      "the retried append and compaction give the rebuild's gram set, and " +
+      "the leftover staging dir is never read and dies with its epoch") {
+    import graft.dedup.NoveltyIndex
+    import spark.implicits._
+    val docs = util.Tables(spark, sf).documents
+    val old = docs.filter(col("doc_id") % 3 === 0)
+    val crawl = docs.filter(col("doc_id") % 3 === 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nvpublish").toString
+    val e0 = s"$dir/epoch=0"
+    NoveltyIndex.init(spark, old, dir, "text", 3)
+    val snap = NoveltyIndex.load(spark, dir)
+
+    // the crawl's fused append, staged as probeAndAdmit stages it: its
+    // novel grams and their bloom row at the epoch's geometry
+    val novel = NoveltyIndex.gramHashes(crawl, "text", 3).distinct()
+      .join(snap.grams, Seq("gh"), "left_anti")
+    val (k, words) = graft.functions.BloomUtil.deserializeWords(snap.bloom.get)
+    graft.functions.GraftFunctions.register(spark)
+    val row = novel.agg(call_function("graft_bloom_agg", col("gh"),
+      lit(words.length * 64), lit(k))).head().getAs[Array[Byte]](0)
+    val staged = NoveltyIndex.stageAppend(spark, e0, Some(row), novel,
+      novel.count())
+    assert(NoveltyIndex.publishStaged(spark, staged, e0, "bloom").size === 1)
+    // the process dies here: the delta rename never runs
+
+    def gramSet: Set[Long] = NoveltyIndex.load(spark, dir).grams
+      .distinct().collect().map(_.getLong(0)).toSet
+    def gramsOf(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      NoveltyIndex.gramHashes(d, "text", 3).distinct()
+        .collect().map(_.getLong(0)).toSet
+    def probeRows(s: NoveltyIndex.Snapshot, pf: Boolean) =
+      noveltyRows(NoveltyIndex.probe(s, crawl, "source", "text", 3,
+        prefilter = pf).collect())
+    val mid = NoveltyIndex.load(spark, dir)
+    assert(!(mid.bloom.get sameElements snap.bloom.get),
+      "the published bloom row must be visible to a reader")
+    val want = recomputedNovelty(crawl, old)
+    assert(want.exists(_._3 > 0L), "fixture must plant novelty")
+    assert(probeRows(mid, pf = false) === want)
+    assert(probeRows(mid, pf = true) === want)
+    val denied = mid.grams
+      .crossJoin(broadcast(Seq(Tuple1(mid.bloom.get)).toDF("bf")))
+      .filter(!call_function("graft_bloom_contains", col("bf"), col("gh")))
+      .count()
+    assert(denied === 0L, "the sketch denies an index gram")
+    // the staged delta file is never read
+    assert(new java.io.File(s"$staged/part=delta").listFiles()
+      .exists(_.getName.endsWith(".parquet")))
+    assert(gramSet === gramsOf(old))
+
+    // the retried batch appends again; compaction keeps the rebuild's set
+    NoveltyIndex.append(spark, crawl, dir, "text", 3)
+    val rebuilt = gramsOf(old.unionByName(crawl))
+    assert(gramSet === rebuilt)
+    assert(NoveltyIndex.compact(spark, dir) === 1L)
+    assert(gramSet === rebuilt)
+    assert(probeRows(NoveltyIndex.load(spark, dir), pf = true)
+      .forall(_._3 === 0L))
+    assert(new java.io.File(staged).exists, "epoch 0 is still retained")
+    assert(NoveltyIndex.compact(spark, dir) === 2L)
+    assert(!new java.io.File(e0).exists && !new java.io.File(staged).exists,
+      "the leftover staging dir must retire with its epoch")
+    assert(gramSet === rebuilt)
+  }
+
   test("dedup_inline: planted within-doc repeats collapse keep-first; " +
       "the plan's only exchange is the result ORDER BY") {
     import spark.implicits._

@@ -19,6 +19,24 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getSeq[Long](3).length === 64)
   }
 
+  test("register is idempotent: a second call leaves every builder and " +
+      "its registry entry reference-identical") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    def entries = GraftFunctions.names.toSeq.sorted.map { n =>
+      val id = FunctionIdentifier(n)
+      (n, registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get)
+    }
+    GraftFunctions.register(s)
+    val first = entries
+    GraftFunctions.register(s)
+    first.zip(entries).foreach { case ((n, b0, i0), (_, b1, i1)) =>
+      assert((b1 eq b0) && (i1 eq i0), s"$n was re-registered")
+    }
+  }
+
   test("dot/norm match interpreted and codegen paths") {
     import spark.implicits._
     GraftFunctions.register(spark)

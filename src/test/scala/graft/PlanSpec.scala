@@ -719,4 +719,35 @@ class PlanSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("bloommightcontain") ||
       plan.contains("graft_bloom_contains"), plan.take(1200))
   }
+
+  test("the fused crawl batch pins one frame whose exact membership test " +
+      "is an equi-keyed ExistenceJoin, never a null-aware nested loop") {
+    import graft.dedup.NoveltyIndex
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.{Cross, ExistenceJoin, Inner}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.functions.col
+    val docs = graft.util.Tables(spark, sf).documents
+    val dir = java.nio.file.Files.createTempDirectory("graft-nvpin").toString
+    NoveltyIndex.init(spark, docs.filter(col("doc_id") % 2 === 0), dir, "text", 3)
+    val snap = NoveltyIndex.load(spark, dir)
+    Seq(false, true).foreach { pf =>
+      val qe = NoveltyIndex.seenFlagged(snap, docs.filter(col("doc_id") % 2 === 1),
+        "source", "text", 3, prefilter = pf).queryExecution
+      val existence = qe.optimizedPlan.collect {
+        case j @ Join(_, _, ExistenceJoin(_), _, _) => j
+      }
+      assert(existence.size === 1, s"prefilter = $pf:\n${qe.optimizedPlan}")
+      assert(existence.forall(j => ExtractEquiJoinKeys.unapply(j).exists(_._2.nonEmpty)),
+        s"the existence join must be equi-keyed:\n${qe.optimizedPlan}")
+      // the only nested loops are the sketch's one-row broadcast, once
+      // per branch of the prefiltered pin
+      val nested = qe.sparkPlan.collect { case j: BroadcastNestedLoopJoinExec => j }
+      assert(nested.forall(j => (j.joinType == Inner || j.joinType == Cross) &&
+        j.right.isInstanceOf[LocalTableScanExec]) &&
+        nested.size === (if (pf) 2 else 0), s"prefilter = $pf:\n${qe.sparkPlan}")
+    }
+  }
 }

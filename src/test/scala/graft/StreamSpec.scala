@@ -1294,6 +1294,128 @@ class StreamSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Per-source (n_grams, n_novel) of `crawl` recomputed against every
+    * gram of `seen` — the closed form a novelty batch must equal.
+    */
+  private def novelty(crawl: org.apache.spark.sql.DataFrame,
+      seen: org.apache.spark.sql.DataFrame): Map[String, (Long, Long)] = {
+    import graft.dedup.NoveltyIndex
+    NoveltyIndex.sourceGramHashes(crawl, "source", "text", 3).distinct()
+      .join(NoveltyIndex.gramHashes(seen, "text", 3).distinct()
+        .withColumn("seen", lit(true)), Seq("gh"), "left")
+      .groupBy(col("source"))
+      .agg(count(lit(1)), count_if(col("seen").isNull))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+  }
+
+  test("noveltyStream reuses its held sketch only while the epoch and " +
+      "its bloom files are unchanged: after a foreign append and after a " +
+      "compaction the next batch still equals the recompute") {
+    import graft.dedup.NoveltyIndex
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val docs = util.Tables(spark, sf).documents
+      .select(col("doc_id"), col("source"), col("text"))
+    val part = (0 to 4).map(m => docs.filter(col("doc_id") % 5 === m))
+    val idxDir = java.nio.file.Files
+      .createTempDirectory("graft-nvheld-idx").toString
+    NoveltyIndex.init(spark, part(0), idxDir, "text", 3)
+
+    val got = scala.collection.mutable.Map[Long, Map[String, (Long, Long)]]()
+    val feed = MemoryStream[(Long, String, String)]
+    val q = Streams.noveltyStream(feed.toDS().toDF("doc_id", "source", "text"),
+        idxDir, "source", "text", 3) { (id, rows) =>
+      got(id) = rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
+    var seen = part(0)
+    def batch(crawl: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val want = novelty(crawl, seen)
+      feed.addData(crawl.as[(Long, String, String)].collect().toSeq)
+      q.processAllAvailable()
+      assert(got(got.keySet.max) === want, what)
+      seen = seen.unionByName(crawl)
+    }
+    try {
+      batch(part(1), "first batch")
+      // a foreign appender admits part 2: its bloom row is a file the
+      // stream does not hold, so the next batch must reload the sketch
+      NoveltyIndex.append(spark, part(2), idxDir, "text", 3)
+      seen = seen.unionByName(part(2))
+      batch(part(2).unionByName(part(3)), "batch after a foreign append")
+      assert(NoveltyIndex.compact(spark, idxDir) === 1L)
+      batch(part(4).unionByName(part(1)), "batch after a compaction")
+      batch(part(4), "warm batch")
+    } finally q.stop()
+    assert(got.size === 4)
+    val snap = NoveltyIndex.load(spark, idxDir)
+    Seq(false, true).foreach { pf =>
+      val rows = NoveltyIndex.probe(snap, docs, "source", "text", 3,
+        prefilter = pf).collect()
+      assert(rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap === novelty(docs, seen), s"prefilter = $pf")
+    }
+  }
+
+  test("noveltyStream: a warm batch is one pinned probe pass, one rollup " +
+      "and one write — at most 9 jobs and 4 SQL executions, each step " +
+      "under its call-site job description") {
+    import graft.dedup.NoveltyIndex
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = util.Tables(spark, sf).documents
+      .select(col("doc_id"), col("source"), col("text"))
+    val idxDir = java.nio.file.Files
+      .createTempDirectory("graft-nvjobs-idx").toString
+    NoveltyIndex.init(spark, docs.filter(col("doc_id") % 3 === 0),
+      idxDir, "text", 3)
+    def crawl(m: Int) = docs.filter(col("doc_id") % 3 === m)
+      .as[(Long, String, String)].collect().toSeq
+
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.add(x.description); ()
+        case _ =>
+      }
+    }
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val feed = MemoryStream[(Long, String, String)]
+    val q = Streams.noveltyStream(feed.toDS().toDF("doc_id", "source", "text"),
+        idxDir, "source", "text", 3) { (_, rs) => rs.foreach(rows.add) }
+    val (cold, warm) = (crawl(1), crawl(2))
+    sc.addSparkListener(listener)
+    try {
+      // the first batch reads the sketch; the second reuses the held one
+      feed.addData(cold)
+      q.processAllAvailable()
+      TestBus.drain(sc); jobs.clear(); executions.clear(); rows.clear()
+      feed.addData(warm)
+      q.processAllAvailable()
+      TestBus.drain(sc)
+    } finally { q.stop(); sc.removeSparkListener(listener) }
+    val described = jobs.asScala.toSeq
+    val listing = described.mkString("\n  ", "\n  ", "")
+    assert(rows.asScala.exists(_.getLong(2) > 0L),
+      "the warm batch must admit novel grams (so it writes)")
+    assert(described.size <= 9,
+      s"a warm batch ran ${described.size} jobs:$listing")
+    assert(executions.size <= 4, s"a warm batch ran ${executions.size} SQL " +
+      s"executions:${executions.asScala.mkString("\n  ", "\n  ", "")}\njobs:$listing")
+    Seq("pin", "rollup", "write").foreach { step =>
+      assert(described.exists(_ == s"NoveltyIndex.probeAndAdmit $step"),
+        s"no job described as the $step step:$listing")
+    }
+  }
+
   test("manifestStream: streamed batch partials merge to the EXACT " +
       "batch export_manifest; compaction preserves the manifest") {
     implicit val ctx = spark.sqlContext

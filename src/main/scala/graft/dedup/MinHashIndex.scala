@@ -84,19 +84,17 @@ object MinHashIndex extends graft.util.Epochs.Layout {
     Index(spark.read.parquet(s"$dir/bands"),
       spark.read.parquet(s"$dir/shingles"))
 
-  /** Day-2 maintenance: MERGE a new batch into the SAVED index at
-    * `dir` — shingle/sign/band the batch once (pinned, the [[build]]
-    * note) and parquet-append both tables; existing band directories
-    * gain one file each, nothing old is read or rewritten. After the
-    * day's probe admits its survivors, appending them makes tomorrow's
-    * probe see them as "seen" — without this the only option was a
-    * full rebuild of the corpus index.
-    *
-    * Each append adds ~one file per band directory (the small-files
-    * pressure source_compact teaches), so run [[compactSaved]] on the
-    * cadence your file count demands — weekly, not per-append.
+  /** [[SnapshotIndex]]'s append write body: MERGE a new batch into
+    * the index saved at `dir` (one epoch dir) — shingle/sign/band the
+    * batch once (pinned, the [[build]] note) and parquet-append both
+    * tables; existing band directories gain one file each, nothing old
+    * is read or rewritten. After the day's probe admits its survivors,
+    * appending them makes tomorrow's probe see them as "seen" without
+    * a rebuild. Each append adds ~one file per band directory, which
+    * the store's compact folds back on the cadence the file count
+    * demands — weekly, not per-append.
     */
-  def append(newDocs: DataFrame, dir: String, idCol: String,
+  private[graft] def append(newDocs: DataFrame, dir: String, idCol: String,
       textCol: String, n: Int): Unit = {
     // EAGER pin (was lazy): both appends consume the shingled batch
     // and write disjoint tables — materialize once, overlap the two
@@ -173,13 +171,6 @@ object MinHashIndex extends graft.util.Epochs.Layout {
         .write.mode("overwrite").parquet(s"$next/shingles"))
     ()
   }
-
-  /** [[removeRewrite]] of the flat index saved at `dir`. This scrubs
-    * the INDEX; scrubbing exported corpus shards is the caller's
-    * parallel obligation.
-    */
-  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
-    graft.util.Epochs.rewriteInPlace(spark, dir)(removeRewrite(spark, ids))
 
   /** Near-duplicate pairs between a NEW batch and the indexed corpus:
     * (new_id, seen_id, jaccard ≥ tau), exact Jaccard verified on true

@@ -15,19 +15,19 @@ import graft.util.Epochs
   * tokenize → word-n-gram → md5-prefix arithmetic the full recompute
   * uses — [[gramHashes]] is the single definition both ride), written
   * once, bucketed by hash, and maintained under the
-  * [[graft.util.Epochs]] snapshot/lease machinery exactly like
-  * [[MinHashIndex]]/[[SnapshotIndex]]:
+  * [[graft.util.Epochs]] store exactly like [[SnapshotIndex]]:
   *
   *  - **probe** is map-only on the new crawl until ONE (8-byte gh)
   *    anti-join against the index — O(new crawl grams), never
   *    O(corpus);
   *  - **append** admits a crawl's NOVEL grams only (the probe already
   *    computed them), so tomorrow's probe sees today's admissions
-  *    without a rebuild;
+  *    without a rebuild; it runs through [[Epochs.appendLoop]], the
+  *    store's one append loop and fence;
   *  - **compact** re-distincts and right-sizes files into epoch N+1
-  *    under the maintenance lease ([[Epochs.withMaintenanceLease]] +
-  *    [[Epochs.rewriteToNextChecked]] — the checked-rewrite fence);
-  *    readers pin an epoch and are never disturbed.
+  *    through [[Epochs.maintain]] (the maintenance lease and the
+  *    checked-rewrite fence); readers pin an epoch and are never
+  *    disturbed.
   *
   * Layout of one epoch: `grams/b=<i>/` holds the buckets `init` and
   * `compact` write — `b = pmod(gh, nb)` with nb = [[filesFor]] of the
@@ -45,13 +45,14 @@ import graft.util.Epochs
   * buckets) reads, appends and compacts through the same paths — the
   * bucket column is never a join key.
   *
-  * A fused append ([[probeAndAdmit]], the stream's path) writes its
-  * bloom row and its delta grams in one job under the epoch's
-  * `_append-<uuid>/` staging dir (`part=bloom/`, `part=delta/`) and
-  * publishes them by renames: the bloom file(s) into `bloom/` first,
-  * then the delta file(s) into `delta/`, then the staging dir goes.
-  * No reader lists a staging dir; one left by a crash is dropped with
-  * its epoch.
+  * Every append ([[append]], and [[probeAndAdmit]], the stream's path)
+  * writes its bloom row and its delta grams in one job under the
+  * epoch's `_append-<uuid>/` staging dir (`part=bloom/`,
+  * `part=delta/`) and publishes them by renames: the bloom file(s) into
+  * `bloom/` first, then the delta file(s) into `delta/`, then the
+  * staging dir goes ([[writeAppend]]). An append with nothing novel
+  * writes nothing. No reader lists a staging dir; one left by a crash
+  * is dropped with its epoch.
   *
   * Physical-duplicate contract (the snapshot indexes' retry contract,
   * restated for a SET): the logical content is the distinct gram set;
@@ -183,30 +184,6 @@ object NoveltyIndex {
       .getOrElse(spark.range(0).select(col("id").as("gh")))
   }
 
-  /** Append a distinct novel gram set of at most `n` grams to the
-    * epoch's `delta/` as [[filesFor]]`(n)` files — one for a daily
-    * crawl. Nothing is written for n = 0: an empty unpartitioned write
-    * would still leave a schema-only file behind.
-    */
-  private def appendDelta(grams: DataFrame, n: Long, epochDir: String): Unit =
-    if (n > 0L)
-      grams.coalesce(filesFor(n))
-        .write.mode("append").parquet(deltaPath(epochDir))
-
-  /** One bloom row (serialized filter, header-carrying) over `grams`'
-    * gh column, appended to the epoch's bloom table. gh is already a
-    * 60-bit hash; [[graft.functions.BloomUtil]] re-avalanches it
-    * (splitmix64 double hashing), so feeding it raw is sound.
-    */
-  private def appendBloomRow(spark: SparkSession, epochDir: String,
-      grams: DataFrame, numBits: Int, numHashes: Int): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    grams.agg(call_function("graft_bloom_agg", col("gh"),
-        lit(numBits), lit(numHashes)).as("bf"))
-      .coalesce(1)
-      .write.mode("append").parquet(bloomPath(epochDir))
-  }
-
   /** Build the epoch's sketch fresh over its pinned distinct gram set
     * of `n0` grams — init's and compact's path (right-sized: n0 is the
     * actual distinct gram count). Degenerate-corpus guards: an empty
@@ -222,7 +199,19 @@ object NoveltyIndex {
     val n = math.max(64L, n0)
     val m = graft.functions.BloomUtil.optimalNumBits(n, BloomFpp)
     val k = math.min(32, graft.functions.BloomUtil.optimalNumHashes(m, n))
-    appendBloomRow(spark, epochDir, grams, m, k)
+    grams.agg(bloomAgg(spark, col("gh"), m, k)).coalesce(1)
+      .write.mode("append").parquet(bloomPath(epochDir))
+  }
+
+  /** One bloom row (serialized filter, header-carrying) over `gh` at
+    * geometry (m = `numBits`, k = `numHashes`). gh is already a 60-bit
+    * hash; [[graft.functions.BloomUtil]] re-avalanches it (splitmix64
+    * double hashing), so feeding it raw is sound; null gh are skipped.
+    */
+  private def bloomAgg(spark: SparkSession, gh: org.apache.spark.sql.Column,
+      numBits: Int, numHashes: Int): org.apache.spark.sql.Column = {
+    graft.functions.GraftFunctions.register(spark)
+    call_function("graft_bloom_agg", gh, lit(numBits), lit(numHashes)).as("bf")
   }
 
   /** Write a fresh epoch (init's and compact's path): the distinct gram
@@ -252,10 +241,10 @@ object NoveltyIndex {
     * by construction, and OR is exactly the [[graft.functions
     * .BloomFilterAgg]] merge). None for a pre-sketch epoch.
     */
-  def loadBloom(spark: SparkSession, dir: String,
-      epoch: Long): Option[Array[Byte]] = {
-    val p = new Path(bloomPath(Epochs.epochPath(dir, epoch)))
-    if (!fsOf(spark, dir).exists(p)) None
+  private def loadBloom(spark: SparkSession,
+      epochDir: String): Option[Array[Byte]] = {
+    val p = new Path(bloomPath(epochDir))
+    if (!fsOf(spark, epochDir).exists(p)) None
     else {
       // schema pinned for the same reason as the gram read: the bloom
       // table is this object's own one-column layout
@@ -416,10 +405,14 @@ object NoveltyIndex {
     *     the batch's bloom row (`graft_bloom_agg` of the unseen gh at
     *     the snapshot sketch's geometry) in the same job — the
     *     `Pipes.counted` mechanism, no job of its own.
-    *  3. **Write.** [[stageAppend]] writes the bloom row and the
-    *     novel `distinct gh` in one job under `_append-<uuid>/`;
-    *     [[publishStaged]] renames them in, bloom first, then delta.
-    *     Nothing is written when nothing is novel.
+    *  3. **Write.** The pin's unseen `distinct gh` goes through
+    *     [[Epochs.appendLoop]] from the snapshot's epoch. Into that
+    *     epoch it is [[writeAppend]] with the rollup's bloom row and
+    *     Σ n_novel, so a warm batch launches no job beyond the staged
+    *     write; nothing is written when nothing is novel. If the epoch
+    *     advanced (a compaction), the loop re-appends what the new
+    *     epoch lacks through [[admitNovel]] — the physical-duplicate
+    *     contract makes the write into the stale epoch harmless.
     *
     * Output rows and LOGICAL on-disk state are those of `probe()`
     * followed by `append()` (the delta write is sized from the
@@ -432,18 +425,14 @@ object NoveltyIndex {
     *  - the bloom row takes the unseen pairs pre-distinct (bit-set
     *    idempotence: bloom(multiset) ≡ bloom(set), byte-identical) at
     *    the snapshot's geometry (every row of an epoch shares (m, k)
-    *    by construction);
-    *  - the appenders' maintenance fence is intact: if the epoch
-    *    advanced between the snapshot and the admit (or advances while
-    *    admitting), the fused path steps aside and the full [[append]]
-    *    recomputation runs against the new epoch — the
-    *    physical-duplicate contract makes the raced write harmless
-    *    exactly as it does for plain append.
+    *    by construction).
     *
     * The published bloom files and row are folded into `held`, so the
-    * next batch of the same stream reads no sketch. Pin, rollup and
-    * write each run under a job description naming this call site.
-    * Returns the probe's rows (collected — |sources|-scale, KB).
+    * next batch of the same stream reads no sketch; after an epoch
+    * advance `held` no longer matches and the next load reads it.
+    * Pin, rollup and write each run under a job description naming
+    * this call site. Returns the probe's rows (collected —
+    * |sources|-scale, KB).
     */
   private[graft] def probeAndAdmit(spark: SparkSession, snapshot: Snapshot,
       batch: DataFrame, sourceCol: String, textCol: String, n: Int,
@@ -457,9 +446,8 @@ object NoveltyIndex {
       val obs = new org.apache.spark.sql.Observation("novelty_bloom_row")
       val geometry = snapshot.bloom.map(graft.functions.BloomUtil.deserializeWords)
       val observed = geometry.fold(pinned) { case (k, words) =>
-        graft.functions.GraftFunctions.register(spark)
-        pinned.observe(obs, call_function("graft_bloom_agg",
-          when(unseen, col("gh")), lit(words.length * 64), lit(k)).as("bf"))
+        pinned.observe(obs, bloomAgg(spark, when(unseen, col("gh")),
+          words.length * 64, k))
       }
       val rows = described(spark, "rollup") {
         observed.groupBy(col(sourceCol))
@@ -467,29 +455,19 @@ object NoveltyIndex {
           .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
           .collect()
       }
-      if (Epochs.current(spark, snapshot.dir) == snapshot.epoch) {
-        val nNovel = rows.iterator.map(_.getLong(2)).sum
-        if (nNovel > 0L) {
-          val epochDir = Epochs.epochPath(snapshot.dir, snapshot.epoch)
+      val nNovel = rows.iterator.map(_.getLong(2)).sum
+      val snapshotDir = Epochs.epochPath(snapshot.dir, snapshot.epoch)
+      Epochs.appendLoop(spark, snapshot.dir, snapshot.epoch,
+          pinned.filter(unseen).select(col("gh")).distinct(), "gh")(
+          epochGrams(spark, _)) { (novel, epochDir) =>
+        if (epochDir != snapshotDir) admitNovel(spark)(novel, epochDir)
+        else if (nNovel > 0L) {
           val bloomRow = geometry.map(_ => obs.get("bf").asInstanceOf[Array[Byte]])
-          val staged = described(spark, "write") {
-            stageAppend(spark, epochDir, bloomRow,
-              pinned.filter(unseen).select(col("gh")).distinct(), nNovel)
+          val bloomFiles = described(spark, "write") {
+            writeAppend(spark, epochDir, bloomRow, novel, nNovel)
           }
-          val bloomFiles = publishStaged(spark, staged, epochDir, "bloom")
-          publishStaged(spark, staged, epochDir, "delta")
-          fsOf(spark, staged).delete(new Path(staged), true)
           held.admitted(snapshot.epoch, bloomFiles, bloomRow)
         }
-        Epochs.awaitNoMaintenance(spark, snapshot.dir)
-        val now = Epochs.current(spark, snapshot.dir)
-        if (now != snapshot.epoch) {
-          held.drop()
-          appendFrom(spark, batch, snapshot.dir, now, textCol, n)
-        }
-      } else {
-        held.drop()
-        append(spark, batch, snapshot.dir, textCol, n)
       }
       rows
     } finally graft.util.Caches.release(pinned)
@@ -555,7 +533,7 @@ object NoveltyIndex {
 
   /** One publish step of a staged append: rename the files of its
     * `part=<part>/` into the epoch's `<part>/` (made first). Returns
-    * the published file names. [[probeAndAdmit]] publishes `bloom`
+    * the published file names. [[writeAppend]] publishes `bloom`
     * before `delta`, so a bloom row is visible before its grams: a
     * crash between the two leaves extra bloom bits (bounded fpp
     * drift), never a gram the sketch denies.
@@ -576,6 +554,42 @@ object NoveltyIndex {
           p.getName
         }
     }
+  }
+
+  /** The ONE append write: [[stageAppend]], then [[publishStaged]]
+    * `bloom`, then `delta`, then the staging dir goes. Returns the
+    * published bloom file names.
+    */
+  private def writeAppend(spark: SparkSession, epochDir: String,
+      bloomRow: Option[Array[Byte]], novelGh: DataFrame,
+      nNovel: Long): Seq[String] = {
+    val staged = stageAppend(spark, epochDir, bloomRow, novelGh, nNovel)
+    val bloomFiles = publishStaged(spark, staged, epochDir, "bloom")
+    publishStaged(spark, staged, epochDir, "delta")
+    fsOf(spark, staged).delete(new Path(staged), true)
+    bloomFiles
+  }
+
+  /** Admit a PINNED distinct gh set into `epochDir` — [[appendFrom]]'s
+    * write, and [[probeAndAdmit]]'s into an epoch other than its
+    * snapshot's (both hand it a localCheckpoint, so the two reads below
+    * never re-derive it): ONE job counts the set and observes its bloom
+    * row at the target epoch's geometry; then [[writeAppend]]. Nothing
+    * is written for an empty set — an all-zero bloom row would be one
+    * more file every later load reads and OR-merges.
+    */
+  private def admitNovel(spark: SparkSession)(novel: DataFrame,
+      epochDir: String): Unit = {
+    val obs = new org.apache.spark.sql.Observation("novelty_bloom_row")
+    val geometry = loadBloom(spark, epochDir)
+      .map(graft.functions.BloomUtil.deserializeWords)
+    val nNovel = geometry.fold(novel) { case (k, words) =>
+      novel.observe(obs, bloomAgg(spark, col("gh"), words.length * 64, k))
+    }.count()
+    if (nNovel > 0L)
+      writeAppend(spark, epochDir,
+        geometry.map(_ => obs.get("bf").asInstanceOf[Array[Byte]]),
+        novel, nNovel)
   }
 
   private def visible(name: String) =
@@ -610,7 +624,7 @@ object NoveltyIndex {
       // reload) covers its bits
       val files = bloomFiles(spark, epochDir)
       val bloom = held.collect { case (`e`, `files`, b) => b }
-        .getOrElse(loadBloom(spark, dir, e))
+        .getOrElse(loadBloom(spark, epochDir))
       held = Some((e, files, bloom))
       Snapshot(grams, e, dir, bloom)
     }
@@ -621,20 +635,16 @@ object NoveltyIndex {
         (epoch, names ++ files, (bloom ++ row).reduceOption((a, b) =>
           orMerge(Seq(a, b), s"the held sketch of epoch $epoch")))
       }
-
-    private[NoveltyIndex] def drop(): Unit = held = None
   }
 
   /** Admit a crawl: append its NOVEL grams (vs the current epoch) into
     * the current epoch's `delta/` — bucket files are never touched, so
     * an append adds [[filesFor]] of its novel count (one file for a
-    * daily crawl). Runs the appenders' half of the maintenance
-    * fence verbatim ([[Epochs.awaitNoMaintenance]] — write, wait out
-    * any in-flight lease, re-read the epoch, re-append on advance):
-    * a compaction that raced this append either captured the files in
-    * its re-listed rewrite or the loop re-appends them into the new
-    * epoch; a duplicate from the re-append is harmless by the
-    * physical-duplicate contract.
+    * daily crawl), and a crawl with nothing novel adds nothing. Runs
+    * through [[Epochs.appendLoop]]: a compaction that raced this append
+    * either captured the files in its re-listed rewrite or the loop
+    * re-appends into the new epoch the grams it lacks; a duplicate from
+    * a retried append is harmless by the physical-duplicate contract.
     */
   def append(spark: SparkSession, newDocs: DataFrame, dir: String,
       textCol: String, n: Int): Unit =
@@ -646,52 +656,33 @@ object NoveltyIndex {
     */
   private[graft] def appendFrom(spark: SparkSession, newDocs: DataFrame,
       dir: String, startEpoch: Long, textCol: String, n: Int): Unit = {
-    var e = startEpoch
-    var stable = false
-    while (!stable) {
-      val epochDir = Epochs.epochPath(dir, e)
-      val idx = epochGrams(spark, epochDir)
-      // pinned (crawl-scale) and counted: the count sizes the delta
-      // write, and the sketch row and the gram files both read the pin
-      // instead of re-deriving the novel set from the raw text
-      val novel = gramHashes(newDocs, textCol, n).distinct()
-        .join(idx, Seq("gh"), "left_anti")
-        .localCheckpoint(true)
-      try {
-        val nNovel = novel.count()
-        // sketch row FIRST (same geometry as the epoch's existing rows),
-        // gram files second: a crash between the two leaves extra bloom
-        // bits (bounded fpp drift), never a file gram the sketch denies —
-        // the one ordering under which prefilter ≡ plain survives a torn
-        // append
-        loadBloom(spark, dir, e).foreach { bf =>
-          val (k, words) = graft.functions.BloomUtil.deserializeWords(bf)
-          appendBloomRow(spark, epochDir, novel, words.length * 64, k)
-        }
-        appendDelta(novel, nNovel, epochDir)
-      } finally graft.util.Caches.release(novel)
-      Epochs.awaitNoMaintenance(spark, dir)
-      val now = Epochs.current(spark, dir)
-      if (now == e) stable = true else e = now
-    }
+    // pinned (crawl-scale): the loop's re-append after an epoch advance
+    // then never re-reads the start epoch, which a second publish may
+    // already have retired
+    val novel = gramHashes(newDocs, textCol, n).distinct()
+      .join(epochGrams(spark, Epochs.epochPath(dir, startEpoch)), Seq("gh"),
+        "left_anti")
+      .localCheckpoint(true)
+    try
+      Epochs.appendLoop(spark, dir, startEpoch, novel, "gh")(
+        epochGrams(spark, _))(admitNovel(spark))
+    finally graft.util.Caches.release(novel)
   }
 
   /** Rewrite the current epoch's buckets ∪ delta into epoch N+1 —
     * re-distincted (the physical-duplicate contract's restore point),
     * pinned and counted once, re-bucketed to [[filesFor]]`(count)`
-    * buckets of one file each, no `delta/` — and publish it under the
-    * maintenance lease + checked-rewrite fence. Probe results are
-    * byte-identical before/after (spec-pinned); only the layout
-    * changes. The sketch is right-sized from the same pin: appends only
-    * ever accrete rows at epoch-birth geometry, so compaction is where
-    * fpp drift resets (and where a pre-sketch epoch gains its bloom).
-    * Returns the published epoch.
+    * buckets of one file each, no `delta/` — and publish it through
+    * [[Epochs.maintain]]. Probe results are byte-identical
+    * before/after (spec-pinned); only the layout changes. The sketch
+    * is right-sized from the same pin: appends only ever accrete rows
+    * at epoch-birth geometry, so compaction is where fpp drift resets
+    * (and where a pre-sketch epoch gains its bloom). Returns the
+    * published epoch.
     */
   def compact(spark: SparkSession, dir: String,
       retainEpochs: Int = 1): Long =
-    Epochs.withMaintenanceLease(spark, dir) {
-      Epochs.rewriteToNextChecked(spark, dir, retainEpochs) { (cur, next) =>
-        writeEpoch(spark, epochGrams(spark, cur).distinct(), next)
-      }
+    Epochs.maintain(spark, dir, retainEpochs) { (cur, next) =>
+      writeEpoch(spark, epochGrams(spark, cur).distinct(), next)
     }
 }

@@ -68,11 +68,12 @@ object SimHashIndex extends graft.util.Epochs.Layout {
   def load(spark: SparkSession, dir: String): Index =
     Index(spark.read.parquet(s"$dir/blocks"))
 
-  /** Day-2 maintenance: append a new batch's blocks into the SAVED
-    * index — one new file per block directory, nothing old rewritten.
-    * Compact on your file-count cadence with [[compactSaved]].
+  /** [[SimHashSnapshot]]'s append write body: a new batch's blocks
+    * appended into the index saved at `dir` (one epoch dir) — one new
+    * file per block directory, nothing old rewritten; the store's
+    * compact folds them back.
     */
-  def append(newDocs: DataFrame, dir: String, idCol: String,
+  private[graft] def append(newDocs: DataFrame, dir: String, idCol: String,
       textCol: String): Unit =
     blocksOf(SimHash.fingerprints(newDocs, idCol, textCol))
       .write.mode("append").partitionBy("block_id").parquet(s"$dir/blocks")
@@ -93,10 +94,6 @@ object SimHashIndex extends graft.util.Epochs.Layout {
       cur: String, next: String): Unit =
     relayout(spark.read.parquet(s"$cur/blocks")
       .filter(!col("doc_id").isInCollection(ids)), next)
-
-  /** [[removeRewrite]] of the flat index saved at `dir`. */
-  def removeSaved(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
-    graft.util.Epochs.rewriteInPlace(spark, dir)(removeRewrite(spark, ids))
 
   private def relayout(blocks: DataFrame, next: String): Unit =
     blocks.repartition(col("block_id"))

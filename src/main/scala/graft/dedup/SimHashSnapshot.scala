@@ -3,11 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated [[SimHashIndex]] — [[SnapshotIndex]]'s guarantees
+/** The mutable [[SimHashIndex]] — [[SnapshotIndex]]'s guarantees
   * ([[graft.util.Epochs.Store]]) applied to the 64-bit fingerprint
-  * index, whose flat [[SimHashIndex.compactSaved]] /
-  * [[SimHashIndex.removeSaved]] swap the live `blocks` directory under
-  * readers.
+  * index: appends, compaction and takedown all run through the store,
+  * and readers pin one epoch's `blocks` directory.
   */
 object SimHashSnapshot extends Epochs.Store(SimHashIndex) {
 

@@ -3,17 +3,15 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated [[MinHashIndex]]: the flat
-  * [[MinHashIndex.compactSaved]]/[[MinHashIndex.removeSaved]] swap the
-  * LIVE `bands`/`shingles` directories, so a reader whose lazy plan
-  * listed files before the swap dereferences deleted parquet mid-scan.
-  * Here every rewrite lands in a fresh `epoch=<N+1>/` tree and becomes
-  * current only when complete — the mini-Iceberg pointer-swap pattern
-  * at directory granularity. Pinning, retention, the append loop and
-  * the maintenance fence are [[graft.util.Epochs.Store]]'s.
+/** The mutable [[MinHashIndex]]: every rewrite (compact, takedown)
+  * lands in a fresh `epoch=<N+1>/` tree and becomes current only when
+  * complete — the mini-Iceberg pointer-swap pattern at directory
+  * granularity — so a reader whose lazy plan listed files before the
+  * rewrite keeps reading its own epoch. Pinning, retention, the append
+  * loop and the maintenance fence are [[graft.util.Epochs.Store]]'s.
   *
-  * Appends are additive and retry-idempotent like the flat index's
-  * ([[graft.streaming.Streams.dedupIndexStream]]'s contract).
+  * Appends are additive and retry-idempotent
+  * ([[graft.streaming.Streams.dedupIndexStreamSnapshot]]'s contract).
   */
 object SnapshotIndex extends Epochs.Store(MinHashIndex) {
 

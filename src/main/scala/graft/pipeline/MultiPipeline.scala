@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 import scala.collection.immutable.ListMap
 
 /** The reference's headline feature re-expressed for Spark: one input,
@@ -14,16 +13,12 @@ import scala.collection.immutable.ListMap
   * one reduce job per pipeline reading its tagged slice and writing
   * `<outputHome>/<dirKey>`.
   *
-  * Spark-first: each branch is a declarative plan over the shared input.
-  * Two sharing strategies, chosen by the caller:
-  *
-  *  - `share = false` (default): branches re-scan the source. With
-  *    parquet + column pruning each branch reads only its columns —
-  *    at 100 TB this is usually CHEAPER than materializing full rows,
-  *    because branches rarely touch the same columns.
-  *  - `share = true`: persist the input at MEMORY_AND_DISK before
-  *    fan-out — right when branches share an expensive upstream
-  *    (a join/parse) rather than a raw scan.
+  * Spark-first: each branch is a declarative plan over the shared
+  * input, and each re-scans the source. With parquet + column pruning
+  * each branch reads only its columns — at 100 TB this is usually
+  * CHEAPER than materializing full rows, because branches rarely touch
+  * the same columns. (Persisting the input before fan-out measured no
+  * faster on the fanout benchmark, so there is no such mode.)
   *
   * Unlike the reference there is no tagged union through one shuffle:
   * each branch shuffles only its own (usually already-aggregated) data,
@@ -31,29 +26,17 @@ import scala.collection.immutable.ListMap
   */
 final class MultiPipeline private (
     input: DataFrame,
-    share: Boolean,
     branches: ListMap[String, Pipes.Pipe]) {
 
   /** Register pipeline `name` (the reference's `-multiple "name|map|red"`). */
   def branch(name: String)(f: Pipes.Pipe): MultiPipeline = {
     require(!branches.contains(name), s"duplicate branch '$name'")
-    new MultiPipeline(input, share, branches + (name -> f))
+    new MultiPipeline(input, branches + (name -> f))
   }
 
-  /** Plan all branches over the (optionally persisted) shared input.
-    * With share = true the caller owns the persisted input's lifetime:
-    * call `unpersistShared()` (or use `write`, which does it) once all
-    * branch actions have run, or the cached blocks live until session
-    * end.
-    */
-  def run(): ListMap[String, DataFrame] = {
-    val src = if (share && branches.size > 1)
-      input.persist(StorageLevel.MEMORY_AND_DISK) else input
-    branches.map { case (name, f) => name -> f(src) }
-  }
-
-  /** Release the shared input's cached blocks (no-op if share = false). */
-  def unpersistShared(): Unit = if (share) { input.unpersist(); () }
+  /** Plan all branches over the shared input. */
+  def run(): ListMap[String, DataFrame] =
+    branches.map { case (name, f) => name -> f(input) }
 
   /** Write each branch under `outputHome/<name>` — the reference's
     * output layout (MultiStreamJobRunner.java:66-69).
@@ -79,29 +62,27 @@ final class MultiPipeline private (
     val planned = run().toSeq
     def writeOne(name: String, df: DataFrame): Unit =
       MultiPipeline.writeBranch(df, s"$outputHome/$name", format, partitionByKey)
-    try {
-      if (parallelism <= 1 || planned.sizeIs <= 1) {
-        planned.foreach { case (name, df) => writeOne(name, df) }
-      } else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(parallelism, planned.size))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.traverse(planned) { case (name, df) =>
-            Future { writeOne(name, df) }
-          }, Duration.Inf)
-        finally pool.shutdown()
-        ()
-      }
-    } finally unpersistShared()
+    if (parallelism <= 1 || planned.sizeIs <= 1) {
+      planned.foreach { case (name, df) => writeOne(name, df) }
+    } else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(parallelism, planned.size))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try Await.result(
+        Future.traverse(planned) { case (name, df) =>
+          Future { writeOne(name, df) }
+        }, Duration.Inf)
+      finally pool.shutdown()
+      ()
+    }
   }
 }
 
 object MultiPipeline {
-  def apply(input: DataFrame, share: Boolean = false): MultiPipeline =
-    new MultiPipeline(input, share, ListMap.empty)
+  def apply(input: DataFrame): MultiPipeline =
+    new MultiPipeline(input, ListMap.empty)
 
   /** One branch write with the Hadoop-Streaming output conventions:
     *

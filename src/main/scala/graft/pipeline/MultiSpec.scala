@@ -138,13 +138,13 @@ object MultiSpec {
     * to every executor for the exec'd children.
     */
   def pipeline(input: DataFrame, c: String, specs: Seq[String],
-      registry: Registry = Map.empty, share: Boolean = false,
+      registry: Registry = Map.empty,
       env: Map[String, String] = Map.empty,
       partitionKey: Option[Column] = None,
       ship: Seq[String] = Nil,
       numPartitions: Option[Int] = None,
       archives: Seq[String] = Nil): MultiPipeline =
-    specs.map(parse).foldLeft(MultiPipeline(input, share)) { (mp, sp) =>
+    specs.map(parse).foldLeft(MultiPipeline(input)) { (mp, sp) =>
       mp.branch(sp.dirKey)(
         resolve(sp.mapper, c, registry, asReducer = false, env,
             partitionKey, ship, archives = archives)

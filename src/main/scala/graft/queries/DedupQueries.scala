@@ -1025,9 +1025,9 @@ object DedupQueries {
 
   /** The streaming ADMISSION loop under the full hash oracle — the
     * registered face of
-    * [[graft.streaming.Streams.dedupIndexStreamSnapshot]] (the last
-    * streaming lifecycle whose registered face was cheap: the batch
-    * body dedupIndexBatchOn is shared code): the seen corpus (mod-5
+    * [[graft.streaming.Streams.dedupIndexStreamSnapshot]], the one
+    * dedup-index stream (its batch body is
+    * [[graft.streaming.Streams.dedupIndexBatch]]): the seen corpus (mod-5
     * split) seeds a snapshot index; the fresh 20% arrives as two crawl
     * batches (doc parity); per batch the stream drops intra-batch
     * near-dups (id_b of any τ ≥ 0.7 pair — "keep the smaller id"),
@@ -1048,7 +1048,7 @@ object DedupQueries {
     * dedup_recall move): a deterministic stride on doc_id div 5 caps
     * the collected crawl at ~[[AdmissionFeedBudget]] docs, so the
     * fixture's driver memory is constant while the operator's own
-    * per-batch cost stays dedupIndexStream's documented price (one
+    * per-batch cost stays the stream's documented price (one
     * banded self-join of the batch + one band equi-join against the
     * index). At every shipped SF the stride resolves to 1 (the whole
     * fresh split flows).

@@ -66,20 +66,19 @@ object IvfPqIndex extends graft.util.Epochs.Layout {
     IvfPqIndex(model, centroids,
       Pq.cellCodes(corpus, idCol, vecCol, model, centroids))
 
-  /** Day-2 ingestion — the vector-store sibling of
-    * [[graft.dedup.MinHashIndex.append]]: encode a NEW batch with the
-    * SAVED models (no refit, no old rows rewritten) and parquet-append
-    * its codes into the cell directories. The frozen-quantizer trade
-    * is the standard serving contract (IVF cell boundaries and PQ
-    * codebooks stay fixed between retrains; recall on drifted data
-    * degrades gradually and a periodic refit rebuilds). Append-then-
-    * search ≡ encode-all-then-search is spec-pinned, as is partition
-    * pruning on the appended index. Accreted small files are
-    * [[MinHashIndex.compactSaved]]'s lesson — run [[compactSaved]] on
-    * the cells table when batch count grows.
+  /** [[IvfPqSnapshot]]'s append write body — the vector-store sibling
+    * of [[graft.dedup.MinHashIndex.append]]: encode a NEW batch with
+    * the models saved at `dir` (one epoch dir; no refit, no old rows
+    * rewritten) and parquet-append its codes into the cell
+    * directories. The frozen-quantizer trade is the standard serving
+    * contract (IVF cell boundaries and PQ codebooks stay fixed between
+    * retrains; recall on drifted data degrades gradually and a periodic
+    * refit rebuilds). Append-then-search ≡ encode-all-then-search is
+    * spec-pinned, as is partition pruning on the appended index; the
+    * store's compact folds the accreted small files back.
     */
-  def append(spark: SparkSession, dir: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
+  private[graft] def append(spark: SparkSession, dir: String,
+      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
     val model = Pq.load(spark, s"$dir/codebooks")
     val centroids = spark.read.parquet(s"$dir/centroids")
       .collect()
@@ -110,18 +109,15 @@ object IvfPqIndex extends graft.util.Epochs.Layout {
     relayout(spark, cur, next)(
       _.filter(!col("neighbor_id").isInCollection(ids)))
 
-  /** The cells are relaid one file per cell. The KB-scale models ride
-    * an epoch rewrite verbatim (two single-file parquet round-trips);
-    * the flat in-place form (`next` is `cur`'s staging dir) leaves them
-    * in place, so a flat [[append]] reading them never meets a swap.
+  /** The cells are relaid one file per cell; the KB-scale models ride
+    * the epoch rewrite verbatim (two single-file parquet round-trips).
     */
   private def relayout(spark: SparkSession, cur: String, next: String)(
       keep: DataFrame => DataFrame): Unit = {
-    if (!next.startsWith(s"$cur/"))
-      Seq("codebooks", "centroids").foreach { t =>
-        spark.read.parquet(s"$cur/$t").coalesce(1)
-          .write.mode("overwrite").parquet(s"$next/$t")
-      }
+    Seq("codebooks", "centroids").foreach { t =>
+      spark.read.parquet(s"$cur/$t").coalesce(1)
+        .write.mode("overwrite").parquet(s"$next/$t")
+    }
     keep(spark.read.parquet(s"$cur/cells"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")

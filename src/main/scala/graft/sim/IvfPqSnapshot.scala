@@ -3,14 +3,13 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.util.Epochs
 
-/** Snapshot-isolated [[IvfPqIndex]] — the serving-index face of
-  * [[graft.util.Epochs.Store]]: the flat [[IvfPqIndex.compactSaved]]
-  * swaps the live `cells` table under searches, while here every
-  * rewrite materializes a complete `epoch=<N+1>/` artifact (codebooks
-  * + centroids + cells) and searches pin one epoch's directories for
-  * their whole run. The store's re-append rule adds only the ids the
-  * new epoch lacks, so a raced append never leaves a duplicate code
-  * row (which could occupy two of a top-k search's slots).
+/** The mutable [[IvfPqIndex]] — the serving-index face of
+  * [[graft.util.Epochs.Store]]: every rewrite materializes a complete
+  * `epoch=<N+1>/` artifact (codebooks + centroids + cells) and
+  * searches pin one epoch's directories for their whole run. The
+  * store's re-append rule adds only the ids the new epoch lacks, so a
+  * raced append never leaves a duplicate code row (which could occupy
+  * two of a top-k search's slots).
   */
 object IvfPqSnapshot extends Epochs.Store(IvfPqIndex) {
 

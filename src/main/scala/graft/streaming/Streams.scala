@@ -834,19 +834,20 @@ object Streams {
   }
 
   /** Streaming manifest maintenance — export_manifest's incremental
-    * face, the missing half of the admission loop: [[dedupIndexStream]]
-    * admits crawl batches into the corpus, and the PUBLISHED manifest
-    * (per-shard row count / byte volume / XOR content checksum that
-    * consumers validate deliveries against) must track those admissions
-    * without ever re-scanning the corpus. Each micro-batch rolls up its
-    * own nShards-row manifest partial ([[graft.ops.Manifest.partial]] —
-    * the IDENTICAL arithmetic the batch query runs); because counts and
-    * bytes sum and XOR checksums XOR, the current manifest is the merge
-    * of the partials ([[readManifest]]), and [[compactMv]] folds the
-    * accumulated batch partials on whatever cadence bounds the state
-    * dir. Per batch the cost is one scan of the BATCH; the state is
-    * nShards rows per batch — KB-scale forever. Replay-idempotent via
-    * mvRefreshStream's batchId-keyed overwrite.
+    * face, the missing half of the admission loop:
+    * [[dedupIndexStreamSnapshot]] admits crawl batches into the corpus,
+    * and the PUBLISHED manifest (per-shard row count / byte volume / XOR
+    * content checksum that consumers validate deliveries against) must
+    * track those admissions without ever re-scanning the corpus. Each
+    * micro-batch rolls up its own nShards-row manifest partial
+    * ([[graft.ops.Manifest.partial]] — the IDENTICAL arithmetic the
+    * batch query runs); because counts and bytes sum and XOR checksums
+    * XOR, the current manifest is the merge of the partials
+    * ([[readManifest]]), and [[compactMv]] folds the accumulated batch
+    * partials on whatever cadence bounds the state dir. Per batch the
+    * cost is one scan of the BATCH; the state is nShards rows per batch
+    * — KB-scale forever. Replay-idempotent via mvRefreshStream's
+    * batchId-keyed overwrite.
     */
   def manifestStream(docs: DataFrame, stateDir: String, idCol: String,
       textCol: String, seed: Long, nShards: Int,
@@ -872,8 +873,9 @@ object Streams {
     * scrub), and an audit record (doc_id, epoch) lands in
     * `auditDir/batch=<id>` — the compliance trail a takedown pipeline
     * must keep. Ids are collected driver-side per batch: takedown lists
-    * are KB-scale by nature (the removeSaved in-list contract); a
-    * lake-scale purge would swap in a broadcast anti-join rewrite.
+    * are KB-scale by nature (the in-list contract of
+    * [[graft.dedup.MinHashIndex.removeRewrite]]); a lake-scale purge
+    * would swap in a broadcast anti-join rewrite.
     *
     * Replay: a retried batch re-removes the same ids (removal is
     * idempotent — absent ids no-op) and re-publishes an epoch; the
@@ -1161,17 +1163,25 @@ object Streams {
   }
 
   /** Streaming corpus ingestion with ONLINE near-duplicate filtering —
-    * [[graft.dedup.MinHashIndex]]'s day-2 loop (probe → admit → append)
-    * run at micro-batch cadence, the shape a continuously-crawling
-    * pipeline needs: every arriving batch is (1) deduped within itself
-    * (a doc near-dup of a smaller-id batch mate drops — SemDeDup's
-    * order-free keep rule, greedy across chains), (2) probed against
-    * the SAVED index (map-only until the band equi-join, band-pruned
-    * reads), (3) its admitted docs appended to the index so the NEXT
-    * batch sees them as already-seen, and (4) written to
+    * [[graft.dedup.SnapshotIndex]]'s day-2 loop (probe → admit →
+    * append) run at micro-batch cadence, the shape a continuously-
+    * crawling pipeline needs: every arriving batch is (1) deduped
+    * within itself (a doc near-dup of a smaller-id batch mate drops —
+    * SemDeDup's order-free keep rule, greedy across chains), (2)
+    * probed against the index's current epoch, pinned for the batch
+    * (map-only until the band equi-join, band-pruned reads), (3) its
+    * admitted docs appended through [[graft.dedup.SnapshotIndex.append]]
+    * so the NEXT batch sees them as already-seen, and (4) written to
     * `outDir/batch=<id>`. Nothing old is ever re-read beyond the
     * band-pruned probe; per batch the work is proportional to the
     * batch, not the corpus.
+    *
+    * A compaction or takedown may publish a new epoch WHILE the stream
+    * runs: the batch's probe keeps reading the epoch it pinned, and the
+    * append re-appends into the new epoch, when one published
+    * mid-append, only the admissions it does not already hold
+    * ([[graft.util.Epochs.appendLoop]]'s race analysis; two concurrent
+    * maintainers fail loudly). READS need no cadence.
     *
     * Restart semantics: the parquet OUTPUT is batchId-keyed idempotent
     * (overwrite per batch dir), and so are ADMISSIONS across a retry:
@@ -1180,50 +1190,38 @@ object Streams {
     * ids are stable across retries, so a doc can never be rejected as
     * a duplicate of itself (the retry replays the same admit set and
     * overwrites the same output dir). The re-appended band/shingle
-    * rows only bloat the index files, which
-    * [[graft.dedup.MinHashIndex.compactSaved]]'s rewrite absorbs on
-    * its regular cadence; duplicate index rows cannot change later
+    * rows only bloat the index files, which the store's compact absorbs
+    * on its regular cadence; duplicate index rows cannot change later
     * admissions (candidate ids are distinct()-ed and a duplicate
     * shingle row yields the same match it duplicates). The per-batch
     * body is [[dedupIndexBatch]], exposed so the retry contract is
     * directly testable.
     */
-  def dedupIndexStream(docs: DataFrame, indexDir: String, idCol: String,
-      textCol: String, n: Int, tau: Double, outDir: String,
+  def dedupIndexStreamSnapshot(docs: DataFrame, indexRoot: String,
+      idCol: String, textCol: String, n: Int, tau: Double, outDir: String,
       checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val writer = docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIndexBatch(batch, indexDir, idCol, textCol, n, tau,
+        dedupIndexBatch(batch, indexRoot, idCol, textCol, n, tau,
           s"$outDir/batch=$batchId")
       }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
   }
 
-  /** One micro-batch of [[dedupIndexStream]]: intra-dedup, probe,
-    * append admitted, overwrite `batchDir`. Idempotent under replay —
-    * see the retry contract on [[dedupIndexStream]].
+  /** One micro-batch of [[dedupIndexStreamSnapshot]]: intra-dedup the
+    * batch, probe the [[graft.dedup.SnapshotIndex]] epoch it pins,
+    * append the survivors through the store, overwrite `batchDir` with
+    * the admit set. Idempotent under replay — see the retry contract
+    * on [[dedupIndexStreamSnapshot]].
     */
-  private[graft] def dedupIndexBatch(batch: DataFrame, indexDir: String,
+  private[graft] def dedupIndexBatch(batch: DataFrame, indexRoot: String,
       idCol: String, textCol: String, n: Int, tau: Double,
       batchDir: String): Unit = {
+    import graft.dedup.{MinHashIndex, MinHashLSH, SnapshotIndex}
     val spark = batch.sparkSession
-    dedupIndexBatchOn(batch, idCol, textCol, n, tau, batchDir,
-      graft.dedup.MinHashIndex.load(spark, indexDir),
-      admitted =>
-        graft.dedup.MinHashIndex.append(admitted, indexDir, idCol, textCol, n))
-  }
-
-  /** The admission body shared by the flat and snapshot-isolated
-    * streams: intra-dedup the batch, probe `index`, append survivors
-    * via `appendFn`, overwrite `batchDir` with the admit set.
-    */
-  private[graft] def dedupIndexBatchOn(batch: DataFrame, idCol: String,
-      textCol: String, n: Int, tau: Double, batchDir: String,
-      index: graft.dedup.MinHashIndex.Index,
-      appendFn: DataFrame => Unit): Unit = {
-    import graft.dedup.{MinHashIndex, MinHashLSH}
+    val snap = SnapshotIndex.load(spark, indexRoot)
     // pin the batch: four consumers (intra pairs, probe, anti-joins)
     val pinned = batch.localCheckpoint(false)
     // admit-set pinned too: the append and the parquet write below
@@ -1236,57 +1234,26 @@ object Streams {
       val batchKept = pinned.join(intra,
         pinned(idCol) === intra("graft_drop"), "left_anti")
       val dupOfSeen = MinHashIndex
-        .probe(index, batchKept, idCol, textCol, n, tau)
+        .probe(snap.index, batchKept, idCol, textCol, n, tau)
         // retry idempotence: a replayed batch whose append already
         // landed must not reject its own docs as duplicates of
         // themselves
         .filter(col("new_id") =!= col("seen_id"))
         .select(col("new_id")).distinct()
-      // EAGER pin (was lazy): the append and the batch-output write
-      // both consume the admit set and are independent of each other —
-      // materialize once, then overlap them (graft.util.Par doc). The
-      // batch output is batchId-keyed overwrite, so a failed append
-      // alongside a completed output write retries to the same state.
+      // EAGER pin: the append and the batch-output write both consume
+      // the admit set and are independent of each other — materialize
+      // once, then overlap them (graft.util.Par doc). The batch output
+      // is batchId-keyed overwrite, so a failed append alongside a
+      // completed output write retries to the same state.
       admitted = batchKept.join(dupOfSeen,
           batchKept(idCol) === dupOfSeen("new_id"), "left_anti")
         .localCheckpoint(true)
       graft.util.Par.both(
-        appendFn(admitted),
+        SnapshotIndex.append(spark, admitted, indexRoot, idCol, textCol, n),
         admitted.write.mode("overwrite").parquet(batchDir))
     } finally {
       graft.util.Caches.release(pinned)
       if (admitted != null) graft.util.Caches.release(admitted)
     }
-  }
-
-  /** [[dedupIndexStream]] over a SNAPSHOT-ISOLATED index
-    * ([[graft.dedup.SnapshotIndex]]) — the variant that tolerates a
-    * compaction or takedown publishing a new epoch WHILE the stream
-    * runs: each micro-batch pins the current epoch for its probe (the
-    * flat variant's probe dereferences deleted parquet if compactSaved
-    * swaps mid-batch), and appends its admissions via
-    * [[graft.dedup.SnapshotIndex.append]], which re-appends into the
-    * new epoch, when one published mid-append, only the admissions it
-    * does not already hold; maintenance is fenced against the append
-    * ([[graft.util.Epochs.Store]]'s race analysis, two concurrent
-    * maintainers fail loudly). READS need no cadence (that is the
-    * point of the snapshot). Same retry contract as the flat stream
-    * (self-match filter + batchId-keyed output overwrite).
-    */
-  def dedupIndexStreamSnapshot(docs: DataFrame, indexRoot: String,
-      idCol: String, textCol: String, n: Int, tau: Double, outDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val snap = graft.dedup.SnapshotIndex.load(spark, indexRoot)
-        dedupIndexBatchOn(batch, idCol, textCol, n, tau,
-          s"$outDir/batch=$batchId", snap.index,
-          admitted => graft.dedup.SnapshotIndex.append(
-            spark, admitted, indexRoot, idCol, textCol, n))
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
   }
 }

@@ -2,13 +2,13 @@ package graft.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.util.control.NonFatal
 
 /** Directory-granularity epoch store — the snapshot-isolation
   * mechanism behind every saved artifact whose maintenance rewrites
-  * files: the dedup and ANN indexes through [[Epochs.Store]], and
-  * [[graft.dedup.NoveltyIndex]] and [[graft.ops.ShardStore]] through
-  * the primitives below. Each rewrite lands in `epoch=<N+1>/` and is
+  * files: the dedup and ANN indexes through [[Epochs.Store]],
+  * [[graft.dedup.NoveltyIndex]] through the same [[Epochs.appendLoop]]
+  * and [[Epochs.maintain]], and [[graft.ops.ShardStore]] through the
+  * publish primitives. Each rewrite lands in `epoch=<N+1>/` and is
   * published through here.
   *
   * Layout under a root dir:
@@ -161,8 +161,8 @@ object Epochs {
     * After `maxAttempts` signature mismatches the operation fails
     * loudly (an append storm should win over maintenance, not lose to
     * it). The residual window — an append whose files land after the
-    * final re-list — is closed from the append side ([[Store]]'s race
-    * analysis).
+    * final re-list — is closed from the append side ([[appendLoop]]'s
+    * race analysis).
     *
     * Cost at 100 TB: two recursive LISTs of one epoch directory per
     * attempt — metadata-only, proportional to file count, zero data
@@ -373,8 +373,8 @@ object Epochs {
   def maintenanceHeld(spark: SparkSession, dir: String): Boolean =
     fsOf(spark, dir).exists(leasePath(dir))
 
-  /** The APPENDERS' half of the maintenance fence ([[Store]]'s race
-    * analysis): block while a maintainer holds the directory's lease.
+  /** The APPENDERS' half of the maintenance fence ([[appendLoop]]'s
+    * race analysis): block while a maintainer holds the directory's lease.
     * The appender protocol is write → awaitNoMaintenance → re-read
     * epoch → (advance? re-append what the new epoch lacks : done).
     * Polls at 100 ms; a stale crashed-maintainer lock surfaces here as
@@ -397,46 +397,71 @@ object Epochs {
     }
   }
 
-  /** The flat, epoch-less form of a rewrite: `rewrite(dir, staged)`
-    * writes the new artifact under `<dir>/_staged`, then each table it
-    * wrote replaces its namesake under `dir` (delete + rename) —
-    * parquet cannot overwrite a path its own plan is lazily reading.
-    * Readers of `dir` are NOT isolated from the swap; [[Store]] is.
+  /** The ONE append loop every mutable artifact's appends run through
+    * ([[Store]]'s indexes and [[graft.dedup.NoveltyIndex]]):
+    * `write(pending, epochDir)` appends a batch into one epoch dir,
+    * starting at `startEpoch`; `held(epochDir)` is the one column of
+    * ids an epoch already holds, matched against the batch's `idCol`.
     *
-    * A failed rewrite drops its staging dir (nothing live was touched
-    * yet). A `_staged` already present means an earlier swap died
-    * between a delete and its rename, so its table there may be the
-    * only copy: that fails loudly and is never deleted here.
+    * The append/rewrite race: a rewrite lists the source epoch's files,
+    * so an append landing after that listing would retire with the old
+    * epoch. Both sides close it.
+    *  - Maintainers ([[maintain]]) hold [[withMaintenanceLease]] from
+    *    before their first listing until after publish (a second
+    *    maintainer fails loudly) and rewrite through
+    *    [[rewriteToNextChecked]], which re-runs the rewrite when an
+    *    append changed the source epoch's content signature under it.
+    *  - This loop writes, waits out any lease ([[awaitNoMaintenance]]),
+    *    then re-reads the current epoch. The lease is the common
+    *    linearization point: with no lease held, every future rewrite
+    *    will list the append's files and every finished one is visible
+    *    through the pointer. If the epoch advanced, it re-appends into
+    *    the new epoch ONLY the batch ids that epoch does not already
+    *    hold (a `left_anti` on `held` — the checked rewrite may have
+    *    captured the batch), and loops.
+    * So an admission survives, without a second copy from the
+    * re-append, or something throws. The id anti-join runs only when an
+    * append raced a publish.
     */
-  def rewriteInPlace(spark: SparkSession, dir: String)(
-      rewrite: (String, String) => Unit): Unit = {
-    val fs = fsOf(spark, dir)
-    val staged = new Path(dir, "_staged")
-    if (fs.exists(staged))
-      throw new IllegalStateException(
-        s"Epochs.rewriteInPlace: $staged exists — an earlier rewrite of " +
-          s"$dir died mid-swap; move each table there whose namesake is " +
-          s"missing from $dir back into place, delete $staged, and re-run")
-    try rewrite(dir, staged.toString)
-    catch { case NonFatal(e) => fs.delete(staged, true); throw e }
-    fs.listStatus(staged).foreach { st =>
-      val live = new Path(dir, st.getPath.getName)
-      fs.delete(live, true)
-      require(fs.rename(st.getPath, live),
-        s"rewrite: rename ${st.getPath} -> $live failed")
+  def appendLoop(spark: SparkSession, dir: String, startEpoch: Long,
+      batch: DataFrame, idCol: String)(held: String => DataFrame)(
+      write: (DataFrame, String) => Unit): Unit = {
+    var e = startEpoch
+    var pending = batch
+    var stable = false
+    while (!stable) {
+      write(pending, epochPath(dir, e))
+      awaitNoMaintenance(spark, dir)
+      val now = current(spark, dir)
+      if (now == e) stable = true
+      else {
+        pending = pending.join(held(epochPath(dir, now)).toDF(idCol),
+            Seq(idCol), "left_anti")
+          .localCheckpoint(true)
+        if (pending.isEmpty) stable = true else e = now
+      }
     }
-    fs.delete(staged, true)
   }
+
+  /** The ONE maintenance entry: `rewrite(cur, next)` of the current
+    * epoch into epoch N+1 under the directory's lease and the checked
+    * rewrite fence ([[appendLoop]]'s race analysis), then publish.
+    * Returns the published epoch.
+    */
+  def maintain(spark: SparkSession, dir: String, retainEpochs: Int)(
+      rewrite: (String, String) => Unit): Long =
+    withMaintenanceLease(spark, dir) {
+      rewriteToNextChecked(spark, dir, retainEpochs)(rewrite)
+    }
 
   /** A pinned read handle: `index` plans read only `epoch`'s files. */
   final case class Snapshot[I](index: I, epoch: Long, dir: String)
 
-  /** A saved index's on-disk format as [[Store]] and [[rewriteInPlace]]
-    * see it; `Index` is the in-memory handle. Each rewrite body reads
-    * the complete artifact under `cur` and writes a complete one under
-    * `next`, so ONE body serves both the epoch rewrite (`cur` = epoch
-    * N, `next` = epoch N+1) and the flat in-place
-    * [[compactSaved]] (and the dedup indexes' flat `removeSaved`).
+  /** A saved index's on-disk format as [[Store]] sees it; `Index` is
+    * the in-memory handle. Flat `save`/`load` also serve build-once
+    * callers; every mutation goes through the store. Each rewrite body
+    * reads the complete artifact under `cur` (epoch N) and writes a
+    * complete one under `next` (epoch N+1).
     */
   trait Layout {
     type Index
@@ -459,17 +484,13 @@ object Epochs {
       */
     def removeRewrite(spark: SparkSession, ids: Seq[Long])(
         cur: String, next: String): Unit
-
-    /** [[compactRewrite]] of the flat index saved at `dir`. */
-    def compactSaved(spark: SparkSession, dir: String): Unit =
-      rewriteInPlace(spark, dir)(compactRewrite(spark))
   }
 
   /** An index's epoch store: publish, pin and retire through
-    * [[Epochs]], plus the append loop and fenced maintenance, over a
-    * [[Layout]] that hides the index format. Each index store is
-    * `object X extends Epochs.Store(<flat index>)` with a typed
-    * `append` adapter over [[appendBatch]].
+    * [[Epochs]], appends through [[appendLoop]] and rewrites through
+    * [[maintain]], over a [[Layout]] that hides the index format. Each
+    * index store is `object X extends Epochs.Store(<index layout>)`
+    * with a typed `append` adapter over [[appendBatch]].
     *
     * Guarantees:
     *  - **Readers pin an epoch**: [[load]] resolves the current epoch
@@ -481,31 +502,12 @@ object Epochs {
     *  - **Appends are additive**: they add files inside the current
     *    epoch. Only the rewriting ops ([[compact]], [[remove]]) need a
     *    new epoch, because only they delete files a reader may hold.
-    *
-    * The append/rewrite race: a rewrite lists the source epoch's files,
-    * so an append landing after that listing would retire with the old
-    * epoch. Both sides close it.
-    *  - Maintainers hold [[withMaintenanceLease]] from before their
-    *    first listing until after publish (a second maintainer fails
-    *    loudly) and rewrite through [[rewriteToNextChecked]], which
-    *    re-runs the rewrite when an append changed the source epoch's
-    *    content signature under it.
-    *  - The appender writes, waits out any lease
-    *    ([[awaitNoMaintenance]]), then re-reads the current epoch. The
-    *    lease is the common linearization point: with no lease held,
-    *    every future rewrite will list the append's files and every
-    *    finished one is visible through the pointer. If the epoch
-    *    advanced, the appender re-appends into the new epoch ONLY the
-    *    batch ids that epoch does not already hold (a `left_anti` on
-    *    [[Layout.ids]] — the checked rewrite may have captured the
-    *    batch), and loops.
-    * So an admission survives, without a second copy from the
-    * re-append, or something throws.
+    *  - **Appends survive maintenance** exactly once ([[appendLoop]]'s
+    *    race analysis).
     *
     * At 100 TB nothing here adds data-path cost: reads plan against one
-    * epoch's directories exactly as against the flat index, a publish
-    * moves a pointer file, and the id anti-join runs only when an
-    * append raced a publish.
+    * epoch's directories exactly as against a flat index, and a publish
+    * moves a pointer file.
     */
   abstract class Store[I](layout: Layout { type Index = I }) {
 
@@ -537,29 +539,15 @@ object Epochs {
     private def loadAt(spark: SparkSession, dir: String, epoch: Long) =
       Epochs.Snapshot(layout.load(spark, epochPath(dir, epoch)), epoch, dir)
 
-    /** The append loop (class doc): `write(batch, epochDir)` appends a
-      * batch into one epoch dir, starting at `startEpoch`; `idCol`
-      * names the batch column that [[Layout.ids]] holds.
+    /** [[appendLoop]] over [[Layout.ids]]: `write(batch, epochDir)`
+      * appends a batch into one epoch dir; `idCol` names the batch
+      * column that [[Layout.ids]] holds.
       */
     protected def appendBatch(spark: SparkSession, dir: String,
         startEpoch: Long, batch: DataFrame, idCol: String)(
-        write: (DataFrame, String) => Unit): Unit = {
-      var e = startEpoch
-      var pending = batch
-      var stable = false
-      while (!stable) {
-        write(pending, epochPath(dir, e))
-        awaitNoMaintenance(spark, dir)
-        val now = current(spark, dir)
-        if (now == e) stable = true
-        else {
-          val held = layout.ids(spark, epochPath(dir, now)).toDF(idCol)
-          pending = pending.join(held, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          if (pending.isEmpty) stable = true else e = now
-        }
-      }
-    }
+        write: (DataFrame, String) => Unit): Unit =
+      appendLoop(spark, dir, startEpoch, batch, idCol)(
+        layout.ids(spark, _))(write)
 
     /** Compact the current epoch into epoch N+1 and publish it; readers
       * pinned to N keep their files. Returns the published epoch.
@@ -582,11 +570,5 @@ object Epochs {
     private[graft] def compactRewrite(spark: SparkSession)
         : (String, String) => Unit =
       layout.compactRewrite(spark)
-
-    private def maintain(spark: SparkSession, dir: String, retain: Int)(
-        rewrite: (String, String) => Unit): Long =
-      withMaintenanceLease(spark, dir) {
-        rewriteToNextChecked(spark, dir, retain)(rewrite)
-      }
   }
 }

@@ -490,52 +490,51 @@ class DedupSpec extends SparkSpec {
     assert(probed2 === probed, "loaded index must probe identically")
   }
 
-  test("MinHashIndex.append: append-then-probe equals rebuild-then-probe; " +
-      "compactSaved keeps probes identical and shrinks band files") {
+  test("SnapshotIndex.append: append-then-probe equals rebuild-then-probe; " +
+      "compact keeps probes identical and leaves one file per band dir; " +
+      "takedown drops exactly the removed ids' pairs") {
+    import graft.dedup.{MinHashIndex, SnapshotIndex}
     val docs = graft.util.Tables(spark, sf).documents
-    val day1 = docs.filter(pmod(col("doc_id"), lit(5)) < 3)
-    val day2 = docs.filter(pmod(col("doc_id"), lit(5)) === 3)
+    val day1 = docs.filter(pmod(col("doc_id"), lit(5)) < 2)
+    val batches = Seq(2, 3).map(m => docs.filter(pmod(col("doc_id"), lit(5)) === m))
     val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
-    def probeSet(idx: graft.dedup.MinHashIndex.Index) =
-      graft.dedup.MinHashIndex.probe(idx, fresh, "doc_id", "text", n = 3, tau = 0.7)
+    def probeSet(idx: MinHashIndex.Index) =
+      MinHashIndex.probe(idx, fresh, "doc_id", "text", n = 3, tau = 0.7)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // day 1: index + save; day 2: append the new batch to the SAVED form
+    // day 1: index as epoch 0; days 2 and 3: append each new batch
     val dir = java.nio.file.Files.createTempDirectory("graft-mhidx-app").toString
-    graft.dedup.MinHashIndex.save(
-      graft.dedup.MinHashIndex.build(day1, "doc_id", "text", n = 3), dir)
-    graft.dedup.MinHashIndex.append(day2, dir, "doc_id", "text", n = 3)
-    val appended = probeSet(graft.dedup.MinHashIndex.load(spark, dir))
-    // ground truth: rebuild from scratch on day1 ∪ day2
-    val rebuilt = probeSet(
-      graft.dedup.MinHashIndex.build(day1.unionByName(day2), "doc_id", "text", n = 3))
+    SnapshotIndex.init(MinHashIndex.build(day1, "doc_id", "text", n = 3),
+      spark, dir)
+    batches.foreach(b =>
+      SnapshotIndex.append(spark, b, dir, "doc_id", "text", n = 3))
+    val appended = probeSet(SnapshotIndex.load(spark, dir).index)
+    // ground truth: rebuild from scratch on every day's docs
+    val rebuilt = probeSet(MinHashIndex.build(
+      batches.foldLeft(day1)(_ unionByName _), "doc_id", "text", n = 3))
     assert(appended === rebuilt, "append-then-probe must equal rebuild-then-probe")
     assert(appended.nonEmpty, "the split must contain cross pairs")
     // appends accrete files; compaction rewrites to one file per band
     // dir without changing any probe result
-    def bandFiles(): Int = {
-      val root = new java.io.File(s"$dir/bands")
-      root.listFiles().filter(_.isDirectory)
-        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    }
-    val before = bandFiles()
-    graft.dedup.MinHashIndex.compactSaved(spark, dir)
-    val after = bandFiles()
-    assert(after < before, s"compaction must shrink band files ($before -> $after)")
-    val dirs = new java.io.File(s"$dir/bands").listFiles().count(_.isDirectory)
-    assert(after === dirs, "exactly one file per band directory after compaction")
-    assert(probeSet(graft.dedup.MinHashIndex.load(spark, dir)) === appended,
+    val before = filesPerPartition(s"$dir/epoch=0/bands")
+    assert(SnapshotIndex.compact(spark, dir) === 1L)
+    val after = filesPerPartition(s"$dir/epoch=1/bands")
+    assert(after.values.sum < before.values.sum,
+      s"compaction must shrink band files ($before -> $after)")
+    assert(after.nonEmpty && after.values.forall(_ == 1),
+      s"exactly one file per band directory after compaction: $after")
+    assert(probeSet(SnapshotIndex.load(spark, dir).index) === appended,
       "compaction must not change probe results")
     // takedown: removing the seen ids that matched must silence exactly
     // those pairs and leave every other pair untouched
     val removed = appended.map(_._2).take(2).toSeq
-    graft.dedup.MinHashIndex.removeSaved(spark, dir, removed)
-    val afterRemove = probeSet(graft.dedup.MinHashIndex.load(spark, dir))
+    assert(SnapshotIndex.remove(spark, dir, removed) === 2L)
+    val afterRemove = probeSet(SnapshotIndex.load(spark, dir).index)
     assert(afterRemove === appended.filterNot(p => removed.contains(p._2)),
       "removal must drop exactly the removed ids' pairs")
     assert(afterRemove.size < appended.size)
     // idempotent: removing an absent id changes nothing
-    graft.dedup.MinHashIndex.removeSaved(spark, dir, Seq(-1L))
-    assert(probeSet(graft.dedup.MinHashIndex.load(spark, dir)) === afterRemove)
+    assert(SnapshotIndex.remove(spark, dir, Seq(-1L)) === 3L)
+    assert(probeSet(SnapshotIndex.load(spark, dir).index) === afterRemove)
   }
 
   test("SnapshotIndex: pinned readers survive compaction and takedown " +
@@ -633,88 +632,6 @@ class DedupSpec extends SparkSpec {
       .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
       .toMap
 
-  private def parquetFiles(table: String): Int =
-    new java.io.File(table).listFiles().count(_.getName.endsWith(".parquet"))
-
-  test("one rewrite body, two paths: flat compactSaved/removeSaved and " +
-      "the epoch store's compact/remove leave the same layout and probes " +
-      "(MinHash, SimHash)") {
-    import graft.dedup.{MinHashIndex, SimHashIndex, SimHashSnapshot, SnapshotIndex}
-    val docs = graft.util.Tables(spark, sf).documents
-    val base = docs.filter(pmod(col("doc_id"), lit(5)) < 2)
-    val batches = Seq(2, 3).map(m => docs.filter(pmod(col("doc_id"), lit(5)) === m))
-    val fresh = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
-    def tmp(prefix: String) =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-
-    // MinHash: the same index built once, saved flat and as epoch 0,
-    // the same two batches appended to each
-    def mhProbe(idx: MinHashIndex.Index) =
-      MinHashIndex.probe(idx, fresh, "doc_id", "text", n = 3, tau = 0.7)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val mh = MinHashIndex.build(base, "doc_id", "text", n = 3)
-    val mhFlat = tmp("graft-mh-flat")
-    val mhStore = tmp("graft-mh-store")
-    MinHashIndex.save(mh, mhFlat)
-    SnapshotIndex.init(mh, spark, mhStore)
-    batches.foreach { b =>
-      MinHashIndex.append(b, mhFlat, "doc_id", "text", n = 3)
-      SnapshotIndex.append(spark, b, mhStore, "doc_id", "text", n = 3)
-    }
-    MinHashIndex.compactSaved(spark, mhFlat)
-    assert(SnapshotIndex.compact(spark, mhStore) === 1L)
-    val mhBands = filesPerPartition(s"$mhFlat/bands")
-    assert(mhBands.nonEmpty && mhBands.values.forall(_ == 1),
-      s"one file per band dir after compactSaved: $mhBands")
-    assert(filesPerPartition(s"$mhStore/epoch=1/bands") === mhBands)
-    assert(parquetFiles(s"$mhStore/epoch=1/shingles") ===
-      parquetFiles(s"$mhFlat/shingles"))
-    assert(!new java.io.File(s"$mhFlat/_staged").exists(),
-      "the flat swap must leave no staging dir behind")
-    val mhCompacted = mhProbe(MinHashIndex.load(spark, mhFlat))
-    assert(mhCompacted.nonEmpty)
-    assert(mhProbe(SnapshotIndex.load(spark, mhStore).index) === mhCompacted)
-    val mhRemoved = mhCompacted.map(_._2).take(2).toSeq
-    MinHashIndex.removeSaved(spark, mhFlat, mhRemoved)
-    assert(SnapshotIndex.remove(spark, mhStore, mhRemoved) === 2L)
-    val mhAfterRm = mhProbe(MinHashIndex.load(spark, mhFlat))
-    assert(mhAfterRm === mhCompacted.filterNot(p => mhRemoved.contains(p._2)))
-    assert(mhProbe(SnapshotIndex.load(spark, mhStore).index) === mhAfterRm)
-    assert(filesPerPartition(s"$mhStore/epoch=2/bands") ===
-      filesPerPartition(s"$mhFlat/bands"))
-
-    // SimHash: the same two paths over the one-table block index
-    def shProbe(idx: SimHashIndex.Index) =
-      SimHashIndex.probe(idx, fresh, "doc_id", "text", maxDist = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val sh = SimHashIndex.build(base, "doc_id", "text")
-    val shFlat = tmp("graft-sh-flat")
-    val shStore = tmp("graft-sh-store")
-    SimHashIndex.save(sh, shFlat)
-    SimHashSnapshot.init(sh, spark, shStore)
-    batches.foreach { b =>
-      SimHashIndex.append(b, shFlat, "doc_id", "text")
-      SimHashSnapshot.append(spark, b, shStore, "doc_id", "text")
-    }
-    SimHashIndex.compactSaved(spark, shFlat)
-    assert(SimHashSnapshot.compact(spark, shStore) === 1L)
-    val shBlocks = filesPerPartition(s"$shFlat/blocks")
-    assert(shBlocks.nonEmpty && shBlocks.values.forall(_ == 1),
-      s"one file per block dir after compactSaved: $shBlocks")
-    assert(filesPerPartition(s"$shStore/epoch=1/blocks") === shBlocks)
-    val shCompacted = shProbe(SimHashIndex.load(spark, shFlat))
-    assert(shCompacted.nonEmpty)
-    assert(shProbe(SimHashSnapshot.load(spark, shStore).index) === shCompacted)
-    val shRemoved = shCompacted.map(_._2).take(2).toSeq
-    SimHashIndex.removeSaved(spark, shFlat, shRemoved)
-    assert(SimHashSnapshot.remove(spark, shStore, shRemoved) === 2L)
-    val shAfterRm = shProbe(SimHashIndex.load(spark, shFlat))
-    assert(shAfterRm === shCompacted.filterNot(p => shRemoved.contains(p._2)))
-    assert(shProbe(SimHashSnapshot.load(spark, shStore).index) === shAfterRm)
-    assert(filesPerPartition(s"$shStore/epoch=2/blocks") ===
-      filesPerPartition(s"$shFlat/blocks"))
-  }
-
   test("dedup stores re-append exactly once: a batch the checked rewrite " +
       "already captured is not appended again into the new epoch") {
     import graft.dedup.{MinHashIndex, SimHashIndex, SimHashSnapshot, SnapshotIndex}
@@ -805,38 +722,6 @@ class DedupSpec extends SparkSpec {
       "the re-append must restore the bands the rewrite missed")
     assert(selfMatched(SnapshotIndex.load(spark, dir).index) === batchIds,
       "every batch doc must be probeable in the new epoch")
-  }
-
-  test("Epochs.rewriteInPlace: a failed rewrite leaves no staging dir; a " +
-      "leftover one fails loudly and is kept") {
-    import graft.dedup.MinHashIndex
-    import graft.util.Epochs
-    val docs = graft.util.Tables(spark, sf).documents
-      .filter(pmod(col("doc_id"), lit(5)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-staged").toString
-    MinHashIndex.save(MinHashIndex.build(docs, "doc_id", "text", n = 3), dir)
-    val before = parquetFiles(s"$dir/shingles")
-    val boom = intercept[RuntimeException] {
-      Epochs.rewriteInPlace(spark, dir) { (cur, next) =>
-        spark.read.parquet(s"$cur/shingles").write.parquet(s"$next/shingles")
-        throw new RuntimeException("rewrite failed")
-      }
-    }
-    assert(boom.getMessage === "rewrite failed")
-    assert(!new java.io.File(s"$dir/_staged").exists())
-    assert(parquetFiles(s"$dir/shingles") === before)
-    // a swap that died between delete and rename: the staged table is
-    // the only copy left
-    val orphan = new java.io.File(s"$dir/_staged/shingles")
-    java.nio.file.Files.move(new java.io.File(s"$dir/shingles").toPath,
-      java.nio.file.Files.createDirectories(orphan.toPath.getParent)
-        .resolve("shingles"))
-    val err = intercept[IllegalStateException] {
-      MinHashIndex.compactSaved(spark, dir)
-    }
-    assert(err.getMessage.contains("_staged"))
-    assert(parquetFiles(orphan.toString) === before,
-      "the only copy of a table must survive a refused rewrite")
   }
 
   test("Epochs is artifact-agnostic: a plain parquet table gets the " +
@@ -1452,6 +1337,67 @@ class DedupSpec extends SparkSpec {
     assert(gramSet === rebuilt)
   }
 
+  test("NoveltyIndex: re-admitting an already-admitted crawl (append() " +
+      "and the fused probeAndAdmit) writes nothing — the epoch's bloom/ " +
+      "and delta/ listings are unchanged") {
+    import graft.dedup.NoveltyIndex
+    val docs = util.Tables(spark, sf).documents
+    val old = docs.filter(col("doc_id") % 3 === 0)
+    val crawl = docs.filter(col("doc_id") % 3 === 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nvseen").toString
+    val e0 = s"$dir/epoch=0"
+    NoveltyIndex.init(spark, old, dir, "text", 3)
+    NoveltyIndex.append(spark, crawl, dir, "text", 3)
+    def listing(): Seq[String] =
+      Seq("bloom", "delta").flatMap(part =>
+        Option(new java.io.File(s"$e0/$part").list()).toSeq.flatten
+          .map(f => s"$part/$f")).sorted
+    val admitted = listing()
+    assert(admitted.exists(f => f.startsWith("delta/") && f.endsWith(".parquet")),
+      "the first append must admit novel grams")
+
+    NoveltyIndex.append(spark, crawl, dir, "text", 3)
+    assert(listing() === admitted, "a fully-seen append() wrote files")
+    val rows = NoveltyIndex.probeAndAdmit(spark, NoveltyIndex.load(spark, dir),
+      crawl, "source", "text", 3, prefilter = true)
+    assert(rows.nonEmpty && rows.forall(_.getLong(2) === 0L))
+    assert(listing() === admitted, "a fully-seen probeAndAdmit wrote files")
+    assert(!new java.io.File(e0).list().exists(_.startsWith("_append-")),
+      "no staging dir may be left behind")
+  }
+
+  test("NoveltyIndex.probeAndAdmit across an epoch advance: a stale " +
+      "snapshot's rows equal its probe, and the new epoch holds old ∪ crawl " +
+      "with no gh twice in its files") {
+    import graft.dedup.NoveltyIndex
+    val docs = util.Tables(spark, sf).documents
+    val old = docs.filter(col("doc_id") % 3 === 0)
+    val crawl = docs.filter(col("doc_id") % 3 === 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nvadvance").toString
+    NoveltyIndex.init(spark, old, dir, "text", 3)
+    val stale = NoveltyIndex.load(spark, dir)
+    val want = noveltyRows(NoveltyIndex.probe(stale, crawl, "source", "text", 3)
+      .collect())
+    assert(want.exists(_._3 > 0L), "fixture must plant novelty")
+
+    // a compaction publishes epoch 1 between the load and the admit
+    assert(NoveltyIndex.compact(spark, dir) === 1L)
+    val got = NoveltyIndex.probeAndAdmit(spark, stale, crawl,
+      "source", "text", 3, prefilter = true)
+    assert(noveltyRows(got) === want)
+
+    val now = NoveltyIndex.load(spark, dir)
+    assert(now.epoch === 1L)
+    val held = now.grams.collect().map(_.getLong(0)).toSeq
+    assert(held.size === held.distinct.size, "a gh is held twice in epoch 1")
+    assert(held.toSet === NoveltyIndex.gramHashes(old.unionByName(crawl),
+      "text", 3).distinct().collect().map(_.getLong(0)).toSet)
+    // the admission's bloom row landed in epoch 1 too: the prefiltered
+    // probe sees the crawl as fully seen
+    assert(noveltyRows(NoveltyIndex.probe(now, crawl, "source", "text", 3,
+      prefilter = true).collect()).forall(_._3 === 0L))
+  }
+
   test("dedup_inline: planted within-doc repeats collapse keep-first; " +
       "the plan's only exchange is the result ORDER BY") {
     import spark.implicits._
@@ -1548,29 +1494,32 @@ class DedupSpec extends SparkSpec {
       }.toSet
     assert(probed === full, "incremental probe must equal the restricted full run")
     assert(probed.nonEmpty, "the split must actually contain cross pairs")
-    // day-2: save day1, append day2, probe — must equal the one-shot
+    // day-2: day1 as epoch 0, append day2, probe — must equal the
+    // one-shot
+    import graft.dedup.SimHashSnapshot
     val dir = java.nio.file.Files.createTempDirectory("graft-shidx").toString
-    graft.dedup.SimHashIndex.save(
-      graft.dedup.SimHashIndex.build(day1, "doc_id", "text"), dir)
-    graft.dedup.SimHashIndex.append(day2, dir, "doc_id", "text")
-    val appended = probeSet(graft.dedup.SimHashIndex.load(spark, dir))
+    SimHashSnapshot.init(graft.dedup.SimHashIndex.build(day1, "doc_id", "text"),
+      spark, dir)
+    SimHashSnapshot.append(spark, day2, dir, "doc_id", "text")
+    val appended = probeSet(SimHashSnapshot.load(spark, dir).index)
     assert(appended === probed, "append-then-probe must equal rebuild-then-probe")
-    def blockFiles(): Int = new java.io.File(s"$dir/blocks").listFiles()
-      .filter(_.isDirectory)
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val before = blockFiles()
-    graft.dedup.SimHashIndex.compactSaved(spark, dir)
-    assert(blockFiles() < before, "compaction must shrink block files")
-    assert(probeSet(graft.dedup.SimHashIndex.load(spark, dir)) === probed,
+    val before = filesPerPartition(s"$dir/epoch=0/blocks")
+    assert(SimHashSnapshot.compact(spark, dir) === 1L)
+    val after = filesPerPartition(s"$dir/epoch=1/blocks")
+    assert(after.values.sum < before.values.sum,
+      "compaction must shrink block files")
+    assert(after.nonEmpty && after.values.forall(_ == 1),
+      s"one file per block dir after compaction: $after")
+    assert(probeSet(SimHashSnapshot.load(spark, dir).index) === probed,
       "compaction must not change probe results")
-    // takedown parity with MinHashIndex.removeSaved
+    // takedown parity with SnapshotIndex.remove
     val removed = probed.map(_._2).take(1).toSeq
     if (removed.nonEmpty) {
-      graft.dedup.SimHashIndex.removeSaved(spark, dir, removed)
-      val afterRm = probeSet(graft.dedup.SimHashIndex.load(spark, dir))
+      assert(SimHashSnapshot.remove(spark, dir, removed) === 2L)
+      val afterRm = probeSet(SimHashSnapshot.load(spark, dir).index)
       assert(afterRm === probed.filterNot(p => removed.contains(p._2)))
-      graft.dedup.SimHashIndex.removeSaved(spark, dir, Seq(-1L))
-      assert(probeSet(graft.dedup.SimHashIndex.load(spark, dir)) === afterRm)
+      assert(SimHashSnapshot.remove(spark, dir, Seq(-1L)) === 3L)
+      assert(probeSet(SimHashSnapshot.load(spark, dir).index) === afterRm)
     }
     // buildCodes: the same index machinery over arbitrary 64-bit codes
     import spark.implicits._

@@ -44,7 +44,7 @@ class PipeSpec extends SparkSpec {
   test("MultiPipeline: branches see the same input, write per-branch dirs") {
     import spark.implicits._
     val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("id", "tag")
-    val out = MultiPipeline(df, share = true)
+    val out = MultiPipeline(df)
       .branch("evens")(_.filter(col("id") % 2 === 0))
       .branch("byTag")(_.groupBy("tag").count())
       .run()

@@ -899,52 +899,6 @@ class StreamSpec extends SparkSpec {
     } finally { index.assigned.unpersist(); () }
   }
 
-  test("dedupIndexStream: cross-batch near-dups rejected via the growing " +
-      "index, intra-batch dups collapse to min id, unique docs admitted") {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def txt(words: String*): String = words.mkString(" ")
-    val tA = txt("alpha", "beta", "gamma", "delta", "epsilon")
-    val tB = txt("one", "two", "three", "four", "five")
-    val tC = txt("red", "green", "blue", "cyan", "magenta")
-    val tD = txt("north", "south", "east", "west", "center")
-    val tE = txt("iron", "copper", "zinc", "nickel", "cobalt")
-    val idxDir = graft.util.Staging.dir(spark, "dedup_idx_stream")
-    val outDir = graft.util.Staging.dir(spark, "dedup_idx_out")
-    // day 0: corpus {0: tA, 1: tB} indexed and saved
-    graft.dedup.MinHashIndex.save(
-      graft.dedup.MinHashIndex.build(
-        Seq((0L, tA), (1L, tB)).toDF("doc_id", "text"),
-        "doc_id", "text", n = 3),
-      idxDir)
-    val ms = MemoryStream[(Long, String)]
-    val q = Streams.dedupIndexStream(
-      ms.toDS().toDF("doc_id", "text"), idxDir,
-      "doc_id", "text", n = 3, tau = 0.8, outDir)
-    try {
-      // batch 0: 10 = copy of seen tA (reject), 11 & 12 = copies of a
-      // NEW text (11 admitted, 12 intra-dropped), 13 unique (admitted)
-      ms.addData(Seq((10L, tA), (11L, tC), (12L, tC), (13L, tD)))
-      q.processAllAvailable()
-      // batch 1: 20 = copy of 11's text — admitted LAST batch, so the
-      // appended index must reject it; 21 unique (admitted)
-      ms.addData(Seq((20L, tC), (21L, tE)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val admitted = spark.read.parquet(outDir)
-      .select("batch", "doc_id").collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toSet
-    assert(admitted === Set(0 -> 11L, 0 -> 13L, 1 -> 21L))
-    // the final index answers a probe for every admitted text
-    val probeHits = graft.dedup.MinHashIndex.probe(
-        graft.dedup.MinHashIndex.load(spark, idxDir),
-        Seq((90L, tC), (91L, tD), (92L, tE)).toDF("doc_id", "text"),
-        "doc_id", "text", n = 3, tau = 0.8)
-      .select("new_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(probeHits === Set(90L, 91L, 92L))
-  }
-
   test("dedupIndexStreamSnapshot: same admissions as the flat stream, " +
       "with a mid-stream compaction publishing a new epoch under it") {
     implicit val ctx = spark.sqlContext
@@ -997,11 +951,11 @@ class StreamSpec extends SparkSpec {
     import spark.implicits._
     val idxDir = graft.util.Staging.dir(spark, "dedup_retry_idx")
     val outDir = graft.util.Staging.dir(spark, "dedup_retry_out")
-    graft.dedup.MinHashIndex.save(
+    graft.dedup.SnapshotIndex.init(
       graft.dedup.MinHashIndex.build(
         Seq((0L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
         "doc_id", "text", n = 3),
-      idxDir)
+      spark, idxDir)
     val batch = Seq(
       (10L, "alpha beta gamma delta epsilon"),     // dup of seen → reject
       (11L, "one two three four five")).toDF("doc_id", "text")

@@ -241,7 +241,7 @@ object DedupQueries {
   def dedupEmbeddingCell(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
     EmbeddingDedup.cellPairs(emb, "vec_id", "embedding", tau = 0.4,
-        nProbe = 8, centroids = Some(SimQueries.centroidsFor(dir, emb)))
+        nProbe = 8, centroids = Some(SimQueries.centroidsFor(s, dir)))
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -308,7 +308,7 @@ object DedupQueries {
   def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
     val pairs = EmbeddingDedup.cellPairs(emb, "vec_id", "embedding",
-      tau = 0.4, nProbe = 8, centroids = Some(SimQueries.centroidsFor(dir, emb)))
+      tau = 0.4, nProbe = 8, centroids = Some(SimQueries.centroidsFor(s, dir)))
     val prior = pairs.groupBy(col("id_b").as("vec_id"))
       .agg(count(lit(1)).as("n_prior_dups"))
     emb.select(col("vec_id"))
@@ -1059,9 +1059,9 @@ object DedupQueries {
     */
   val AdmissionFeedBudget = 5000L
 
-  /** The seen-corpus (mod-5 < 4) MinHash snapshot index per corpus
-    * dir — the novelty_stream pristine-index pattern applied to BOTH
-    * lifecycle audit faces (they seed from the identical split):
+  /** The seen-corpus (mod-5 < 4) MinHash snapshot index, built once
+    * ([[graft.util.FitOnce]]) — the novelty_stream pristine-index
+    * pattern applied to BOTH lifecycle audit faces (they seed from the identical split):
     * production's takedown/admission loops operate on a MAINTAINED
     * persisted index, they do not rebuild the corpus index per wave —
     * so the build+save is priced once per corpus and each RUN clones
@@ -1074,31 +1074,30 @@ object DedupQueries {
     * registered face [[qSeenIndexBuild]] (`q_seen_index_build`, no
     * memo), so the bench surface prices both halves of the lifecycle:
     * the one-time corpus index build, and the maintained-index
-    * takedown/admission loops that start from it. The memo key
-    * carries the documents table's mtime, so a corpus regenerated in
-    * place within one JVM rebuilds instead of serving a stale index.
+    * takedown/admission loops that start from it.
     */
-  private val seenIndexPristine =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
+  private val seenIndexFit = new graft.util.FitOnce[String]
 
   private def seenIndexClone(s: SparkSession, dir: String,
       prefix: String): String = {
-    val key = (dir, graft.util.Tables.pathMtime(s, s"$dir/documents.parquet"))
-    val pristine = seenIndexPristine.computeIfAbsent(key, _ => {
-      val d = graft.util.Staging.dir(s, "seen_index_pristine")
-      graft.dedup.SnapshotIndex.init(
-        graft.dedup.MinHashIndex.build(seenSplit(s, dir), "doc_id", "text",
-          n = 3), s, d)
-      d
-    })
+    val pristine = seenIndexFit(s, dir, "documents")(
+      seenIndexBuild(s, dir, "seen_index_pristine"))
     val idxDir = graft.util.Staging.dir(s, prefix)
     graft.util.Staging.cloneTree(s, pristine, idxDir)
     idxDir
   }
 
-  /** The mod-5 seen split both lifecycle audit faces index. */
-  private def seenSplit(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).documents.filter(pmod(col("doc_id"), lit(5)) < 4)
+  /** The MinHash snapshot index of the mod-5 seen split both lifecycle
+    * audit faces index, published as epoch 0 into a fresh staging dir.
+    */
+  private def seenIndexBuild(s: SparkSession, dir: String,
+      prefix: String): String = {
+    val d = graft.util.Staging.dir(s, prefix)
+    graft.dedup.SnapshotIndex.init(graft.dedup.MinHashIndex.build(
+      Tables(s, dir).documents.filter(pmod(col("doc_id"), lit(5)) < 4),
+      "doc_id", "text", n = 3), s, d)
+    d
+  }
 
   /** The seen-corpus index BUILD priced as its own face (r13 verdict
     * item 2): builds the mod-5 seen split's MinHash snapshot index
@@ -1117,10 +1116,7 @@ object DedupQueries {
     * trigram lands exactly once in each of the 16 bands.
     */
   def qSeenIndexBuild(s: SparkSession, dir: String): DataFrame = {
-    val d = graft.util.Staging.dir(s, "seen_index_build")
-    graft.dedup.SnapshotIndex.init(
-      graft.dedup.MinHashIndex.build(seenSplit(s, dir), "doc_id", "text",
-        n = 3), s, d)
+    val d = seenIndexBuild(s, dir, "seen_index_build")
     graft.dedup.SnapshotIndex.load(s, d).index.bands
       .groupBy(col("band_id").cast("long").as("band_id"))
       .agg(count(lit(1)).as("n_rows"),

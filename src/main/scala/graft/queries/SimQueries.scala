@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.sim.{Knn, Pq}
-import graft.util.Tables
+import graft.util.{FitOnce, Tables}
 
 /** Similarity search (SURVEY.md §2.4) + multimodal plumbing (§2.6).
   * Queries = the first 10 vectors by id; corpus = all embeddings.
@@ -19,38 +19,29 @@ object SimQueries {
     (e.filter(col("vec_id") < NQueries), e)
   }
 
-  /** IVF centroids memoized per corpus directory — the IvfIndex "fit
-    * once, search many" contract applied to the query layer: the Lloyd
-    * fit is deterministic (fixed init, fixed iteration count), so every
-    * query over the same immutable corpus dir gets the IDENTICAL
-    * KB-scale centroid table without re-running the `iters` corpus
-    * scans. Driver-held floats only; no cache-manager entries.
-    */
   private val IvfC = 16
   private val IvfIters = 3
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Float])]]()
-  private val pqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sim.Pq.Model]()
+  private val centroidFit = new FitOnce[Array[(Int, Array[Float])]]
+  private val pqFit = new FitOnce[Pq.Model]
+  private val pqSearchFit = new FitOnce[Pq.Model]
 
-  private[queries] def centroidsFor(dir: String, corpus: DataFrame): Array[(Int, Array[Float])] =
-    centroidCache.computeIfAbsent(dir,
-      _ => Knn.fitCentroids(corpus, "vec_id", "embedding", IvfC, IvfIters))
-
-  private def pqModelFor(dir: String, corpus: DataFrame): Pq.Model =
-    pqModelCache.computeIfAbsent(dir,
-      _ => Pq.fit(corpus, "vec_id", "embedding", m = 8, ks = 16, iters = 2))
+  /** IVF centroids of the corpus, fitted once ([[graft.util.FitOnce]])
+    * and shared by every IVF-blocked face.
+    */
+  private[queries] def centroidsFor(s: SparkSession,
+      dir: String): Array[(Int, Array[Float])] =
+    centroidFit(s, dir, "embeddings")(Knn.fitCentroids(
+      Tables(s, dir).embeddings, "vec_id", "embedding", IvfC, IvfIters))
 
   /** Search-grade geometry: 16 subspaces × 64 codes (96-bit codes,
     * 12 bytes — still a 21× cut vs 64 float32). emb_pq's 8×16 is the
     * reconstruction-accounting oracle geometry and ranks too coarsely
     * for a usable shortlist (measured recall@10 0.75 at sf0.1 even
     * with a 10·K re-rank); 16×64 measures 0.97/1.0 at sf0.1/sf0.01.
-    * Same per-dir fit memoization — distinct cache key, distinct model.
     */
-  private def pqSearchModelFor(dir: String, corpus: DataFrame): Pq.Model =
-    pqModelCache.computeIfAbsent(dir + "#search",
-      _ => Pq.fit(corpus, "vec_id", "embedding", m = 16, ks = 64, iters = 2))
+  private def pqSearchModelFor(s: SparkSession, dir: String): Pq.Model =
+    pqSearchFit(s, dir, "embeddings")(Pq.fit(Tables(s, dir).embeddings,
+      "vec_id", "embedding", m = 16, ks = 64, iters = 2))
 
   def knnBrute(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
@@ -328,7 +319,7 @@ object SimQueries {
   /** Approximate: rows-only oracle; recall vs brute is spec-asserted. */
   def knnIvf(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    Knn.ivfWith(centroidsFor(dir, c), q, c, "vec_id", "embedding", K)
+    Knn.ivfWith(centroidsFor(s, dir), q, c, "vec_id", "embedding", K)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -343,7 +334,7 @@ object SimQueries {
     */
   def knnPq(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(dir, c),
+    Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(s, dir),
       rerankFactor = 10)
       .orderBy(col("query_id"), col("rank"))
   }
@@ -361,8 +352,8 @@ object SimQueries {
     */
   def knnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    val model = pqSearchModelFor(dir, c)
-    val centroids = centroidsFor(dir, c)
+    val model = pqSearchModelFor(s, dir)
+    val centroids = centroidsFor(s, dir)
     Pq.searchEncodedCells(model, centroids,
         Pq.cellCodes(c, "vec_id", "embedding", model, centroids),
         q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10)
@@ -419,7 +410,7 @@ object SimQueries {
   def knnGraphCell(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir).embeddings
     Knn.graphCells(e, "vec_id", "embedding", GraphK,
-        centroidsFor(dir, e), nProbe = 8)
+        centroidsFor(s, dir), nProbe = 8)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -452,16 +443,16 @@ object SimQueries {
       Knn.lsh(q, c, "vec_id", "embedding", K, dim = 64)
         .select(lit("lsh").as("method"), col("query_id"), col("neighbor_id"))
         .unionByName(
-          Knn.ivfWith(centroidsFor(dir, c), q, c, "vec_id", "embedding", K)
+          Knn.ivfWith(centroidsFor(s, dir), q, c, "vec_id", "embedding", K)
             .select(lit("ivf").as("method"), col("query_id"), col("neighbor_id")))
         .unionByName(
-          Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(dir, c),
+          Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(s, dir),
               rerankFactor = 10)
             .select(lit("pq").as("method"), col("query_id"), col("neighbor_id")))
         .unionByName(
-          Pq.searchEncodedCells(pqSearchModelFor(dir, c), centroidsFor(dir, c),
-              Pq.cellCodes(c, "vec_id", "embedding", pqSearchModelFor(dir, c),
-                centroidsFor(dir, c)),
+          Pq.searchEncodedCells(pqSearchModelFor(s, dir), centroidsFor(s, dir),
+              Pq.cellCodes(c, "vec_id", "embedding", pqSearchModelFor(s, dir),
+                centroidsFor(s, dir)),
               q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10)
             .select(lit("ivfpq").as("method"), col("query_id"), col("neighbor_id")))
     methods
@@ -483,11 +474,8 @@ object SimQueries {
     */
   def embPq(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    // same per-dir fit memoization as the IVF centroids: the Lloyd fit
-    // is deterministic, its output is KB-scale driver state, and the
-    // corpus dirs are immutable — "train once, encode many"
-    val model = pqModelCache.computeIfAbsent(dir,
-      _ => Pq.fit(emb, "vec_id", "embedding", m = 8, ks = 16, iters = 2))
+    val model = pqFit(s, dir, "embeddings")(
+      Pq.fit(emb, "vec_id", "embedding", m = 8, ks = 16, iters = 2))
     Pq.encode(emb, "vec_id", "embedding", model)
       .groupBy(col("sub"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -579,11 +567,26 @@ object SimQueries {
       |GROUP BY label, dim
       |ORDER BY label, dim""".stripMargin
 
-  /** PCA model memoized per corpus dir (deterministic fit — the
-    * centroids/codebooks pattern).
+  private val pcaFit = new FitOnce[graft.sim.Pca.Model]
+
+  /** The corpus's top-4 PCA basis, shared by emb_pca and emb_whiten. */
+  private def pcaModel(s: SparkSession, dir: String): graft.sim.Pca.Model =
+    pcaFit(s, dir, "embeddings")(graft.sim.Pca.fit(
+      Tables(s, dir).embeddings, "embedding", dim = 64, k = 4))
+
+  /** The corpus mapped through `map` under [[pcaModel]], one 1e-6
+    * quantized `<prefix>j_x6` column per component.
     */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sim.Pca.Model]()
+  private def pcaExport(s: SparkSession, dir: String, prefix: String)(
+      map: (Column, graft.sim.Pca.Model) => Column): DataFrame = {
+    val pcs = (0 until 4).map(j =>
+      floor(element_at(col("y"), j + 1) * 1e6 + lit(0.5)).cast("long")
+        .as(s"$prefix${j + 1}_x6"))
+    Tables(s, dir).embeddings
+      .select(col("vec_id"), map(col("embedding"), pcaModel(s, dir)).as("y"))
+      .select(col("vec_id") +: pcs: _*)
+      .orderBy(col("vec_id"))
+  }
 
   /** PCA projection of the embedding corpus onto its top 4 principal
     * components ([[graft.sim.Pca]]): one Gramian pass + driver Jacobi,
@@ -594,18 +597,8 @@ object SimQueries {
     * orthonormality, eigenvalue order, variance capture and a planted
     * dominant direction.
     */
-  def embPca(s: SparkSession, dir: String): DataFrame = {
-    val corpus = Tables(s, dir).embeddings
-    val model = pcaCache.computeIfAbsent(dir,
-      _ => graft.sim.Pca.fit(corpus, "embedding", dim = 64, k = 4))
-    val proj = graft.sim.Pca.project(col("embedding"), model)
-    val pcs = (0 until 4).map(j =>
-      floor(element_at(col("y"), j + 1) * 1e6 + lit(0.5)).cast("long")
-        .as(s"pc${j + 1}_x6"))
-    corpus.select(col("vec_id"), proj.as("y"))
-      .select(col("vec_id") +: pcs: _*)
-      .orderBy(col("vec_id"))
-  }
+  def embPca(s: SparkSession, dir: String): DataFrame =
+    pcaExport(s, dir, "pc")(graft.sim.Pca.project(_, _))
 
   /** PCA-whitened embedding export (Pca.whiten — FAISS PCAMatrix at
     * eigen_power −0.5): the same top-4 basis as emb_pca with each
@@ -617,18 +610,8 @@ object SimQueries {
     * twin); SimSpec pins unit variance + zero cross-covariance of the
     * whitened corpus and the per-row ∕√λ parity with emb_pca.
     */
-  def embWhiten(s: SparkSession, dir: String): DataFrame = {
-    val corpus = Tables(s, dir).embeddings
-    val model = pcaCache.computeIfAbsent(dir,
-      _ => graft.sim.Pca.fit(corpus, "embedding", dim = 64, k = 4))
-    val proj = graft.sim.Pca.whiten(col("embedding"), model)
-    val pcs = (0 until 4).map(j =>
-      floor(element_at(col("y"), j + 1) * 1e6 + lit(0.5)).cast("long")
-        .as(s"wc${j + 1}_x6"))
-    corpus.select(col("vec_id"), proj.as("y"))
-      .select(col("vec_id") +: pcs: _*)
-      .orderBy(col("vec_id"))
-  }
+  def embWhiten(s: SparkSession, dir: String): DataFrame =
+    pcaExport(s, dir, "wc")(graft.sim.Pca.whiten(_, _))
 
   /** Cluster-balanced diversity sampling (graft.sim.DiverseSample,
     * Sorscher et al. arXiv:2206.14486): keep the 16 vectors per IVF
@@ -643,7 +626,7 @@ object SimQueries {
   def sampleDiverse(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir).embeddings
     graft.sim.DiverseSample.farthestPerCell(
-        e, "vec_id", "embedding", centroidsFor(dir, e), perCell = 16)
+        e, "vec_id", "embedding", centroidsFor(s, dir), perCell = 16)
       .orderBy(col("cell"), col("rank"))
   }
 
@@ -676,7 +659,7 @@ object SimQueries {
     val e = Tables(s, dir).embeddings
     voteConfusion(
       Knn.graphCells(e, "vec_id", "embedding", GraphK,
-        centroidsFor(dir, e), nProbe = 8),
+        centroidsFor(s, dir), nProbe = 8),
       e.select(col("vec_id"), col("label")))
   }
 

@@ -557,21 +557,16 @@ object TextQueries {
       |FROM documents d LEFT JOIN h USING (doc_id)
       |ORDER BY doc_id""".stripMargin
 
-  /** Corpus-trained char-bigram LM model, memoized per corpus dir
-    * (deterministic fit over an immutable dir — the centroids/codebooks
-    * pattern).
-    */
-  private val lmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.text.BigramLm.Model]()
+  private val lmFit = new graft.util.FitOnce[graft.text.BigramLm.Model]
 
-  /** The corpus-dir-memoized bigram LM, shared with the curation-side
-    * consumers (mix_perplexity_band prunes on the same score
-    * text_lmscore reports — one model, one definition).
+  /** The corpus-trained bigram LM ([[graft.util.FitOnce]]), shared with
+    * the curation-side consumers (mix_perplexity_band prunes on the
+    * same score text_lmscore reports — one model, one definition).
     */
   private[queries] def lmModel(s: SparkSession,
       dir: String): graft.text.BigramLm.Model =
-    lmCache.computeIfAbsent(dir,
-      _ => graft.text.BigramLm.fit(Tables(s, dir).documents, "text"))
+    lmFit(s, dir, "documents")(
+      graft.text.BigramLm.fit(Tables(s, dir).documents, "text"))
 
   /** Statistical-LM quality score (the CCNet perplexity-filter shape):
     * mean char-bigram log2-probability of each doc under the model
@@ -618,11 +613,7 @@ object TextQueries {
       |FROM documents d LEFT JOIN h USING (doc_id)
       |ORDER BY doc_id""".stripMargin
 
-  /** Corpus-trained BPE model, memoized per corpus dir (the
-    * centroids/codebooks/bigram-LM pattern).
-    */
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.text.Bpe.Model]()
+  private val bpeFit = new graft.util.FitOnce[graft.text.Bpe.Model]
 
   /** Token accounting under a REAL trained tokenizer: fit BPE on this
     * corpus (one distributed word-count pass + driver merge loop,
@@ -646,8 +637,8 @@ object TextQueries {
 
   def textBpe(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents
-    val model = bpeCache.computeIfAbsent(s"$dir#$BpeQueryMerges",
-      _ => graft.text.Bpe.fit(docs, "text", numMerges = BpeQueryMerges))
+    val model = bpeFit(s, dir, "documents")(
+      graft.text.Bpe.fit(docs, "text", numMerges = BpeQueryMerges))
     docs.select(col("doc_id"),
         TextOps.bpeTokenCount(col("text")).as("n_pretok"),
         graft.text.Bpe.tokenCount(col("text"), model).as("n_bpe_tok"))

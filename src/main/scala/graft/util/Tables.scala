@@ -68,36 +68,24 @@ object Tables {
     *  - entries of STOPPED sessions are evicted on every lookup, so a
     *    test harness that builds many sessions cannot accumulate their
     *    FileIndex/plan state for the JVM lifetime;
-    *  - each entry records the table path's modification time at
-    *    resolve; a lookup re-stats the path (one getFileStatus — far
-    *    cheaper than the re-list + footer read it saves) and
-    *    re-resolves when the data was regenerated in place.
+    *  - each entry records the table path's [[FitOnce.fingerprint]]
+    *    (file count, total bytes, newest mtime — one recursive listing,
+    *    far cheaper than the re-list + footer read it saves) and
+    *    re-resolves when the data was regenerated in place, including
+    *    a rewrite inside a partition subdirectory.
+    *
+    * Kept apart from [[FitOnce]]: its values are session-bound plans.
     */
-  private final case class Resolved(df: DataFrame, mtime: Long)
-
   private val resolvedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Resolved]()
-
-  /** Modification time of `path` (-1 when absent) — the cheap staleness
-    * fingerprint the resolved-scan memo and the per-corpus pristine-index
-    * memos key on, so data regenerated in place within one JVM is never
-    * served a stale plan or index.
-    */
-  private[graft] def pathMtime(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => -1L }
-  }
+    (SparkSession, String, String), (FitOnce.Fingerprint, DataFrame)]()
 
   private def resolved(spark: SparkSession, dir: String,
       name: String): DataFrame = {
     resolvedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val path = s"$dir/$name.parquet"
-    val m = pathMtime(spark, path)
+    val fp = FitOnce.fingerprint(spark, path)
     resolvedCache.compute((spark, dir, name), (_, old) =>
-      if (old != null && old.mtime == m) old
-      else Resolved(spark.read.parquet(path), m)).df
+      if (old != null && old._1 == fp) old else (fp, spark.read.parquet(path)))._2
   }
 
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -1623,4 +1623,18 @@ class SimSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e6 >= 350.0,
       "the append's stability check must wait out the in-flight lease")
   }
+
+  test("emb_pca refits after embeddings.parquet is regenerated in place: " +
+      "equals the same face over a dir that only held the new rows") {
+    val e = graft.util.Tables(spark, sf).embeddings
+    val dir = graft.util.Staging.dir(spark, "pca_regen")
+    val fresh = graft.util.Staging.dir(spark, "pca_fresh")
+    e.filter(col("vec_id") % 2 === 0).write.parquet(s"$dir/embeddings.parquet")
+    SimQueries.embPca(spark, dir).collect()
+    val regen = e.filter(col("vec_id") % 2 === 1)
+    regen.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    regen.write.parquet(s"$fresh/embeddings.parquet")
+    assert(SimQueries.embPca(spark, dir).collect().toSeq ===
+      SimQueries.embPca(spark, fresh).collect().toSeq)
+  }
 }

@@ -303,4 +303,57 @@ class SourceSpec extends SparkSpec {
       (docs.last._1 % 23 == 7),
       "the JSON-hostile source must round-trip as a clean bucket")
   }
+
+  test("Tables sees a file appended inside a partition subdirectory, " +
+      "though the table directory's own mtime does not move") {
+    import org.apache.hadoop.fs.Path
+    val dir = graft.util.Staging.dir(spark, "resolved_partition")
+    val t = new Path(s"$dir/t.parquet")
+    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.range(0, 10).write.parquet(s"$t/k=1")
+    assert(graft.util.Tables(spark, dir).table("t").count() === 10)
+    val topMtime = fs.getFileStatus(t).getModificationTime
+    spark.range(10, 15).coalesce(1).write.parquet(s"$dir/extra")
+    fs.listStatus(new Path(s"$dir/extra")).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => assert(fs.rename(f, new Path(s"$t/k=1/extra-${f.getName}"))))
+    assert(fs.getFileStatus(t).getModificationTime === topMtime)
+    assert(graft.util.Tables(spark, dir).table("t").count() === 15)
+  }
+
+  test("FitOnce: one fit while the files are unchanged; a same-size " +
+      "rewrite with a new mtime refits; a single-file table path works") {
+    import org.apache.hadoop.fs.Path
+    import graft.util.FitOnce
+    val dir = graft.util.Staging.dir(spark, "fit_once")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one parquet file named s.parquet: the shipped test-data layout
+    spark.range(0, 10).coalesce(1).write.parquet(s"$dir/tmp")
+    val single = new Path(s"$dir/s.parquet")
+    assert(fs.rename(fs.listStatus(new Path(s"$dir/tmp")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get, single))
+    val memo = new FitOnce[String]
+    val fits = new java.util.concurrent.atomic.AtomicInteger()
+    def run(): String = memo(spark, dir, "s")(s"fit${fits.incrementAndGet()}")
+    assert(run() === "fit1")
+    assert(run() === "fit1")
+    assert(fits.get === 1)
+    // rewrite the same bytes, then move the mtime past any clock tick
+    val before = FitOnce.fingerprint(spark, single.toString)
+    val bytes = {
+      val in = fs.open(single)
+      try in.readAllBytes() finally in.close()
+    }
+    val out = fs.create(single, true)
+    try out.write(bytes) finally out.close()
+    fs.setTimes(single, before.mtime + 10000L, -1L)
+    val after = FitOnce.fingerprint(spark, single.toString)
+    assert((after.files, after.bytes) === ((before.files, before.bytes)))
+    assert(after.mtime === before.mtime + 10000L)
+    assert(run() === "fit2")
+    assert(run() === "fit2")
+    assert(fits.get === 2)
+    assert(FitOnce.fingerprint(spark, s"$dir/absent.parquet") ===
+      FitOnce.Fingerprint(-1L, -1L, -1L))
+  }
 }

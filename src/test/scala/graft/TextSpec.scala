@@ -689,4 +689,18 @@ class TextSpec extends SparkSpec {
       "longer grams cannot duplicate more than unigrams on natural text")
     assert(real.values.forall(p => p >= 0 && p <= 1000000L))
   }
+
+  test("text_lmscore refits after documents.parquet is regenerated in " +
+      "place: equals the same face over a dir that only held the new rows") {
+    val d = graft.util.Tables(spark, sf).documents
+    val dir = graft.util.Staging.dir(spark, "lm_regen")
+    val fresh = graft.util.Staging.dir(spark, "lm_fresh")
+    d.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/documents.parquet")
+    TextQueries.textLmscore(spark, dir).collect()
+    val regen = d.filter(col("doc_id") % 2 === 1)
+    regen.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    regen.write.parquet(s"$fresh/documents.parquet")
+    assert(TextQueries.textLmscore(spark, dir).collect().toSeq ===
+      TextQueries.textLmscore(spark, fresh).collect().toSeq)
+  }
 }

@@ -33,24 +33,21 @@ object MinHashIndex extends graft.util.Epochs.Layout {
   final case class Index(bands: DataFrame, shingles: DataFrame)
 
   /** Index a corpus: shingle → sign → band, both tables returned.
-    * `checkpoint = true` (the in-session default — [[save]]/[[load]]
-    * is the durable form) pins the SHINGLE table via lazy
-    * localCheckpoint and derives the bands from the pinned copy:
-    * a probe's plan otherwise re-runs the whole tokenize→shingle
-    * derivation of the OLD corpus twice per run (once under the band
-    * join, once under the verify join) — the opposite of "index
-    * once". The pin is corpus-shingle-sized, which is exactly what an
+    * The SHINGLE table is pinned via lazy localCheckpoint ([[save]]/
+    * [[load]] is the durable form) and the bands derive from the
+    * pinned copy: a probe's plan otherwise re-runs the whole
+    * tokenize→shingle derivation of the OLD corpus twice per run (once
+    * under the band join, once under the verify join) — the opposite
+    * of "index once". The pin is corpus-shingle-sized, which is exactly what an
     * index is; blocks are ContextCleaner-reclaimed when the handle is
     * dropped (the MinHashLSH share pattern).
     */
-  def build(docs: DataFrame, idCol: String, textCol: String, n: Int,
-      checkpoint: Boolean = true): Index = {
+  def build(docs: DataFrame, idCol: String, textCol: String, n: Int): Index = {
     // corpus-scale by contract ("index the existing corpus once") —
     // floor the scan parallelism before the shingle derivation
     // (MinHashLSH.shingled's fan-out placement note)
-    val sh0 = MinHashLSH.shingled(graft.util.Fanout.ensure(docs),
-      idCol, textCol, n)
-    val sh = if (checkpoint) sh0.localCheckpoint(false) else sh0
+    val sh = MinHashLSH.shingled(graft.util.Fanout.ensure(docs),
+      idCol, textCol, n).localCheckpoint(false)
     Index(MinHashLSH.bands(MinHashLSH.signatures(sh)), sh)
   }
 

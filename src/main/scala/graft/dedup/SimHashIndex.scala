@@ -32,26 +32,24 @@ object SimHashIndex extends graft.util.Epochs.Layout {
       posexplode(blockArr).as(Seq("block_id", "block_val")))
   }
 
-  /** Index a corpus's text fingerprints. `checkpoint = true` pins the
-    * block table so probes don't re-tokenize the old corpus (the
-    * MinHashIndex.build rationale).
+  /** Index a corpus's text fingerprints. The block table is pinned
+    * (lazy localCheckpoint) so probes don't re-tokenize the old corpus
+    * (the MinHashIndex.build rationale).
     */
-  def build(docs: DataFrame, idCol: String, textCol: String,
-      checkpoint: Boolean = true): Index = {
+  def build(docs: DataFrame, idCol: String, textCol: String): Index = {
     // corpus-scale by contract — floor the scan parallelism before
     // the tokenize+simhash derivation (SimHash.fingerprints' note)
     val bl = blocksOf(SimHash.fingerprints(
       graft.util.Fanout.ensure(docs), idCol, textCol))
-    Index(if (checkpoint) bl.localCheckpoint(false) else bl)
+    Index(bl.localCheckpoint(false))
   }
 
   /** Index ANY (doc_id, sim) 64-bit code table — pHashes, pre-computed
-    * simhashes, sign-code words.
+    * simhashes, sign-code words — pinned as [[build]] pins.
     */
-  def buildCodes(codes: DataFrame, checkpoint: Boolean = true): Index = {
-    val bl = blocksOf(codes.select(col("doc_id"), col("sim")))
-    Index(if (checkpoint) bl.localCheckpoint(false) else bl)
-  }
+  def buildCodes(codes: DataFrame): Index =
+    Index(blocksOf(codes.select(col("doc_id"), col("sim")))
+      .localCheckpoint(false))
 
   /** Persist partitioned by block_id (probe joins per block). The
     * write RANGE-partitions on (block_id, block_val) first — each

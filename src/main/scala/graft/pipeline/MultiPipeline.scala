@@ -41,11 +41,12 @@ final class MultiPipeline private (
   /** Write each branch under `outputHome/<name>` — the reference's
     * output layout (MultiStreamJobRunner.java:66-69).
     *
-    * Branch jobs are SUBMITTED CONCURRENTLY (bounded thread pool):
-    * Spark's scheduler interleaves independent jobs, so a branch
-    * waiting on shuffle fetch or output commit doesn't serialize the
-    * others — the reference pays one full sequential MR job per
-    * pipeline here. Set parallelism = 1 for strictly sequential writes.
+    * Branch jobs are SUBMITTED CONCURRENTLY (`graft.util.Par.all`, at
+    * most four at a time): Spark's scheduler interleaves independent
+    * jobs, so a branch waiting on shuffle fetch or output commit
+    * doesn't serialize the others — the reference pays one full
+    * sequential MR job per pipeline here. Every branch write has
+    * finished when `write` returns or throws.
     *
     * `partitionByKey = true` is the `-outputformat PartitionByKeyField`
     * analog (reference PartitionByKeyField.java:10: route each record
@@ -58,26 +59,10 @@ final class MultiPipeline private (
     * each task, holding ONE writer at a time.
     */
   def write(outputHome: String, format: String = "parquet",
-      parallelism: Int = 4, partitionByKey: Boolean = false): Unit = {
-    val planned = run().toSeq
-    def writeOne(name: String, df: DataFrame): Unit =
+      partitionByKey: Boolean = false): Unit =
+    graft.util.Par.all(run().toSeq.map { case (name, df) => () =>
       MultiPipeline.writeBranch(df, s"$outputHome/$name", format, partitionByKey)
-    if (parallelism <= 1 || planned.sizeIs <= 1) {
-      planned.foreach { case (name, df) => writeOne(name, df) }
-    } else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, planned.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(
-        Future.traverse(planned) { case (name, df) =>
-          Future { writeOne(name, df) }
-        }, Duration.Inf)
-      finally pool.shutdown()
-      ()
-    }
-  }
+    })
 }
 
 object MultiPipeline {

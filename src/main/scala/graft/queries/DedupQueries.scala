@@ -158,33 +158,18 @@ object DedupQueries {
 
   val dedupNgramJaccardSql: String = jaccardPairsSql(0.7)
 
-  /** Near-dup pairs → duplicate clusters via min-label propagation.
-    * The oracle computes the same components with a recursive CTE over
-    * the exact-Jaccard pair graph (sound because the LSH pair set is
-    * verified equal to the exact pair set — see dedupMinhashLsh).
+  /** Near-dup pairs → duplicate clusters via ConnectedComponents
+    * (driver union-find at this graph size, star alternation past
+    * `DriverUnionFindMaxEdges`). The oracle computes the same
+    * components with a recursive CTE over the exact-Jaccard pair graph
+    * (sound because the LSH pair set is verified equal to the exact
+    * pair set — see dedupMinhashLsh). Also registered as
+    * dedup_clusters_star, so face lists that name it still resolve.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = MinHashLSH.nearDuplicates(Tables(s, dir).documents,
       "doc_id", "text", n = 3, tau = 0.7)
     ConnectedComponents.clusters(pairs.select(col("id_a"), col("id_b")))
-      .orderBy(col("cluster_id"))
-  }
-
-  /** dedup_clusters through the O(log²n)-round large-star/small-star
-    * alternation (ConnectedComponents.clustersStar) instead of
-    * min-label propagation — the knn_graph/knn_graph_cell twin pattern
-    * applied to clustering: same pair graph, same output contract,
-    * byte-identical to the same recursive-CTE oracle, but rounds scale
-    * with log² n instead of graph DIAMETER (the difference between
-    * near-clique dup clusters, where propagation wins on constant
-    * factors, and the thousand-hop quote/containment chains a 100 TB
-    * crawl also contains, where propagation is a thousand sequential
-    * jobs and star alternation is ~a dozen).
-    */
-  def dedupClustersStar(s: SparkSession, dir: String): DataFrame = {
-    val pairs = MinHashLSH.nearDuplicates(Tables(s, dir).documents,
-      "doc_id", "text", n = 3, tau = 0.7)
-    ConnectedComponents.clustersStar(pairs.select(col("id_a"), col("id_b")))
       .orderBy(col("cluster_id"))
   }
 
@@ -850,8 +835,8 @@ object DedupQueries {
     *
     * Scale (100 TB): the takedown list is KB-scale → the seed-label
     * set rides a BROADCAST semi-join against the component labels; the
-    * label table itself is the linear CC output (near-clique
-    * components, a handful of min-propagation rounds), and the final
+    * label table itself is the linear CC output (a driver union-find,
+    * or log² n star rounds past its edge ceiling), and the final
     * membership join is one doc_id equi-join. Nothing here rescans
     * text: the pair graph is the dedup pipeline's existing artifact —
     * in production you'd probe the saved MinHash index
@@ -1253,7 +1238,7 @@ object DedupQueries {
     "dedup_code_pairs" -> (dedupCodePairs _),
     "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
     "dedup_clusters" -> (dedupClusters _),
-    "dedup_clusters_star" -> (dedupClustersStar _),
+    "dedup_clusters_star" -> (dedupClusters _),
     "dedup_embedding" -> (dedupEmbedding _),
     "dedup_embedding_cell" -> (dedupEmbeddingCell _),
     "dedup_semantic" -> (dedupSemantic _),

@@ -153,11 +153,11 @@ object Knn {
     * overhead) to the driver — 16M doubles ≈ 128 MB, comfortably
     * inside a default driver heap while still admitting e.g. 16k cells
     * × 1k dims. Past it the collect silently becomes the job's
-    * failure point, so the fit REFUSES loudly instead (spec-pinned):
-    * at that scale run the centroid update as a distributed table
-    * (keep (cell, dim, sum) rows partitioned; join instead of
-    * collect) — the assignment side of this module already scales,
-    * it is only the update hop that is driver-mediated here.
+    * failure point, so the fit REFUSES loudly instead (spec-pinned).
+    * Every centroid consumer hands the fitted centroids to the
+    * [[graft.functions.NearestCells]] kernel as a driver-held array, so
+    * a geometry past this ceiling could not be assigned either; fit
+    * fewer cells or reduce the dimension first (graft.sim.Pca).
     */
   val MaxDriverFitCells: Long = 16L * 1024 * 1024
 
@@ -201,84 +201,6 @@ object Knn {
     }
     centroids
   }
-
-  /** Lloyd iterations with the centroid state kept DISTRIBUTED — the
-    * documented path PAST [[MaxDriverFitCells]]: no collect anywhere,
-    * so C×dim is bounded by executor memory for ONE broadcast copy of
-    * the centroid table (a 16k×1k geometry is 64 MB — broadcastable),
-    * never by driver-heap boxing. Assignment is a broadcast join +
-    * struct-min argmin (same argmax-cosine / tie→smaller-cell contract
-    * as the NearestCells kernel, parity spec-pinned); the update is a
-    * partial-aggregatable per-(cell,dim) mean reassembled into arrays.
-    * Each round ends in an EAGER localCheckpoint of the C-row result —
-    * the per-iteration lineage truncation pattern from
-    * ConnectedComponents, so `iters` cannot stack analysis cost.
-    *
-    * Trade vs [[fitCentroids]]: the join materializes n×C scored rows
-    * per round through codegen instead of the fused O(C·dim)-per-row
-    * loop — same flop count, higher constant. Below the ceiling the
-    * driver-mediated fit is faster; this is the shape that keeps
-    * working above it. Returns (cell, cvec) rows.
-    *
-    * Input contract (where the two fits could diverge): `idCol` must be
-    * unique (the assignment groupBy keys on it — duplicate ids with
-    * identical vectors would collapse to one mean contribution) and
-    * vector elements non-null (the update's per-dim avg divides by the
-    * non-null count; fitCentroids divides by the cell's row count).
-    * Both hold for any sane embedding corpus and match the
-    * requirements the driver-mediated fit already has in practice.
-    */
-  def fitCentroidsDistributed(corpus: DataFrame, idCol: String,
-      vecCol: String, c: Int, iters: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    // deterministic init mirroring fitCentroids: first C vectors by id,
-    // cell = rank in id order (C rows — the single-partition window is
-    // over the centroid table, never the corpus)
-    var cents = corpus.orderBy(col(idCol)).limit(c)
-      .select(col(idCol).as("init_id"), col(vecCol).as("cvec"))
-      .withColumn("cell",
-        (row_number().over(Window.orderBy(col("init_id"))) - 1).cast("int"))
-      .select(col("cell"), col("cvec"))
-      .localCheckpoint(true)
-    var it = 0
-    while (it < iters) {
-      val assigned = assignCellsJoin(
-        corpus.select(col(idCol).as("fit_id"), col(vecCol).as("v")),
-        "fit_id", "v", cents)
-      cents = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cell"), col("dim"))
-        .agg(avg(col("x").cast("double")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cell"),
-          expr("transform(dm, s -> cast(s.m as float))").as("cvec"))
-        .localCheckpoint(true)
-      it += 1
-    }
-    cents
-  }
-
-  /** Broadcast-join cell assignment against a centroid TABLE — the
-    * past-the-ceiling twin of the NearestCells(nProbe=1) kernel: argmax
-    * cosine, ties → smaller cell id (min of (−score, cell) structs).
-    * Degenerate scores (zero-norm vector or centroid) coalesce to −2 —
-    * strictly below any real cosine, so they never outrank one; an
-    * all-degenerate row falls to the smallest cell id, matching the
-    * NearestCells degenerate contract.
-    */
-  private[sim] def assignCellsJoin(df: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame): DataFrame =
-    df.withColumn("vn_", Vectors.normD(col(vecCol)))
-      .join(broadcast(cents.select(col("cell"),
-        col("cvec"), Vectors.normD(col("cvec")).as("cn_"))))
-      .withColumn("score_", coalesce(
-        Vectors.cosineWithNorms(Vectors.dotD(col(vecCol), col("cvec")),
-          col("vn_"), col("cn_")), lit(-2.0)))
-      .groupBy(col(idCol), col(vecCol))
-      .agg(min(struct((col("score_") * lit(-1.0)).as("neg"),
-        col("cell").as("cell"))).as("best"))
-      .select(col(idCol), col(vecCol), col("best.cell").as("cell"))
 
   /** Attach the `nProbe` nearest cell ids (by cosine to each centroid)
     * to every row — pure map via the native

@@ -703,21 +703,12 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val shared = batch.persist()
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(4, math.max(1, branches.size)))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try {
-          Await.result(
-            Future.traverse(branches) { case (name, f) =>
-              Future {
-                f(shared).write.mode("overwrite")
-                  .parquet(s"$outputHome/$name/batch=$batchId")
-              }
-            }, Duration.Inf)
-          ()
-        } finally { pool.shutdown(); shared.unpersist(); () }
+        try graft.util.Par.all(branches.map { case (name, f) => () =>
+            f(shared).write.mode("overwrite")
+              .parquet(s"$outputHome/$name/batch=$batchId")
+          })
+        finally shared.unpersist()
+        ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()

@@ -16,15 +16,29 @@ package graft.util
   */
 object Par {
 
-  /** [[both]] for N independent thunks: all run concurrently, all are
-    * awaited, the first failure rethrows after every thunk settles.
-    * For SMALL N (a handful of independent maintenance/fixture jobs) —
-    * the caller owns sizing; this is not a work pool.
+  /** Most thunks [[all]] runs at once. A wider fan-out (six
+    * `-multiple` branches) queues the rest in order instead of
+    * submitting every job together.
+    */
+  private val MaxInFlight = 4
+
+  /** [[both]] for N independent thunks: up to [[MaxInFlight]] run at a
+    * time, in order of `thunks`; all are awaited, and the first failure
+    * in that order rethrows after every thunk settles, so no write is
+    * still running when the call returns or throws. For SMALL N (a
+    * handful of independent maintenance, fixture or branch jobs): each
+    * call starts its own threads.
     */
   def all[A](thunks: Seq[() => A]): Seq[A] = {
-    val tasks = thunks.map(t => new java.util.concurrent.FutureTask[A](() => t()))
-    val threads = tasks.map { ft =>
-      val th = new Thread(ft, "graft-par-all"); th.setDaemon(true); th.start(); th
+    val tasks = thunks.toIndexedSeq
+      .map(t => new java.util.concurrent.FutureTask[A](() => t()))
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threads = Seq.fill(math.min(MaxInFlight, tasks.size)) {
+      val th = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < tasks.size) { tasks(i).run(); i = next.getAndIncrement() }
+      }, "graft-par-all")
+      th.setDaemon(true); th.start(); th
     }
     threads.foreach(_.join())
     tasks.map { ft =>

@@ -159,29 +159,36 @@ class DedupSpec extends SparkSpec {
 
   test("ConnectedComponents: known graph resolves to min-label clusters") {
     import spark.implicits._
-    // components: {1,2,3} (chain), {10,11}, isolated pair {20,21}
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
-      .toDF("id_a", "id_b")
+    // components: {1,2,3} (chain), {10,11} (edge listed twice), isolated
+    // pair {20,21}, and node 30 whose only edge is a self-loop
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (20L, 21L),
+      (30L, 30L)).toDF("id_a", "id_b")
+    val want = Map(1L -> 3L, 10L -> 2L, 20L -> 2L, 30L -> 1L)
     val out = graft.dedup.ConnectedComponents.clusters(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(out === Map(1L -> 3L, 10L -> 2L, 20L -> 2L))
+    assert(out === want)
+    // the distributed loop (pinned) keeps the self-loop node too
+    val dist = graft.dedup.ConnectedComponents
+      .labels(edges, smallCollectMax = 0).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(dist.groupBy(_._2).map { case (c, m) => c -> m.length.toLong } === want)
   }
 
   test("ConnectedComponents throws loudly instead of returning stale labels") {
     import spark.implicits._
-    // path of 8 needs more than 1 round; maxIters = 1 must not return
+    // path of 8 needs more than 1 round; maxRounds = 1 must not return
     // silently-wrong labels
     val edges = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      graft.dedup.ConnectedComponents.labels(edges, maxIters = 1,
-        smallCollectMax = 0).collect()
+      graft.dedup.ConnectedComponents.labels(edges, smallCollectMax = 0,
+        maxRounds = 1).collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
 
   test("ConnectedComponents: long path graph needs multiple rounds") {
     import spark.implicits._
-    // path 1-2-...-8: diameter 7, so the fused round-0 cannot finish it —
+    // path 1-2-...-8: no single star round contracts it, so this
     // exercises the iterative localCheckpoint loop over several rounds
     val edges = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val out = graft.dedup.ConnectedComponents
@@ -190,7 +197,7 @@ class DedupSpec extends SparkSpec {
     assert(out === (1L to 8L).map(i => (i, 1L)).toSet)
   }
 
-  test("ConnectedComponents.release drops the final checkpoint blocks") {
+  test("ConnectedComponents: Caches.release drops the distributed loop's checkpoint blocks") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val lbl = graft.dedup.ConnectedComponents.labels(edges, smallCollectMax = 0)
@@ -201,7 +208,7 @@ class DedupSpec extends SparkSpec {
     assert(ids.nonEmpty, "labels() should be checkpoint-backed")
     assert(ids.exists(spark.sparkContext.getPersistentRDDs.contains),
       "final buffer should be cached before release")
-    graft.dedup.ConnectedComponents.release(lbl)
+    graft.util.Caches.release(lbl)
     // unpersist(blocking=false) is async only in block removal; the
     // persistentRdds registry is updated synchronously
     assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains),
@@ -1525,7 +1532,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val codes = Seq((1L, 0x00FFL), (2L, 0x00FEL), (3L, -1L))
       .toDF("doc_id", "sim")
-    val ci = graft.dedup.SimHashIndex.buildCodes(codes, checkpoint = false)
+    val ci = graft.dedup.SimHashIndex.buildCodes(codes)
     val hits = ci.blocks.select(col("doc_id")).distinct().count()
     assert(hits === 3L)
   }
@@ -1740,32 +1747,30 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("labelsStar: parity with min-propagation on a 60-hop path (where " +
-    "propagation would need 60 rounds), a forest fixture, and the corpus") {
+  test("ConnectedComponents: the distributed loop on a 60-hop path, a forest and the corpus graph") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // 60-hop path: diameter 60 — the star alternation must converge in
-    // its default 30 rounds (log²-ish), which min-propagation could not
+    // 60-hop path: diameter 60 — the star alternation must converge
+    // within its round cap (rounds grow with log² n, not the diameter)
     val path = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val starPath = labelMap(graft.dedup.ConnectedComponents
-      .labelsStar(path, smallCollectMax = 0))
-    assert(starPath.keySet === (0L to 60L).toSet)
-    assert(starPath.values.toSet === Set(0L), "one component rooted at 0")
+    val distPath = labelMap(graft.dedup.ConnectedComponents
+      .labels(path, smallCollectMax = 0))
+    assert(distPath.keySet === (0L to 60L).toSet)
+    assert(distPath.values.toSet === Set(0L), "one component rooted at 0")
     // forest: two components + an isolated edge, shuffled ids
     val forest = Seq((9L, 3L), (3L, 7L), (12L, 14L), (14L, 11L), (21L, 20L))
       .toDF("id_a", "id_b")
-    val star = labelMap(graft.dedup.ConnectedComponents
-      .labelsStar(forest, smallCollectMax = 0))
-    val prop = labelMap(graft.dedup.ConnectedComponents
+    val dist = labelMap(graft.dedup.ConnectedComponents
       .labels(forest, smallCollectMax = 0))
-    assert(star === prop)
-    assert(star(9L) === 3L && star(12L) === 11L && star(21L) === 20L)
-    // real corpus pair graph: byte-identical cluster summaries
-    val a = graft.queries.DedupQueries.dedupClusters(spark, sf).collect()
-    val b = graft.queries.DedupQueries.dedupClustersStar(spark, sf).collect()
-    assert(a.toSeq === b.toSeq)
+    assert(dist === labelMap(graft.dedup.ConnectedComponents.labels(forest)))
+    assert(dist(9L) === 3L && dist(12L) === 11L && dist(21L) === 20L)
+    // real corpus pair graph: the loop equals the union-find
+    val pairs = graft.queries.DedupQueries.dedupMinhashLsh(spark, sf)
+      .select(col("id_a"), col("id_b"))
+    assert(labelMap(graft.dedup.ConnectedComponents
+      .labels(pairs, smallCollectMax = 0)) ===
+      labelMap(graft.dedup.ConnectedComponents.labels(pairs)))
   }
 
   test("q_takedown_propagate: closure equals driver-side BFS from the seed " +

@@ -61,9 +61,35 @@ class PipeSpec extends SparkSpec {
     MultiPipeline(df)
       .branch("all")(Pipes.cat)
       .branch("as")(_.filter(col("tag") === "a"))
-      .write(seqHome, parallelism = 1)
+      .write(seqHome)
     assert(spark.read.parquet(s"$seqHome/all").count() === 3)
     assert(spark.read.parquet(s"$seqHome/as").count() === 2)
+  }
+
+  test("MultiPipeline.write rethrows a failed branch only after every sibling write has finished") {
+    // a range, not a local relation: the optimizer would evaluate the
+    // UDFs over a local relation on the driver, and no job would run.
+    // The failing branch fails once the slow one's job is running.
+    val df = spark.range(0, 3, 1, 3).toDF("id")
+    val slow = udf { (i: Long) => Thread.sleep(3000); i }
+    val boom = udf { (i: Long) => Thread.sleep(1000); require(i < 0, "boom"); i }
+    val home = java.nio.file.Files.createTempDirectory("graft_mp_fail").toString
+    val sc = spark.sparkContext
+    sc.setJobGroup("pipespec-failing-branch", "MultiPipeline.write failure")
+    try {
+      intercept[Exception] {
+        MultiPipeline(df)
+          .branch("slow")(_.filter(col("id") === 1).select(slow(col("id")).as("id")))
+          .branch("boom")(_.filter(col("id") === 1).select(boom(col("id")).as("id")))
+          .write(home)
+      }
+    } finally sc.clearJobGroup()
+    org.apache.spark.graftspec.TestBus.drain(sc)
+    val running = sc.statusTracker.getActiveJobIds.toSet intersect
+      sc.statusTracker.getJobIdsForGroup("pipespec-failing-branch").toSet
+    assert(running.isEmpty, s"branch jobs still running after write threw: $running")
+    assert(new java.io.File(s"$home/slow/_SUCCESS").exists,
+      "the slow sibling's write must have committed before write threw")
   }
 
   test("MultiPipeline rejects duplicate branch names") {

@@ -483,78 +483,62 @@ class PropertySpec extends AnyFunSuite {
     }, 6)
   }
 
-  test("labelsStar equals driver-side union-find on arbitrary random graphs") {
+  // random edge lists with self-loops and duplicate edges left in: a
+  // node whose only edge is a self-loop must still get a label, and the
+  // union-find threshold counts raw edge rows, duplicates included
+  private val ccEdges = for {
+    n <- Gen.choose(2, 24)
+    m <- Gen.choose(1, 30)
+    edges <- Gen.listOfN(m, for {
+      a <- Gen.choose(0L, n.toLong - 1)
+      b <- Gen.choose(0L, n.toLong - 1)
+    } yield (a, b))
+    dups <- Gen.choose(0, m)
+  } yield edges ++ edges.take(dups)
+
+  test("ConnectedComponents' distributed loop equals driver-side union-find on arbitrary random graphs") {
     import spark.implicits._
-    val gen = for {
-      n <- Gen.choose(2, 24)
-      m <- Gen.choose(1, 30)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong - 1)
-        b <- Gen.choose(0L, n.toLong - 1)
-      } yield (a, b))
-    } yield edges.filter(e => e._1 != e._2)
-    checkProp(forAll(gen) { edges =>
-      edges.isEmpty || {
-        // smallCollectMax = 0 pins the DISTRIBUTED star alternation —
-        // the default would early-exit to the same union-find this
-        // property checks against
-        val got = graft.dedup.ConnectedComponents
-          .labelsStar(edges.toDF("id_a", "id_b"), smallCollectMax = 0)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // driver union-find with path compression
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        // canonical min-label per component
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val byRoot = nodes.groupBy(find)
-        val want = byRoot.flatMap { case (_, ns) =>
-          val m = ns.min; ns.map(_ -> m) }.toMap
-        got == want
+    checkProp(forAll(ccEdges) { edges =>
+      // smallCollectMax = 0 pins the DISTRIBUTED star alternation —
+      // the default would take the same union-find this property
+      // checks against
+      val got = graft.dedup.ConnectedComponents
+        .labels(edges.toDF("id_a", "id_b"), smallCollectMax = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // driver union-find with path compression
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
       }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      // canonical min-label per component
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      val byRoot = nodes.groupBy(find)
+      val want = byRoot.flatMap { case (_, ns) =>
+        val m = ns.min; ns.map(_ -> m) }.toMap
+      got == want
     }, 30)
   }
 
-  test("labels/labelsStar driver union-find early exit (the default) " +
-    "equals the distributed loops on arbitrary random graphs") {
+  test("labels: the driver union-find early exit (the default) equals the distributed loop") {
     import spark.implicits._
-    val gen = for {
-      n <- Gen.choose(2, 24)
-      m <- Gen.choose(1, 30)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong - 1)
-        b <- Gen.choose(0L, n.toLong - 1)
-      } yield (a, b))
-    } yield edges.filter(e => e._1 != e._2)
-    checkProp(forAll(gen) { edges =>
-      edges.isEmpty || {
-        val df = edges.toDF("id_a", "id_b")
-        def m(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-          d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val fast = m(graft.dedup.ConnectedComponents.labels(df))
-        val slow = m(graft.dedup.ConnectedComponents
-          .labels(df, smallCollectMax = 0))
-        val fastStar = m(graft.dedup.ConnectedComponents.labelsStar(df))
-        val slowStar = m(graft.dedup.ConnectedComponents
-          .labelsStar(df, smallCollectMax = 0))
-        // the threshold edge: smallCollectMax = E takes the union-find,
-        // E - 1 the loop. labels counts the raw edge rows, labelsStar
-        // the distinct canonical (max, min) pairs its loop starts from
-        val e = edges.length.toLong
-        val eStar = edges.map(p => (p._1 max p._2, p._1 min p._2)).distinct.length.toLong
-        val edge = Seq(e, e - 1).map(k => m(graft.dedup.ConnectedComponents
-          .labels(df, smallCollectMax = k)))
-        val edgeStar = Seq(eStar, eStar - 1).map(k => m(graft.dedup.ConnectedComponents
-          .labelsStar(df, smallCollectMax = k)))
-        fast == slow && fastStar == slowStar && fast == fastStar &&
-          edge.forall(_ == slow) && edgeStar.forall(_ == slowStar)
-      }
+    checkProp(forAll(ccEdges) { edges =>
+      val df = edges.toDF("id_a", "id_b")
+      def m(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val fast = m(graft.dedup.ConnectedComponents.labels(df))
+      val slow = m(graft.dedup.ConnectedComponents
+        .labels(df, smallCollectMax = 0))
+      // the threshold edge on the raw edge rows: smallCollectMax = E
+      // takes the union-find, E - 1 the loop
+      val e = edges.length.toLong
+      val edge = Seq(e, e - 1).map(k => m(graft.dedup.ConnectedComponents
+        .labels(df, smallCollectMax = k)))
+      fast == slow && edge.forall(_ == slow)
     }, 12)
   }
 

@@ -413,27 +413,6 @@ class SimSpec extends SparkSpec {
     assert(fromDisk === oneShot)
   }
 
-  test("distributed Lloyd fit matches the driver-mediated fit") {
-    // the past-the-ceiling path must be the SAME algorithm: identical
-    // surviving cells, centroids equal up to accumulation-order ulp
-    // drift (sum order is partition-dependent; 1e-4 is the drift bound
-    // the determinism sweep uses)
-    val e = graft.util.Tables(spark, sf).embeddings
-    val driver = graft.sim.Knn.fitCentroids(e, "vec_id", "embedding", 8, 2)
-    val dist = graft.sim.Knn
-      .fitCentroidsDistributed(e, "vec_id", "embedding", 8, 2)
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    assert(dist.map(_._1).toSeq === driver.map(_._1).toSeq,
-      "cell ids / survivors diverge")
-    driver.zip(dist).foreach { case ((cd, vd), (_, vx)) =>
-      assert(vd.length === vx.length)
-      vd.zip(vx).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-4, s"cell $cd centroid drift $a vs $b")
-      }
-    }
-  }
-
   test("Lloyd fit refuses a C×dim geometry the driver collect can't hold") {
     val e = graft.util.Tables(spark, sf).embeddings
     val err = intercept[IllegalArgumentException] {

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 import graft.util.Epochs
 
@@ -17,11 +18,12 @@ import graft.util.Epochs
   * once, bucketed by hash, and maintained under the
   * [[graft.util.Epochs]] store exactly like [[SnapshotIndex]]:
   *
-  *  - **probe** is map-only on the new crawl until ONE (8-byte gh)
-  *    anti-join against the index — O(new crawl grams), never
-  *    O(corpus);
-  *  - **append** admits a crawl's NOVEL grams only (the probe already
-  *    computed them), so tomorrow's probe sees today's admissions
+  *  - **probe** is map-only on the new crawl until ONE equi-keyed
+  *    (8-byte gh) membership test against the index ([[seenFlagged]])
+  *    — O(new crawl grams), never O(corpus);
+  *  - **append** admits a crawl's NOVEL grams only, through the same
+  *    pinned membership pass and rollup as the stream's fused
+  *    [[probeAndAdmit]], so tomorrow's probe sees today's admissions
   *    without a rebuild; it runs through [[Epochs.appendLoop]], the
   *    store's one append loop and fence;
   *  - **compact** re-distincts and right-sizes files into epoch N+1
@@ -45,10 +47,10 @@ import graft.util.Epochs
   * buckets) reads, appends and compacts through the same paths — the
   * bucket column is never a join key.
   *
-  * Every append ([[append]], and [[probeAndAdmit]], the stream's path)
-  * writes its bloom row and its delta grams in one job under the
-  * epoch's `_append-<uuid>/` staging dir (`part=bloom/`,
-  * `part=delta/`) and publishes them by renames: the bloom file(s) into
+  * Every append ([[probeAndAdmit]], which [[append]] runs) writes its
+  * bloom row and its delta grams in one job under the epoch's
+  * `_append-<uuid>/` staging dir (`part=bloom/`, `part=delta/`) and
+  * publishes them by renames: the bloom file(s) into
   * `bloom/` first, then the delta file(s) into `delta/`, then the
   * staging dir goes ([[writeAppend]]). An append with nothing novel
   * writes nothing. No reader lists a staging dir; one left by a crash
@@ -58,26 +60,27 @@ import graft.util.Epochs
   * restated for a SET): the logical content is the distinct gram set;
   * files may transiently carry duplicates (a crash-retried append, or
   * the fence's re-append after a raced epoch advance) because every
-  * read path is duplicate-insensitive — probes anti-join (a dup on
-  * the build side changes nothing) and compaction re-distincts. The
+  * read path is duplicate-insensitive — probes test existence (a dup
+  * on the index side changes nothing) and compaction re-distincts. The
   * append-≡-rebuild and compaction-invariance pins live in DedupSpec.
   *
   * At 100 TB the index is gram-scale (the honest floor for corpus-level
-  * novelty) but the DAILY job touches it through one anti-join on the
-  * 8-byte gh — the corpus text is never re-read. The CHEAPER tier on
-  * top of that join is the epoch's **bloom membership sketch** over
-  * the same gh column (dedup_bloom's [[graft.functions.BloomFilter]]
-  * machinery), persisted beside the gram files and OR-merged on load:
-  * with `prefilter = true`, [[probe]] broadcasts the KB–MB filter,
-  * every bloom-NEGATIVE gram is PROVEN novel map-side (bloom answers
-  * have no false negatives), and only the bloom-positive residue —
-  * true matches plus the ~fpp false-positive sliver — pays the exact
-  * anti-join. Prefiltered output ≡ plain probe output EXACTLY
-  * (spec-pinned), because the one-sided error only ever routes grams
-  * INTO the exact join, never around it. The torn-write direction is
-  * guarded the same way: appends land their bloom row BEFORE their
-  * gram files, so a crash between the two leaves extra bits (a
-  * slightly higher fpp), never a file gram the sketch would deny.
+  * novelty) but the DAILY job touches it through one existence join
+  * on the 8-byte gh — the corpus text is never re-read. The CHEAPER
+  * tier on top of that join is the epoch's **bloom membership sketch**
+  * over the same gh column (dedup_bloom's [[graft.functions
+  * .BloomFilterAgg]] machinery), persisted beside the gram files and
+  * OR-merged on load: whenever a snapshot holds one, [[seenFlagged]]
+  * tests the KB–MB filter map-side, every bloom-NEGATIVE gram is
+  * PROVEN novel there (bloom answers have no false negatives), and
+  * only the bloom-positive residue — true matches plus the ~fpp
+  * false-positive sliver — pays the exact test. Output ≡ the
+  * sketchless snapshot's EXACTLY (spec-pinned), because the one-sided
+  * error only ever routes grams INTO the exact join, never around it.
+  * The torn-write direction is guarded the same way: appends land
+  * their bloom row BEFORE their gram files, so a crash between the two
+  * leaves extra bits (a slightly higher fpp), never a file gram the
+  * sketch would deny.
   *
   * Reference anchor: the reference pipeline re-derives corpus state
   * per run (hadoop-multiple-streaming MultiStreamJobRunner.java:34-78
@@ -113,14 +116,15 @@ object NoveltyIndex {
   /** False-positive rate the epoch blooms are sized for. The filter
     * for n grams costs ~1.2 bytes/gram at 0.005 — a 1e9-gram corpus
     * index carries a ~1.2 GB sketch, which is when the caller shards
-    * the key space or simply skips the prefilter; at the daily-crawl
-    * scales the tier targets, the broadcast is KB–MB.
+    * the key space or probes `snapshot.copy(bloom = None)`; at the
+    * daily-crawl scales the tier targets, the sketch is KB–MB.
     */
   val BloomFpp = 0.005
 
   /** A pinned read handle: `grams` (column `gh`) reads only `epoch`'s
     * files; `bloom` is the epoch's OR-merged membership sketch (None
-    * for a pre-sketch epoch — [[probe]] then ignores `prefilter`).
+    * for a sketchless epoch — the exact membership test then runs
+    * alone).
     */
   final case class Snapshot(grams: DataFrame, epoch: Long, dir: String,
       bloom: Option[Array[Byte]] = None)
@@ -289,70 +293,49 @@ object NoveltyIndex {
   /** Per-source novelty of a new crawl against the indexed corpus —
     * the EXACT output shape (and arithmetic) of the full recompute:
     * (source, n_grams distinct, n_novel unseen-anywhere, novelty_bp
-    * integer basis points). The new side is map-only to its distinct
-    * (source, gh) pairs; `n_novel` comes from a LEFT ANTI join on the
-    * 8-byte gh — duplicate-insensitive on the index side by anti-join
-    * semantics, so the physical-duplicate contract never inflates a
-    * count. Two |sources|-row rollups + one |sources|-row join close
-    * it out.
+    * integer basis points). It is [[rollup]] over [[seenFlagged]],
+    * returned lazily: the same membership test and the same rollup the
+    * stream's [[probeAndAdmit]] collects. The index side is only ever
+    * an equi-keyed existence test on the 8-byte gh, so the
+    * physical-duplicate contract never inflates a count.
     *
-    * Plan shape (PlanSpec-pinned): `n_grams` and `n_novel` each
-    * consume the new side, so the new crawl's gram pass runs TWICE. A
-    * left join + seen flag would need the INDEX side distinct-exchanged
-    * per probe to stay duplicate-safe; the one-pass form that needs no
-    * such shuffle is the positive `gh IN (grams)` flag (an
-    * ExistenceJoin), which [[probeAndAdmit]] pins for the stream.
+    * The epoch's sketch is used whenever the snapshot holds one; a
+    * sketchless snapshot (an empty-corpus init, a pre-sketch epoch)
+    * takes the exact test alone, with the same output (spec-pinned). A
+    * caller that must not ship a huge sketch probes
+    * `snapshot.copy(bloom = None)`.
     *
-    * `prefilter = true` engages the epoch's bloom sketch (the
-    * q_bloom_join shape, inverted for an ANTI join): the filter rides
-    * ONE one-row broadcast, bloom-NEGATIVE grams are novel by the
-    * no-false-negative guarantee and skip the join entirely, and only
-    * the bloom-positive residue pays the exact anti-join — so the
-    * index side of the join sees a candidate stream shrunk to the
-    * true-seen fraction + fpp. Output is EXACTLY the plain probe's
-    * (spec-pinned): the sketch's one-sided error can only route a
-    * gram into the exact join, never mark it seen. A pre-sketch
-    * snapshot (bloom = None) ignores the flag and runs the plain
-    * path — the request is an optimization, not a semantics switch.
+    * Plan shape (PlanSpec-pinned): with a sketch, the bloom-negative
+    * and bloom-positive branches of [[seenFlagged]] each consume the
+    * new side, so the new crawl's gram pass runs TWICE (once without a
+    * sketch). Re-deriving the crawl-scale side is the deliberate trade:
+    * a left join + seen flag would need the INDEX side
+    * distinct-exchanged per probe to stay duplicate-safe.
     */
   def probe(snapshot: Snapshot, newDocs: DataFrame, sourceCol: String,
-      textCol: String, n: Int, prefilter: Boolean = false): DataFrame = {
-    val newG = sourceGramHashes(newDocs, sourceCol, textCol, n).distinct()
-    val total = newG.groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("n_grams"))
-    val novelG = snapshot.bloom match {
-      case Some(bf) if prefilter =>
-        val flagged = bloomFlagged(newG, bf)
-        flagged.filter(!col("maybe_seen"))
-          .select(col(sourceCol), col("gh"))
-          .unionByName(flagged.filter(col("maybe_seen"))
-            .select(col(sourceCol), col("gh"))
-            .join(snapshot.grams, Seq("gh"), "left_anti"))
-      case _ =>
-        newG.join(snapshot.grams, Seq("gh"), "left_anti")
-          .select(col(sourceCol), col("gh"))
-    }
-    val novel = novelG.groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("n_novel"))
-    total.join(novel, Seq(sourceCol), "left")
-      .select(col(sourceCol), col("n_grams"),
-        coalesce(col("n_novel"), lit(0L)).as("n_novel"))
-      .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
-  }
+      textCol: String, n: Int): DataFrame =
+    rollup(seenFlagged(snapshot, newDocs, sourceCol, textCol, n), sourceCol)
 
-  /** `newG` with a `maybe_seen` column: the sketch's answer for each
-    * gh, the filter riding ONE one-row broadcast. False proves the gh
-    * novel; true still needs the exact test.
+  /** The one per-source rollup of a [[seenFlagged]] frame: `n_grams`
+    * (`count`), `n_novel` and `novelty_bp`. `n_novel` is `n_grams`
+    * minus `count_if(seen)`, never `count_if(!seen)`: in a lazy
+    * [[probe]] the optimizer folds `seen` into this aggregate, and a
+    * negated `IN` plans as a null-aware nested loop over the index.
     */
-  private def bloomFlagged(newG: DataFrame, bf: Array[Byte]): DataFrame = {
-    val s = newG.sparkSession
-    graft.functions.GraftFunctions.register(s)
-    import s.implicits._
-    newG.crossJoin(broadcast(Seq(Tuple1(bf)).toDF("graft_bloom")))
-      .withColumn("maybe_seen", call_function("graft_bloom_contains",
-        col("graft_bloom"), col("gh")))
-      .drop("graft_bloom")
-  }
+  private def rollup(flagged: DataFrame, sourceCol: String): DataFrame =
+    flagged.groupBy(col(sourceCol))
+      .agg(count(lit(1)).as("n_grams"),
+        (count(lit(1)) - count_if(col("seen"))).as("n_novel"))
+      .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
+
+  /** The sketch's answer for each `gh`: false proves it novel, true
+    * still needs the exact test. The filter bytes are held by the
+    * expression ([[graft.functions.HeldBloomContains]]), so no job
+    * ships them.
+    */
+  private def sketchHas(bf: Array[Byte]) =
+    ColumnBridge.column(graft.functions.HeldBloomContains(
+      ColumnBridge.expression(col("gh")), bf))
 
   /** The approximate ZERO-JOIN novelty tier — the probe for when the
     * answer gates a decision ("is this crawl worth admitting?") and a
@@ -360,7 +343,7 @@ object NoveltyIndex {
     * membership sketch ALONE. One map-side gram pass + one distinct
     * exchange + a |sources|-row rollup; the gram index files are never
     * opened — at 100 TB the daily cost is the crawl's own gram pass
-    * plus a KB–MB broadcast, full stop.
+    * plus the KB–MB sketch in the task closure, full stop.
     *
     * Error contract (one-sided, from the bloom's one-sided error):
     * a bloom false positive marks a genuinely-novel gram "seen", so
@@ -378,33 +361,25 @@ object NoveltyIndex {
       s"NoveltyIndex.probeApprox: epoch ${snapshot.epoch} under " +
         s"${snapshot.dir} carries no membership sketch — compact to " +
         "build one, or use probe()"))
-    val s = newDocs.sparkSession
-    graft.functions.GraftFunctions.register(s)
-    import s.implicits._
-    val bloomDf = Seq(Tuple1(bf)).toDF("graft_bloom")
     sourceGramHashes(newDocs, sourceCol, textCol, n).distinct()
-      .crossJoin(broadcast(bloomDf))
       .groupBy(col(sourceCol))
       .agg(count(lit(1)).as("n_grams"),
-        sum(when(!call_function("graft_bloom_contains",
-            col("graft_bloom"), col("gh")), 1L).otherwise(0L))
-          .as("n_novel_lb"))
+        sum(when(!sketchHas(bf), 1L).otherwise(0L)).as("n_novel_lb"))
       .withColumn("novelty_bp_lb", expr("n_novel_lb * 10000 div n_grams"))
   }
 
-  /** Probe + admit FUSED for the streaming acquisition loop: one
-    * pinned probe pass, one rollup and one write per batch.
+  /** Probe + admit FUSED — the stream's batch and [[append]]'s body:
+    * one pinned probe pass, one rollup and one write per call.
     *
     *  1. **Pin.** The batch's distinct (source, gh) pairs flagged
     *     `seen` ([[seenFlagged]]) are materialized ONCE (eager
     *     localCheckpoint — batch-scale by the O(new crawl) contract,
     *     released when the call returns). Every later step reads it.
-    *  2. **Rollup.** One `groupBy(source)` over the pin gives `n_grams`
-    *     (`count`) and `n_novel` (`count_if(!seen)`). An
-    *     [[org.apache.spark.sql.Observation]] on its input aggregates
-    *     the batch's bloom row (`graft_bloom_agg` of the unseen gh at
-    *     the snapshot sketch's geometry) in the same job — the
-    *     `Pipes.counted` mechanism, no job of its own.
+    *  2. **Rollup.** [[rollup]] over the pin gives `n_grams` and
+    *     `n_novel`. An [[org.apache.spark.sql.Observation]] on its
+    *     input aggregates the batch's bloom row (`graft_bloom_agg` of
+    *     the unseen gh at the snapshot sketch's geometry) in the same
+    *     job — the `Pipes.counted` mechanism, no job of its own.
     *  3. **Write.** The pin's unseen `distinct gh` goes through
     *     [[Epochs.appendLoop]] from the snapshot's epoch. Into that
     *     epoch it is [[writeAppend]] with the rollup's bloom row and
@@ -414,18 +389,12 @@ object NoveltyIndex {
     *     epoch lacks through [[admitNovel]] — the physical-duplicate
     *     contract makes the write into the stale epoch harmless.
     *
-    * Output rows and LOGICAL on-disk state are those of `probe()`
-    * followed by `append()` (the delta write is sized from the
-    * rollup's Σ n_novel, an upper bound on the distinct novel count,
-    * so file sizing may differ — every read path is
-    * layout-insensitive):
-    *
-    *  - the gh set admitted IS `distinct gh` of the pin's unseen
-    *    pairs — same snapshot, same exact membership test;
-    *  - the bloom row takes the unseen pairs pre-distinct (bit-set
-    *    idempotence: bloom(multiset) ≡ bloom(set), byte-identical) at
-    *    the snapshot's geometry (every row of an epoch shares (m, k)
-    *    by construction).
+    * The rows are [[probe]]'s. The delta write is sized from Σ n_novel,
+    * an upper bound on the distinct novel count (exact for one
+    * source); every read path is layout-insensitive. The bloom row
+    * takes the unseen pairs pre-distinct (bit-set idempotence:
+    * bloom(multiset) ≡ bloom(set), byte-identical) at the snapshot's
+    * geometry (every row of an epoch shares (m, k) by construction).
     *
     * The published bloom files and row are folded into `held`, so the
     * next batch of the same stream reads no sketch; after an epoch
@@ -436,10 +405,9 @@ object NoveltyIndex {
     */
   private[graft] def probeAndAdmit(spark: SparkSession, snapshot: Snapshot,
       batch: DataFrame, sourceCol: String, textCol: String, n: Int,
-      prefilter: Boolean, held: HeldSketch = new HeldSketch): Array[Row] = {
+      held: HeldSketch = new HeldSketch): Array[Row] = {
     val pinned = described(spark, "pin") {
-      seenFlagged(snapshot, batch, sourceCol, textCol, n, prefilter)
-        .localCheckpoint(true)
+      seenFlagged(snapshot, batch, sourceCol, textCol, n).localCheckpoint(true)
     }
     try {
       val unseen = !col("seen")
@@ -450,10 +418,7 @@ object NoveltyIndex {
           words.length * 64, k))
       }
       val rows = described(spark, "rollup") {
-        observed.groupBy(col(sourceCol))
-          .agg(count(lit(1)).as("n_grams"), count_if(unseen).as("n_novel"))
-          .withColumn("novelty_bp", expr("n_novel * 10000 div n_grams"))
-          .collect()
+        rollup(observed, sourceCol).collect()
       }
       val nNovel = rows.iterator.map(_.getLong(2)).sum
       val snapshotDir = Epochs.epochPath(snapshot.dir, snapshot.epoch)
@@ -473,29 +438,31 @@ object NoveltyIndex {
     } finally graft.util.Caches.release(pinned)
   }
 
-  /** The batch's distinct (source, gh) pairs, each flagged `seen` =
-    * held by the snapshot's gram set — the frame [[probeAndAdmit]]
-    * pins. Bloom-negative pairs get `seen = false` map-side (the
-    * sketch has no false negatives); every other pair — all of them
-    * with `prefilter = false` or a sketchless snapshot — takes
-    * `gh IN (grams)`, which plans as an equi-keyed ExistenceJoin, so
-    * duplicate index rows cannot inflate a count. The flag stays
-    * positive on purpose: `NOT IN` is null-aware and plans as a
-    * BroadcastNestedLoopJoin (SURVEY.md, performance notes).
+  /** The ONE membership test: the batch's distinct (source, gh) pairs,
+    * each flagged `seen` = held by the snapshot's gram set. With a
+    * sketch, bloom-negative pairs get `seen = false` map-side (the
+    * sketch has no false negatives) and only the bloom-positive
+    * residue takes the exact test; a sketchless snapshot sends every
+    * pair to it. The exact test is `gh IN (grams)`, which plans as an
+    * equi-keyed ExistenceJoin, so duplicate index rows cannot inflate
+    * a count. The flag stays positive on purpose: `NOT IN` is
+    * null-aware and plans as a BroadcastNestedLoopJoin (SURVEY.md,
+    * performance notes).
     */
   private[graft] def seenFlagged(snapshot: Snapshot, batch: DataFrame,
-      sourceCol: String, textCol: String, n: Int,
-      prefilter: Boolean): DataFrame = {
-    val newG = sourceGramHashes(batch, sourceCol, textCol, n).distinct()
+      sourceCol: String, textCol: String, n: Int): DataFrame = {
+    val grams = sourceGramHashes(batch, sourceCol, textCol, n)
     def exact(pairs: DataFrame) = pairs.select(col(sourceCol), col("gh"),
       col("gh").isin(snapshot.grams.select(col("gh"))).as("seen"))
-    snapshot.bloom match {
-      case Some(bf) if prefilter =>
-        val flagged = bloomFlagged(newG, bf)
-        flagged.filter(!col("maybe_seen"))
-          .select(col(sourceCol), col("gh"), lit(false).as("seen"))
-          .unionByName(exact(flagged.filter(col("maybe_seen"))))
-      case _ => exact(newG)
+    snapshot.bloom.fold(exact(grams.distinct())) { bf =>
+      // the sketch's answer is an OUTPUT of the distinct's aggregate:
+      // a filter on it cannot be pushed below the aggregate, so both
+      // branches read one reused exchange
+      val pairs = grams.groupBy(col(sourceCol), col("gh"))
+        .agg(max(sketchHas(bf)).as("maybe_seen"))
+      pairs.filter(!col("maybe_seen"))
+        .select(col(sourceCol), col("gh"), lit(false).as("seen"))
+        .unionByName(exact(pairs.filter(col("maybe_seen"))))
     }
   }
 
@@ -570,9 +537,9 @@ object NoveltyIndex {
     bloomFiles
   }
 
-  /** Admit a PINNED distinct gh set into `epochDir` — [[appendFrom]]'s
-    * write, and [[probeAndAdmit]]'s into an epoch other than its
-    * snapshot's (both hand it a localCheckpoint, so the two reads below
+  /** Admit a PINNED distinct gh set into `epochDir` — [[probeAndAdmit]]'s
+    * re-append into an epoch other than its snapshot's ([[Epochs
+    * .appendLoop]] hands it a localCheckpoint, so the two reads below
     * never re-derive it): ONE job counts the set and observes its bloom
     * row at the target epoch's geometry; then [[writeAppend]]. Nothing
     * is written for an empty set — an all-zero bloom row would be one
@@ -637,37 +604,20 @@ object NoveltyIndex {
       }
   }
 
-  /** Admit a crawl: append its NOVEL grams (vs the current epoch) into
-    * the current epoch's `delta/` — bucket files are never touched, so
-    * an append adds [[filesFor]] of its novel count (one file for a
-    * daily crawl), and a crawl with nothing novel adds nothing. Runs
-    * through [[Epochs.appendLoop]]: a compaction that raced this append
-    * either captured the files in its re-listed rewrite or the loop
-    * re-appends into the new epoch the grams it lacks; a duplicate from
-    * a retried append is harmless by the physical-duplicate contract.
+  /** Admit a crawl: [[probeAndAdmit]] against the current epoch under
+    * one constant source, rows discarded. Its NOVEL grams land in the
+    * epoch's `delta/` — bucket files are never touched, so an append
+    * adds [[filesFor]] of its novel count (one file for a daily crawl),
+    * and a crawl with nothing novel adds nothing. A compaction that
+    * raced the append either captured the files in its re-listed
+    * rewrite or [[Epochs.appendLoop]] re-appends into the new epoch the
+    * grams it lacks; a duplicate from a retried append is harmless by
+    * the physical-duplicate contract.
     */
   def append(spark: SparkSession, newDocs: DataFrame, dir: String,
       textCol: String, n: Int): Unit =
-    appendFrom(spark, newDocs, dir, Epochs.current(spark, dir), textCol, n)
-
-  /** [[append]] starting from an already-resolved epoch — exposed for
-    * the race spec (simulates an epoch published between resolution
-    * and append).
-    */
-  private[graft] def appendFrom(spark: SparkSession, newDocs: DataFrame,
-      dir: String, startEpoch: Long, textCol: String, n: Int): Unit = {
-    // pinned (crawl-scale): the loop's re-append after an epoch advance
-    // then never re-reads the start epoch, which a second publish may
-    // already have retired
-    val novel = gramHashes(newDocs, textCol, n).distinct()
-      .join(epochGrams(spark, Epochs.epochPath(dir, startEpoch)), Seq("gh"),
-        "left_anti")
-      .localCheckpoint(true)
-    try
-      Epochs.appendLoop(spark, dir, startEpoch, novel, "gh")(
-        epochGrams(spark, _))(admitNovel(spark))
-    finally graft.util.Caches.release(novel)
-  }
+    probeAndAdmit(spark, load(spark, dir),
+      newDocs.withColumn("_append_source", lit(0)), "_append_source", textCol, n)
 
   /** Rewrite the current epoch's buckets ∪ delta into epoch N+1 —
     * re-distincted (the physical-duplicate contract's restore point),

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -193,4 +193,39 @@ case class BloomMightContain(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =
     copy(left = newLeft, right = newRight)
+}
+
+/** [[BloomMightContain]] against a driver-held filter: the bytes are a
+  * field of the expression and ship inside the task closure, so no
+  * broadcast and no job carries them. Plans print the filter's
+  * geometry, never its bytes — a binary literal would print them as
+  * hex in every plan string and in every SQL-execution description the
+  * UI listener keeps.
+  */
+case class HeldBloomContains(child: Expression, filter: Array[Byte])
+  extends UnaryExpression {
+
+  override def dataType: DataType = BooleanType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"held_bloom_contains needs a BIGINT key hash, got ${child.dataType.sql}")
+
+  override def nullSafeEval(v: Any): Any =
+    BloomUtil.mightContain(filter, v.asInstanceOf[Long])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = ctx.addReferenceObj("heldBloom", filter, "byte[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.BloomUtil.mightContain($f, $v);")
+  }
+
+  override def toString: String = {
+    val bb = java.nio.ByteBuffer.wrap(filter)
+    s"held_bloom_contains(k=${bb.getInt()}, words=${bb.getInt()}, $child)"
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): HeldBloomContains = copy(child = newChild)
 }

@@ -716,12 +716,13 @@ object CurationQueries {
     * (the manifest_stream move applied to the acquisition loop): the
     * planted recrawl arrives as three TIME-ordered crawl batches
     * (doc_id mod 3) through the REAL streaming query; each batch is
-    * probed against the persisted gram index (bloom prefilter ON —
-    * the production tier stack), then admitted, so batch k's probe
-    * measures novelty against corpus + batches 0..k−1 — the "value of
-    * the next crawl given everything already admitted" number the
-    * loop gates on. The oracle replays the identical algebra in SQL:
-    * after admission the index holds corpus ∪ ALL grams of earlier
+    * probed against the persisted gram index (the epoch's sketch and
+    * the exact membership test — the production tier stack), then
+    * admitted, so batch k's probe measures novelty against corpus +
+    * batches 0..k−1 — the "value of the next crawl given everything
+    * already admitted" number the loop gates on. The oracle replays
+    * the identical algebra in SQL: after admission the index holds
+    * corpus ∪ ALL grams of earlier
     * batches (append admits exactly the novel ones; novel ∪ seen =
     * the batch), so batch k's novel grams are those absent from the
     * corpus whose FIRST carrying batch is k — a min(batch) rollup.
@@ -1601,38 +1602,37 @@ object CurationQueries {
     * gram index instead of q_crawl_novelty's per-run full recompute:
     * the index is built once per documents table ([[graft.util.FitOnce]]
     * — production materializes it once and appends admitted crawls),
-    * and each run costs one map-side gram pass over the NEW crawl plus
-    * one anti-join on the 8-byte gh against the bucketed index.
+    * and each run costs the map-side gram pass over the NEW crawl plus
+    * one existence join on the 8-byte gh against the bucketed index.
     * Identical output columns, identical oracle SQL — a hash match at
     * both SFs IS the proof that the incremental path reproduces the
     * full recompute exactly. The append-≡-rebuild and
     * compaction-invariance halves of the index contract are
     * DedupSpec-pinned (the dedup_incremental precedent).
     *
-    * Runs with the bloom `prefilter` ON — the face prices the full
-    * production tier stack: one-row sketch broadcast proves the
-    * bloom-negative grams novel map-side, the exact anti-join sees
-    * only the positive residue, and the hash staying green against
-    * the SAME full-recompute oracle is the end-to-end proof the
-    * sketch's one-sided error never reaches the output
-    * (prefilter ≡ plain is additionally DedupSpec-pinned).
+    * The index's sketch prices the full production tier stack: it
+    * proves the bloom-negative grams novel map-side, the exact
+    * existence join sees only the positive residue, and the hash
+    * staying green against the SAME full-recompute oracle is the
+    * end-to-end proof the sketch's one-sided error never reaches the
+    * output (sketched ≡ sketchless is additionally DedupSpec-pinned).
     */
   def qCrawlNoveltyProbe(s: SparkSession, dir: String): DataFrame = {
     val idxDir = noveltyIndexFor(s, dir)
     val snap = graft.dedup.NoveltyIndex.load(s, idxDir)
     graft.dedup.NoveltyIndex.probe(snap,
-        recrawled(Tables(s, dir).documents), "source", "text", 3,
-        prefilter = true)
+        recrawled(Tables(s, dir).documents), "source", "text", 3)
       .orderBy(col("source"))
   }
 
   /** The ZERO-JOIN novelty tier, registered — [[graft.dedup
     * .NoveltyIndex.probeApprox]] over the same planted recrawl and the
     * same persisted index as q_crawl_novelty_probe: per-source novelty
-    * from the epoch's bloom sketch ALONE (one crawl gram pass + one
-    * KB–MB one-row broadcast; the gram index files are never opened).
+    * from the epoch's bloom sketch ALONE (one crawl gram pass, the
+    * KB–MB sketch held in the plan; the gram index files are never
+    * opened).
     * This is the tier a 100 TB acquisition loop runs HOURLY, promoting
-    * only interesting crawls to the exact anti-join probe. No SQL twin
+    * only interesting crawls to the exact probe. No SQL twin
     * — the sketch's bit arithmetic has no DuckDB oracle — so the row
     * is declared rows-only; the value gates live in DedupSpec: n_grams
     * ≡ the exact probe's, n_novel_lb a per-source LOWER bound on the

@@ -898,9 +898,9 @@ object Streams {
   /** The daily-crawl NOVELTY loop at micro-batch cadence — the
     * streaming face of [[graft.dedup.NoveltyIndex]]: each arriving
     * crawl batch is (1) PROBED against the persisted corpus gram index
-    * (per-source novelty, bloom-prefiltered by default — the full
-    * production tier stack), then (2) ADMITTED ([[graft.dedup
-    * .NoveltyIndex.append]] — novel grams only), so the NEXT batch's
+    * (per-source novelty through the epoch's sketch and the exact
+    * membership test — the full production tier stack), then (2)
+    * ADMITTED (novel grams only), so the NEXT batch's
     * probe already sees this batch's grams: exactly the
     * acquisition-loop contract "novelty is measured against everything
     * admitted before you". `sink` receives each batch's probe rows
@@ -926,7 +926,6 @@ object Streams {
     */
   def noveltyStream(crawl: DataFrame, indexDir: String,
       sourceCol: String, textCol: String, n: Int,
-      prefilter: Boolean = true,
       checkpointDir: Option[String] = None)(
       sink: (Long, Seq[org.apache.spark.sql.Row]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -944,7 +943,7 @@ object Streams {
         // when the batch already arrives wide.
         val fanned = graft.util.Fanout.ensure(batch)
         val rows = graft.dedup.NoveltyIndex.probeAndAdmit(spark, snap, fanned,
-          sourceCol, textCol, n, prefilter, held).toSeq
+          sourceCol, textCol, n, held).toSeq
         sink(batchId, rows)
       }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()

@@ -866,10 +866,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("NoveltyIndex: probe ≡ full recompute; append ≡ rebuild " +
-      "(idempotent on retry); compaction and a raced epoch advance " +
-      "never change a probe") {
+      "(idempotent on retry); compaction never changes a probe") {
     import graft.dedup.NoveltyIndex
-    import spark.implicits._
     val docs = util.Tables(spark, sf).documents
     val old = docs.filter(col("doc_id") % 5 < 4)
     val fresh = docs.filter(col("doc_id") % 5 === 4)
@@ -909,6 +907,7 @@ class DedupSpec extends SparkSpec {
       .distinct().collect().map(_.getLong(0)).toSet
     assert(gramSet === rebuilt, "append must equal a full rebuild")
     val reProbe = probeRows(fresh)
+    assert(reProbe === recomputedNovelty(fresh, docs))
     assert(reProbe.forall(r => r._3 === 0L && r._4 === 0L),
       "an admitted crawl must probe as fully seen")
     // retry idempotence (the physical-duplicate contract): a duplicate
@@ -933,25 +932,12 @@ class DedupSpec extends SparkSpec {
       val parts = b.listFiles().count(_.getName.endsWith(".parquet"))
       assert(parts === 1, s"bucket ${b.getName}: $parts files after compact")
     }
-
-    // (4) the appenders' fence: an append resolved against a STALE
-    // epoch (a compaction published underneath it) must land its novel
-    // grams in the CURRENT epoch, exactly once
-    val extra = Seq((900001L, "zq1 zq2 zq3 zq4", "srcX"))
-      .toDF("doc_id", "text", "source")
-    val extraGrams = NoveltyIndex.gramHashes(extra, "text", 3)
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(extraGrams.nonEmpty && (extraGrams -- rebuilt) === extraGrams,
-      "fixture grams must be genuinely novel")
-    NoveltyIndex.appendFrom(spark, extra, dir, startEpoch = 0L, "text", 3)
-    assert(gramSet === rebuilt ++ extraGrams,
-      "a raced append must be re-appended into the advanced epoch")
-    assert(probeRows(extra).forall(_._3 === 0L))
   }
 
-  test("NoveltyIndex bloom tier: prefiltered probe ≡ plain probe at " +
-      "init, after appends (multi-row OR-merged sketch), and after " +
-      "compaction; the sketch denies no file gram") {
+  test("NoveltyIndex bloom tier: a sketched snapshot's probe ≡ its " +
+      "copy(bloom = None) ≡ the full recompute at init, after appends " +
+      "(multi-row OR-merged sketch), and after compaction; the sketch " +
+      "denies no file gram") {
     import graft.dedup.NoveltyIndex
     val docs = util.Tables(spark, sf).documents
     val old = docs.filter(col("doc_id") % 5 < 4)
@@ -959,19 +945,22 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-nvbloom").toString
     NoveltyIndex.init(spark, old, dir, "text", 3)
 
-    def rows(newSide: org.apache.spark.sql.DataFrame, pf: Boolean) =
-      NoveltyIndex.probe(NoveltyIndex.load(spark, dir), newSide,
-          "source", "text", 3, prefilter = pf)
-        .orderBy("source").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
+    // the probe of the current snapshot with its sketch and without
+    def rows(sketched: Boolean) = {
+      val snap = NoveltyIndex.load(spark, dir)
+      noveltyRows(NoveltyIndex.probe(
+        if (sketched) snap else snap.copy(bloom = None), fresh,
+        "source", "text", 3).collect())
+    }
 
-    // init writes the sketch; prefilter ≡ plain with genuine novelty
+    // init writes the sketch; sketched ≡ sketchless ≡ recompute with
+    // genuine novelty
     val snap0 = NoveltyIndex.load(spark, dir)
     assert(snap0.bloom.nonEmpty, "init must persist the epoch's sketch")
-    val plain0 = rows(fresh, pf = false)
-    assert(plain0.exists(_._3 > 0L), "fixture must plant novelty")
-    assert(rows(fresh, pf = true) === plain0)
+    val want0 = recomputedNovelty(fresh, old)
+    assert(want0.exists(_._3 > 0L), "fixture must plant novelty")
+    assert(rows(sketched = true) === want0)
+    assert(rows(sketched = false) === want0)
 
     // the no-false-negative half, directly: every indexed gram is
     // bloom-positive (a single denial would turn a seen gram novel)
@@ -983,10 +972,11 @@ class DedupSpec extends SparkSpec {
     // append accretes a SECOND bloom row at the same geometry; the
     // OR-merged sketch must still cover everything
     NoveltyIndex.append(spark, fresh, dir, "text", 3)
-    val postAppend = rows(fresh, pf = false)
+    val postAppend = recomputedNovelty(fresh, docs)
     assert(postAppend.forall(r => r._3 === 0L),
       "an admitted crawl must probe fully seen")
-    assert(rows(fresh, pf = true) === postAppend)
+    assert(rows(sketched = true) === postAppend)
+    assert(rows(sketched = false) === postAppend)
     val snap1 = NoveltyIndex.load(spark, dir)
     val bf1 = snap1.bloom.get
     val denied1 = snap1.grams.collect().map(_.getLong(0))
@@ -1000,17 +990,8 @@ class DedupSpec extends SparkSpec {
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(bloomFiles === 1,
       s"compaction must rebuild a single sketch row, saw $bloomFiles files")
-    assert(rows(fresh, pf = true) === rows(fresh, pf = false))
-
-    // a snapshot with NO sketch ignores the prefilter request (plain
-    // path, identical output) instead of failing or silently skipping
-    val bare = NoveltyIndex.load(spark, dir).copy(bloom = None)
-    val bareRows = NoveltyIndex.probe(bare, fresh, "source", "text", 3,
-        prefilter = true)
-      .orderBy("source").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    assert(bareRows === rows(fresh, pf = false))
+    assert(rows(sketched = true) === postAppend)
+    assert(rows(sketched = false) === postAppend)
   }
 
   test("NoveltyIndex degenerate corpora: single-gram init sizes a " +
@@ -1029,28 +1010,26 @@ class DedupSpec extends SparkSpec {
     assert(s1.bloom.nonEmpty)
     val probeNew = Seq((3L, "delta epsilon zeta eta", "srcC"))
       .toDF("doc_id", "text", "source")
-    def rows(snap: NoveltyIndex.Snapshot, pf: Boolean) =
-      NoveltyIndex.probe(snap, probeNew, "source", "text", 3, prefilter = pf)
-        .orderBy("source").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    assert(rows(s1, pf = true) === rows(s1, pf = false))
-    assert(rows(s1, pf = false) === Seq(("srcC", 2L, 2L, 10000L)))
+    def rows(snap: NoveltyIndex.Snapshot) =
+      noveltyRows(NoveltyIndex.probe(snap, probeNew, "source", "text", 3)
+        .collect())
+    assert(rows(s1) === Seq(("srcC", 2L, 2L, 10000L)))
+    assert(rows(s1.copy(bloom = None)) === Seq(("srcC", 2L, 2L, 10000L)))
     val approx1 = NoveltyIndex.probeApprox(s1, probeNew, "source", "text", 3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(approx1.head._1 === "srcC" && approx1.head._2 === 2L &&
       approx1.head._3 <= 2L)
 
     // EMPTY corpus: init publishes a sketchless epoch (nothing to
-    // sketch), probe answers everything-novel, prefilter request is a
-    // no-op, probeApprox refuses loudly
+    // sketch), probe answers everything-novel through the exact test
+    // alone, probeApprox refuses loudly
     val empty = Seq.empty[(Long, String, String)]
       .toDF("doc_id", "text", "source")
     val d0 = java.nio.file.Files.createTempDirectory("graft-nv-empty").toString
     NoveltyIndex.init(spark, empty, d0, "text", 3)
     val s0 = NoveltyIndex.load(spark, d0)
     assert(s0.bloom.isEmpty)
-    assert(rows(s0, pf = true) === Seq(("srcC", 2L, 2L, 10000L)))
+    assert(rows(s0) === Seq(("srcC", 2L, 2L, 10000L)))
     intercept[IllegalStateException] {
       NoveltyIndex.probeApprox(s0, probeNew, "source", "text", 3)
     }
@@ -1069,14 +1048,14 @@ class DedupSpec extends SparkSpec {
     def collectMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val exact = collectMap(
-      NoveltyIndex.probe(snap, fresh, "source", "text", 3))
+    val exact = recomputedNovelty(fresh, old)
+      .map { case (src, ng, novel, bp) => src -> (ng, novel, bp) }.toMap
     val approx = collectMap(
       NoveltyIndex.probeApprox(snap, fresh, "source", "text", 3))
     assert(approx.keySet === exact.keySet)
     exact.foreach { case (src, (ng, novel, bp)) =>
       val (ngA, lb, bpA) = approx(src)
-      assert(ngA === ng, s"$src: n_grams must match the exact probe")
+      assert(ngA === ng, s"$src: n_grams must match the exact count")
       assert(lb >= 0L && lb <= novel,
         s"$src: lb $lb must lower-bound exact $novel (one-sided error)")
       // expected deficit fpp*n_grams (0.005); generous 10x slack so the
@@ -1162,20 +1141,22 @@ class DedupSpec extends SparkSpec {
       "a test-scale index is one bucket of one file")
     val buckets0 = parquetBytes(s"$e0/grams")
 
-    def probeRows(crawl: org.apache.spark.sql.DataFrame, pf: Boolean) =
-      noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, dir), crawl,
-        "source", "text", 3, prefilter = pf).collect())
+    def probeRows(crawl: org.apache.spark.sql.DataFrame, sketched: Boolean) = {
+      val snap = NoveltyIndex.load(spark, dir)
+      noveltyRows(NoveltyIndex.probe(
+        if (sketched) snap else snap.copy(bloom = None), crawl,
+        "source", "text", 3).collect())
+    }
 
     var seen = old
     crawls.zipWithIndex.foreach { case (crawl, i) =>
       val want = recomputedNovelty(crawl, seen)
       assert(want.exists(_._3 > 0L), s"crawl $i must plant novelty")
-      assert(probeRows(crawl, pf = false) === want)
-      assert(probeRows(crawl, pf = true) === want)
+      assert(probeRows(crawl, sketched = false) === want)
+      assert(probeRows(crawl, sketched = true) === want)
       if (i % 2 == 0) {
         val got = NoveltyIndex.probeAndAdmit(spark,
-          NoveltyIndex.load(spark, dir), crawl, "source", "text", 3,
-          prefilter = true)
+          NoveltyIndex.load(spark, dir), crawl, "source", "text", 3)
         assert(noveltyRows(got) === want)
       } else NoveltyIndex.append(spark, crawl, dir, "text", 3)
       seen = seen.unionByName(crawl)
@@ -1184,12 +1165,12 @@ class DedupSpec extends SparkSpec {
       assert(parquetBytes(s"$e0/delta").size === i + 1,
         s"append $i must add exactly one delta file")
       // the next probe sees the admission: the crawl is fully seen
-      assert(probeRows(crawl, pf = true).forall(_._3 === 0L))
+      assert(probeRows(crawl, sketched = true).forall(_._3 === 0L))
     }
     // every probe tier over buckets ∪ delta ≡ the full recompute
     val all = docs.filter(col("doc_id") % 2 === 0)
-    assert(probeRows(all, pf = true) === recomputedNovelty(all, seen))
-    assert(probeRows(all, pf = false) === recomputedNovelty(all, seen))
+    assert(probeRows(all, sketched = true) === recomputedNovelty(all, seen))
+    assert(probeRows(all, sketched = false) === recomputedNovelty(all, seen))
 
     def gramSet: Set[Long] = NoveltyIndex.load(spark, dir).grams
       .distinct().collect().map(_.getLong(0)).toSet
@@ -1202,7 +1183,7 @@ class DedupSpec extends SparkSpec {
     assert(filesFor(before.size.toLong) === 1)
     assert(bucketFileCounts(s"$dir/epoch=1") === Map("b=0" -> 1))
     assert(gramSet === before)
-    assert(probeRows(all, pf = true) === recomputedNovelty(all, seen))
+    assert(probeRows(all, sketched = true) === recomputedNovelty(all, seen))
   }
 
   test("NoveltyIndex: an epoch in the fixed-64-bucket layout (appends " +
@@ -1251,17 +1232,20 @@ class DedupSpec extends SparkSpec {
 
     val freshDir = java.nio.file.Files.createTempDirectory("graft-nvfresh").toString
     NoveltyIndex.init(spark, old.unionByName(admitted), freshDir, "text", 3)
-    def probeRows(d: String, pf: Boolean) =
-      noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, d), crawl,
-        "source", "text", 3, prefilter = pf).collect())
-    val freshRows = probeRows(freshDir, pf = false)
-    assert(freshRows.exists(_._3 > 0L), "fixture must plant novelty")
-    assert(probeRows(dir, pf = false) === freshRows)
-    assert(probeRows(dir, pf = true) === freshRows)
+    def probeRows(d: String, sketched: Boolean) = {
+      val s = NoveltyIndex.load(spark, d)
+      noveltyRows(NoveltyIndex.probe(if (sketched) s else s.copy(bloom = None),
+        crawl, "source", "text", 3).collect())
+    }
+    val wantRows = recomputedNovelty(crawl, old.unionByName(admitted))
+    assert(wantRows.exists(_._3 > 0L), "fixture must plant novelty")
+    assert(probeRows(freshDir, sketched = true) === wantRows)
+    assert(probeRows(dir, sketched = false) === wantRows)
+    assert(probeRows(dir, sketched = true) === wantRows)
 
     val admitRows = NoveltyIndex.probeAndAdmit(spark, snap, crawl,
-      "source", "text", 3, prefilter = true)
-    assert(noveltyRows(admitRows) === freshRows)
+      "source", "text", 3)
+    assert(noveltyRows(admitRows) === wantRows)
     assert(parquetBytes(s"$e0/grams") === buckets0,
       "the fused append must leave the old buckets untouched")
     assert(parquetBytes(s"$e0/delta").size === 1)
@@ -1273,11 +1257,11 @@ class DedupSpec extends SparkSpec {
     assert(bucketFileCounts(s"$dir/epoch=1") === Map("b=0" -> 1))
     assert(parquetBytes(s"$dir/epoch=1/delta").isEmpty)
     assert(gramSet(dir) === all)
-    assert(probeRows(dir, pf = true).forall(_._3 === 0L))
+    assert(probeRows(dir, sketched = true).forall(_._3 === 0L))
   }
 
   test("NoveltyIndex publish order: between the bloom rename and the " +
-      "delta rename a reader's prefiltered probe ≡ plain and the sketch " +
+      "delta rename a reader's sketched probe ≡ sketchless and the sketch " +
       "denies no index gram; a crash there leaves extra bloom bits only — " +
       "the retried append and compaction give the rebuild's gram set, and " +
       "the leftover staging dir is never read and dies with its epoch") {
@@ -1309,16 +1293,15 @@ class DedupSpec extends SparkSpec {
     def gramsOf(d: org.apache.spark.sql.DataFrame): Set[Long] =
       NoveltyIndex.gramHashes(d, "text", 3).distinct()
         .collect().map(_.getLong(0)).toSet
-    def probeRows(s: NoveltyIndex.Snapshot, pf: Boolean) =
-      noveltyRows(NoveltyIndex.probe(s, crawl, "source", "text", 3,
-        prefilter = pf).collect())
+    def probeRows(s: NoveltyIndex.Snapshot) =
+      noveltyRows(NoveltyIndex.probe(s, crawl, "source", "text", 3).collect())
     val mid = NoveltyIndex.load(spark, dir)
     assert(!(mid.bloom.get sameElements snap.bloom.get),
       "the published bloom row must be visible to a reader")
     val want = recomputedNovelty(crawl, old)
     assert(want.exists(_._3 > 0L), "fixture must plant novelty")
-    assert(probeRows(mid, pf = false) === want)
-    assert(probeRows(mid, pf = true) === want)
+    assert(probeRows(mid.copy(bloom = None)) === want)
+    assert(probeRows(mid) === want)
     val denied = mid.grams
       .crossJoin(broadcast(Seq(Tuple1(mid.bloom.get)).toDF("bf")))
       .filter(!call_function("graft_bloom_contains", col("bf"), col("gh")))
@@ -1335,8 +1318,7 @@ class DedupSpec extends SparkSpec {
     assert(gramSet === rebuilt)
     assert(NoveltyIndex.compact(spark, dir) === 1L)
     assert(gramSet === rebuilt)
-    assert(probeRows(NoveltyIndex.load(spark, dir), pf = true)
-      .forall(_._3 === 0L))
+    assert(probeRows(NoveltyIndex.load(spark, dir)).forall(_._3 === 0L))
     assert(new java.io.File(staged).exists, "epoch 0 is still retained")
     assert(NoveltyIndex.compact(spark, dir) === 2L)
     assert(!new java.io.File(e0).exists && !new java.io.File(staged).exists,
@@ -1366,7 +1348,7 @@ class DedupSpec extends SparkSpec {
     NoveltyIndex.append(spark, crawl, dir, "text", 3)
     assert(listing() === admitted, "a fully-seen append() wrote files")
     val rows = NoveltyIndex.probeAndAdmit(spark, NoveltyIndex.load(spark, dir),
-      crawl, "source", "text", 3, prefilter = true)
+      crawl, "source", "text", 3)
     assert(rows.nonEmpty && rows.forall(_.getLong(2) === 0L))
     assert(listing() === admitted, "a fully-seen probeAndAdmit wrote files")
     assert(!new java.io.File(e0).list().exists(_.startsWith("_append-")),
@@ -1377,32 +1359,52 @@ class DedupSpec extends SparkSpec {
       "snapshot's rows equal its probe, and the new epoch holds old ∪ crawl " +
       "with no gh twice in its files") {
     import graft.dedup.NoveltyIndex
+    import spark.implicits._
     val docs = util.Tables(spark, sf).documents
     val old = docs.filter(col("doc_id") % 3 === 0)
     val crawl = docs.filter(col("doc_id") % 3 === 1)
     val dir = java.nio.file.Files.createTempDirectory("graft-nvadvance").toString
     NoveltyIndex.init(spark, old, dir, "text", 3)
     val stale = NoveltyIndex.load(spark, dir)
-    val want = noveltyRows(NoveltyIndex.probe(stale, crawl, "source", "text", 3)
-      .collect())
+    val want = recomputedNovelty(crawl, old)
     assert(want.exists(_._3 > 0L), "fixture must plant novelty")
+    assert(noveltyRows(NoveltyIndex.probe(stale, crawl, "source", "text", 3)
+      .collect()) === want)
 
     // a compaction publishes epoch 1 between the load and the admit
     assert(NoveltyIndex.compact(spark, dir) === 1L)
     val got = NoveltyIndex.probeAndAdmit(spark, stale, crawl,
-      "source", "text", 3, prefilter = true)
+      "source", "text", 3)
     assert(noveltyRows(got) === want)
 
-    val now = NoveltyIndex.load(spark, dir)
-    assert(now.epoch === 1L)
-    val held = now.grams.collect().map(_.getLong(0)).toSeq
+    def held = NoveltyIndex.load(spark, dir).grams.collect().map(_.getLong(0)).toSeq
+    def gramsOf(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      NoveltyIndex.gramHashes(d, "text", 3).distinct()
+        .collect().map(_.getLong(0)).toSet
+    assert(NoveltyIndex.load(spark, dir).epoch === 1L)
     assert(held.size === held.distinct.size, "a gh is held twice in epoch 1")
-    assert(held.toSet === NoveltyIndex.gramHashes(old.unionByName(crawl),
-      "text", 3).distinct().collect().map(_.getLong(0)).toSet)
-    // the admission's bloom row landed in epoch 1 too: the prefiltered
+    assert(held.toSet === gramsOf(old.unionByName(crawl)))
+    // the admission's bloom row landed in epoch 1 too: the sketched
     // probe sees the crawl as fully seen
-    assert(noveltyRows(NoveltyIndex.probe(now, crawl, "source", "text", 3,
-      prefilter = true).collect()).forall(_._3 === 0L))
+    assert(noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, dir),
+      crawl, "source", "text", 3).collect()).forall(_._3 === 0L))
+
+    // append's race: a crawl of genuinely novel grams admitted through
+    // the same stale snapshot (append's body, with a compaction
+    // published between its load and its write) lands in the CURRENT
+    // epoch, exactly once
+    val extra = Seq((900001L, "zq1 zq2 zq3 zq4", "srcX"))
+      .toDF("doc_id", "text", "source")
+    val extraGrams = gramsOf(extra)
+    assert(extraGrams.nonEmpty && (extraGrams -- held.toSet) === extraGrams,
+      "fixture grams must be genuinely novel")
+    assert(noveltyRows(NoveltyIndex.probeAndAdmit(spark, stale, extra,
+      "source", "text", 3)) === Seq(("srcX", 2L, 2L, 10000L)))
+    assert(held.size === held.distinct.size, "a gh is held twice in epoch 1")
+    assert(held.toSet === gramsOf(old.unionByName(crawl)) ++ extraGrams,
+      "a raced append must be re-appended into the advanced epoch")
+    assert(noveltyRows(NoveltyIndex.probe(NoveltyIndex.load(spark, dir),
+      extra, "source", "text", 3).collect()).forall(_._3 === 0L))
   }
 
   test("dedup_inline: planted within-doc repeats collapse keep-first; " +

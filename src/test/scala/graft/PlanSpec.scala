@@ -72,29 +72,39 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("WindowGroupLimit"), plan.take(800))
   }
 
-  test("q_crawl_novelty_probe: novelty rides an anti-join against the " +
-      "SAVED gram index — the old corpus text is never re-derived") {
-    val probe = planOf(CurationQueries.qCrawlNoveltyProbe(spark, sf))
+  test("q_crawl_novelty_probe: novelty rides one equi-keyed existence " +
+      "join against the SAVED gram index — the old corpus text is never " +
+      "re-derived") {
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val df = CurationQueries.qCrawlNoveltyProbe(spark, sf)
+    val probe = planOf(df)
     assert(!probe.contains("CartesianProduct"), probe.take(800))
-    assert(probe.contains("LeftAnti"),
-      "the seen-set membership test must compile to an anti-join")
+    assert(!probe.contains("LeftAnti"), probe.take(1200))
+    val existence = df.queryExecution.optimizedPlan.collect {
+      case j @ Join(_, _, ExistenceJoin(_), _, _) => j
+    }
+    assert(existence.size === 1 &&
+      existence.forall(j => ExtractEquiJoinKeys.unapply(j).exists(_._2.nonEmpty)),
+      "the seen-set membership test must compile to ONE equi-keyed " +
+        s"existence join:\n${df.queryExecution.optimizedPlan}")
     assert(probe.contains("novelty_index"),
       "the build side must scan the persisted index files")
     // scan accounting: the validator reads the recrawl branches once
     // (v - 1 scans) plus ONE old-corpus gram derivation; the probe
-    // (prefilter ON since r13) reads the recrawl branches THRICE —
-    // n_grams, the bloom-negative novel branch, and the bloom-positive
-    // residue each consume the new side (the deliberate trade
-    // documented on probe(): re-deriving the crawl-scale side beats
-    // distinct-exchanging or caching the corpus-scale index) — and the
-    // old-corpus derivation NOWHERE
+    // reads the recrawl branches TWICE — the bloom-negative branch and
+    // the bloom-positive residue each consume the new side (the
+    // deliberate trade documented on probe(): re-deriving the
+    // crawl-scale side beats distinct-exchanging or caching the
+    // corpus-scale index) — and the old-corpus derivation NOWHERE
     def docScans(plan: String) =
       "documents\\.parquet".r.findAllIn(plan).size
     val validatorScans =
       docScans(planOf(CurationQueries.qCrawlNovelty(spark, sf)))
-    assert(docScans(probe) === 3 * (validatorScans - 1),
+    assert(docScans(probe) === 2 * (validatorScans - 1),
       s"probe scans documents ${docScans(probe)}x vs validator " +
-        s"${validatorScans}x — expected exactly three recrawl-branch " +
+        s"${validatorScans}x — expected exactly two recrawl-branch " +
         "derivations and NO old-corpus scan:\n" + probe.take(1200))
   }
 
@@ -681,23 +691,20 @@ class PlanSpec extends SparkSpec {
         plan.take(1200))
   }
 
-  test("q_crawl_novelty_probe (prefilter ON): the sketch rides ONE " +
-      "one-row broadcast; the exact anti-join survives for the " +
-      "positive residue; no cartesian") {
+  test("q_crawl_novelty_probe: the sketch is a held_bloom_contains " +
+      "test that no join ships; the exact existence join survives for " +
+      "the positive residue; no cartesian") {
     val plan = planOf(
       graft.queries.CurationQueries.qCrawlNoveltyProbe(spark, sf))
     assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    // every nested-loop is a deliberate ONE-ROW broadcast: the bloom
-    // sketch once per consumer of the flagged gram stream (novel-by-
-    // sketch branch + residue branch) plus the recrawl fixture's
-    // max-doc-id scalar in each of the three crawl-side derivations
-    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 5,
+    // the only nested-loops are the recrawl fixture's one-row
+    // max-doc-id scalar, once in each of the two crawl-side derivations
+    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 2,
       plan.take(1200))
-    assert(plan.toLowerCase.contains("bloommightcontain") ||
-      plan.contains("graft_bloom_contains"),
-      "the sketch prefilter must appear in the plan:\n" + plan.take(1200))
-    assert(plan.contains("LeftAnti"),
-      "the exact anti-join must survive for bloom-positive grams:\n" +
+    assert(plan.contains("held_bloom_contains(k="),
+      "the sketch test must appear in the plan:\n" + plan.take(1200))
+    assert(plan.contains("ExistenceJoin"),
+      "the exact existence join must survive for bloom-positive grams:\n" +
         plan.take(1200))
   }
 
@@ -712,42 +719,46 @@ class PlanSpec extends SparkSpec {
       "the approximate tier must not join anything:\n" + plan.take(1200))
     assert(!plan.contains("novelty_index"),
       "the gram index files must never be opened:\n" + plan.take(1200))
-    // the only nested-loops are one-row broadcasts: the sketch plus
-    // the recrawl fixture's max-doc-id scalar
-    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 2,
+    // the only nested-loop is the recrawl fixture's one-row
+    // max-doc-id scalar; the sketch rides held_bloom_contains
+    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 1,
       plan.take(1200))
-    assert(plan.toLowerCase.contains("bloommightcontain") ||
-      plan.contains("graft_bloom_contains"), plan.take(1200))
+    assert(plan.contains("held_bloom_contains(k="), plan.take(1200))
   }
 
   test("the fused crawl batch pins one frame whose exact membership test " +
       "is an equi-keyed ExistenceJoin, never a null-aware nested loop") {
     import graft.dedup.NoveltyIndex
     import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
-    import org.apache.spark.sql.catalyst.plans.{Cross, ExistenceJoin, Inner}
+    import org.apache.spark.sql.catalyst.plans.ExistenceJoin
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.execution.LocalTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     import org.apache.spark.sql.functions.col
     val docs = graft.util.Tables(spark, sf).documents
     val dir = java.nio.file.Files.createTempDirectory("graft-nvpin").toString
     NoveltyIndex.init(spark, docs.filter(col("doc_id") % 2 === 0), dir, "text", 3)
     val snap = NoveltyIndex.load(spark, dir)
-    Seq(false, true).foreach { pf =>
-      val qe = NoveltyIndex.seenFlagged(snap, docs.filter(col("doc_id") % 2 === 1),
-        "source", "text", 3, prefilter = pf).queryExecution
+    assert(snap.bloom.nonEmpty)
+    Seq(snap, snap.copy(bloom = None)).foreach { s =>
+      val what = s"sketched = ${s.bloom.nonEmpty}"
+      val qe = NoveltyIndex.seenFlagged(s, docs.filter(col("doc_id") % 2 === 1),
+        "source", "text", 3).queryExecution
       val existence = qe.optimizedPlan.collect {
         case j @ Join(_, _, ExistenceJoin(_), _, _) => j
       }
-      assert(existence.size === 1, s"prefilter = $pf:\n${qe.optimizedPlan}")
+      assert(existence.size === 1, s"$what:\n${qe.optimizedPlan}")
       assert(existence.forall(j => ExtractEquiJoinKeys.unapply(j).exists(_._2.nonEmpty)),
         s"the existence join must be equi-keyed:\n${qe.optimizedPlan}")
-      // the only nested loops are the sketch's one-row broadcast, once
-      // per branch of the prefiltered pin
+      // the sketch is one held membership test per branch of the pin,
+      // and no nested loop ships it
+      val sketchTests = qe.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect {
+          case e: graft.functions.HeldBloomContains => e }.size).sum
+      }.sum
+      assert(sketchTests === (if (s.bloom.nonEmpty) 2 else 0),
+        s"$what:\n${qe.optimizedPlan}")
       val nested = qe.sparkPlan.collect { case j: BroadcastNestedLoopJoinExec => j }
-      assert(nested.forall(j => (j.joinType == Inner || j.joinType == Cross) &&
-        j.right.isInstanceOf[LocalTableScanExec]) &&
-        nested.size === (if (pf) 2 else 0), s"prefilter = $pf:\n${qe.sparkPlan}")
+      assert(nested.isEmpty, s"$what:\n${qe.sparkPlan}")
     }
   }
 }

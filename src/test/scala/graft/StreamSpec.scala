@@ -1303,16 +1303,15 @@ class StreamSpec extends SparkSpec {
     } finally q.stop()
     assert(got.size === 4)
     val snap = NoveltyIndex.load(spark, idxDir)
-    Seq(false, true).foreach { pf =>
-      val rows = NoveltyIndex.probe(snap, docs, "source", "text", 3,
-        prefilter = pf).collect()
+    Seq(snap, snap.copy(bloom = None)).foreach { s =>
+      val rows = NoveltyIndex.probe(s, docs, "source", "text", 3).collect()
       assert(rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap === novelty(docs, seen), s"prefilter = $pf")
+        .toMap === novelty(docs, seen), s"sketched = ${s.bloom.nonEmpty}")
     }
   }
 
   test("noveltyStream: a warm batch is one pinned probe pass, one rollup " +
-      "and one write — at most 9 jobs and 4 SQL executions, each step " +
+      "and one write — at most 8 jobs and 4 SQL executions, each step " +
       "under its call-site job description") {
     import graft.dedup.NoveltyIndex
     import org.apache.spark.scheduler._
@@ -1360,7 +1359,7 @@ class StreamSpec extends SparkSpec {
     val listing = described.mkString("\n  ", "\n  ", "")
     assert(rows.asScala.exists(_.getLong(2) > 0L),
       "the warm batch must admit novel grams (so it writes)")
-    assert(described.size <= 9,
+    assert(described.size <= 8,
       s"a warm batch ran ${described.size} jobs:$listing")
     assert(executions.size <= 4, s"a warm batch ran ${executions.size} SQL " +
       s"executions:${executions.asScala.mkString("\n  ", "\n  ", "")}\njobs:$listing")

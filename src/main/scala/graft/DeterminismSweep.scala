@@ -71,7 +71,6 @@ object DeterminismSweep {
     val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.queries.map { case (name, fn) =>
       name -> (try Right(fn(spark, dir).collect())

@@ -59,7 +59,9 @@ object GraftSession {
     */
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** Build the session and register graft's native functions. */
+  /** Build the session and register graft's native functions for SQL
+    * text (graft's Scala helpers need no registration).
+    */
   def create(master: String = s"local[$defaultCpus]"): SparkSession = {
     val spark = builder(master).getOrCreate()
     graft.functions.GraftFunctions.register(spark)

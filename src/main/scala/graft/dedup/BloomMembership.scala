@@ -2,7 +2,8 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{BloomUtil, GraftFunctions}
+import org.apache.spark.sql.graft.ColumnBridge
+import graft.functions.{BloomFilterAgg, BloomMightContain, BloomUtil}
 
 /** Membership at corpus scale: "which probe rows' keys already exist in
   * the seen corpus" — exact answers at bloom-prefilter cost.
@@ -20,16 +21,23 @@ import graft.functions.{BloomUtil, GraftFunctions}
   */
 object BloomMembership {
 
-  /** One-row frame holding the bloom filter (column `graft_bloom`) of
-    * `key` over `seen`, sized for expectedN keys at the given fpp.
+  /** The prefilter half: probe rows the bloom filter of `seenKey` over
+    * `seen` (sized for expectedN keys at fpp) does not rule out — every
+    * match plus ~fpp of the rest. The filter is one row, broadcast to
+    * every probe task; the test is a codegen'd hash per row.
     */
-  def seenFilter(seen: DataFrame, key: Column, expectedN: Long,
+  private[graft] def prefilter(probe: DataFrame, seen: DataFrame,
+      probeKey: Column, seenKey: Column, expectedN: Long,
       fpp: Double): DataFrame = {
-    GraftFunctions.register(seen.sparkSession)
-    val m = BloomUtil.optimalNumBits(expectedN, fpp)
-    val k = BloomUtil.optimalNumHashes(m, expectedN)
-    seen.agg(call_function("graft_bloom_agg",
-      xxhash64(key), lit(m), lit(k)).as("graft_bloom"))
+    val (m, k) = BloomUtil.geometry(expectedN, fpp)
+    val filter = seen.agg(ColumnBridge.column(BloomFilterAgg(
+      ColumnBridge.expression(xxhash64(seenKey)), m, k).toAggregateExpression())
+      .as("graft_bloom"))
+    probe.crossJoin(broadcast(filter))
+      .filter(ColumnBridge.column(BloomMightContain(
+        ColumnBridge.expression(col("graft_bloom")),
+        ColumnBridge.expression(xxhash64(probeKey)))))
+      .drop("graft_bloom")
   }
 
   /** Probe rows whose key exists in `seen` — bloom-prefiltered, then
@@ -37,17 +45,11 @@ object BloomMembership {
     * reach the output.
     */
   def matches(probe: DataFrame, seen: DataFrame, probeKey: Column,
-      seenKey: Column, expectedN: Long, fpp: Double = 0.01): DataFrame = {
-    val candidates = probe
-      .crossJoin(broadcast(seenFilter(seen, seenKey, expectedN, fpp)))
-      .filter(call_function("graft_bloom_contains",
-        col("graft_bloom"), xxhash64(probeKey)))
-      .drop("graft_bloom")
+      seenKey: Column, expectedN: Long, fpp: Double = 0.01): DataFrame =
     // no distinct() on the seen side: left_semi already emits each
     // candidate at most once, and a pre-dedup would shuffle+aggregate
     // the corpus-scale seen side — the cost the bloom prefilter saves
-    candidates.join(
+    prefilter(probe, seen, probeKey, seenKey, expectedN, fpp).join(
       seen.select(seenKey.as("graft_seen_k")),
       probeKey === col("graft_seen_k"), "left_semi")
-  }
 }

@@ -47,7 +47,6 @@ object EmbeddingDedup {
   def cellPairs(embs: DataFrame, idCol: String, vecCol: String, tau: Double,
       c: Int = 16, iters: Int = 2, nProbe: Int = 2,
       centroids: Option[Array[(Int, Array[Float])]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embs.sparkSession)
     val cents = centroids.getOrElse(
       graft.sim.Knn.fitCentroids(embs, idCol, vecCol, c, iters))
     val assigned = graft.sim.Knn.assignCells(
@@ -78,7 +77,6 @@ object EmbeddingDedup {
     * oracle agree on boundary pairs).
     */
   def pairs(embs: DataFrame, idCol: String, vecCol: String, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(embs.sparkSession)
     val withNorm = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
       Vectors.normD(col(vecCol)).as("nrm"))
     // one side broadcasts (they are the same table — force it so the

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.text.TextOps
 
 /** MinHash + banded LSH near-duplicate detection.
@@ -61,11 +62,10 @@ object MinHashLSH {
     * (doc, shingle) pair — the dominant data movement of the whole
     * dedup pipeline at corpus scale.
     */
-  def signatures(sh: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
+  def signatures(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"),
-      call_function("graft_minhash_lanes", col("shingles")).as("lanes"))
-  }
+      ColumnBridge.column(graft.functions.MinHashLanes(
+        ColumnBridge.expression(col("shingles")))).as("lanes"))
 
   /** (doc_id, band_id, band_hash) — NumBands rows per doc, still
     * map-only (band hash = xxhash64 over the band's lanes).

@@ -189,21 +189,17 @@ object NoveltyIndex {
   }
 
   /** Build the epoch's sketch fresh over its pinned distinct gram set
-    * of `n0` grams — init's and compact's path (right-sized: n0 is the
+    * of `n` grams — init's and compact's path (right-sized: n is the
     * actual distinct gram count). Degenerate-corpus guards: an empty
     * gram set (empty corpus) stays sketchless (probe's documented
-    * pre-sketch fallback), and the sizing n is floored at 64 keys so
-    * optimalNumHashes never exceeds [[graft.functions.BloomFilterAgg]]'s
-    * k ≤ 32 bound on a near-empty gram set (n = 1 would size k = 44;
-    * flooring only over-sizes the filter, which tightens fpp).
+    * pre-sketch fallback); a near-empty one is sized by
+    * [[graft.functions.BloomUtil.geometry]]'s floor.
     */
-  private def writeFreshBloom(spark: SparkSession, epochDir: String,
-      grams: DataFrame, n0: Long): Unit = {
-    if (n0 == 0L) return
-    val n = math.max(64L, n0)
-    val m = graft.functions.BloomUtil.optimalNumBits(n, BloomFpp)
-    val k = math.min(32, graft.functions.BloomUtil.optimalNumHashes(m, n))
-    grams.agg(bloomAgg(spark, col("gh"), m, k)).coalesce(1)
+  private def writeFreshBloom(epochDir: String, grams: DataFrame,
+      n: Long): Unit = {
+    if (n == 0L) return
+    val (m, k) = graft.functions.BloomUtil.geometry(n, BloomFpp)
+    grams.agg(bloomAgg(col("gh"), m, k)).coalesce(1)
       .write.mode("append").parquet(bloomPath(epochDir))
   }
 
@@ -212,11 +208,11 @@ object NoveltyIndex {
     * hash; [[graft.functions.BloomUtil]] re-avalanches it (splitmix64
     * double hashing), so feeding it raw is sound; null gh are skipped.
     */
-  private def bloomAgg(spark: SparkSession, gh: org.apache.spark.sql.Column,
-      numBits: Int, numHashes: Int): org.apache.spark.sql.Column = {
-    graft.functions.GraftFunctions.register(spark)
-    call_function("graft_bloom_agg", gh, lit(numBits), lit(numHashes)).as("bf")
-  }
+  private def bloomAgg(gh: org.apache.spark.sql.Column, numBits: Int,
+      numHashes: Int): org.apache.spark.sql.Column =
+    ColumnBridge.column(graft.functions.BloomFilterAgg(
+      ColumnBridge.expression(gh), numBits, numHashes).toAggregateExpression())
+      .as("bf")
 
   /** Write a fresh epoch (init's and compact's path): the distinct gram
     * set is pinned and counted ONCE, and the buckets (sized from the
@@ -236,7 +232,7 @@ object NoveltyIndex {
         .repartition(nb, col("b"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(gramsPath(epochDir))
-      writeFreshBloom(spark, epochDir, grams, n)
+      writeFreshBloom(epochDir, grams, n)
     } finally graft.util.Caches.release(grams)
   }
 
@@ -414,7 +410,7 @@ object NoveltyIndex {
       val obs = new org.apache.spark.sql.Observation("novelty_bloom_row")
       val geometry = snapshot.bloom.map(graft.functions.BloomUtil.deserializeWords)
       val observed = geometry.fold(pinned) { case (k, words) =>
-        pinned.observe(obs, bloomAgg(spark, when(unseen, col("gh")),
+        pinned.observe(obs, bloomAgg(when(unseen, col("gh")),
           words.length * 64, k))
       }
       val rows = described(spark, "rollup") {
@@ -551,7 +547,7 @@ object NoveltyIndex {
     val geometry = loadBloom(spark, epochDir)
       .map(graft.functions.BloomUtil.deserializeWords)
     val nNovel = geometry.fold(novel) { case (k, words) =>
-      novel.observe(obs, bloomAgg(spark, col("gh"), words.length * 64, k))
+      novel.observe(obs, bloomAgg(col("gh"), words.length * 64, k))
     }.count()
     if (nNovel > 0L)
       writeAppend(spark, epochDir,

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.text.TextOps
 
 /** 64-bit SimHash near-duplicate detection with Hamming-ball LSH.
@@ -32,7 +33,8 @@ object SimHash {
     * `SimHash64` codegen expression (one pass over the tokens; the
     * pure-`functions._` alternative needs 64 interpreted folds).
     */
-  def simhash(toks: Column): Column = call_function("graft_simhash64", toks)
+  def simhash(toks: Column): Column =
+    ColumnBridge.column(graft.functions.SimHash64(ColumnBridge.expression(toks)))
 
   /** (id, simhash) for non-empty docs. */
   /** Fan-out placement: corpus-scale callers ([[nearDuplicates]],
@@ -42,7 +44,6 @@ object SimHash {
     * overhead for no parallelism win (the MinHashLSH.shingled note).
     */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)

@@ -101,6 +101,19 @@ object BloomUtil {
   /** Optimal k for m bits / n items. */
   def optimalNumHashes(m: Long, n: Long): Int =
     math.max(1, math.round(m.toDouble / n * math.log(2)).toInt)
+
+  /** (numBits, numHashes) for n keys at fpp — the sizing rule of every
+    * filter graft builds. n is floored at 64 and k capped at 32, the
+    * [[BloomFilterAgg]] bound: the plain optimum for n = 1 is m = 64,
+    * k = 44, which the aggregate rejects. Flooring only over-sizes the
+    * filter, which tightens fpp; for n ≥ 64 the geometry is the plain
+    * optimum.
+    */
+  def geometry(n: Long, fpp: Double): (Int, Int) = {
+    val floored = math.max(64L, n)
+    val m = optimalNumBits(floored, fpp)
+    (m, math.min(32, optimalNumHashes(m, floored)))
+  }
 }
 
 /** Aggregate: bloom filter (binary) of the non-null LONG inputs —

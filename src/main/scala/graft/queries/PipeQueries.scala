@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.pipeline.{MultiPipeline, Pipes}
 import graft.ops.AggregatePackage
 import graft.util.Tables
@@ -328,7 +329,6 @@ object PipeQueries {
     * (the narrow-index pattern; released in finally).
     */
   def aggBitmapOps(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val ev = Tables(s, dir).events.select(col("event_type"), col("user_id"))
     val segs = ev
       .groupBy(col("event_type"),
@@ -355,8 +355,9 @@ object PipeQueries {
         && col("a.event_type") < col("b.event_type"))
       .groupBy(col("a.event_type").as("type_a"),
         col("b.event_type").as("type_b"))
-      .agg(sum(call_function("graft_bitmap_and_count",
-        col("a.bm"), col("b.bm"))).as("n_both"))
+      .agg(sum(ColumnBridge.column(graft.functions.BitmapAndCount(
+        ColumnBridge.expression(col("a.bm")),
+        ColumnBridge.expression(col("b.bm"))))).as("n_both"))
     val pairs = totals.as("ta")
       .join(totals.as("tb"), col("ta.event_type") < col("tb.event_type"))
       .select(col("ta.event_type").as("type_a"),
@@ -404,15 +405,15 @@ object PipeQueries {
     * collisions (tiny width) is gated in FunctionsSpec.
     */
   def aggCountmin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val ev = Tables(s, dir).events
     val sketch = ev.agg(
       expr("count_min_sketch(event_type, 0.0001d, 0.999d, 42)").as("cms"))
     ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_exact"))
       .crossJoin(broadcast(sketch))
       .select(col("event_type"), col("n_exact"),
-        call_function("graft_cms_estimate", col("cms"), col("event_type"))
-          .as("n_est"))
+        ColumnBridge.column(graft.functions.CmsEstimate(
+          ColumnBridge.expression(col("cms")),
+          ColumnBridge.expression(col("event_type")))).as("n_est"))
       .orderBy(col("event_type"))
   }
 
@@ -688,10 +689,11 @@ object PipeQueries {
     * plain GROUP BY top-20.
     */
   def aggHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables(s, dir).documents
       .select(explode(graft.text.TextOps.tokens(col("text"))).as("word"))
-      .agg(call_function("graft_heavy_hitters", col("word"), lit(100)).as("hh"))
+      .agg(ColumnBridge.column(graft.functions.HeavyHitters(
+        ColumnBridge.expression(col("word")), 100).toAggregateExpression())
+        .as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item").as("item"), col("e.cnt").as("cnt"), col("e.err").as("err"))
       .orderBy(col("cnt").desc, col("item"))

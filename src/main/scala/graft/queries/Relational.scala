@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.util.Tables
 
 /** Core relational coverage (SURVEY.md §2.1).
@@ -1282,7 +1283,6 @@ object Relational {
     * tight.
     */
   def qErLink(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val part = Tables(s, dir).part
     val mode = pmod(col("p_partkey"), lit(4))
     val nm = col("p_name")
@@ -1307,8 +1307,9 @@ object Relational {
       .orderBy(col("score_q4").desc, col("entity"))
     candidates
       .withColumn("score_q4",
-        floor(call_function("graft_jaro_winkler",
-          col("mention"), col("entity")) * 10000 + 0.5).cast("long"))
+        floor(ColumnBridge.column(graft.functions.JaroWinklerSim(
+          ColumnBridge.expression(col("mention")),
+          ColumnBridge.expression(col("entity")))) * 10000 + 0.5).cast("long"))
       .filter(col("score_q4") >= ErLinkMinScoreQ4)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
@@ -1359,38 +1360,30 @@ object Relational {
     * to broadcast: the dim's join keys fold into a [[graft.functions
     * .BloomFilterAgg]] bloom filter (KB-scale, partial-aggregating
     * through the shuffle), ONE one-row broadcast carries it to every
-    * fact partition, and `graft_bloom_contains` discards ~98% of the
-    * fact MAP-SIDE — the exact shuffle-hash join then runs over
-    * candidates only. Bloom answers have no false negatives, so
-    * prefilter + exact join ≡ plain join; the oracle RUNS the plain
-    * join, and hash equality is the no-rows-lost proof. (Spark's own
+    * fact partition, and the bloom test discards ~98% of the fact
+    * MAP-SIDE ([[graft.dedup.BloomMembership]]'s prefilter half) — the
+    * exact shuffle-hash join then runs over candidates only. Bloom
+    * answers have no false negatives, so prefilter + exact join ≡
+    * plain join; the oracle RUNS the plain join, and hash equality is
+    * the no-rows-lost proof. (Spark's own
     * runtime bloom-filter injection makes the same move when its size
     * thresholds trigger; this face is the explicit, threshold-free
     * form, and dedup_bloom is the same contract as document
     * MEMBERSHIP — this is the JOIN-accelerator form, dim payload
     * columns carried through.) Fit cost: one count of the filtered dim
-    * to size the filter (optimal m, k at fpp 1e-3). All aggregates in
-    * exact integer ten-thousandths/hundredths — no float-sum parity
-    * surface.
+    * to size the filter ([[graft.functions.BloomUtil.geometry]] at fpp
+    * 1e-3). All aggregates in exact integer ten-thousandths/hundredths
+    * — no float-sum parity surface.
     */
   def qBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = Tables(s, dir)
     val dim = t.orders.filter(col("o_totalprice") > BloomJoinMinTotal)
       .select(col("o_orderkey"),
         month(col("o_orderdate")).cast("long").as("omonth"))
-    val nDim = math.max(1L, dim.count())
-    val bits = graft.functions.BloomUtil.optimalNumBits(nDim, 0.001)
-    val k = graft.functions.BloomUtil.optimalNumHashes(bits.toLong, nDim)
-    val bloom = dim.agg(call_function("graft_bloom_agg",
-      xxhash64(col("o_orderkey")), lit(bits), lit(k)).as("bf"))
-    val pruned = t.lineitem
-      .select(col("l_orderkey"), col("l_quantity"),
-        col("l_extendedprice"), col("l_discount"), col("l_returnflag"))
-      .crossJoin(broadcast(bloom)) // one KB-scale row to every task
-      .filter(call_function("graft_bloom_contains",
-        col("bf"), xxhash64(col("l_orderkey"))))
-      .drop("bf")
+    val pruned = graft.dedup.BloomMembership.prefilter(
+      t.lineitem.select(col("l_orderkey"), col("l_quantity"),
+        col("l_extendedprice"), col("l_discount"), col("l_returnflag")),
+      dim, col("l_orderkey"), col("o_orderkey"), dim.count(), 0.001)
     // exact join kept a SHUFFLE join on purpose: broadcasting the dim
     // would hide the problem the bloom solves (a dim too big to ship)
     pruned.join(dim.hint("merge"),

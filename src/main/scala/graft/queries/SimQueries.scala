@@ -82,7 +82,6 @@ object SimQueries {
     */
   def knnHamming(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val packed = Tables(s, dir).embeddings
       .select(col("vec_id"), graft.sim.Vectors.signPack(col("embedding")).as("code"))
     val q = broadcast(packed.filter(col("vec_id") < NQueries)
@@ -125,7 +124,6 @@ object SimQueries {
     */
   def knnHammingRerank(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = Tables(s, dir).embeddings
     val packed = e.select(col("vec_id"),
       graft.sim.Vectors.signPack(col("embedding")).as("code"),
@@ -267,7 +265,6 @@ object SimQueries {
     */
   def knnHardNegatives(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = Tables(s, dir).embeddings
     val qs = broadcast(e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("label").as("q_label"),

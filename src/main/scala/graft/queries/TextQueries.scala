@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.text.TextOps
 import graft.util.Tables
 
@@ -114,12 +115,10 @@ object TextQueries {
   /** Rolling polynomial hash fingerprint per doc — deterministic, so the
     * oracle replays the identical fold in DuckDB via list_reduce.
     */
-  def textFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def textFingerprint(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents
       .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
       .orderBy(col("doc_id"))
-  }
 
   val textFingerprintSql: String =
     """SELECT doc_id,
@@ -1123,7 +1122,8 @@ object TextQueries {
     Tables(s, dir).documents
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),
-        call_function("graft_deflate_size", col("text")).as("z_bytes"))
+        ColumnBridge.column(graft.functions.DeflateSize(
+          ColumnBridge.expression(col("text")))).as("z_bytes"))
       .withColumn("ratio",
         when(col("n_bytes") > 0,
           round(col("z_bytes").cast("double") / col("n_bytes"), 4)))

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** k-nearest-neighbor search over an `array<float>` embedding column.
   *
@@ -41,17 +40,20 @@ object Knn {
   }
 
   private[sim] def withNorm(df: DataFrame, idCol: String, vecCol: String,
-      idAs: String, vecAs: String, nAs: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
+      idAs: String, vecAs: String, nAs: String): DataFrame =
     df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
       Vectors.normD(col(vecCol)).as(nAs))
-  }
+
+  /** The scored pair's cosine, rounded to 6: query (qv, qn) against
+    * neighbor (nv, nn).
+    */
+  private def pairCos: Column = round(
+    Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
+      col("qn"), col("nn")), 6)
 
   private def scorePairs(qs: DataFrame, corpus: DataFrame): DataFrame =
     qs.join(corpus, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(
-        Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
-          col("qn"), col("nn")), 6))
+      .withColumn("cos", pairCos)
 
   /** Exact brute-force top-k (query set broadcast). The corpus side is
     * fanned out to the cluster's default parallelism before the pair
@@ -124,9 +126,7 @@ object Knn {
     // identical across a pair's occurrences, so max() is just dedup.
     val scored = broadcast(qs).join(buckets, Seq("table_id", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), round(
-        Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
-          col("qn"), col("nn")), 6).as("cos"))
+      .select(col("query_id"), col("neighbor_id"), pairCos.as("cos"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cos")).as("cos"))
     pairTopK(scored, k)
@@ -168,7 +168,6 @@ object Knn {
     */
   def fitCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       c: Int, iters: Int): Array[(Int, Array[Float])] = {
-    GraftFunctions.register(corpus.sparkSession)
     val dimRow = corpus.select(size(col(vecCol))).head()
     val dim = dimRow.getInt(0)
     require(c.toLong * dim <= MaxDriverFitCells,
@@ -251,9 +250,7 @@ object Knn {
         explode(col("cells")).as("cell"))
     val scored = qs.join(indexed, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(
-        Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
-          col("qn"), col("nn")), 6))
+      .withColumn("cos", pairCos)
     pairTopK(scored, k)
   }
 
@@ -276,9 +273,7 @@ object Knn {
         explode(col("cells")).as("cell"))
     val scored = broadcast(qs).join(index.assigned, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(
-        Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
-          col("qn"), col("nn")), 6))
+      .withColumn("cos", pairCos)
     pairTopK(scored, k)
   }
 

@@ -2,13 +2,15 @@ package graft.sim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import graft.functions.{DotProductD, HammingDist, L2NormD, SignPack}
 
 /** Vector math over `array<float>` embedding columns, backed by graft's
   * native codegen expressions (graft.functions.DotProductD / L2NormD) —
   * the higher-order-function formulation is interpreted and allocates an
   * intermediate array per evaluation, which dominates all-pairs joins.
-  * Call `GraftFunctions.register(spark)` before use (every graft entry
-  * point does).
+  * Each helper wraps its expression directly into the Column, so it
+  * needs no function registration and resolves in any session.
   *
   * Precision contract: every product/sum is computed in DOUBLE with a
   * sequential left fold, matching the DuckDB oracle's
@@ -18,10 +20,11 @@ import org.apache.spark.sql.functions._
 object Vectors {
 
   /** Sequential-fold double dot product of two float vectors. */
-  def dotD(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dotD(a: Column, b: Column): Column =
+    column(DotProductD(expression(a), expression(b)))
 
   /** Euclidean norm in double. */
-  def normD(a: Column): Column = call_function("graft_l2norm", a)
+  def normD(a: Column): Column = column(L2NormD(expression(a)))
 
   /** Cosine similarity given precomputed norms (precompute per row before
     * a pair join so each norm is evaluated once, not once per pair).
@@ -43,8 +46,9 @@ object Vectors {
     cosineWithNorms(dotD(a, b), normD(a), normD(b))
 
   /** Sign-bit code: array<float> → array<long> (bit i = vec[i] > 0). */
-  def signPack(a: Column): Column = call_function("graft_sign_pack", a)
+  def signPack(a: Column): Column = column(SignPack(expression(a)))
 
   /** Hamming distance between two packed sign codes. */
-  def hamming(a: Column, b: Column): Column = call_function("graft_hamming", a, b)
+  def hamming(a: Column, b: Column): Column =
+    column(HammingDist(expression(a), expression(b)))
 }

@@ -278,17 +278,32 @@ class DedupSpec extends SparkSpec {
       "bloom prefilter + verify must reproduce the exact semi join")
   }
 
+  test("BloomMembership.matches sized for one key over a one-row seen " +
+      "set equals the left-semi join") {
+    import spark.implicits._
+    val seen = Seq((1L, "the only seen doc")).toDF("doc_id", "text")
+    val probe = Seq((11L, "the only seen doc"), (12L, "a novel doc"),
+      (13L, "another novel doc")).toDF("doc_id", "text")
+    val key = Dedup.normKey(col("text"))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val want = ids(probe.join(seen.select(key.as("graft_k")),
+      key === col("graft_k"), "left_semi"))
+    assert(want === Set(11L))
+    // the plain optimum for n = 1 is k = 44, past the aggregate's bound
+    assert(ids(BloomMembership.matches(probe, seen, key, key,
+      expectedN = 1L)) === want)
+  }
+
   test("bloom prefilter alone has no false negatives on the corpus split") {
     // candidate set (prefilter only, before verification) must contain
     // every true match — the one-sidedness the design relies on
     val docs = graft.util.Tables(spark, sf).documents
     val seen = docs.filter(pmod(col("doc_id"), lit(5)) < 4)
     val probe = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
-    val filter = BloomMembership.seenFilter(seen,
-      Dedup.normKey(col("text")), expectedN = 10000L, fpp = 0.001)
-    val candidates = probe.crossJoin(broadcast(filter))
-      .filter(call_function("graft_bloom_contains",
-        col("graft_bloom"), xxhash64(Dedup.normKey(col("text")))))
+    val candidates = BloomMembership.prefilter(probe, seen,
+        Dedup.normKey(col("text")), Dedup.normKey(col("text")),
+        expectedN = 10000L, fpp = 0.001)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val truth = DedupQueries.dedupBloom(spark, sf)
       .collect().map(_.getLong(0)).toSet

@@ -49,16 +49,109 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions registers the same function set") {
-    // unit-level: apply against a fresh extensions container
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    val g = new GraftExtensions()
-    g.apply(ext) // must not throw; wiring is typed
+    // unit-level: apply against a fresh extensions container that
+    // records every identifier it is handed
+    val injected = scala.collection.mutable.Buffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new GraftExtensions().apply(ext) // must not throw; wiring is typed
     // the conf path (spark.sql.extensions) and the imperative path
-    // (GraftFunctions.register) must expose the IDENTICAL name set —
-    // apply() iterates the same list names reads, so this can't drift
-    assert(g.names === GraftFunctions.names,
-      s"extension/imperative drift: only-ext=${g.names -- GraftFunctions.names} " +
-        s"only-imp=${GraftFunctions.names -- g.names}")
+    // (GraftFunctions.register) must expose the IDENTICAL name set
+    val names = injected.toSet
+    assert(injected.size === names.size, s"a name injected twice: $injected")
+    assert(names === GraftFunctions.names,
+      s"extension/imperative drift: only-ext=${names -- GraftFunctions.names} " +
+        s"only-imp=${GraftFunctions.names -- names}")
+  }
+
+  test("a wrong-arity SQL call fails with the list's arity error") {
+    GraftFunctions.register(spark)
+    val err = intercept[Exception] {
+      spark.sql("SELECT graft_dot(array(1.0F))").head()
+    }
+    assert(err.getMessage.contains("graft_dot expects 2 argument(s), got 1"),
+      s"expected the arity error, got: $err")
+  }
+
+  /** A session whose function registry holds no graft function: the
+    * Scala helpers below must analyze without one.
+    */
+  private def unregistered(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    val err = intercept[Exception] {
+      s.sql("SELECT graft_l2norm(array(1.0F))").head()
+    }
+    assert(err.getMessage.contains("UNRESOLVED_ROUTINE"), err.getMessage)
+    s
+  }
+
+  test("Vectors.dotD/normD/signPack/hamming resolve in a session that " +
+      "never registered graft's functions") {
+    val s = unregistered()
+    import s.implicits._
+    val r = Seq((Array(1.0f, 0.5f, -2.0f), Array(2.0f, 4.0f, 1.0f))).toDF("a", "b")
+      .select(graft.sim.Vectors.dotD(col("a"), col("b")),
+        graft.sim.Vectors.normD(col("a")),
+        graft.sim.Vectors.signPack(col("a")),
+        graft.sim.Vectors.hamming(graft.sim.Vectors.signPack(col("a")),
+          graft.sim.Vectors.signPack(col("b")))).head()
+    assert(math.abs(r.getDouble(0) - 2.0) < 1e-12)
+    assert(math.abs(r.getDouble(1) - math.sqrt(1.0 + 0.25 + 4.0)) < 1e-12)
+    assert(r.getSeq[Long](2) === Seq(3L)) // bits 0 and 1 positive
+    assert(r.getLong(3) === 1L) // only element 2's sign differs
+  }
+
+  test("SimHash.simhash resolves in a session that never registered " +
+      "graft's functions and equals the composable formulation") {
+    val s = unregistered()
+    import s.implicits._
+    val hs = transform(col("toks"), t => xxhash64(t))
+    val composed = (0 until 64).map { b =>
+      val cnt = aggregate(hs, lit(0), (acc, h) =>
+        acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1)
+          .otherwise(-1))
+      when(cnt > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
+    }.reduce(_.bitwiseOR(_))
+    val rows = Seq(Seq("a", "b", "a"), Seq("the", "quick", "brown", "fox"))
+      .toDF("toks")
+      .select(graft.dedup.SimHash.simhash(col("toks")), composed).collect()
+    rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+  }
+
+  test("MinHashLSH.signatures resolves in a session that never " +
+      "registered graft's functions and equals a driver-side replay") {
+    val s = unregistered()
+    import s.implicits._
+    import graft.functions.MinHashLanes.{A, B, NumLanes}
+    val docs = Seq((1L, Seq("x y z", "y z w")), (2L, Seq("totally different")))
+    val got = graft.dedup.MinHashLSH.signatures(docs.toDF("doc_id", "shingles"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    docs.foreach { case (id, sh) =>
+      val hs = sh.map { t =>
+        val b = t.getBytes("UTF-8")
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length,
+          graft.functions.MinHashLanes.Seed)
+      }
+      assert(got(id) === (0 until NumLanes).map(l => hs.map(A(l) * _ + B(l)).min))
+    }
+  }
+
+  test("BloomMembership.matches resolves in a session that never " +
+      "registered graft's functions and equals the exact semi join") {
+    val s = unregistered()
+    import s.implicits._
+    val seen = (1L to 50L).map(i => (i, s"seen $i")).toDF("doc_id", "text")
+    val probe = ((101L to 110L).map(i => (i, s"seen ${i - 100}")) ++
+      (201L to 210L).map(i => (i, s"novel $i"))).toDF("doc_id", "text")
+    val got = graft.dedup.BloomMembership.matches(probe, seen,
+        col("text"), col("text"), expectedN = 50L)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(got === (101L to 110L).toSet)
   }
 
   test("heavy hitters: exact when capacity exceeds cardinality") {

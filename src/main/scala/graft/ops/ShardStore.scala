@@ -124,12 +124,6 @@ object ShardStore {
     stampFormat(spark, Epochs.epochPath(dir, epoch))
   }
 
-  def currentEpoch(spark: SparkSession, dir: String): Long =
-    Epochs.current(spark, dir)
-
-  def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
-    Epochs.published(spark, dir)
-
   /** Pin the current epoch: the returned plans list only its files,
     * so later publishes (and their retirements, within retention)
     * cannot disturb a run that already started.

@@ -1,10 +1,12 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.util.LongAccumulator
 
 /** Structured-Streaming re-expression of the reference's streaming-job
   * surface (SURVEY.md §2.7). The design point: every transform here is
@@ -20,15 +22,12 @@ object Streams {
   /** Tumbling event-time window aggregation by event type — works on a
     * batch OR streaming frame (add `withWatermark` upstream for
     * streaming). Window start exported as epoch seconds for oracle
-    * parity across engines' timestamp conventions.
+    * parity across engines' timestamp conventions. A tumbling window is
+    * a hopping one whose slide is its length (Spark's `window(ts, d)`
+    * is `window(ts, d, d)`, the same plan).
     */
   def windowAgg(events: DataFrame, windowLen: String = "1 hour"): DataFrame =
-    events
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(unix_timestamp(col("w.start")).as("ws"),
-        col("event_type"), col("n_events"), col("sum_value"))
+    hoppingAgg(events, windowLen, windowLen)
 
   /** Hopping (sliding) window aggregation: each event lands in
     * size∕slide overlapping windows (Spark's `window(ts, size, slide)`
@@ -94,9 +93,11 @@ object Streams {
   final case class Scd2Row(user_id: Long, run_id: Long, state: String,
       valid_from_s: Long, valid_to_s: Long, n_events: Long)
 
-  /** Open-run state for [[scd2Stream]]. */
+  /** Open-run state for [[scd2Stream]]: event times in microseconds,
+    * the unit of its order key.
+    */
   final case class Scd2State(runId: Long, stateType: String,
-      fromMs: Long, n: Long, lastMs: Long)
+      fromUs: Long, n: Long, lastUs: Long)
 
   /** One closed day emitted by [[resampleStream]]. */
   final case class DayRow(user_id: Long, day: Long, filled_value: Double,
@@ -104,6 +105,70 @@ object Streams {
 
   /** Open-day state for [[resampleStream]]. */
   final case class DayState(curDay: Long, lastValue: Double, n: Long)
+
+  // ---- the in-order state fold behind the stateful twins ----------------
+
+  /** Event time at TimestampType's full microsecond precision:
+    * Timestamp.getTime is millisecond-truncated, so two events within
+    * the same millisecond would falsely tie, and the event_id tie-break
+    * could order them differently than a batch plan ordering on `ts`.
+    */
+  private def micros(ts: Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
+  /** The batch twins' `ORDER BY ts, event_id`. */
+  private def byMicros(e: Ev): (Long, Long) = (micros(e.ts), e.event_id)
+
+  /** The one champion rule of [[latestStream]] and [[cdcApplyStream]]:
+    * `e` is newer than the champion (`tsUs`, `eventId`) by (event time,
+    * event_id), [[latestBatch]]'s order.
+    */
+  private def newer(e: Ev, tsUs: Long, eventId: Long): Boolean = {
+    val t = micros(e.ts)
+    t > tsUs || (t == tsUs && e.event_id > eventId)
+  }
+
+  /** Epoch day of an event (UTC). */
+  private def dayOf(e: Ev): Long = Math.floorDiv(e.ts.getTime, 86400000L)
+
+  /** The per-key, in-order state fold every Append-mode twin runs:
+    * group by `key`, sort the micro-batch's events for each key by
+    * `orderKey` (the twin's batch `ORDER BY`), and fold them one by one
+    * through `step`, starting from the key's stored state (`init` for a
+    * key never seen); `step` returns the next state and emits rows, in
+    * event order, through its last argument. No timeout: state is one
+    * record per active key (a production deployment adds an
+    * idle-eviction timeout when the key space is unbounded —
+    * [[sessionizeStream]] shows the EventTimeTimeout shape).
+    *
+    * '''Delivery contract''': per key, batches must not regress in the
+    * order key. Within a batch the sort makes arrival order irrelevant;
+    * but an event in a LATER batch that is older than what the state
+    * has folded (`late`) cannot be stitched into already-emitted rows —
+    * append mode has no retractions, and the CDC/Kafka-compacted sources
+    * these twins consume are in order per key. Such cross-batch late
+    * events are DROPPED (never folded into a bogus transition) and
+    * COUNTED in `droppedLate`, so an operator alarms instead of
+    * diverging from the batch twin; the batch query is the
+    * reconciliation path. A key's first event is never late.
+    */
+  private def inOrder[K: Encoder, E, S: Encoder, O: Encoder](
+      events: Dataset[E], key: E => K, orderKey: E => (Long, Long), init: S,
+      droppedLate: Option[LongAccumulator], late: (S, E) => Boolean)(
+      step: (K, S, E, O => Unit) => S): Dataset[O] =
+    events.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (k: K, it: Iterator[E], state: GroupState[S]) =>
+          val out = Seq.newBuilder[O]
+          var st = state.getOption.getOrElse(init)
+          it.toSeq.sortBy(orderKey).foreach { e =>
+            if (st != null && late(st, e)) droppedLate.foreach(_.add(1L))
+            else st = step(k, st, e, out += _)
+          }
+          state.update(st)
+          out.result().iterator
+      }
 
   /** Streaming LOCF resampling — the incremental twin of the batch
     * daily-grid query (EventQueries.qResample): per user, track the
@@ -115,45 +180,27 @@ object Streams {
     * later-day event proves it over (same closed-rows-only contract,
     * and the same parity-spec exclusion, as [[scd2Stream]]).
     *
-    * '''Delivery contract''' (same as scd2Stream): per user, batches
-    * must not regress in event time. Cross-batch late events — older
-    * than the open day — are dropped and counted in `droppedLate`; the
-    * batch query is the reconciliation path. State is one 24-byte
-    * record per active user.
+    * Runs the [[inOrder]] fold and its delivery contract, ordered by
+    * qResample's (ts, event_id); an event for a day older than the open
+    * day is late. State is one 24-byte record per active user.
     */
   def resampleStream(events: Dataset[Ev],
-      droppedLate: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[DayRow] = {
+      droppedLate: Option[LongAccumulator] = None): Dataset[DayRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DayState, DayRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[Ev], state: GroupState[DayState]) =>
-          val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var closed = List.empty[DayRow]
-          var st = state.getOption.orNull
-          evs.foreach { e =>
-            val d = Math.floorDiv(e.ts.getTime, 86400000L)
-            st = st match {
-              case null => DayState(d, e.value, 1L)
-              case s if d < s.curDay =>
-                droppedLate.foreach(_.add(1L)); s
-              case s if d == s.curDay =>
-                // sorted within the batch + in-order across batches ⇒
-                // e is the day's latest event so far
-                s.copy(lastValue = e.value, n = s.n + 1)
-              case s =>
-                closed ::= DayRow(userId, s.curDay, s.lastValue, s.n)
-                var g = s.curDay + 1
-                while (g < d) { closed ::= DayRow(userId, g, s.lastValue, 0L); g += 1 }
-                DayState(d, e.value, 1L)
-            }
-          }
-          if (st != null) state.update(st)
-          closed.reverseIterator
+    inOrder[Long, Ev, DayState, DayRow](events, _.user_id, byMicros, null,
+        droppedLate, (s, e) => dayOf(e) < s.curDay) { (userId, s, e, emit) =>
+      val d = dayOf(e)
+      if (s == null) DayState(d, e.value, 1L)
+      // in order ⇒ e is the day's latest event so far
+      else if (d == s.curDay) s.copy(lastValue = e.value, n = s.n + 1)
+      else {
+        emit(DayRow(userId, s.curDay, s.lastValue, s.n))
+        var g = s.curDay + 1
+        while (g < d) { emit(DayRow(userId, g, s.lastValue, 0L)); g += 1 }
+        DayState(d, e.value, 1L)
       }
+    }
   }
 
   /** One completed conversion emitted by [[sequenceMatchStream]]. */
@@ -176,98 +223,61 @@ object Streams {
     * makes batch parity checkable (max n_conversion per user ==
     * the batch twin's n_conversions).
     *
-    * Same in-order delivery contract as [[scd2Stream]]: events sorted
-    * within a batch, batches must not regress per user (a regex over
-    * a journey string is order-total; the state machine inherits it).
+    * Runs the [[inOrder]] fold, ordered by the journey string's
+    * (es, event_id) — whole seconds, then event_id (a regex over a
+    * journey string is order-total; the state machine inherits it).
+    * It detects no late events: batches must simply not regress.
     */
   def sequenceMatchStream(events: Dataset[Ev]): Dataset[Conversion] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqState, Conversion](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[Ev], state: GroupState[SeqState]) =>
-          val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption.getOrElse(SeqState(0, 0L))
-          var out = List.empty[Conversion]
-          evs.foreach { e =>
-            st = e.event_type match {
-              case "error" => st.copy(stage = 0)
-              case "view" if st.stage == 0 => st.copy(stage = 1)
-              case "click" if st.stage == 1 => st.copy(stage = 2)
-              case "purchase" if st.stage == 2 =>
-                out ::= Conversion(userId, st.n + 1,
-                  Math.floorDiv(e.ts.getTime, 1000L))
-                SeqState(0, st.n + 1)
-              case _ => st
-            }
-          }
-          state.update(st)
-          out.reverseIterator
-      }
+    def es(e: Ev): Long = Math.floorDiv(e.ts.getTime, 1000L)
+    inOrder[Long, Ev, SeqState, Conversion](events, _.user_id,
+        e => (es(e), e.event_id), SeqState(0, 0L), None, (_, _) => false) {
+      (userId, st, e, emit) =>
+        e.event_type match {
+          case "error" => st.copy(stage = 0)
+          case "view" if st.stage == 0 => st.copy(stage = 1)
+          case "click" if st.stage == 1 => st.copy(stage = 2)
+          case "purchase" if st.stage == 2 =>
+            emit(Conversion(userId, st.n + 1, es(e)))
+            SeqState(0, st.n + 1)
+          case _ => st
+        }
+    }
   }
 
   /** Streaming SCD2 history build — the incremental twin of the batch
     * gaps-and-islands query (EventQueries.qScd2): per user, track the
-    * OPEN run of unchanged event_type in mapGroups state; when a
-    * different type arrives, emit the closed interval (valid_to = the
-    * new run's first event time, exactly the batch `lead()` semantics)
-    * and open the next run. Append mode: only CLOSED intervals are
-    * emitted — the open run per user is unknowable until its
-    * successor arrives, which is also why the batch twin's open rows
-    * (valid_to NULL) are excluded from the parity spec. State is one
-    * KB-scale record per ACTIVE user; a production deployment adds an
-    * idle-eviction timeout when the key space is unbounded (the
-    * sessionizer shows the EventTimeTimeout shape).
+    * OPEN run of unchanged event_type in state; when a different type
+    * arrives, emit the closed interval (valid_to = the new run's first
+    * event time, exactly the batch `lead()` semantics) and open the
+    * next run. Append mode: only CLOSED intervals are emitted — the
+    * open run per user is unknowable until its successor arrives,
+    * which is also why the batch twin's open rows (valid_to NULL) are
+    * excluded from the parity spec. State is one KB-scale record per
+    * ACTIVE user.
     *
-    * '''Delivery contract''': per user, batches must not REGRESS in
-    * event time — events are sorted within each micro-batch, but an
-    * event in a LATER batch that is older than the open run's last
-    * seen time cannot be stitched into already-emitted history (append
-    * mode has no retractions — the CDC/Kafka-compacted sources this
-    * consumes are in order per key). Such cross-batch late events are
-    * DETECTED via the state's lastMs, DROPPED (never silently
-    * fragmented into a bogus run, the pre-r8 behavior), and COUNTED in
-    * `droppedLate` so an operator alarms instead of diverging from the
-    * batch twin; the batch query remains the reconciliation path.
+    * Runs the [[inOrder]] fold and its delivery contract, ordered by
+    * qScd2's (ts, event_id) at microsecond precision; an event older
+    * than the open run's last event is late — dropped and counted,
+    * never fragmented into a bogus run.
     */
   def scd2Stream(events: Dataset[Ev],
-      droppedLate: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[Scd2Row] = {
+      droppedLate: Option[LongAccumulator] = None): Dataset[Scd2Row] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def sec(ms: Long): Long = Math.floorDiv(ms, 1000L)
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2State, Scd2Row](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[Ev], state: GroupState[Scd2State]) =>
-          val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var closed = List.empty[Scd2Row]
-          var st = state.getOption.orNull
-          evs.foreach { e =>
-            val t = e.ts.getTime
-            st = st match {
-              case null => Scd2State(1L, e.event_type, t, 1L, t)
-              // cross-batch late arrival (older than the open run's
-              // frontier): in-batch events can't hit this (sorted
-              // above), so this IS a delivery-contract violation —
-              // drop + count, keep the run history intact
-              case s if t < s.lastMs =>
-                droppedLate.foreach(_.add(1L))
-                s
-              case s if s.stateType == e.event_type =>
-                s.copy(n = s.n + 1, lastMs = math.max(s.lastMs, t))
-              case s =>
-                closed ::= Scd2Row(userId, s.runId, s.stateType,
-                  sec(s.fromMs), sec(t), s.n)
-                Scd2State(s.runId + 1, e.event_type, t, 1L, t)
-            }
-          }
-          if (st != null) state.update(st)
-          closed.reverseIterator
+    def sec(us: Long): Long = Math.floorDiv(us, 1000000L)
+    inOrder[Long, Ev, Scd2State, Scd2Row](events, _.user_id, byMicros, null,
+        droppedLate, (s, e) => micros(e.ts) < s.lastUs) { (userId, s, e, emit) =>
+      val t = micros(e.ts)
+      if (s == null) Scd2State(1L, e.event_type, t, 1L, t)
+      else if (s.stateType == e.event_type) s.copy(n = s.n + 1, lastUs = t)
+      else {
+        emit(Scd2Row(userId, s.runId, s.stateType, sec(s.fromUs), sec(t), s.n))
+        Scd2State(s.runId + 1, e.event_type, t, 1L, t)
       }
+    }
   }
 
   /** One click-or-purchase event as consumed by [[attributionStream]]:
@@ -293,48 +303,32 @@ object Streams {
     * purchase emits its credited campaign the moment it arrives
     * instead of waiting for the batch recompute (the rollup over the
     * emitted rows is then an ordinary windowless aggregate). Semantics
-    * match the batch plan exactly: events sort by (es, event_id)
-    * within a batch (a same-second click with a smaller event_id still
-    * attributes), a purchase outside `lookbackS` or before any click
-    * credits campaign −1.
+    * match the batch plan exactly: a purchase outside `lookbackS` or
+    * before any click credits campaign −1.
     *
-    * '''Delivery contract''' (same as scd2Stream/resampleStream): per
-    * user, batches must not regress in event time — cross-batch late
-    * events (strictly older than the carried frontier) are dropped and
-    * counted in `droppedLate`, and for equal-second events the
-    * event_id order must not split across batches; the batch query is
-    * the reconciliation path.
+    * Runs the [[inOrder]] fold and its delivery contract, ordered by
+    * the batch plan's (es, event_id) — a same-second click with a
+    * smaller event_id still attributes; an event strictly older than
+    * the carried frontier is late, and for equal-second events the
+    * event_id order must not split across batches.
     */
   def attributionStream(events: Dataset[AttrEv],
       lookbackS: Long = 7L * 86400L,
-      droppedLate: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[AttrRow] = {
+      droppedLate: Option[LongAccumulator] = None): Dataset[AttrRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[AttrEv], state: GroupState[AttrState]) =>
-          val evs = it.toSeq.sortBy(e => (e.es, e.event_id))
-          var out = List.empty[AttrRow]
-          var st = state.getOption.getOrElse(
-            AttrState(-1L, -1L, Long.MinValue))
-          evs.foreach { e =>
-            if (e.es < st.lastEs) droppedLate.foreach(_.add(1L))
-            else if (e.is_click) st = AttrState(e.es, e.campaign, e.es)
-            else {
-              val camp =
-                if (st.clickEs >= 0 && e.es - st.clickEs <= lookbackS)
-                  st.campaign
-                else -1L
-              out ::= AttrRow(userId, e.event_id, camp, e.cents)
-              st = st.copy(lastEs = math.max(st.lastEs, e.es))
-            }
-          }
-          state.update(st)
-          out.reverseIterator
+    inOrder[Long, AttrEv, AttrState, AttrRow](events, _.user_id,
+        e => (e.es, e.event_id), AttrState(-1L, -1L, Long.MinValue),
+        droppedLate, (s, e) => e.es < s.lastEs) { (userId, st, e, emit) =>
+      if (e.is_click) AttrState(e.es, e.campaign, e.es)
+      else {
+        val camp =
+          if (st.clickEs >= 0 && e.es - st.clickEs <= lookbackS) st.campaign
+          else -1L
+        emit(AttrRow(userId, e.event_id, camp, e.cents))
+        st.copy(lastEs = e.es)
       }
+    }
   }
 
   /** Rolling-baseline state for [[anomalyStream]]: the last (up to) 7
@@ -363,57 +357,42 @@ object Streams {
     * precede them, and the open day is never scored (close it with a
     * newer event; the batch query is the reconciliation path).
     *
-    * '''Delivery contract''' (same as scd2Stream): per event type,
-    * batches must not regress in event time; events for a day older
-    * than the open day are dropped and counted in `droppedLate`.
+    * Runs the [[inOrder]] fold and its delivery contract per event
+    * type; an event for a day older than the open day is late.
     */
   def anomalyStream(events: Dataset[Ev],
-      droppedLate: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[AnomRow] = {
+      droppedLate: Option[LongAccumulator] = None): Dataset[AnomRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[AnomState, AnomRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (etype: String, it: Iterator[Ev], state: GroupState[AnomState]) =>
-          def dayOf(e: Ev): Long =
-            Math.floorDiv(Math.floorDiv(e.ts.getTime, 1000L), 86400L)
-          var out = List.empty[AnomRow]
-          var st = state.getOption.getOrElse(
-            AnomState(Array.empty, Array.empty, Long.MinValue, 0L))
-          def close(): Unit = if (st.openDay != Long.MinValue) {
-            if (st.days.length == 7) {
-              val n = BigInt(7)
-              val x = BigInt(st.openX)
-              val sS = st.xs.map(BigInt(_)).sum
-              val q = st.xs.map(v => BigInt(v) * BigInt(v)).sum
-              val num = n * x - sS
-              val den2 = n * q - sS * sS
-              val z =
-                if (den2 > 0)
-                  Some(BigDecimal(num.toDouble / math.sqrt(den2.toDouble))
-                    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-                else None
-              out ::= AnomRow(etype, st.openDay, st.openX, z,
-                num > 0 && num * num > den2 * 4)
-            }
-            val keepFrom = if (st.days.length == 7) 1 else 0
-            st = AnomState(
-              st.days.drop(keepFrom) :+ st.openDay,
-              st.xs.drop(keepFrom) :+ st.openX,
-              Long.MinValue, 0L)
-          }
-          it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val d = dayOf(e)
-            if (st.openDay == Long.MinValue) st = st.copy(openDay = d, openX = 1L)
-            else if (d == st.openDay) st = st.copy(openX = st.openX + 1L)
-            else if (d < st.openDay) droppedLate.foreach(_.add(1L))
-            else { close(); st = st.copy(openDay = d, openX = 1L) }
-          }
-          state.update(st)
-          out.reverseIterator
+    inOrder[String, Ev, AnomState, AnomRow](events, _.event_type, byMicros,
+        AnomState(Array.empty, Array.empty, Long.MinValue, 0L), droppedLate,
+        (s, e) => dayOf(e) < s.openDay) { (etype, st, e, emit) =>
+      val d = dayOf(e)
+      if (st.openDay == Long.MinValue) st.copy(openDay = d, openX = 1L)
+      else if (d == st.openDay) st.copy(openX = st.openX + 1L)
+      else {
+        // d closes the open day: score it once 7 closed days precede it
+        val full = st.days.length == 7
+        if (full) {
+          val n = BigInt(7)
+          val x = BigInt(st.openX)
+          val sS = st.xs.map(BigInt(_)).sum
+          val q = st.xs.map(v => BigInt(v) * BigInt(v)).sum
+          val num = n * x - sS
+          val den2 = n * q - sS * sS
+          val z =
+            if (den2 > 0)
+              Some(BigDecimal(num.toDouble / math.sqrt(den2.toDouble))
+                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+            else None
+          emit(AnomRow(etype, st.openDay, st.openX, z,
+            num > 0 && num * num > den2 * 4))
+        }
+        val keepFrom = if (full) 1 else 0
+        AnomState(st.days.drop(keepFrom) :+ st.openDay,
+          st.xs.drop(keepFrom) :+ st.openX, d, 1L)
       }
+    }
   }
 
   /** Streaming sessionization via flatMapGroupsWithState with event-time
@@ -553,21 +532,13 @@ object Streams {
   def latestStream(events: Dataset[Ev]): Dataset[Latest] = {
     val spark = events.sparkSession
     import spark.implicits._
-    // FULL microsecond precision for the ordering: Timestamp.getTime is
-    // millisecond-truncated, so two events within the same millisecond
-    // would falsely tie and the event_id tie-break could pick a
-    // DIFFERENT record than latestBatch's TimestampType (us) ordering
-    def micros(ts: Timestamp): Long =
-      Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     events.groupByKey(_.user_id)
       .mapGroupsWithState[LatestState, Latest](GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Ev], state: GroupState[LatestState]) =>
           var best = state.getOption.orNull
           it.foreach { e =>
-            val t = micros(e.ts)
-            if (best == null || t > best.tsUs ||
-                (t == best.tsUs && e.event_id > best.eventId))
-              best = LatestState(t, e.event_id, e.event_type, e.value)
+            if (best == null || newer(e, best.tsUs, best.eventId))
+              best = LatestState(micros(e.ts), e.event_id, e.event_type, e.value)
           }
           state.update(best)
           Latest(uid, best.typ, best.value, Math.floorDiv(best.tsUs, 1000000L))
@@ -611,8 +582,6 @@ object Streams {
   def cdcApplyStream(changes: Dataset[Ev], base: DataFrame): Dataset[CdcRow] = {
     val spark = changes.sparkSession
     import spark.implicits._
-    def micros(ts: Timestamp): Long =
-      Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
     val empty = CdcState(hasBase = false, 0.0, hasChg = false,
       Long.MinValue, Long.MinValue, "", 0.0)
     val init = base
@@ -626,11 +595,9 @@ object Streams {
         (uid: Long, it: Iterator[Ev], state: GroupState[CdcState]) =>
           var st = state.getOption.getOrElse(empty)
           it.foreach { e =>
-            val t = micros(e.ts)
-            if (!st.hasChg || t > st.tsUs ||
-                (t == st.tsUs && e.event_id > st.eventId))
-              st = st.copy(hasChg = true, tsUs = t, eventId = e.event_id,
-                chgType = e.event_type, chgValue = e.value)
+            if (!st.hasChg || newer(e, st.tsUs, st.eventId))
+              st = st.copy(hasChg = true, tsUs = micros(e.ts),
+                eventId = e.event_id, chgType = e.event_type, chgValue = e.value)
           }
           state.update(st)
           if (!st.hasChg) Iterator.empty
@@ -681,6 +648,23 @@ object Streams {
         right(rightTs) <= left(leftTs) + expr(s"INTERVAL '$upperSec' SECOND"),
       joinType)
 
+  // ---- micro-batch sinks --------------------------------------------------
+
+  /** The one micro-batch sink every foreachBatch face starts: Append
+    * mode, `body` run per (batch, batchId), and `checkpointDir` — when
+    * given — as the query's checkpoint, the exactly-once progress record
+    * a restart resumes from. Faces key their output by batchId
+    * (overwrite of their own `batch=<id>` dir; noveltyStream hands the
+    * id to its sink), so a retried batch REPLACES its partial output
+    * instead of appending duplicates.
+    */
+  private def eachBatch(stream: DataFrame, checkpointDir: Option[String])(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val writer = stream.writeStream.outputMode(OutputMode.Append())
+      .foreachBatch(body)
+    checkpointDir.fold(writer)(writer.option("checkpointLocation", _))
+  }
+
   // ---- multi-sink fan-out ---------------------------------------------
 
   /** The reference's `-multiple` on a stream: ONE readStream, N branch
@@ -698,21 +682,15 @@ object Streams {
     */
   def multiSink(stream: DataFrame, outputHome: String,
       branches: Seq[(String, DataFrame => DataFrame)],
-      checkpointDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val shared = batch.persist()
-        try graft.util.Par.all(branches.map { case (name, f) => () =>
-            f(shared).write.mode("overwrite")
-              .parquet(s"$outputHome/$name/batch=$batchId")
-          })
-        finally shared.unpersist()
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      val shared = batch.persist()
+      try graft.util.Par.all(branches.map { case (name, f) => () =>
+          f(shared).write.mode("overwrite")
+            .parquet(s"$outputHome/$name/batch=$batchId")
+        })
+      finally shared.unpersist()
+    }.trigger(Trigger.AvailableNow()).start()
 
   /** Streaming incremental materialized-view maintenance —
     * q_mv_refresh's foreachBatch face. Each micro-batch's PARTIAL
@@ -731,17 +709,10 @@ object Streams {
     */
   def mvRefreshStream(stream: DataFrame, stateDir: String,
       partial: DataFrame => DataFrame,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        partial(batch).write.mode("overwrite")
-          .parquet(s"$stateDir/batch=$batchId")
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      partial(batch).write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    }.start()
 
   /** The current view over [[mvRefreshStream]] state: union of all
     * batch partials (partition discovery surfaces `batch`; `merge`
@@ -842,8 +813,7 @@ object Streams {
     */
   def manifestStream(docs: DataFrame, stateDir: String, idCol: String,
       textCol: String, seed: Long, nShards: Int,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: Option[String] = None): StreamingQuery =
     mvRefreshStream(docs, stateDir,
       b => graft.ops.Manifest.partial(b, idCol, textCol,
         seed, nShards),
@@ -874,26 +844,20 @@ object Streams {
     * duplicates. The extra epoch from a retry only advances retention.
     */
   def takedownStream(ids: DataFrame, indexDir: String, auditDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = ids.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val idCol = batch.columns.head
-        val list = batch.select(col(idCol).cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
-        if (list.nonEmpty) {
-          val epoch = graft.dedup.SnapshotIndex
-            .remove(batch.sparkSession, indexDir, list)
-          val spark = batch.sparkSession
-          import spark.implicits._
-          list.map(i => (i, epoch)).toDF("doc_id", "epoch")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$auditDir/batch=$batchId")
-        }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    eachBatch(ids, checkpointDir) { (batch, batchId) =>
+      val idCol = batch.columns.head
+      val list = batch.select(col(idCol).cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSeq.sorted
+      if (list.nonEmpty) {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val epoch = graft.dedup.SnapshotIndex.remove(spark, indexDir, list)
+        list.map(i => (i, epoch)).toDF("doc_id", "epoch")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$auditDir/batch=$batchId")
       }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+    }.start()
 
   /** The daily-crawl NOVELTY loop at micro-batch cadence — the
     * streaming face of [[graft.dedup.NoveltyIndex]]: each arriving
@@ -927,26 +891,22 @@ object Streams {
   def noveltyStream(crawl: DataFrame, indexDir: String,
       sourceCol: String, textCol: String, n: Int,
       checkpointDir: Option[String] = None)(
-      sink: (Long, Seq[org.apache.spark.sql.Row]) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: (Long, Seq[Row]) => Unit): StreamingQuery = {
     val held = new graft.dedup.NoveltyIndex.HeldSketch
-    val writer = crawl.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val snap = held.load(spark, indexDir)
-        // scan-parallelism floor for the batch's gram pass: a memory /
-        // file-source micro-batch arrives in as few as ONE partition,
-        // and the tokenize → n-gram → md5 derivation below the distinct
-        // exchange would then run on one core. foreachBatch frames are
-        // LogicalRDDs, so Fanout's split-count probe is job-free; no-op
-        // when the batch already arrives wide.
-        val fanned = graft.util.Fanout.ensure(batch)
-        val rows = graft.dedup.NoveltyIndex.probeAndAdmit(spark, snap, fanned,
-          sourceCol, textCol, n, held).toSeq
-        sink(batchId, rows)
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
+    eachBatch(crawl, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val snap = held.load(spark, indexDir)
+      // scan-parallelism floor for the batch's gram pass: a memory /
+      // file-source micro-batch arrives in as few as ONE partition,
+      // and the tokenize → n-gram → md5 derivation below the distinct
+      // exchange would then run on one core. foreachBatch frames are
+      // LogicalRDDs, so Fanout's split-count probe is job-free; no-op
+      // when the batch already arrives wide.
+      val fanned = graft.util.Fanout.ensure(batch)
+      val rows = graft.dedup.NoveltyIndex.probeAndAdmit(spark, snap, fanned,
+        sourceCol, textCol, n, held).toSeq
+      sink(batchId, rows)
+    }.start()
   }
 
   // ---- streaming ANN enrichment -----------------------------------------
@@ -970,19 +930,13 @@ object Streams {
     */
   def knnStream(queries: DataFrame, index: graft.sim.IvfIndex,
       idCol: String, vecCol: String, k: Int, nProbe: Int, outDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.search(batch, idCol, vecCol, k, nProbe)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
+      checkpointDir: Option[String] = None): StreamingQuery =
     // no AvailableNow trigger: unlike multiSink's drain-once export,
     // this is a long-lived serving query — it keeps consuming batches
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+    eachBatch(queries, checkpointDir) { (batch, batchId) =>
+      index.search(batch, idCol, vecCol, k, nProbe)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }.start()
 
   // ---- stream-static temporal enrich -------------------------------------
 
@@ -1024,9 +978,14 @@ object Streams {
   def splitStream(docs: DataFrame, idCol: String, seed: Long): DataFrame =
     graft.ops.ShuffleShard.splitAssign(docs, idCol, seed)
 
-  // ---- streaming ingestion with online near-dup filtering ---------------
-
   // ---- continuous data-quality monitoring --------------------------------
+
+  /** Internal corrupt-record column [[quarantineStream]] appends to the
+    * caller's clean schema — deliberately namespaced so a user schema
+    * (or a JSON document carrying a literal `_bad` key) cannot collide
+    * with it.
+    */
+  val QuarantineCorruptCol = "_graft_corrupt"
 
   /** source_quarantine run continuously — the dead-letter half of a
     * streaming JSON-lines ingest: each micro-batch of raw lines parses
@@ -1051,16 +1010,8 @@ object Streams {
     * localCheckpointed batch); no state store, no watermark — the
     * quarantine trail grows with bad data, not with time.
     */
-  /** Internal corrupt-record column [[quarantineStream]] appends to the
-    * caller's clean schema — deliberately namespaced so a user schema
-    * (or a JSON document carrying a literal `_bad` key) cannot collide
-    * with it.
-    */
-  val QuarantineCorruptCol = "_graft_corrupt"
-
   def quarantineStream(lines: DataFrame, schemaDdl: String, outDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: Option[String] = None): StreamingQuery = {
     // the corrupt-record column is appended to the CLEAN schema under a
     // collision-resistant name: a caller whose schema (or whose data's
     // literal JSON keys) uses a plain `_bad` must not get a duplicate-
@@ -1075,34 +1026,30 @@ object Streams {
         .fieldNames.exists(_.equalsIgnoreCase(QuarantineCorruptCol)),
       s"quarantineStream: schemaDdl must not declare $QuarantineCorruptCol" +
         " — it is the internal corrupt-record column")
-    val writer = lines.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val shared = batch.localCheckpoint(false)
-        try {
-          val parsed = shared.select(col("value"),
-            from_json(col("value"), s"$schemaDdl, $QuarantineCorruptCol STRING",
-              Map("columnNameOfCorruptRecord" -> QuarantineCorruptCol)).as("j"))
-          // quarantine = anything the parser did not turn into a clean
-          // typed row: malformed (corrupt column set), NULL input (the
-          // struct itself comes back null), or a null line
-          val bad = col("value").isNull || col("j").isNull ||
-            col(s"j.$QuarantineCorruptCol").isNotNull
-          val line = coalesce(col("value"), lit(""))
-          parsed.filter(!bad)
-            .select(col("j.*")).drop(QuarantineCorruptCol)
-            .write.mode("overwrite").parquet(s"$outDir/clean/batch=$batchId")
-          parsed.filter(bad)
-            .select(line.as("line"),
-              octet_length(line).cast("long").as("n_bytes"),
-              conv(substring(md5(line), 1, 15), 16, 10)
-                .cast("long").as("sig"))
-            .write.mode("overwrite")
-            .parquet(s"$outDir/quarantine/batch=$batchId")
-        } finally graft.util.Caches.release(shared)
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
+    eachBatch(lines, checkpointDir) { (batch, batchId) =>
+      val shared = batch.localCheckpoint(false)
+      try {
+        val parsed = shared.select(col("value"),
+          from_json(col("value"), s"$schemaDdl, $QuarantineCorruptCol STRING",
+            Map("columnNameOfCorruptRecord" -> QuarantineCorruptCol)).as("j"))
+        // quarantine = anything the parser did not turn into a clean
+        // typed row: malformed (corrupt column set), NULL input (the
+        // struct itself comes back null), or a null line
+        val bad = col("value").isNull || col("j").isNull ||
+          col(s"j.$QuarantineCorruptCol").isNotNull
+        val line = coalesce(col("value"), lit(""))
+        parsed.filter(!bad)
+          .select(col("j.*")).drop(QuarantineCorruptCol)
+          .write.mode("overwrite").parquet(s"$outDir/clean/batch=$batchId")
+        parsed.filter(bad)
+          .select(line.as("line"),
+            octet_length(line).cast("long").as("n_bytes"),
+            conv(substring(md5(line), 1, 15), 16, 10)
+              .cast("long").as("sig"))
+          .write.mode("overwrite")
+          .parquet(s"$outDir/quarantine/batch=$batchId")
+      } finally graft.util.Caches.release(shared)
+    }.start()
   }
 
   /** q_constraints run continuously: per micro-batch every predicate
@@ -1120,36 +1067,32 @@ object Streams {
   def constraintsStream(stream: DataFrame,
       checks: Seq[(String, org.apache.spark.sql.Column)],
       referential: Option[(String, DataFrame, String)], outDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: Option[String] = None): StreamingQuery = {
     require(checks.nonEmpty || referential.nonEmpty, "no checks given")
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val shared = batch.localCheckpoint(false)
-        try {
-          val predRows = checks.map { case (nm, pred) =>
-            shared.agg(count(lit(1)).as("n_checked"),
-              coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-                .as("n_violations"))
-              .select(lit(nm).as("check_name"), col("n_checked"),
-                col("n_violations"))
-          }
-          val refRows = referential.map { case (fk, dim, pk) =>
-            shared.filter(col(fk).isNotNull)
-              .join(broadcast(dim.select(col(pk)).distinct()),
-                col(fk) === col(pk), "left")
-              .agg(count(lit(1)).as("n_checked"),
-                coalesce(sum(when(col(pk).isNull, 1L).otherwise(0L)),
-                  lit(0L)).as("n_violations"))
-              .select(lit(s"$fk -> $pk").as("check_name"),
-                col("n_checked"), col("n_violations"))
-          }
-          (predRows ++ refRows).reduce(_ unionByName _)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        } finally graft.util.Caches.release(shared)
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      val shared = batch.localCheckpoint(false)
+      try {
+        val predRows = checks.map { case (nm, pred) =>
+          shared.agg(count(lit(1)).as("n_checked"),
+            coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
+              .as("n_violations"))
+            .select(lit(nm).as("check_name"), col("n_checked"),
+              col("n_violations"))
+        }
+        val refRows = referential.map { case (fk, dim, pk) =>
+          shared.filter(col(fk).isNotNull)
+            .join(broadcast(dim.select(col(pk)).distinct()),
+              col(fk) === col(pk), "left")
+            .agg(count(lit(1)).as("n_checked"),
+              coalesce(sum(when(col(pk).isNull, 1L).otherwise(0L)),
+                lit(0L)).as("n_violations"))
+            .select(lit(s"$fk -> $pk").as("check_name"),
+              col("n_checked"), col("n_violations"))
+        }
+        (predRows ++ refRows).reduce(_ unionByName _)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      } finally graft.util.Caches.release(shared)
+    }.start()
   }
 
   /** Streaming corpus ingestion with ONLINE near-duplicate filtering —
@@ -1189,16 +1132,11 @@ object Streams {
     */
   def dedupIndexStreamSnapshot(docs: DataFrame, indexRoot: String,
       idCol: String, textCol: String, n: Int, tau: Double, outDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIndexBatch(batch, indexRoot, idCol, textCol, n, tau,
-          s"$outDir/batch=$batchId")
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      dedupIndexBatch(batch, indexRoot, idCol, textCol, n, tau,
+        s"$outDir/batch=$batchId")
+    }.start()
 
   /** One micro-batch of [[dedupIndexStreamSnapshot]]: intra-dedup the
     * batch, probe the [[graft.dedup.SnapshotIndex]] epoch it pins,

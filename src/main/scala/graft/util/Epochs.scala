@@ -522,9 +522,6 @@ object Epochs {
     def currentEpoch(spark: SparkSession, dir: String): Long =
       current(spark, dir)
 
-    def publishedEpochs(spark: SparkSession, dir: String): Seq[Long] =
-      published(spark, dir)
-
     /** Pin the current epoch and load its index. */
     def load(spark: SparkSession, dir: String): Snapshot =
       loadAt(spark, dir, current(spark, dir))

@@ -598,7 +598,7 @@ class DedupSpec extends SparkSpec {
       "epoch-1 reader must still see the pre-takedown corpus")
     // retention: publish(2) retires epochs < 1 — epoch 0 is gone,
     // epoch 1 survives one more cycle
-    assert(SnapshotIndex.publishedEpochs(spark, dir) === Seq(1L, 2L))
+    assert(graft.util.Epochs.published(spark, dir) === Seq(1L, 2L))
     // audit read of a specific published epoch
     assert(probeSet(SnapshotIndex.loadEpoch(spark, dir, 1L).index) === at0)
     intercept[IllegalArgumentException] {
@@ -1606,7 +1606,7 @@ class DedupSpec extends SparkSpec {
       at0.filterNot(p => removed.contains(p._2)))
     assert(probeSet(snap1.index) === at0,
       "epoch-1 reader must still see the pre-takedown corpus")
-    assert(SimHashSnapshot.publishedEpochs(spark, dir) === Seq(1L, 2L))
+    assert(graft.util.Epochs.published(spark, dir) === Seq(1L, 2L))
     assert(probeSet(SimHashSnapshot.loadEpoch(spark, dir, 1L).index) === at0)
     intercept[IllegalArgumentException] {
       SimHashSnapshot.loadEpoch(spark, dir, 0L)

@@ -144,13 +144,13 @@ class ExportSpec extends SparkSpec {
     // loudly, never returns a partial tree
     assert(ShardStore.publish(spark, dir, v1, "doc_id", "text",
       seed = 42L, nShards = 8) === 2L)
-    assert(ShardStore.publishedEpochs(spark, dir) === Seq(1L, 2L))
+    assert(graft.util.Epochs.published(spark, dir) === Seq(1L, 2L))
     intercept[IllegalArgumentException] {
       ShardStore.readShardsAt(spark, dir, 0L)
     }
     // crash-window fallback: losing _CURRENT resolves to max published
     new java.io.File(s"$dir/_CURRENT").delete()
-    assert(ShardStore.currentEpoch(spark, dir) === 2L)
+    assert(graft.util.Epochs.current(spark, dir) === 2L)
 
     // publisher fence: the next epoch number is claimed by listing, so
     // a second concurrent publisher must fail LOUDLY on the lease

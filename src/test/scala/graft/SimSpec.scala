@@ -357,7 +357,7 @@ class SimSpec extends SparkSpec {
     assert(searchSeq(snap1.index) === withDay2,
       "epoch-1 search must still see the pre-takedown corpus")
     // retention: publish(2) retires epochs < 1
-    assert(IvfPqSnapshot.publishedEpochs(spark, dir) === Seq(1L, 2L))
+    assert(graft.util.Epochs.published(spark, dir) === Seq(1L, 2L))
     assert(searchSeq(IvfPqSnapshot.loadEpoch(spark, dir, 1L).index)
       === withDay2)
     intercept[IllegalArgumentException] {

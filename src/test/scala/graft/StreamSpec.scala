@@ -200,6 +200,93 @@ class StreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  /** An event `us` microseconds after 1700000000 s (a whole second). */
+  private def evUs(id: Long, us: Long, typ: String,
+      value: Double = 1.0): Ev = {
+    val ts = new Timestamp(1700000000000L + Math.floorDiv(us, 1000000L) * 1000L)
+    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    Ev(id, ts, 1L, typ, value)
+  }
+
+  /** Writes `events` as a one-table corpus for the batch twins. */
+  private def eventsDir(events: Seq[Ev]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_twin").toString
+    events.toDF().coalesce(1).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  private def runAppend[T](name: String, q: org.apache.spark.sql.Dataset[T])
+      : Array[org.apache.spark.sql.Row] = {
+    val sq = q.writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try sq.processAllAvailable() finally sq.stop()
+    spark.table(name).collect()
+  }
+
+  test("scd2Stream orders same-millisecond events by microsecond time, " +
+      "as qScd2 does") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    // ids 3 and 2 share a millisecond, event_ids against time order:
+    // by (ts, event_id) the runs are a, b, a, c; by (ms, event_id) they
+    // would be a, b, c
+    val events = Seq(evUs(1, 0, "a"), evUs(3, 100, "b"), evUs(2, 700, "a"),
+      evUs(4, 60000000L, "c"))
+    val ms = MemoryStream[Ev]
+    ms.addData(events)
+    val got = runAppend("scd2us", Streams.scd2Stream(ms.toDS()))
+      .map(r => (r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4),
+        r.getLong(5))).sortBy(_._1).toSeq
+    val t0 = 1700000000L
+    assert(got === Seq((1L, "a", t0, t0, 1L), (2L, "b", t0, t0, 1L),
+      (3L, "a", t0, t0 + 60, 1L)))
+    val batch = graft.queries.EventQueries.qScd2(spark, eventsDir(events))
+      .filter(col("valid_to_s").isNotNull).collect()
+      .map(r => (r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4),
+        r.getLong(5))).toSeq
+    assert(got === batch)
+  }
+
+  test("resampleStream picks a day's latest value by microsecond time, " +
+      "as qResample does") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    // ids 2 and 1 share a millisecond, event_ids against time order:
+    // the day's latest event is id 1 (7.0), not the higher event_id
+    val events = Seq(evUs(2, 0, "view", 5.0), evUs(1, 500, "view", 7.0),
+      evUs(3, 86400000000L, "view", 9.0))
+    val ms = MemoryStream[Ev]
+    ms.addData(events)
+    val got = runAppend("resampus", Streams.resampleStream(ms.toDS()))
+      .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    val day0 = 1700000000L / 86400L
+    assert(got === Seq((day0, 7.0, 2L)))
+    val batch = graft.queries.EventQueries.qResample(spark, eventsDir(events))
+      .collect().map(r => (r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .filter(_._1 == day0).toSeq
+    assert(got === batch)
+  }
+
+  test("sequenceMatchStream orders same-second events by event_id, " +
+      "as q_sequence_match does") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    // in second 1 the purchase (id 3) precedes the click (id 2) by
+    // milliseconds; whole seconds then event_id put the click first,
+    // so the view → click → purchase funnel completes once
+    val events = Seq(evUs(1, 0, "view"), evUs(3, 1000000L, "purchase"),
+      evUs(2, 1500000L, "click"))
+    val ms = MemoryStream[Ev]
+    ms.addData(events)
+    val got = runAppend("seqmus", Streams.sequenceMatchStream(ms.toDS()))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === Seq((1L, 1L, 1700000001L)))
+    val batch = graft.queries.EventQueries.qSequenceMatch(spark,
+      eventsDir(events)).collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(batch.toSeq === Seq((1L, 1)))
+  }
+
   test("attributionStream: cross-batch last-click carry, lookback expiry, " +
       "unattributed bucket") {
     implicit val ctx = spark.sqlContext

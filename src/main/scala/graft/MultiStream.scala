@@ -151,6 +151,9 @@ object MultiStream {
       "need -multiple spec(s) or the classic -mapper [-combiner] [-reducer] form")
     require(specs.isEmpty || mapper.isEmpty,
       "-multiple and -mapper are mutually exclusive")
+    require(specs.isEmpty || (reducer == "NONE" && combiner.isEmpty),
+      "-reducer/-combiner do not apply with -multiple: each -multiple " +
+        "spec names its own reducer (dir|mapper|reducer)")
     require(combiner.isEmpty || (reducer.nonEmpty && reducer != "NONE"),
       "-combiner requires a -reducer (map-side combining feeds a reduce)")
 

@@ -185,15 +185,12 @@ object MinHashIndex extends graft.util.Epochs.Layout {
           col("new_hash") === col("band_hash"))
       .select(col("new_id"), col("doc_id").as("seen_id"))
       .distinct()
-    cand
-      .join(newSh.select(col("doc_id").as("new_id"), col("shingles").as("sh_n")),
-        "new_id")
-      .join(index.shingles.select(col("doc_id").as("seen_id"),
-        col("shingles").as("sh_s")), "seen_id")
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_n"), col("sh_s"))).cast("double") /
-          size(array_union(col("sh_n"), col("sh_s"))).cast("double"), 4))
-      .filter(col("jaccard") >= tau)
+    MinHashLSH.verifyJaccard(cand
+        .join(newSh.select(col("doc_id").as("new_id"),
+          col("shingles").as("sh_n")), "new_id")
+        .join(index.shingles.select(col("doc_id").as("seen_id"),
+          col("shingles").as("sh_s")), "seen_id"),
+        "sh_n", "sh_s", tau)
       .select(col("new_id"), col("seen_id"), col("jaccard"))
   }
 }

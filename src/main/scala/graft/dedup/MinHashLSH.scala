@@ -19,7 +19,7 @@ import graft.text.TextOps
   *     a band bucket is genuinely a giant duplicate cluster (then AQE
   *     skew-join splits it).
   *  5. verify: exact Jaccard on candidate pairs only, via each doc's
-  *     shingle set (array_intersect/array_union — codegen'd).
+  *     shingle set (one array_intersect — codegen'd, [[verifyJaccard]]).
   *
   * Band geometry tunes the S-curve. 16 bands × 4 lanes: P(candidate)
   * at true Jaccard s is 1-(1-s⁴)¹⁶ — ≈ 1-4·10⁻⁸ at s = 0.9, ≈ 0.988
@@ -54,6 +54,23 @@ object MinHashLSH {
       .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("graft_toks"))
       .filter(size(col("graft_toks")) >= n)
       .select(col("doc_id"), TextOps.wordNgrams(col("graft_toks"), n).as("shingles"))
+
+  /** `pairs` with exact `jaccard` (rounded to 4) of its shingle-array
+    * columns `a` and `b`, kept where it reaches `tau` — the one verify
+    * of every dedup path. |A∪B| = |A| + |B| − |A∩B| holds because
+    * [[shingled]]'s n-grams are distinct per doc (`TextOps.wordNgrams`,
+    * distinct = true), so one `array_intersect` is the whole verify
+    * (DedupSpec pins agreement with the `array_union` form); its size
+    * rides its own column so each pair intersects once.
+    */
+  private[graft] def verifyJaccard(pairs: DataFrame, a: String, b: String,
+      tau: Double): DataFrame =
+    pairs.withColumn("n_common", size(array_intersect(col(a), col(b))))
+      .withColumn("jaccard", round(
+        col("n_common").cast("double") /
+          (size(col(a)) + size(col(b)) - col("n_common")).cast("double"),
+        4))
+      .filter(col("jaccard") >= tau)
 
   /** (doc_id, lanes array<long>) minhash signatures — MAP-ONLY: all 64
     * lanes fold in one native pass per row (graft.functions
@@ -112,11 +129,8 @@ object MinHashLSH {
     val cand = candidates(bandDf)
     val shA = sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
     val shB = sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cand.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
-      .filter(col("jaccard") >= tau)
+    verifyJaccard(cand.join(shA, "id_a").join(shB, "id_b"),
+        "sh_a", "sh_b", tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 

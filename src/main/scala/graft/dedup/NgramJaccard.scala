@@ -77,9 +77,9 @@ object NgramJaccard {
       .select(col("doc_id"), col("sh"))
   }
 
-  /** Distinct candidate pairs from the prefix self-join, verified with
-    * one `array_intersect` on the full shingle arrays — exact J,
-    * rounded to 4. Output: (id_a, id_b, jaccard), id_a < id_b.
+  /** Distinct candidate pairs from the prefix self-join, verified on
+    * the full shingle arrays ([[MinHashLSH.verifyJaccard]]).
+    * Output: (id_a, id_b, jaccard), id_a < id_b.
     */
   private[dedup] def verifiedPairs(prefix: DataFrame, shingled: DataFrame,
       tau: Double): DataFrame = {
@@ -88,17 +88,12 @@ object NgramJaccard {
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    cand
-      .join(shingled.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")),
-        "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")),
-        "id_b")
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("n_common").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_common")).cast("double"),
-        4))
-      .filter(col("jaccard") >= tau)
+    MinHashLSH.verifyJaccard(cand
+        .join(shingled.select(col("doc_id").as("id_a"),
+          col("shingles").as("sh_a")), "id_a")
+        .join(shingled.select(col("doc_id").as("id_b"),
+          col("shingles").as("sh_b")), "id_b"),
+        "sh_a", "sh_b", tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 

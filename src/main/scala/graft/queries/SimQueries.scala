@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
-import graft.sim.{Knn, Pq}
+import graft.sim.{IvfIndex, IvfPqIndex, Knn, LshIndex, Pq, PqIndex}
 import graft.util.{FitOnce, Tables}
 
 /** Similarity search (SURVEY.md §2.4) + multimodal plumbing (§2.6).
@@ -309,19 +309,21 @@ object SimQueries {
   /** Approximate: rows-only oracle; recall vs brute is spec-asserted. */
   def knnLsh(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    Knn.lsh(q, c, "vec_id", "embedding", K, dim = 64)
+    LshIndex.build(c, "vec_id", "embedding", dim = 64)
+      .search(q, "vec_id", "embedding", K)
       .orderBy(col("query_id"), col("rank"))
   }
 
   /** Approximate: rows-only oracle; recall vs brute is spec-asserted. */
   def knnIvf(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    Knn.ivfWith(centroidsFor(s, dir), q, c, "vec_id", "embedding", K)
+    IvfIndex.fitWith(c, "vec_id", "embedding", centroidsFor(s, dir))
+      .search(q, "vec_id", "embedding", K)
       .orderBy(col("query_id"), col("rank"))
   }
 
   /** Approximate: ADC over 12-byte PQ codes (16×64 geometry) with
-    * exact re-rank of a 10·K shortlist (graft.sim.Pq.search — the
+    * exact re-rank of a 10·K shortlist (graft.sim.PqIndex — the
     * memory-bound ANN path). The shortlist is deeper than the LSH/IVF
     * probe sets (ADC ranks from quantized vectors) but fixed per
     * query: 100 rows re-ranked regardless of corpus size — 5% of the
@@ -331,13 +333,14 @@ object SimQueries {
     */
   def knnPq(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(s, dir),
-      rerankFactor = 10)
+    val model = pqSearchModelFor(s, dir)
+    PqIndex(model, Pq.codes(c, "vec_id", "embedding", model))
+      .search(q, c, "vec_id", "embedding", K, rerankFactor = 10)
       .orderBy(col("query_id"), col("rank"))
   }
 
   /** Approximate: IVFADC — knn_pq's ADC scoring pruned by knn_ivf's
-    * coarse quantizer (Jégou §V, graft.sim.Pq.searchEncodedCells).
+    * coarse quantizer (Jégou §V, graft.sim.IvfPqIndex).
     * Per query the ADC pass touches ~nProbe/C of the code rows via a
     * broadcast equi-join on `cell` instead of flat-scanning them all —
     * the composition that carries PQ search to corpus scale (and, via
@@ -349,11 +352,9 @@ object SimQueries {
     */
   def knnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val (q, c) = split(s, dir)
-    val model = pqSearchModelFor(s, dir)
-    val centroids = centroidsFor(s, dir)
-    Pq.searchEncodedCells(model, centroids,
-        Pq.cellCodes(c, "vec_id", "embedding", model, centroids),
-        q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10)
+    IvfPqIndex.fitWith(c, "vec_id", "embedding", centroidsFor(s, dir),
+        pqSearchModelFor(s, dir))
+      .search(q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -436,22 +437,22 @@ object SimQueries {
     val q = c.filter(col("vec_id") < NQueries)
     val exact = Knn.brute(q, c, "vec_id", "embedding", K)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val methods =
-      Knn.lsh(q, c, "vec_id", "embedding", K, dim = 64)
-        .select(lit("lsh").as("method"), col("query_id"), col("neighbor_id"))
-        .unionByName(
-          Knn.ivfWith(centroidsFor(s, dir), q, c, "vec_id", "embedding", K)
-            .select(lit("ivf").as("method"), col("query_id"), col("neighbor_id")))
-        .unionByName(
-          Pq.search(q, c, "vec_id", "embedding", K, pqSearchModelFor(s, dir),
-              rerankFactor = 10)
-            .select(lit("pq").as("method"), col("query_id"), col("neighbor_id")))
-        .unionByName(
-          Pq.searchEncodedCells(pqSearchModelFor(s, dir), centroidsFor(s, dir),
-              Pq.cellCodes(c, "vec_id", "embedding", pqSearchModelFor(s, dir),
-                centroidsFor(s, dir)),
-              q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10)
-            .select(lit("ivfpq").as("method"), col("query_id"), col("neighbor_id")))
+    val centroids = centroidsFor(s, dir)
+    val model = pqSearchModelFor(s, dir)
+    val methods = Seq(
+      "lsh" -> LshIndex.build(c, "vec_id", "embedding", dim = 64)
+        .search(q, "vec_id", "embedding", K),
+      "ivf" -> IvfIndex.fitWith(c, "vec_id", "embedding", centroids)
+        .search(q, "vec_id", "embedding", K),
+      "pq" -> PqIndex(model, Pq.codes(c, "vec_id", "embedding", model))
+        .search(q, c, "vec_id", "embedding", K, rerankFactor = 10),
+      "ivfpq" -> IvfPqIndex.fitWith(c, "vec_id", "embedding", centroids, model)
+        .search(q, c, "vec_id", "embedding", K, nProbe = 8, rerankFactor = 10))
+      .map { case (method, found) =>
+        found.select(lit(method).as("method"), col("query_id"),
+          col("neighbor_id"))
+      }
+      .reduce(_ unionByName _)
     methods
       .join(exact, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("method"), col("query_id"))

@@ -21,25 +21,43 @@ final case class IvfPqIndex(
     centroids: Array[(Int, Array[Float])],
     cellCodes: DataFrame) {
 
-  /** Approximate top-k; `corpus` is the vector store for the exact
-    * re-rank of the ADC shortlist (see [[Pq.searchEncodedCells]]).
+  /** Approximate top-k by IVFADC (Jégou §V): ADC search pruned by the
+    * IVF coarse quantizer. Flat [[PqIndex]] ADC scans EVERY code row
+    * per query — inherent to flat ADC and fine while the codes table is
+    * small, but at 10⁹ vectors the scan is the cost. Here each code row
+    * carries the IVF cell of its ORIGINAL vector (assigned at encode
+    * time, [[Pq.cellCodes]]); a query attaches its `nProbe` nearest
+    * cells and the ADC pass becomes a broadcast EQUI-join on `cell` —
+    * candidates shrink to ~nProbe/C of the corpus, and against the
+    * cell-partitioned on-disk index the scan itself prunes to the
+    * probed cells. Shortlist and exact re-rank are the flat path's
+    * ([[Pq.adcSearch]]), so the returned `cos` stays exact; `corpus`
+    * is the vector store for that re-rank.
     */
   def search(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4,
-      rerankFactor: Int = 5): DataFrame =
-    Pq.searchEncodedCells(model, centroids, cellCodes, queries, corpus,
-      idCol, vecCol, k, nProbe, rerankFactor)
+      rerankFactor: Int = 5): DataFrame = {
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    Pq.adcSearch(model, cellCodes, queries, corpus, idCol, vecCol, k,
+        rerankFactor) { (qs, codesSide) =>
+      // assignCells returns a scalar `cell` at nProbe=1, an array
+      // `cells` otherwise — both admitted by the require above
+      val assigned = Knn.assignCells(qs, "query_id", "qv", centroids, nProbe)
+      val probes = (if (nProbe == 1) assigned
+        else assigned.withColumn("cell", explode(col("cells"))))
+        .select(col("query_id"), col("qtab"), col("qn"), col("cell"))
+      broadcast(probes).join(codesSide, "cell")
+        .filter(col("query_id") =!= col("neighbor_id"))
+    }
+  }
 
   /** Persist as `<dir>/codebooks` + `<dir>/centroids` + `<dir>/cells`
     * (codes partitioned by cell — the layout partition pruning needs).
     */
   def save(dir: String): Unit = {
     val spark = cellCodes.sparkSession
-    import spark.implicits._
     Pq.save(spark, model, s"$dir/codebooks")
-    centroids.map { case (cid, v) => (cid, v.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    IvfIndex.saveCentroids(spark, centroids, dir)
     cellCodes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/cells")
   }
@@ -79,12 +97,8 @@ object IvfPqIndex extends graft.util.Epochs.Layout {
     */
   private[graft] def append(spark: SparkSession, dir: String,
       newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val model = Pq.load(spark, s"$dir/codebooks")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .collect()
-      .map(r => (r.getAs[Int]("cell"), r.getAs[Seq[Float]]("centroid").toArray))
-      .sortBy(_._1)
-    Pq.cellCodes(newVectors, idCol, vecCol, model, centroids)
+    Pq.cellCodes(newVectors, idCol, vecCol, Pq.load(spark, s"$dir/codebooks"),
+        IvfIndex.loadCentroids(spark, dir))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
   }
 
@@ -124,14 +138,7 @@ object IvfPqIndex extends graft.util.Epochs.Layout {
       .parquet(s"$next/cells")
   }
 
-  def load(spark: SparkSession, dir: String): IvfPqIndex = {
-    // by NAME, not ordinal — same self-describing on-disk contract as
-    // LshIndex.load / IvfIndex.load
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .collect()
-      .map(r => (r.getAs[Int]("cell"), r.getAs[Seq[Float]]("centroid").toArray))
-      .sortBy(_._1)
-    IvfPqIndex(Pq.load(spark, s"$dir/codebooks"), centroids,
-      spark.read.parquet(s"$dir/cells"))
-  }
+  def load(spark: SparkSession, dir: String): IvfPqIndex =
+    IvfPqIndex(Pq.load(spark, s"$dir/codebooks"),
+      IvfIndex.loadCentroids(spark, dir), spark.read.parquet(s"$dir/cells"))
 }

@@ -6,28 +6,21 @@ import org.apache.spark.sql.functions._
 
 /** k-nearest-neighbor search over an `array<float>` embedding column.
   *
-  * Three paths, one contract (query_id, rank, neighbor_id, cos):
+  * One contract (query_id, rank, neighbor_id, cos) for every path:
   *
-  *  - `brute`: exact. Queries are broadcast against the corpus (the
-  *    query set is the small side by construction); every (query,
+  *  - `brute` (here): exact. Queries are broadcast against the corpus
+  *    (the query set is the small side by construction); every (query,
   *    corpus) pair is scored with the native codegen dot product and
   *    ranked per query. The pair scoring is embarrassingly parallel;
   *    the rank is one shuffle keyed by query_id. This is the
   *    correctness baseline — at 100 TB its pair count is the problem,
-  *    which is what the two approximate paths fix.
+  *    which is what the approximate paths fix.
   *
-  *  - `lsh`: random-hyperplane (sign) LSH. L tables × b Rademacher
-  *    hyperplanes; bucket = the b sign bits. Same-bucket-in-any-table
-  *    candidates, then exact scoring + rank on candidates only. The
-  *    hyperplanes are literal constants baked into the plan (seeded
-  *    deterministic), so bucketing is a pure per-row map — no fit step,
-  *    no model state.
-  *
-  *  - `ivf`: inverted-file index. C centroids learned by a few Lloyd
-  *    iterations (centroids collected to the driver between iterations
-  *    — C×dim floats, i.e. KB — and re-broadcast as literals; the
-  *    per-row assignment stays fully distributed). Queries probe the
-  *    nProbe nearest cells and score only those cells' vectors.
+  *  - approximate: build a handle once, then call its `search` —
+  *    [[LshIndex]] (random-hyperplane sign LSH, no fit step),
+  *    [[IvfIndex]] (inverted file over the Lloyd centroids fitted
+  *    here, [[fitCentroids]]), [[PqIndex]] and [[IvfPqIndex]] (ADC
+  *    over product-quantization codes, flat or IVF-pruned).
   */
 object Knn {
 
@@ -47,7 +40,7 @@ object Knn {
   /** The scored pair's cosine, rounded to 6: query (qv, qn) against
     * neighbor (nv, nn).
     */
-  private def pairCos: Column = round(
+  private[sim] def pairCos: Column = round(
     Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
       col("qn"), col("nn")), 6)
 
@@ -71,80 +64,6 @@ object Knn {
       idCol, vecCol, "neighbor_id", "nv", "nn")
     pairTopK(scorePairs(qs, cs), k)
   }
-
-  // ---- random-hyperplane LSH ------------------------------------------
-
-  /** One bucket value per table (array of `tables` ints), computed by
-    * the native [[graft.functions.LshBuckets]] expression — one plan
-    * node holding the plane matrix as a reference object. The previous
-    * literal formulation (a `when(dot ≥ 0, …)` chain per plane, each
-    * against a 64-element array literal) put 2×16384 literal leaves
-    * through analysis/optimization/codegen per query construction,
-    * which dominated the LSH path's wall clock at sf0.1. Bucket values
-    * are bit-identical (SimSpec pins the parity), so multiprobe XOR
-    * flips on the materialized value are unchanged.
-    */
-  private def bucketsCol(vec: Column, dim: Int, tables: Int, bits: Int,
-      seed: Long): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.LshBuckets(
-        org.apache.spark.sql.graft.ColumnBridge.expression(vec),
-        tables, bits, seed, dim))
-
-  /** (neighbor_id, nv, nn, table_id, bucket) — the corpus bucketed into
-    * every table, the materialized half of an [[LshIndex]].
-    */
-  private[sim] def bucketCorpus(corpus: DataFrame, idCol: String,
-      vecCol: String, dim: Int, tables: Int, bits: Int, seed: Long): DataFrame =
-    withNorm(corpus, idCol, vecCol, "neighbor_id", "nv", "nn")
-      .select(col("neighbor_id"), col("nv"), col("nn"),
-        posexplode(bucketsCol(col("nv"), dim, tables, bits, seed))
-          .as(Seq("table_id", "bucket")))
-
-  /** Probe-and-score against an already-bucketed corpus table. */
-  private[sim] def searchBuckets(buckets: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, dim: Int, tables: Int, bits: Int,
-      seed: Long, probeRadius: Int): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1,
-      s"only Hamming radius 0 or 1 probing is implemented, got $probeRadius")
-    val probes = (b: Column) => array((b +:
-      (if (probeRadius >= 1) (0 until bits).map(i => b.bitwiseXOR(lit(1 << i)))
-       else Seq.empty)): _*)
-    val qs = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
-      .select(col("query_id"), col("qv"), col("qn"),
-        posexplode(bucketsCol(col("qv"), dim, tables, bits, seed))
-          .as(Seq("table_id", "bucket0")))
-      .select(col("query_id"), col("qv"), col("qn"), col("table_id"),
-        explode(probes(col("bucket0"))).as("bucket"))
-    // Score each candidate OCCURRENCE map-side, then dedupe on the id
-    // pair with max(cos) — a partial-aggregatable shuffle of
-    // (long, long, double) rows. The previous shape (distinct() on the
-    // pair WITH both vectors, score after) shipped 2×64 floats per row
-    // through the dedup exchange and compared whole arrays in the
-    // grouping key; re-scoring a pair per colliding table is cheap
-    // codegen'd CPU, shuffle bytes are the scarce resource. cos is
-    // identical across a pair's occurrences, so max() is just dedup.
-    val scored = broadcast(qs).join(buckets, Seq("table_id", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), pairCos.as("cos"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    pairTopK(scored, k)
-  }
-
-  /** Approximate top-k via sign-LSH with query-side multiprobe: the
-    * query also probes every bucket within Hamming `probeRadius` of its
-    * own (cheap XORs on the bucket value), the corpus stays
-    * single-bucketed — so multiprobe cost scales with the QUERY side
-    * only. Bucket + search in one call; for a long-lived corpus use
-    * [[LshIndex]].
-    */
-  def lsh(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, dim: Int, tables: Int = 16, bits: Int = 8, seed: Long = 42L,
-      probeRadius: Int = 1): DataFrame =
-    searchBuckets(
-      bucketCorpus(corpus, idCol, vecCol, dim, tables, bits, seed),
-      queries, idCol, vecCol, k, dim, tables, bits, seed, probeRadius)
 
   // ---- IVF -------------------------------------------------------------
 
@@ -226,7 +145,7 @@ object Knn {
 
   /** All-pairs k-nearest-neighbor GRAPH over the corpus, IVF-cell
     * blocked — the SemDeDup/diversity-filter building block where every
-    * vector is simultaneously a query. Unlike [[searchIndex]], NOTHING
+    * vector is simultaneously a query. Unlike [[IvfIndex.search]], NOTHING
     * broadcasts (both sides are the corpus): each vector probes its
     * `nProbe` nearest cells, the corpus is indexed at its single
     * nearest cell, and candidates ride one shuffle-hash EQUI-join on
@@ -242,59 +161,22 @@ object Knn {
     */
   def graphCells(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       centroids: Array[(Int, Array[Float])], nProbe: Int): DataFrame = {
-    val indexed = assignCorpus(corpus, idCol, vecCol, centroids)
-    val qs = assignCells(
-        withNorm(corpus, idCol, vecCol, "query_id", "qv", "qn"),
+    val scored = cellProbes(corpus, idCol, vecCol, centroids, nProbe)
+      .join(IvfIndex.fitWith(corpus, idCol, vecCol, centroids).assigned, "cell")
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", pairCos)
+    pairTopK(scored, k)
+  }
+
+  /** (query_id, qv, qn, cell): each normalized query once per each of
+    * its `nProbe` nearest cells — the probe side of IVF search and of
+    * [[graphCells]].
+    */
+  private[sim] def cellProbes(queries: DataFrame, idCol: String,
+      vecCol: String, centroids: Array[(Int, Array[Float])],
+      nProbe: Int): DataFrame =
+    assignCells(withNorm(queries, idCol, vecCol, "query_id", "qv", "qn"),
         "query_id", "qv", centroids, nProbe)
       .select(col("query_id"), col("qv"), col("qn"),
         explode(col("cells")).as("cell"))
-    val scored = qs.join(indexed, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", pairCos)
-    pairTopK(scored, k)
-  }
-
-  /** Cell-assign the normalized corpus: (neighbor_id, nv, nn, cell) —
-    * the materialized half of an [[IvfIndex]].
-    */
-  private[sim] def assignCorpus(corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[(Int, Array[Float])]): DataFrame =
-    assignCells(
-      withNorm(corpus, idCol, vecCol, "neighbor_id", "nv", "nn"),
-      "neighbor_id", "nv", centroids, 1)
-
-  /** Probe-and-score against an already-fitted index. */
-  private[sim] def searchIndex(index: IvfIndex, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
-    val qs = assignCells(
-        withNorm(queries, idCol, vecCol, "query_id", "qv", "qn"),
-        "query_id", "qv", index.centroids, nProbe)
-      .select(col("query_id"), col("qv"), col("qn"),
-        explode(col("cells")).as("cell"))
-    val scored = broadcast(qs).join(index.assigned, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", pairCos)
-    pairTopK(scored, k)
-  }
-
-  /** Approximate top-k probing nProbe IVF cells per query — fit +
-    * search in one call; for a long-lived corpus use [[IvfIndex]].
-    */
-  def ivf(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, c: Int = 16, iters: Int = 3, nProbe: Int = 4): DataFrame =
-    ivfWith(fitCentroids(corpus, idCol, vecCol, c, iters),
-      queries, corpus, idCol, vecCol, k, nProbe)
-
-  /** IVF search against ALREADY-FITTED centroids — the entry point for
-    * callers that hold a corpus's centroid table across queries (the
-    * Lloyd fit is the expensive, corpus-only half; re-running it per
-    * query re-scans the corpus `iters` times for an identical KB-scale
-    * result).
-    */
-  def ivfWith(centroids: Array[(Int, Array[Float])], queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int = 4): DataFrame =
-    searchIndex(
-      IvfIndex(centroids, assignCorpus(corpus, idCol, vecCol, centroids)),
-      queries, idCol, vecCol, k, nProbe)
 }

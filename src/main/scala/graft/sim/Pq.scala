@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * memory cut that makes billion-vector ANN indexes fit in RAM. Search
   * reconstructs approximate distances from per-subspace lookup tables
   * (ADC); here we build the codebooks, encode, and account for exact
-  * reconstruction error per subspace.
+  * reconstruction error per subspace. Search runs through the index
+  * handles, [[PqIndex]] (flat ADC) and [[IvfPqIndex]] (IVF-pruned).
   *
   * Scale shape mirrors IvfIndex: the DRIVER holds only the codebooks
   * (m·ks·subDim floats — KBs), shipped back each Lloyd round as a
@@ -157,7 +158,7 @@ object Pq {
 
   /** (neighbor_id, codes, cell): PQ-encode AND coarse-quantize each
     * vector in the same map pass — the stored layout of IVFADC
-    * ([[searchEncodedCells]]). Both expressions ride the scan as
+    * ([[IvfPqIndex]]). Both expressions ride the scan as
     * reference objects; still no shuffle, no vector bytes retained.
     */
   def cellCodes(corpus: DataFrame, idCol: String, vecCol: String,
@@ -174,6 +175,9 @@ object Pq {
     * re-ranking — the ANN path you run when the corpus no longer fits
     * as floats: the scored table carries m code bytes per vector (32×
     * smaller than float32 at the default 8×16 geometry on 64 dims).
+    * The one body behind [[PqIndex.search]] and [[IvfPqIndex.search]],
+    * which differ only in `pairs`: how the query side (query_id, qv,
+    * qn, qtab) meets the codes side (`codesDf` + rnorm).
     *
     * Plan shape (and why it scales):
     *  1. query side: ONE map pass attaches the m×ks inner-product
@@ -183,112 +187,42 @@ object Pq {
     *     WindowGroupLimit top-(rerank·k) per query. No vector bytes in
     *     the scan, no vector bytes through the shuffle;
     *  3. re-rank: ONLY the rerank·k shortlisted ids join back to the
-    *     float vectors (equi-join on neighbor_id) for exact cosine —
-    *     so the returned `cos` is EXACT, never the ADC estimate (the
-    *     "no fabricated cos" contract shared with the LSH path), and
-    *     decoded vectors never meet a non-equi join.
+    *     float vectors in `corpus` (equi-join on neighbor_id) for exact
+    *     cosine — so the returned `cos` is EXACT, never the ADC
+    *     estimate (the "no fabricated cos" contract shared with the LSH
+    *     path), and decoded vectors never meet a non-equi join. At
+    *     scale the codes table is the thing that fits in memory; the
+    *     vectors are cold storage read k·rerank rows at a time.
     *
     * Output: (query_id, rank, neighbor_id, cos) — the Knn contract.
     */
-  def search(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, model: Model, rerankFactor: Int = 5): DataFrame =
-    searchEncoded(model, codes(corpus, idCol, vecCol, model),
-      queries, corpus, idCol, vecCol, k, rerankFactor)
-
-  /** ADC search against an ALREADY-ENCODED codes table — the
-    * encode-once / search-many entry point ([[PqIndex]] wraps it).
-    * `corpus` supplies the float vectors for the exact re-rank of the
-    * shortlist only (the caller's vector store; at scale the codes
-    * table is the thing that fits in memory, the vectors are cold
-    * storage read k·rerank rows at a time).
-    */
-  def searchEncoded(model: Model, codesDf: DataFrame, queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      rerankFactor: Int = 5): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    val qs = queriesWithTab(queries, idCol, vecCol, model)
-    val adc = broadcast(qs.select(col("query_id"), col("qtab"), col("qn")))
-      .join(codesWithRnorm(codesDf, model),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adcCos(model).as("cos"))
-    rerankExact(Knn.pairTopK(adc, k * rerankFactor), qs, corpus,
-      idCol, vecCol, k)
-  }
-
-  /** IVFADC (Jégou §V): ADC search pruned by an IVF coarse quantizer.
-    * Flat [[searchEncoded]] scans EVERY code row per query — inherent
-    * to flat ADC and fine while the codes table is small, but at 10⁹
-    * vectors the scan is the cost. Here each code row carries the IVF
-    * cell of its ORIGINAL vector (assigned at encode time,
-    * [[cellCodes]]); a query attaches its `nProbe` nearest cells and
-    * the ADC pass becomes a broadcast EQUI-join on `cell` — candidates
-    * shrink to ~nProbe/C of the corpus, and against a cell-partitioned
-    * on-disk index ([[IvfPqIndex]]) the scan itself prunes to the
-    * probed cells. Shortlist and exact re-rank are identical to the
-    * flat path, so the returned `cos` stays exact.
-    */
-  def searchEncodedCells(model: Model,
-      centroids: Array[(Int, Array[Float])], cellCodesDf: DataFrame,
+  private[sim] def adcSearch(model: Model, codesDf: DataFrame,
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int = 4, rerankFactor: Int = 5): DataFrame = {
+      k: Int, rerankFactor: Int)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    val qs = queriesWithTab(queries, idCol, vecCol, model)
-    // assignCells returns a scalar `cell` at nProbe=1, an array `cells`
-    // otherwise — both admitted by the require above
-    val assigned = Knn.assignCells(qs, "query_id", "qv", centroids, nProbe)
-    val probes = (if (nProbe == 1) assigned
-      else assigned.withColumn("cell", explode(col("cells"))))
-      .select(col("query_id"), col("qtab"), col("qn"), col("cell"))
-    val adc = broadcast(probes)
-      .join(codesWithRnorm(cellCodesDf, model), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adcCos(model).as("cos"))
-    rerankExact(Knn.pairTopK(adc, k * rerankFactor), qs, corpus,
-      idCol, vecCol, k)
-  }
-
-  /** Query side: inner-product table (m×ks doubles, KBs) + exact norm. */
-  private def queriesWithTab(queries: DataFrame, idCol: String,
-      vecCol: String, model: Model): DataFrame = {
     val ks = model.codebooks.headOption.map(_.length).getOrElse(0)
-    Knn.withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
+    val qs = Knn.withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
       .withColumn("qtab",
         asCol(graft.functions.PqIpTable(bridge(col("qv")), model.codebooks, ks)))
-  }
-
-  /** Codes side: attach the reconstruction norm, keep extra columns
-    * (e.g. `cell`) for the join that follows.
-    */
-  private def codesWithRnorm(codesDf: DataFrame, model: Model): DataFrame =
-    codesDf.withColumn("rnorm",
+    val codesSide = codesDf.withColumn("rnorm",
       asCol(graft.functions.PqReconNorm(bridge(col("codes")), model.codebooks)))
-
-  /** cosineWithNorms, not a raw division: a zero-norm query or
-    * reconstruction yields NULL (ranked last by pairTopK), never an
-    * ANSI DIVIDE_BY_ZERO or a shortlist-polluting garbage score.
-    */
-  private def adcCos(model: Model): org.apache.spark.sql.Column = {
-    val ks = model.codebooks.headOption.map(_.length).getOrElse(0)
-    Vectors.cosineWithNorms(
-      asCol(graft.functions.PqAdcSum(bridge(col("qtab")),
-        bridge(col("codes")), ks)),
-      col("qn"), col("rnorm"))
-  }
-
-  /** Re-rank: ONLY the shortlisted ids join back to the float vectors
-    * (equi-joins only) for exact cosine.
-    */
-  private def rerankExact(shortlist: DataFrame, qs: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val exact = shortlist.select(col("query_id"), col("neighbor_id"))
+    // cosineWithNorms, not a raw division: a zero-norm query or
+    // reconstruction yields NULL (ranked last by pairTopK), never an
+    // ANSI DIVIDE_BY_ZERO or a shortlist-polluting garbage score
+    val adc = pairs(qs, codesSide)
+      .select(col("query_id"), col("neighbor_id"),
+        Vectors.cosineWithNorms(
+          asCol(graft.functions.PqAdcSum(bridge(col("qtab")),
+            bridge(col("codes")), ks)),
+          col("qn"), col("rnorm")).as("cos"))
+    val exact = Knn.pairTopK(adc, k * rerankFactor)
+      .select(col("query_id"), col("neighbor_id"))
       .join(broadcast(qs.select(col("query_id"), col("qv"), col("qn"))),
         "query_id")
       .join(Knn.withNorm(corpus, idCol, vecCol, "neighbor_id", "nv", "nn"),
         "neighbor_id")
-      .withColumn("cos", round(
-        Vectors.cosineWithNorms(Vectors.dotD(col("qv"), col("nv")),
-          col("qn"), col("nn")), 6))
+      .withColumn("cos", Knn.pairCos)
     Knn.pairTopK(exact, k)
   }
 

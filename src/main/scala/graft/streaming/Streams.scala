@@ -103,8 +103,11 @@ object Streams {
   final case class DayRow(user_id: Long, day: Long, filled_value: Double,
       n_events: Long)
 
-  /** Open-day state for [[resampleStream]]. */
-  final case class DayState(curDay: Long, lastValue: Double, n: Long)
+  /** Open-day state for [[resampleStream]]: the day's latest value so
+    * far and the (µs, event_id) order key of the event that set it.
+    */
+  final case class DayState(curDay: Long, lastValue: Double, n: Long,
+      lastUs: Long, lastId: Long)
 
   // ---- the in-order state fold behind the stateful twins ----------------
 
@@ -181,24 +184,28 @@ object Streams {
     * and the same parity-spec exclusion, as [[scd2Stream]]).
     *
     * Runs the [[inOrder]] fold and its delivery contract, ordered by
-    * qResample's (ts, event_id); an event for a day older than the open
-    * day is late. State is one 24-byte record per active user.
+    * qResample's (ts, event_id); an event older by that order than the
+    * last one folded is late — also on the open day, whose value it
+    * would otherwise overwrite out of order. State is one 40-byte record
+    * per active user.
     */
   def resampleStream(events: Dataset[Ev],
       droppedLate: Option[LongAccumulator] = None): Dataset[DayRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     inOrder[Long, Ev, DayState, DayRow](events, _.user_id, byMicros, null,
-        droppedLate, (s, e) => dayOf(e) < s.curDay) { (userId, s, e, emit) =>
+        droppedLate, (s, e) => Ordering[(Long, Long)].lt(byMicros(e),
+          (s.lastUs, s.lastId))) { (userId, s, e, emit) =>
       val d = dayOf(e)
-      if (s == null) DayState(d, e.value, 1L)
+      val (us, id) = byMicros(e)
+      if (s == null) DayState(d, e.value, 1L, us, id)
       // in order ⇒ e is the day's latest event so far
-      else if (d == s.curDay) s.copy(lastValue = e.value, n = s.n + 1)
+      else if (d == s.curDay) DayState(d, e.value, s.n + 1, us, id)
       else {
         emit(DayRow(userId, s.curDay, s.lastValue, s.n))
         var g = s.curDay + 1
         while (g < d) { emit(DayRow(userId, g, s.lastValue, 0L)); g += 1 }
-        DayState(d, e.value, 1L)
+        DayState(d, e.value, 1L, us, id)
       }
     }
   }

@@ -45,6 +45,25 @@ class DedupSpec extends SparkSpec {
       s"LSH missed ${exact -- lsh}, spurious ${lsh -- exact}")
   }
 
+  test("verifyJaccard's |A|+|B|-|A∩B| form equals the array_union form " +
+      "on every corpus pair (shingles are distinct)") {
+    val sh = MinHashLSH.shingled(graft.util.Tables(spark, sf).documents,
+      "doc_id", "text", 3)
+    assert(sh.filter(size(col("shingles")) =!=
+      size(array_distinct(col("shingles")))).isEmpty)
+    val pairs = sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
+      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")),
+        col("id_a") < col("id_b"))
+      .withColumn("j_union", round(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
+    val verified = MinHashLSH.verifyJaccard(pairs, "sh_a", "sh_b", 0.0)
+    val n = pairs.count()
+    assert(n > 0)
+    assert(verified.count() === n)
+    assert(verified.filter(col("jaccard") =!= col("j_union")).isEmpty)
+  }
+
   test("NgramJaccard equals brute-force exact pairs") {
     val docs = graft.util.Tables(spark, sf).documents
     // uncapped maxDf to match the query layer's regime: with the default

@@ -86,6 +86,28 @@ class MultiSpecSpec extends SparkSpec {
     assert(counts.head().getLong(0) === 500L)
   }
 
+  /** `-multiple` plus a classic `-reducer`/`-combiner` must fail
+    * loudly, naming where a reducer goes, and write nothing.
+    */
+  private def assertMultipleRejects(flag: String, cmd: String): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("graft_ms_red").toString
+    val e = intercept[IllegalArgumentException](MultiStream.main(Array(
+      "-input", s"$sf/documents.parquet", "-column", "text", "-output", out,
+      "-multiple", "counts|/bin/cat|NONE", flag, cmd)))
+    assert(e.getMessage.contains("each -multiple spec names its own reducer"),
+      e.getMessage)
+    assert(!new java.io.File(s"$out/counts").exists(), "nothing is written")
+  }
+
+  test("-reducer beside -multiple fails loudly instead of being ignored") {
+    assertMultipleRejects("-reducer", "/bin/wc")
+  }
+
+  test("-combiner beside -multiple names the per-spec reducer, not " +
+      "a missing -reducer") {
+    assertMultipleRejects("-combiner", "/bin/cat")
+  }
+
   test("-mapred dirKey/mapper/reducer parses as the -multiple spec " +
       "(the spelling the reference CODE accepts, MapStreamJob.java:267)") {
     val outA = java.nio.file.Files.createTempDirectory("graft_ms_mapred").toString

@@ -394,9 +394,7 @@ class SimSpec extends SparkSpec {
     val (q, c) = (e.filter(col("vec_id") < 10), e)
     val model = graft.sim.Pq.fit(e, "vec_id", "embedding",
       m = 16, ks = 64, iters = 2)
-    val oneShot = graft.sim.Pq.search(q, c, "vec_id", "embedding", 10, model,
-        rerankFactor = 10)
-      .orderBy(col("query_id"), col("rank")).collect().map(_.toSeq).toSeq
+    val oneShot = SimQueries.knnPq(spark, sf).collect().map(_.toSeq).toSeq
     val index = graft.sim.PqIndex(model,
       graft.sim.Pq.codes(c, "vec_id", "embedding", model))
     val viaIndex = index.search(q, c, "vec_id", "embedding", 10,
@@ -434,7 +432,7 @@ class SimSpec extends SparkSpec {
     val refit = graft.sim.Pq.fit(emb, "vec_id", "embedding",
       m = 2, ks = 2, iters = 1)
     val ex = intercept[Throwable] {
-      graft.sim.Pq.searchEncoded(refit, codes, emb.limit(2), emb,
+      graft.sim.PqIndex(refit, codes).search(emb.limit(2), emb,
         "vec_id", "embedding", k = 3).collect()
     }
     val messages = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
@@ -463,8 +461,9 @@ class SimSpec extends SparkSpec {
     // PQ: a zero-norm corpus row in the ADC pass and re-rank
     val model = graft.sim.Pq.fit(vecs, "vec_id", "embedding",
       m = 2, ks = 2, iters = 1)
-    val pq = graft.sim.Pq.search(vecs, vecs, "vec_id", "embedding",
-      k = 3, model).collect()
+    val pq = graft.sim.PqIndex(model,
+        graft.sim.Pq.codes(vecs, "vec_id", "embedding", model))
+      .search(vecs, vecs, "vec_id", "embedding", k = 3).collect()
     assert(pq.nonEmpty)
     // dedup: a zero vector is a near-dup of NOTHING (NULL fails >= τ)
     val dd = graft.dedup.EmbeddingDedup.pairs(vecs, "vec_id", "embedding", 0.5)

@@ -144,6 +144,32 @@ class StreamSpec extends SparkSpec {
     assert(late.value === 1L)
   }
 
+  test("resampleStream: a later batch's event older than the open day's " +
+      "latest is dropped and counted, not folded over it") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val day0 = 1700000000000L / 86400000L
+    def at(id: Long, day: Long, hour: Int, v: Double): Streams.Ev =
+      Streams.Ev(id, new java.sql.Timestamp(
+        (day0 + day) * 86400000L + hour * 3600000L), 1L, "view", v)
+    val late = spark.sparkContext.longAccumulator("resample_open_day_late")
+    val ms = MemoryStream[Streams.Ev]
+    val q = Streams.resampleStream(ms.toDS(), droppedLate = Some(late))
+      .writeStream.format("memory").queryName("resampopen")
+      .outputMode("append").start()
+    try {
+      ms.addData(Seq(at(1, 0, 10, 5.0), at(2, 0, 12, 7.0)))
+      q.processAllAvailable()
+      ms.addData(Seq(at(3, 0, 11, 9.0), at(4, 1, 10, 1.0)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("resampopen").collect()
+      .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3)))
+    // 11:00 is older than the folded 12:00: day 0 closes on 7.0
+    assert(got.toSeq === Seq((day0, 7.0, 2L)))
+    assert(late.value === 1L)
+  }
+
   test("scd2Stream: cross-batch late event is dropped and counted, " +
       "never fragmented into a bogus run") {
     implicit val ctx = spark.sqlContext

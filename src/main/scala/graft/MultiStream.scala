@@ -202,25 +202,17 @@ object MultiStream {
       val (lineDf, c) =
         if (column.nonEmpty) (df, column)
         else if (inputFormat == "kv" || inputFormat == "seqfile")
-          (df.withColumn("line",
-            org.apache.spark.sql.functions.concat_ws("\t",
-              org.apache.spark.sql.functions.col("k"),
-              org.apache.spark.sql.functions.col("v"))), "line")
+          (df.withColumn("line", graft.pipeline.Pipes.joinFields("\t",
+            Seq(df("k"), df("v")))), "line")
         else (df, df.columns.head)
       // -inputtagged: prefix each record with its source file so child
       // scripts can branch on provenance (the input_tagged query is the
-      // native-pipeline twin of the same shape). The record column is
-      // coalesced to "" first: concat_ws SKIPS nulls, so a NULL record
-      // would otherwise emit just the file name with no tab and a
-      // downstream split("\t", 2) would lose the tag/record boundary
+      // native-pipeline twin of the same shape). A NULL record is an
+      // empty field, so the tag/record tab is always there
       val taggedDf =
         if (!inputTagged) lineDf
-        else lineDf.withColumn(c,
-          org.apache.spark.sql.functions.concat_ws("\t",
-            org.apache.spark.sql.functions.input_file_name(),
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.col(c),
-              org.apache.spark.sql.functions.lit(""))))
+        else lineDf.withColumn(c, graft.pipeline.Pipes.joinFields("\t",
+          Seq(org.apache.spark.sql.functions.input_file_name(), lineDf(c))))
       val partKey =
         if (partitioner.isEmpty) None
         else Some(org.apache.spark.sql.functions.expr(partitioner))

@@ -52,7 +52,7 @@ object EmbeddingDedup {
     val assigned = graft.sim.Knn.assignCells(
         embs.select(col(idCol).as("id"), col(vecCol).as("v")),
         "id", "v", cents, nProbe)
-      .select(col("id"), explode(col("cells")).as("cell"))
+      .select(col("id"), col("cell"))
     val cand = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))

@@ -88,7 +88,7 @@ object MultiPipeline {
     import org.apache.spark.sql.functions._
     if (partitionByKey) {
       val line = if (df.columns.length == 1) col(df.columns.head)
-        else concat_ws("\t", df.columns.map(n => col(n).cast("string")): _*)
+        else Pipes.joinFields("\t", df.columns.toSeq.map(col))
       val key = substring_index(line, "\t", 1)
       val keyed = df.select(
         key.as("key"),
@@ -100,8 +100,7 @@ object MultiPipeline {
       keyed.write.mode("overwrite").partitionBy("key")
         .format(format).save(path)
     } else if (format == "text" && df.columns.length > 1) {
-      df.select(concat_ws("\t",
-          df.columns.map(n => col(n).cast("string")): _*).as("value"))
+      df.select(Pipes.joinFields("\t", df.columns.toSeq.map(col)).as("value"))
         .write.mode("overwrite").format("text").save(path)
     } else {
       df.write.mode("overwrite").format(format).save(path)

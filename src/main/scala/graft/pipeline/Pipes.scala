@@ -82,8 +82,17 @@ object Pipes {
     * structured frame into the text-line world the reference lives in.
     */
   def toLine(sep: String, cols: Seq[String]): Pipe = { df =>
-    df.select(concat_ws(sep, cols.map(col): _*).as("line"))
+    df.select(joinFields(sep, cols.map(col)).as("line"))
   }
+
+  /** The one line builder behind every tab line graft writes: each
+    * column as a string field, a NULL as an empty field, so the fields
+    * after it keep their positions (the reference's line protocol,
+    * MultiPipeMapRed.java). `concat_ws` alone skips a NULL and shifts
+    * every later field left.
+    */
+  private[graft] def joinFields(sep: String, cols: Seq[Column]): Column =
+    concat_ws(sep, cols.map(c => coalesce(c.cast("string"), lit(""))): _*)
 
   /** Chain stages left-to-right — the reference chains MR jobs; here the
     * chain is one Catalyst plan.

@@ -17,6 +17,11 @@ import graft.util.Tables
   */
 object CurationQueries {
 
+  /** Sum of `c` over the rows before this one in `w` (0 for the first). */
+  private def sumBefore(c: Column,
+      w: org.apache.spark.sql.expressions.WindowSpec): Column =
+    coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
   private def round4(c: Column): Column =
     floor(c * 10000 + 0.5).cast("double") / 10000
 
@@ -299,14 +304,10 @@ object CurationQueries {
     val sharded = docs.withColumn("shard",
       floor(col("k") / lit(4294967296L / PackShards)).cast("long"))
     val w = Window.partitionBy(col("shard")).orderBy(col("k"), col("doc_id"))
-    val local = sharded.withColumn("local_cum", coalesce(
-      sum(col("cost")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-      lit(0L)))
+    val local = sharded.withColumn("local_cum", sumBefore(col("cost"), w))
     val bases = sharded.groupBy(col("shard"))
       .agg(sum(col("cost")).as("tot"))
-      .withColumn("base", coalesce(
-        sum(col("tot")).over(Window.orderBy(col("shard"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("base", sumBefore(col("tot"), Window.orderBy(col("shard"))))
       .select(col("shard"), col("base"))
     local.join(broadcast(bases), "shard")
       .withColumn("start_off", col("base") + col("local_cum"))
@@ -363,15 +364,12 @@ object CurationQueries {
     val budget = docs.agg(
       floor(sum(col("n_toks")) / 2).cast("long").as("budget"))
     val hist = docs.groupBy(col("sq")).agg(sum(col("n_toks")).as("tv"))
-      .withColumn("cum_better", coalesce(
-        sum(col("tv")).over(Window.orderBy(col("sq").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("cum_better",
+        sumBefore(col("tv"), Window.orderBy(col("sq").desc)))
       .select(col("sq").as("h_sq"), col("cum_better"))
     docs.join(broadcast(hist), col("sq") === col("h_sq"))
-      .withColumn("cum_within", coalesce(
-        sum(col("n_toks")).over(Window.partitionBy(col("sq"))
-          .orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("cum_within", sumBefore(col("n_toks"),
+        Window.partitionBy(col("sq")).orderBy(col("doc_id"))))
       .withColumn("cum_before", col("cum_better") + col("cum_within"))
       .crossJoin(broadcast(budget))
       .filter(col("cum_before") + col("n_toks") <= col("budget"))
@@ -629,11 +627,11 @@ object CurationQueries {
     */
   val manifestIncrementalSql: String = exportManifestSql
 
-  /** Max docs the manifest-stream fixture collects into its
-    * MemoryStream feed — bounds the face's driver memory at any corpus
-    * size (the AdmissionFeedBudget stride pattern; the oracle replays
-    * the stride arithmetic). At every shipped SF the stride resolves
-    * to 1 — the whole corpus flows.
+  /** Max docs the manifest-stream fixture feeds through
+    * [[graft.streaming.Replay]] — bounds the face's driver memory at
+    * any corpus size (the AdmissionFeedBudget stride pattern; the
+    * oracle replays the stride arithmetic). At every shipped SF the
+    * stride resolves to 1 — the whole corpus flows.
     */
   val ManifestFeedBudget = 5000L
 
@@ -653,31 +651,25 @@ object CurationQueries {
     * bit-for-bit; a batch dropped, double-counted, or corrupted by
     * compaction flips the hash.
     *
-    * The driver-side collect feeds the MemoryStream FIXTURE only
-    * (production feeds a file/queue source) and is budget-bounded by
-    * [[ManifestFeedBudget]]; the operator's own per-batch cost is one
-    * scan of the BATCH, state is nShards rows per batch — the 100 TB
-    * claim manifestStream documents.
+    * The feed is a [[graft.streaming.Replay]] FIXTURE (production
+    * feeds a file/queue source), one collected batch at a time, and is
+    * budget-bounded by [[ManifestFeedBudget]]; the operator's own
+    * per-batch cost is one scan of the BATCH, state is nShards rows per
+    * batch — the 100 TB claim manifestStream documents.
     */
   def manifestStreamFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val stateDir = graft.util.Staging.dir(s, "manifest_stream_face")
     val docs = Tables(s, dir).documents
     val stride = math.max(1L,
       (docs.count() + ManifestFeedBudget - 1) / ManifestFeedBudget)
-    val rows = docs.filter(pmod(col("doc_id"), lit(stride)) === 0)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val batches = Seq(0L, 1L, 2L).map(m => rows.filter(_._1 % 3 == m))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = graft.streaming.Streams.manifestStream(
-      ms.toDS().toDF("doc_id", "text"), stateDir, "doc_id", "text",
-      ShardSeed, NShards)
-    try {
-      batches.foreach { b => ms.addData(b.toSeq); q.processAllAvailable() }
-    } finally q.stop()
+    val fed = docs.filter(pmod(col("doc_id"), lit(stride)) === 0)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+    graft.streaming.Replay.feed(s,
+        Seq(0L, 1L, 2L).map(m => fed.filter(col("doc_id") % 3 === m))) {
+      ds => graft.streaming.Streams.manifestStream(ds.toDF("doc_id", "text"),
+        stateDir, "doc_id", "text", ShardSeed, NShards)
+    }
     // the maintenance fold: published manifest is invariant under it
     graft.streaming.Streams.compactMv(s, stateDir,
       graft.ops.Manifest.merge)
@@ -705,8 +697,8 @@ object CurationQueries {
        |FROM h GROUP BY shard ORDER BY shard""".stripMargin
 
   /** Doc budget for the novelty_stream fixture feed (the
-    * ManifestFeedBudget pattern: bounds the driver-side MemoryStream
-    * collect at any corpus size; stride resolves to 1 at every
+    * ManifestFeedBudget pattern: bounds the driver-side feed collect
+    * at any corpus size; stride resolves to 1 at every
     * shipped SF — the whole strided recrawl flows).
     */
   val NoveltyFeedBudget = 5000L
@@ -732,7 +724,6 @@ object CurationQueries {
     */
   def noveltyStreamFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docs = Tables(s, dir).documents
     val stride = math.max(1L,
       (docs.count() + NoveltyFeedBudget - 1) / NoveltyFeedBudget)
@@ -751,22 +742,19 @@ object CurationQueries {
     // markers byte-copied): graft.util.Staging.cloneTree
     graft.util.Staging.cloneTree(s, pristine, idxDir)
     val feed = recrawled(base)
-      .select(col("doc_id"), col("source"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val batches = Seq(0L, 1L, 2L).map(m => feed.filter(_._1 % 3 == m))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
+      .select(col("doc_id"), col("source"), col("text"))
+      .as[(Long, String, String)]
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Long, Long, Long)]
-    val q = graft.streaming.Streams.noveltyStream(
-        ms.toDS().toDF("doc_id", "source", "text"),
-        idxDir, "source", "text", 3) { (batchId, rows) =>
-      rows.foreach(r => buf += ((batchId, r.getString(0),
-        r.getLong(1), r.getLong(2), r.getLong(3))))
+    graft.streaming.Replay.feed(s,
+        Seq(0L, 1L, 2L).map(m => feed.filter(col("doc_id") % 3 === m))) {
+      ds => graft.streaming.Streams.noveltyStream(
+          ds.toDF("doc_id", "source", "text"),
+          idxDir, "source", "text", 3) { (batchId, rows) =>
+        rows.foreach(r => buf += ((batchId, r.getString(0),
+          r.getLong(1), r.getLong(2), r.getLong(3))))
+      }
     }
-    try {
-      batches.foreach { b => ms.addData(b.toSeq); q.processAllAvailable() }
-    } finally q.stop()
     buf.toSeq.toDF("batch", "source", "n_grams", "n_novel", "novelty_bp")
       .orderBy(col("batch"), col("source"))
   }
@@ -939,12 +927,8 @@ object CurationQueries {
       // QUOTIENT (≈ ratio × 1e6) stays tiny, so div back to BIGINT
       .withColumn("r_micro",
         expr("(CAST(cap_tokens AS DECIMAL(38,0)) * 1000000) div weight"))
-      .withColumn("cumcap_before", coalesce(
-        sum(col("cap_tokens")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("cumw_before", coalesce(
-        sum(col("weight")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("cumcap_before", sumBefore(col("cap_tokens"), wOrd))
+      .withColumn("cumw_before", sumBefore(col("weight"), wOrd))
       // exact integer water-filling test, cross-multiplied: capped iff
       // this source's cap undershoots its share of what remains after
       // every smaller-ratio source took its cap
@@ -1103,9 +1087,8 @@ object CurationQueries {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("n_chars"))
     val cumBelow = docs.groupBy(col("n_chars"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("cum_below", coalesce(
-        sum(col("cnt")).over(Window.orderBy(col("n_chars"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("cum_below",
+        sumBefore(col("cnt"), Window.orderBy(col("n_chars"))))
       .select(col("n_chars"), col("cum_below"))
     val p = CurriculumPhases
     val bounds = docs.agg(count(lit(1)).as("n")).select(

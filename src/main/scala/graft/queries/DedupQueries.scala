@@ -925,50 +925,37 @@ object DedupQueries {
     */
   def qTakedownAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = graft.util.Staging.dir(s, "takedown_audit")
     val auditDir = s"$base/audit"
-    val docs = Tables(s, dir).documents
-    val seen = docs.filter(pmod(col("doc_id"), lit(5)) < 4)
+    val removedDocs = Tables(s, dir).documents
+      .filter(pmod(col("doc_id"), lit(5)) < 4 &&
+        pmod(col("doc_id"), lit(97L)).isin(3L, 10L))
+      .select(col("doc_id"), col("text"))
     val idxDir = seenIndexClone(s, dir, "takedown_audit_idx")
     // planted waves — takedown lists are driver-side by the
     // takedownStream contract (KB-scale in-lists); BOTH waves come out
     // of one collect (one scan instead of two for two tiny in-lists)
-    val waveRows = seen
-      .filter(pmod(col("doc_id"), lit(97L)).isin(3L, 10L))
+    val waveRows = removedDocs
       .select(col("doc_id"), pmod(col("doc_id"), lit(97L)).as("r"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    def wave(r: Long): Seq[Long] =
-      waveRows.filter(_._2 == r).map(_._1).toSeq.sorted
-    val (w1, w2) = (wave(3L), wave(10L))
-    require(w1.nonEmpty && w2.nonEmpty,
+    val waves = Seq(3L, 10L).map(r =>
+      waveRows.filter(_._2 == r).map(_._1).toSeq.sorted)
+    require(waves.forall(_.nonEmpty),
       "takedown_audit: fixture waves must both be non-empty")
-    val removedDocs = docs.filter(pmod(col("doc_id"), lit(5)) < 4 &&
-        (pmod(col("doc_id"), lit(97L)) === 3 ||
-          pmod(col("doc_id"), lit(97L)) === 10))
-      .select(col("doc_id"), col("text"))
+    // each removed doc's τ ≥ 0.7 matches in the index's current epoch
+    def matches(as: String): DataFrame = graft.dedup.MinHashIndex.probe(
+        graft.dedup.SnapshotIndex.load(s, idxDir).index,
+        removedDocs, "doc_id", "text", n = 3, tau = 0.7)
+      .groupBy(col("new_id").as("doc_id")).agg(count(lit(1)).as(as))
     // n_before probes epoch 0 and is MATERIALIZED now: the second
     // publish retires epoch 0 (retention 1), so this plan must not
     // re-run afterwards
-    val before = graft.dedup.MinHashIndex.probe(
-        graft.dedup.SnapshotIndex.load(s, idxDir).index,
-        removedDocs, "doc_id", "text", n = 3, tau = 0.7)
-      .groupBy(col("new_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_before"))
-      .localCheckpoint(true)
-    val ms =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    val q = graft.streaming.Streams.takedownStream(
-      ms.toDS().toDF("doc_id"), idxDir, auditDir)
-    try {
-      ms.addData(w1); q.processAllAvailable()
-      ms.addData(w2); q.processAllAvailable()
-    } finally q.stop()
-    val after = graft.dedup.MinHashIndex.probe(
-        graft.dedup.SnapshotIndex.load(s, idxDir).index,
-        removedDocs, "doc_id", "text", n = 3, tau = 0.7)
-      .groupBy(col("new_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_after"))
+    val before = matches("n_before").localCheckpoint(true)
+    graft.streaming.Replay.feed(s, waves.map(_.toDS())) { ds =>
+      graft.streaming.Streams.takedownStream(ds.toDF("doc_id"), idxDir,
+        auditDir)
+    }
+    val after = matches("n_after")
     s.read.parquet(auditDir).select(col("doc_id"), col("epoch"))
       .join(before, Seq("doc_id"), "left")
       .join(after, Seq("doc_id"), "left")
@@ -1008,39 +995,9 @@ object DedupQueries {
        |LEFT JOIN na ON na.rid = r.doc_id
        |ORDER BY r.doc_id""".stripMargin
 
-  /** The streaming ADMISSION loop under the full hash oracle — the
-    * registered face of
-    * [[graft.streaming.Streams.dedupIndexStreamSnapshot]], the one
-    * dedup-index stream (its batch body is
-    * [[graft.streaming.Streams.dedupIndexBatch]]): the seen corpus (mod-5
-    * split) seeds a snapshot index; the fresh 20% arrives as two crawl
-    * batches (doc parity); per batch the stream drops intra-batch
-    * near-dups (id_b of any τ ≥ 0.7 pair — "keep the smaller id"),
-    * rejects docs that duplicate the INDEX SO FAR (seen ∪ earlier
-    * admissions — batch 1 must honor batch 0's appends), appends the
-    * admissions, and lands them batchId-keyed. The face reports per
-    * batch (n_arrived, n_admitted, sum_admitted_ids); the id sum makes
-    * the hash sensitive to WHICH docs were admitted, not just how
-    * many. The oracle replays the whole admission cascade as exact
-    * Jaccard CTEs (the dedup_minhash_lsh S-curve argument), so a
-    * missed rejection, a phantom admission, or batch 1 ignoring batch
-    * 0's appends all flip the hash.
-    *
-    * The driver-side collect feeds the MemoryStream FIXTURE only (the
-    * same mechanism every streaming spec uses) — the operator under
-    * test reads a stream; production feeds it from a file/queue
-    * source. The feed is BUDGET-BOUNDED at any corpus size (the
-    * dedup_recall move): a deterministic stride on doc_id div 5 caps
-    * the collected crawl at ~[[AdmissionFeedBudget]] docs, so the
-    * fixture's driver memory is constant while the operator's own
-    * per-batch cost stays the stream's documented price (one
-    * banded self-join of the batch + one band equi-join against the
-    * index). At every shipped SF the stride resolves to 1 (the whole
-    * fresh split flows).
-    */
-  /** Max docs the admission-audit fixture collects into its
-    * MemoryStream feed — bounds the face's driver memory at any
-    * corpus size (the oracle replays the stride arithmetic).
+  /** Max docs the admission-audit fixture feeds through
+    * [[graft.streaming.Replay]] — bounds the face's driver memory at
+    * any corpus size (the oracle replays the stride arithmetic).
     */
   val AdmissionFeedBudget = 5000L
 
@@ -1120,9 +1077,38 @@ object DedupQueries {
        |FROM range(16) t
        |ORDER BY band_id""".stripMargin
 
+  /** The streaming ADMISSION loop under the full hash oracle — the
+    * registered face of
+    * [[graft.streaming.Streams.dedupIndexStreamSnapshot]], the one
+    * dedup-index stream (its batch body is
+    * [[graft.streaming.Streams.dedupIndexBatch]]): the seen corpus (mod-5
+    * split) seeds a snapshot index; the fresh 20% arrives as two crawl
+    * batches (doc parity); per batch the stream drops intra-batch
+    * near-dups (id_b of any τ ≥ 0.7 pair — "keep the smaller id"),
+    * rejects docs that duplicate the INDEX SO FAR (seen ∪ earlier
+    * admissions — batch 1 must honor batch 0's appends), appends the
+    * admissions, and lands them batchId-keyed. The face reports per
+    * batch (n_arrived, n_admitted, sum_admitted_ids); the id sum makes
+    * the hash sensitive to WHICH docs were admitted, not just how
+    * many. The oracle replays the whole admission cascade as exact
+    * Jaccard CTEs (the dedup_minhash_lsh S-curve argument), so a
+    * missed rejection, a phantom admission, or batch 1 ignoring batch
+    * 0's appends all flip the hash.
+    *
+    * The feed is a [[graft.streaming.Replay]] FIXTURE, one collected
+    * batch at a time — the operator under test reads a stream;
+    * production feeds it from a file/queue source. The feed is
+    * BUDGET-BOUNDED at any corpus size (the dedup_recall move): a
+    * deterministic stride on doc_id div 5 caps
+    * the collected crawl at ~[[AdmissionFeedBudget]] docs, so the
+    * fixture's driver memory is constant while the operator's own
+    * per-batch cost stays the stream's documented price (one
+    * banded self-join of the batch + one band equi-join against the
+    * index). At every shipped SF the stride resolves to 1 (the whole
+    * fresh split flows).
+    */
   def qAdmissionAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = graft.util.Staging.dir(s, "admission_audit")
     val outDir = s"$base/out"
     val docs = Tables(s, dir).documents
@@ -1135,24 +1121,17 @@ object DedupQueries {
     // the admission loop appends into its clone (pristine pricing,
     // see qTakedownAudit's doc)
     val idxDir = seenIndexClone(s, dir, "admission_audit_idx")
-    val rows = fresh.select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val (b0, b1) = rows.partition(_._1 % 2 == 0)
-    require(b0.nonEmpty && b1.nonEmpty,
+    val crawl = fresh.select(col("doc_id"), col("text")).as[(Long, String)]
+    val fed = graft.streaming.Replay.feed(s,
+        Seq(0L, 1L).map(p => crawl.filter(col("doc_id") % 2 === p))) { ds =>
+      graft.streaming.Streams.dedupIndexStreamSnapshot(
+        ds.toDF("doc_id", "text"), idxDir, "doc_id", "text",
+        n = 3, tau = 0.7, outDir)
+    }
+    require(fed.forall(_ > 0),
       "admission_audit: both crawl batches must be non-empty")
-    val ms =
-      org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-    val q = graft.streaming.Streams.dedupIndexStreamSnapshot(
-      ms.toDS().toDF("doc_id", "text"), idxDir, "doc_id", "text",
-      n = 3, tau = 0.7, outDir)
-    try {
-      ms.addData(b0.toSeq); q.processAllAvailable()
-      ms.addData(b1.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val arrived = fresh
-      .groupBy(pmod(col("doc_id"), lit(2)).as("batch"))
-      .agg(count(lit(1)).as("n_arrived"))
+    val arrived = fed.zipWithIndex.map { case (n, b) => (b.toLong, n.toLong) }
+      .toDF("batch", "n_arrived")
     val admitted = s.read.parquet(outDir)
       .groupBy(col("batch").cast("long").as("batch"))
       .agg(count(lit(1)).as("n_admitted"),

@@ -23,8 +23,8 @@ object SourceQueries {
   def sourceKv(s: SparkSession, dir: String): DataFrame = {
     val out = graft.util.Staging.dir(s, "kv_source")
     Tables(s, dir).orders
-      .select(concat_ws("\t", col("o_orderstatus"),
-        col("o_totalprice").cast("string")).as("value"))
+      .select(graft.pipeline.Pipes.joinFields("\t",
+        Seq(col("o_orderstatus"), col("o_totalprice"))).as("value"))
       .write.mode("overwrite").text(out)
     val kv = graft.sources.Readers.kvText(s, out)
     kv.groupBy(col("k"))
@@ -453,8 +453,8 @@ object SourceQueries {
   def sourceGzip(s: SparkSession, dir: String): DataFrame = {
     val out = graft.util.Staging.dir(s, "gzip_source")
     Tables(s, dir).documents
-      .select(concat_ws("\t", col("doc_id"), col("lang"),
-        col("n_chars")).as("value"))
+      .select(graft.pipeline.Pipes.joinFields("\t",
+        Seq(col("doc_id"), col("lang"), col("n_chars"))).as("value"))
       .repartition(4)
       .write.mode("overwrite").option("compression", "gzip").text(out)
     graft.sources.Readers.text(s, out)

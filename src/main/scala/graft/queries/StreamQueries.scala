@@ -1,19 +1,54 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.streaming.Streams
+import org.apache.spark.sql.streaming.OutputMode
+import graft.streaming.{Replay, Streams}
 import graft.util.Tables
 
 /** Structured Streaming coverage (SURVEY.md §2.7) over the events table.
-  * stream_window_agg / stream_sessionize run the shared transforms in
-  * batch mode (what the DuckDB oracle checks); their streaming behavior
-  * is spec-tested. stream_multi_sink actually RUNS a streaming query
-  * (file source → AvailableNow → foreachBatch fan-out) and returns the
-  * summary of what landed in the sinks.
+  * Stateless faces (stream_window_agg, stream_hopping, …) run the
+  * shared transforms in batch mode, what the DuckDB oracle checks;
+  * their streaming behavior is spec-tested. The stateful faces run the
+  * stream operators they name: stream_sessionize runs
+  * `Streams.sessionizeStream`, stream_dedup `dedupStream`,
+  * stream_latest `latestStream` and resample_stream `resampleStream`,
+  * each fed through [[graft.streaming.Replay]] in event-time slices, so
+  * the oracle checks what the stream emits. stream_multi_sink RUNS a
+  * file-source query (AvailableNow → foreachBatch fan-out) and returns
+  * the summary of what landed in the sinks.
   */
 object StreamQueries {
+
+  /** How many event-time slices a streamed face feeds the events table
+    * in: the driver holds one slice at a time.
+    */
+  private val EventSlices = 3
+
+  /** The events table as [[EventSlices]] slices of equal event-time
+    * span, in time order, typed for the stream operators; with the
+    * table's last event time (µs) and largest user id. Every event of
+    * a slice is at or after every event of the slices before it, so a
+    * stream operator's per-key delivery contract holds by construction.
+    * An event without a time rides in the first slice, where the
+    * operator meets it.
+    */
+  private def eventSlices(s: SparkSession, dir: String)
+      : (Seq[Dataset[Streams.Ev]], Long, Long) = {
+    import s.implicits._
+    val e = Tables(s, dir).events.select(col("event_id"), col("ts"),
+      col("user_id"), col("event_type"), col("value")).as[Streams.Ev]
+    val b = e.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
+      max(col("user_id"))).na.fill(0L).head()
+    val step = (b.getLong(1) - b.getLong(0)) / EventSlices
+    def cut(k: Int): Long = b.getLong(0) + step * k
+    val us = coalesce(unix_micros(col("ts")), lit(Long.MinValue))
+    val slices = (0 until EventSlices).map(k => e.filter(
+      (lit(k == 0) || us >= cut(k)) &&
+        (lit(k == EventSlices - 1) || us < cut(k + 1))))
+    (slices, b.getLong(1), b.getLong(2))
+  }
 
   def streamWindowAgg(s: SparkSession, dir: String): DataFrame =
     Streams.windowAgg(Tables(s, dir).events)
@@ -48,9 +83,31 @@ object StreamQueries {
       |GROUP BY ws, event_type
       |ORDER BY ws, event_type""".stripMargin
 
-  def streamSessionize(s: SparkSession, dir: String): DataFrame =
-    Streams.sessionizeBatch(Tables(s, dir).events, gapMinutes = 30)
+  /** Sessions (30 min gap) per user from `Streams.sessionizeStream`,
+    * fed the events table in event-time slices. The stream holds each
+    * user's open session until the watermark passes it, so two flush
+    * slices follow the table: one sentinel event, for a user id the
+    * table does not hold, a day past the last event, then one more to
+    * trigger the event-time timeouts. The sentinel's rows are dropped.
+    * `session_id` is the session's rank by start within its user,
+    * which equals the oracle's cumulative `new_session` sum.
+    */
+  def streamSessionize(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val (slices, lastUs, maxUser) = eventSlices(s, dir)
+    val sentinel = maxUser + 1
+    val flush = Seq(1L, 2L).map(k => Seq(Streams.Ev(-k, new java.sql.Timestamp(
+      lastUs / 1000L + k * 86400000L), sentinel, "flush", 0.0)).toDS())
+    Replay.emitted(s, slices ++ flush, OutputMode.Append())(
+        Streams.sessionizeStream(_, gapMinutes = 30))
+      .filter(col("user_id") =!= sentinel)
+      .withColumn("session_id", row_number().over(
+        Window.partitionBy(col("user_id")).orderBy(col("start_s")))
+        .cast("long"))
+      .select(col("user_id"), col("session_id"), col("n_events"),
+        col("start_s"), col("end_s"), col("duration_s"))
       .orderBy(col("user_id"), col("session_id"))
+  }
 
   val streamSessionizeSql: String =
     """WITH e AS (
@@ -73,18 +130,6 @@ object StreamQueries {
       |GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin
 
-  /** Schema for the events file streaming source: probed from a batch
-    * read of the same file (readStream demands an explicit schema; the
-    * batch reader already resolves whatever time unit the parquet
-    * carries — nanos-as-long, micros NTZ, or tz-adjusted TIMESTAMP).
-    * `Tables.normalizeEventTs` then canonicalizes `ts` post-read, so
-    * the streaming time axis can never silently diverge from batch.
-    */
-  private def probedEventsSchema(s: SparkSession, dir: String): StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/events.parquet").schema
-  }
-
   /** One readStream fanned to three sinks (the reference's `-multiple`
     * on a stream), then a summary of what landed — deterministic because
     * AvailableNow drains the source completely, so the oracle can state
@@ -106,8 +151,13 @@ object StreamQueries {
     val to = new org.apache.hadoop.fs.Path(srcDir, "events.parquet")
     org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(conf), from,
       to.getFileSystem(conf), to, false, conf)
-    val stream = Tables.normalizeEventTs(
-      s.readStream.schema(probedEventsSchema(s, dir)).parquet(srcDir))
+    // readStream demands an explicit schema: probe it from a batch read
+    // of the same file, which already resolves whatever time unit the
+    // parquet carries (nanos-as-long, micros NTZ, or tz-adjusted
+    // TIMESTAMP); `Tables.normalizeEventTs` then canonicalizes `ts`
+    // post-read, so the streaming time axis cannot diverge from batch
+    val stream = Tables.normalizeEventTs(s.readStream
+      .schema(s.read.parquet(s"$dir/events.parquet").schema).parquet(srcDir))
     val q = Streams.multiSink(stream, home, Seq(
       "clicks" -> (df => df.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("value"))),
@@ -116,17 +166,14 @@ object StreamQueries {
       "by_user" -> (df => df.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("v")))))
     q.awaitTermination()
-    val clicks = s.read.parquet(s"$home/clicks")
-      .agg(count(lit(1)).as("n_rows"), round(sum(col("value")), 2).as("total"))
-      .select(lit("clicks").as("branch"), col("n_rows"), col("total"))
-    val errors = s.read.parquet(s"$home/errors")
-      .agg(count(lit(1)).as("n_rows"), round(sum(col("value")), 2).as("total"))
-      .select(lit("errors").as("branch"), col("n_rows"), col("total"))
-    val byUser = s.read.parquet(s"$home/by_user")
-      .agg(count(lit(1)).as("n_rows"),
-        lit(null).cast("double").as("total"))
-      .select(lit("by_user").as("branch"), col("n_rows"), col("total"))
-    clicks.unionByName(errors).unionByName(byUser).orderBy(col("branch"))
+    def landed(branch: String, total: org.apache.spark.sql.Column) =
+      s.read.parquet(s"$home/$branch").agg(count(lit(1)).as("n_rows"),
+          total.as("total"))
+        .select(lit(branch).as("branch"), col("n_rows"), col("total"))
+    val valueTotal = round(sum(col("value")), 2)
+    landed("clicks", valueTotal).unionByName(landed("errors", valueTotal))
+      .unionByName(landed("by_user", lit(null).cast("double")))
+      .orderBy(col("branch"))
   }
 
   val streamMultiSinkSql: String =
@@ -183,7 +230,7 @@ object StreamQueries {
     * (user_id ⊆ c_custkey in the synthetic data), rolled up by market
     * segment. The dim side is broadcast — the stream side never
     * shuffles. Batch mode is what the oracle checks; the streaming
-    * path (same transform over a MemoryStream) is spec-tested.
+    * path (same transform over a memory stream) is spec-tested.
     */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
     val t = Tables(s, dir)
@@ -201,15 +248,18 @@ object StreamQueries {
       |GROUP BY 1
       |ORDER BY segment""".stripMargin
 
-  /** First-occurrence dedup per (user_id, event_type): batch form =
-    * deterministic earliest-by-event-time (the oracle); streaming form
-    * (dropDuplicates + watermark) is spec-tested for key-set equality.
+  /** First-occurrence dedup per (user_id, event_type) from
+    * `Streams.dedupStream`, fed the events table in event-time slices:
+    * each key's first event by (ts, event_id), emitted once.
     */
-  def streamDedup(s: SparkSession, dir: String): DataFrame =
-    Streams.firstEvents(Tables(s, dir).events, Seq("user_id", "event_type"))
+  def streamDedup(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Replay.emitted(s, eventSlices(s, dir)._1, OutputMode.Append())(
+        Streams.dedupStream(_, None))
       .select(col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("first_s"), col("value"))
       .orderBy(col("user_id"), col("event_type"))
+  }
 
   val streamDedupSql: String =
     """SELECT user_id, event_type, floor(epoch(ts))::BIGINT AS first_s, value
@@ -282,27 +332,32 @@ object StreamQueries {
       |GROUP BY 1
       |ORDER BY k_decile""".stripMargin
 
+  /** Errors within 5 minutes after a click by the same user, joined
+    * by `Streams.intervalJoin` as `joinType`.
+    */
+  private def clickErrors(s: SparkSession, dir: String,
+      joinType: String): DataFrame = {
+    val ev = Tables(s, dir).events
+    def side(typ: String, p: String) = ev.filter(col("event_type") === typ)
+      .select(col("user_id").as(s"${p}_user"), col("ts").as(s"${p}_ts"))
+    Streams.intervalJoin(side("click", "c"), side("error", "e"), "c_user",
+      "e_user", "c_ts", "e_ts", lowerSec = 0L, upperSec = 300L, joinType)
+  }
+
   /** Stream-stream interval join (batch mode for the oracle; the
     * watermarked streaming run of the same transform is spec-tested):
     * every error within 5 minutes AFTER a click by the same user,
     * rolled up per user. Microsecond-precision BETWEEN on both engines
     * (ns→us truncation is identical), gaps reported in whole seconds.
     */
-  def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(s, dir).events
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("user_id").as("e_user"), col("ts").as("e_ts"))
-    Streams.intervalJoin(clicks, errors, "c_user", "e_user", "c_ts", "e_ts",
-        lowerSec = 0L, upperSec = 300L)
+  def streamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    clickErrors(s, dir, "inner")
       .select(col("c_user").as("user_id"),
         (unix_timestamp(col("e_ts")) - unix_timestamp(col("c_ts"))).as("gap_s"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
         min(col("gap_s")).as("min_gap_s"), max(col("gap_s")).as("max_gap_s"))
       .orderBy(col("user_id"))
-  }
 
   val streamStreamJoinSql: String =
     """SELECT c.user_id, count(*) AS n_pairs,
@@ -351,13 +406,22 @@ object StreamQueries {
       |ORDER BY ws, rank""".stripMargin
 
   /** CDC-style upsert materialization: latest event per user by
-    * (event time, event_id). Batch twin of Streams.latestStream (the
-    * mapGroupsWithState Update-mode upsert); multi-batch streaming
-    * parity is spec-gated in StreamSpec.
+    * (event time, event_id) from `Streams.latestStream`, the
+    * mapGroupsWithState Update-mode upsert, fed the events table in
+    * event-time slices. Update mode re-emits each user a batch touched,
+    * so the face keeps, per user, the row from the highest batch id.
     */
-  def streamLatest(s: SparkSession, dir: String): DataFrame =
-    Streams.latestBatch(Tables(s, dir).events)
+  def streamLatest(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Replay.emitted(s, eventSlices(s, dir)._1, OutputMode.Update())(
+        Streams.latestStream)
+      .withColumn("rn", row_number().over(Window.partitionBy(col("user_id"))
+        .orderBy(col("batch_id").desc)))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("last_type"), col("last_value"),
+        col("last_ts_s"))
       .orderBy(col("user_id"))
+  }
 
   val streamLatestSql: String =
     """SELECT user_id, event_type AS last_type, value AS last_value,
@@ -382,19 +446,12 @@ object StreamQueries {
     * post-join filter; the streaming form holds only
     * watermark + 300 s of state per side.
     */
-  def streamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(s, dir).events
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("user_id").as("e_user"), col("ts").as("e_ts"))
-    Streams.intervalJoin(clicks, errors, "c_user", "e_user", "c_ts", "e_ts",
-        lowerSec = 0L, upperSec = 300L, joinType = "leftOuter")
+  def streamOuterJoin(s: SparkSession, dir: String): DataFrame =
+    clickErrors(s, dir, "leftOuter")
       .groupBy(col("c_user").as("user_id"))
       .agg(count(col("e_ts")).as("n_pairs"),
         sum(when(col("e_ts").isNull, 1L).otherwise(0L)).as("n_orphans"))
       .orderBy(col("user_id"))
-  }
 
   val streamOuterJoinSql: String =
     """SELECT c.user_id, count(e.ts) AS n_pairs,
@@ -451,7 +508,8 @@ object StreamQueries {
     * the REAL flatMapGroupsWithState query; emitted rows are each
     * user's CLOSED days (latest value + event count, gap days
     * forward-filled at n_events = 0; the open last day is withheld by
-    * the append-mode contract). The oracle is the batch LOCF grid
+    * the append-mode contract), fed through [[graft.streaming.Replay]].
+    * The oracle is the batch LOCF grid
     * (q_resample's arithmetic) over the same strided users, restricted
     * to days strictly before each user's last — hash equality proves
     * the one-key-at-a-time state fold reproduces the batch
@@ -460,7 +518,6 @@ object StreamQueries {
     */
   def resampleStreamFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val e = Tables(s, dir).events
     val stride = math.max(1L,
       (e.count() + ResampleFeedBudget - 1) / ResampleFeedBudget)
@@ -476,32 +533,18 @@ object StreamQueries {
       return s.emptyDataset[Streams.DayRow](
         org.apache.spark.sql.Encoders.product[Streams.DayRow]).toDF()
     val keepRem = remRow.getLong(0)
-    val rows = e.filter(pmod(col("user_id"), lit(stride)) === keepRem)
+    val feed = e.filter(pmod(col("user_id"), lit(stride)) === keepRem)
       .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Streams.Ev].collect().sortBy(r => (r.ts.getTime, r.event_id))
-    def day(r: Streams.Ev): Long = Math.floorDiv(r.ts.getTime, 86400000L)
-    val d0 = rows.iterator.map(day).min
-    val batches = Seq(rows.filter(day(_) < d0 + 10),
-      rows.filter(r => day(r) >= d0 + 10 && day(r) < d0 + 20),
-      rows.filter(day(_) >= d0 + 20))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Streams.Ev]
-    val sink = "resample_stream_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Streams.resampleStream(ms.toDS())
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => ms.addData(b.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val sunk = s.table(sink).orderBy(col("user_id"), col("day"))
-    // detach the result from the per-run memory sink (repeat runs in
-    // one session must not accumulate catalog state)
-    val static = s.createDataFrame(
-      java.util.Arrays.asList(sunk.collect(): _*), sunk.schema)
-    s.catalog.dropTempView(sink)
-    static.orderBy(col("user_id"), col("day"))
+        col("event_type"), col("value")).as[Streams.Ev]
+    val day = floor(unix_seconds(col("ts")) / 86400L)
+    val d0 = feed.agg(min(day)).head().getLong(0)
+    val batches = Seq(feed.filter(day < d0 + 10),
+      feed.filter(day >= d0 + 10 && day < d0 + 20),
+      feed.filter(day >= d0 + 20))
+    Replay.emitted(s, batches, OutputMode.Append())(
+        Streams.resampleStream(_))
+      .drop("batch_id")
+      .orderBy(col("user_id"), col("day"))
   }
 
   val resampleStreamSql: String =

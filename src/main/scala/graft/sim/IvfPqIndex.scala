@@ -40,11 +40,7 @@ final case class IvfPqIndex(
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     Pq.adcSearch(model, cellCodes, queries, corpus, idCol, vecCol, k,
         rerankFactor) { (qs, codesSide) =>
-      // assignCells returns a scalar `cell` at nProbe=1, an array
-      // `cells` otherwise — both admitted by the require above
-      val assigned = Knn.assignCells(qs, "query_id", "qv", centroids, nProbe)
-      val probes = (if (nProbe == 1) assigned
-        else assigned.withColumn("cell", explode(col("cells"))))
+      val probes = Knn.assignCells(qs, "query_id", "qv", centroids, nProbe)
         .select(col("query_id"), col("qtab"), col("qn"), col("cell"))
       broadcast(probes).join(codesSide, "cell")
         .filter(col("query_id") =!= col("neighbor_id"))

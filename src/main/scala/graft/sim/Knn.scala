@@ -121,7 +121,9 @@ object Knn {
   }
 
   /** Attach the `nProbe` nearest cell ids (by cosine to each centroid)
-    * to every row — pure map via the native
+    * to every row as one `cell` column, one row per probed cell — the
+    * same shape at every nProbe (at 1 the row itself, no explode) — pure
+    * map via the native
     * [[graft.functions.NearestCells]] expression, whose centroid matrix
     * rides as ONE codegen reference object. The literal formulation
     * (array_sort over C `struct(-cosine(v, lit(c)), id)` entries) put
@@ -137,10 +139,8 @@ object Knn {
       graft.functions.NearestCells(
         org.apache.spark.sql.graft.ColumnBridge.expression(col(vecCol)),
         centroids.map(_._1), centroids.map(_._2), nProbe))
-    if (nProbe == 1)
-      df.withColumn("cell", probes.getItem(0))
-    else
-      df.withColumn("cells", probes)
+    df.withColumn("cell",
+      if (nProbe == 1) probes.getItem(0) else explode(probes))
   }
 
   /** All-pairs k-nearest-neighbor GRAPH over the corpus, IVF-cell
@@ -177,6 +177,5 @@ object Knn {
       nProbe: Int): DataFrame =
     assignCells(withNorm(queries, idCol, vecCol, "query_id", "qv", "qn"),
         "query_id", "qv", centroids, nProbe)
-      .select(col("query_id"), col("qv"), col("qn"),
-        explode(col("cells")).as("cell"))
+      .select(col("query_id"), col("qv"), col("qn"), col("cell"))
 }

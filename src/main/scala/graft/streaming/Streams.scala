@@ -10,12 +10,14 @@ import org.apache.spark.util.LongAccumulator
 
 /** Structured-Streaming re-expression of the reference's streaming-job
   * surface (SURVEY.md §2.7). The design point: every transform here is
-  * written once against DataFrame/Dataset and runs in BOTH batch and
-  * streaming mode — the batch run is what the DuckDB oracle checks, the
-  * streaming run is spec-tested with memory/file sources. That is the
-  * Spark-first answer to the reference's "a pipeline is a pair of
-  * executables": a pipeline is a plan, and the engine decides micro-batch
-  * vs batch execution.
+  * written once against DataFrame/Dataset. The stateless ones run in
+  * BOTH batch and streaming mode — the batch run is what the DuckDB
+  * oracle checks. The stateful operators behind stream_sessionize,
+  * stream_dedup, stream_latest and resample_stream run as streams:
+  * [[Replay]] feeds the table to them in event-time slices, and the
+  * oracle checks what they emit. That is the Spark-first answer to the
+  * reference's "a pipeline is a pair of executables": a pipeline is a
+  * plan, and the engine decides micro-batch vs batch execution.
   */
 object Streams {
 
@@ -37,7 +39,7 @@ object Streams {
     * epoch-aligned multiples of the slide, so the batch twin is pure
     * integer arithmetic any engine can reproduce. Works unchanged as a
     * streaming transform (watermark + append once the window closes);
-    * spec-gated on a MemoryStream in StreamSpec.
+    * spec-gated on a memory stream in StreamSpec.
     */
   def hoppingAgg(events: DataFrame, windowLen: String = "1 hour",
       slide: String = "15 minutes"): DataFrame =
@@ -124,7 +126,7 @@ object Streams {
 
   /** The one champion rule of [[latestStream]] and [[cdcApplyStream]]:
     * `e` is newer than the champion (`tsUs`, `eventId`) by (event time,
-    * event_id), [[latestBatch]]'s order.
+    * event_id), the stream_latest oracle's order.
     */
   private def newer(e: Ev, tsUs: Long, eventId: Long): Boolean = {
     val t = micros(e.ts)
@@ -404,9 +406,12 @@ object Streams {
 
   /** Streaming sessionization via flatMapGroupsWithState with event-time
     * timeout: state = the open session per user; a session closes (and
-    * is emitted) when the watermark passes last-event + gap. The same
-    * gap semantics as `sessionizeBatch` — specs assert the two agree on
-    * a replayed stream.
+    * is emitted) when the watermark passes last-event + gap. Gaps are
+    * second-truncated, `diff > gap` splits. stream_sessionize runs it
+    * through [[Replay]] under the lag/cumsum oracle SQL; input must
+    * reach it in event-time order across batches (within one batch the
+    * events are sorted), since an event behind the watermark is dropped
+    * by the engine.
     */
   def sessionizeStream(events: Dataset[Ev], gapMinutes: Int): Dataset[Session] = {
     val spark = events.sparkSession
@@ -477,29 +482,27 @@ object Streams {
 
   // ---- streaming dedup -------------------------------------------------
 
-  /** Batch/oracle form of first-occurrence dedup: the earliest event
-    * (by event time, ties by event_id) per key set. Deterministic — this
-    * is what the DuckDB oracle checks.
+  /** First-occurrence dedup per (user_id, event_type): emits each key's
+    * first event by (event time at µs, event_id), the stream_dedup
+    * oracle's `ORDER BY ts, event_id`, and nothing more for that key.
+    *
+    * Runs the [[inOrder]] fold and its delivery contract. State is the
+    * kept (µs, event_id) pair, one per key like [[latestStream]]'s
+    * champion, and never expires, so a key that recurs hours later in a
+    * later batch is still a duplicate. An event from a later batch that
+    * orders before the kept pair is late: the kept row is already
+    * emitted, so the event is dropped and counted in `droppedLate`.
     */
-  def firstEvents(events: DataFrame, keys: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("ts"), col("event_id"))
-    events.withColumn("graft_rn", row_number().over(w))
-      .filter(col("graft_rn") === 1)
-      .drop("graft_rn")
+  def dedupStream(events: Dataset[Ev],
+      droppedLate: Option[LongAccumulator]): Dataset[Ev] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    inOrder[(Long, String), Ev, (Long, Long), Ev](events,
+        e => (e.user_id, e.event_type), byMicros, null, droppedLate,
+        (kept, e) => Ordering[(Long, Long)].lt(byMicros(e), kept)) {
+      (_, kept, e, emit) => if (kept != null) kept else { emit(e); byMicros(e) }
+    }
   }
-
-  /** Streaming form: `dropDuplicates` on the keys with a watermark
-    * bounding state. Keeps the first ARRIVING record per key (arrival
-    * order, not event order — the streaming-native semantic), so specs
-    * assert key-set equality with `firstEvents`, not row equality.
-    * State per key lives until the watermark passes; without the
-    * watermark the state store grows forever.
-    */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-      watermarkDelay: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .dropDuplicates(keys)
 
   // ---- CDC-style latest-per-key upsert ---------------------------------
 
@@ -511,30 +514,13 @@ object Streams {
   final case class LatestState(tsUs: Long, eventId: Long, typ: String,
       value: Double)
 
-  /** Batch twin of the upsert materialization: the latest event per key
-    * by (event time, event_id) — the table a CDC consumer keeps. One
-    * row_number window on the key exchange; at 100 TB this compiles to
-    * WindowGroupLimit (rank pushed before the exchange), so each map
-    * task forwards one candidate row per key it sees, not its whole
-    * partition.
-    */
-  def latestBatch(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    events.withColumn("graft_rn", row_number().over(w))
-      .filter(col("graft_rn") === 1)
-      .select(col("user_id"), col("event_type").as("last_type"),
-        col("value").as("last_value"),
-        unix_timestamp(col("ts")).as("last_ts_s"))
-  }
-
   /** Streaming upsert via mapGroupsWithState (Update mode): state is one
     * champion record per key; each micro-batch folds its events in by
-    * the same (ts, event_id) order as `latestBatch` — a stale or
-    * out-of-order arrival can never regress the state — and re-emits the
-    * key's current latest. No timeout: latest-value state is the product
-    * (size = O(keys)), not a window to expire; specs assert parity with
-    * the batch twin across multi-batch replays.
+    * (ts, event_id) — a stale or out-of-order arrival can never regress
+    * the state — and re-emits the key's current latest. No timeout:
+    * latest-value state is the product (size = O(keys)), not a window
+    * to expire. stream_latest runs it through [[Replay]] and keeps each
+    * key's row from the highest batch id.
     */
   def latestStream(events: Dataset[Ev]): Dataset[Latest] = {
     val spark = events.sparkSession
@@ -892,8 +878,8 @@ object Streams {
     * deployment journals probe rows batchId-keyed (overwrite, the
     * takedownStream audit pattern) so a replayed batch's rows are
     * recognized by key, never double-reported. The registered face
-    * drives this under MemoryStream + processAllAvailable, where each
-    * batch runs exactly once.
+    * drives this through [[Replay]], where each batch runs exactly
+    * once.
     */
   def noveltyStream(crawl: DataFrame, indexDir: String,
       sourceCol: String, textCol: String, n: Int,

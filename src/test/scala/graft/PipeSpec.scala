@@ -14,6 +14,15 @@ class PipeSpec extends SparkSpec {
       Set(("a", "c"), ("x", "z")))
   }
 
+  test("Pipes.toLine keeps a NULL field's position: cut -f 1,2,3 reads it empty") {
+    import spark.implicits._
+    val df = Seq(("a", null: String, "c")).toDF("x", "y", "z")
+    val out = Pipes.chain(Pipes.toLine("\t", Seq("x", "y", "z")),
+      Pipes.cut("line", "\t", Seq(1, 2, 3)))(df).collect()
+    assert(out.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSeq === Seq(("a", "", "c")))
+  }
+
   test("Pipes.keyBy splits key fields and the remaining value") {
     import spark.implicits._
     val df = Seq("k1\tk2\tv1\tv2").toDF("line")

@@ -132,11 +132,6 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Expand"), "no distinct expansion")
   }
 
-  test("stream_latest rank compiles to WindowGroupLimit") {
-    val plan = planOf(StreamQueries.streamLatest(spark, sf))
-    assert(plan.contains("WindowGroupLimit"), plan.take(800))
-  }
-
   test("q_window rank filter compiles to WindowGroupLimit before the cumsum") {
     val plan = planOf(Relational.qWindow(spark, sf))
     assert(plan.contains("WindowGroupLimit"), plan.take(800))

@@ -92,6 +92,27 @@ class SimSpec extends SparkSpec {
       plan.take(600))
   }
 
+  test("IvfIndex.search and graphCells at nProbe 1: every neighbor " +
+      "shares the query's nearest cell") {
+    val e = graft.util.Tables(spark, sf).embeddings
+    val cents = graft.sim.Knn.fitCentroids(e, "vec_id", "embedding", 8, 2)
+    val cellOf = graft.sim.Knn.assignCells(e, "vec_id", "embedding", cents, 1)
+      .select(col("vec_id"), col("cell")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val viaSearch = graft.sim.IvfIndex.fitWith(e, "vec_id", "embedding", cents)
+      .search(e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 3,
+        nProbe = 1).collect()
+    val viaGraph = graft.sim.Knn.graphCells(e, "vec_id", "embedding", 3,
+      cents, nProbe = 1).collect()
+    Seq("search" -> viaSearch, "graphCells" -> viaGraph).foreach {
+      case (name, rows) =>
+        assert(rows.nonEmpty, name)
+        assert(rows.groupBy(_.getLong(0)).values.forall(_.length <= 3), name)
+        rows.foreach(r => assert(cellOf(r.getLong(0)) === cellOf(r.getLong(2)),
+          s"$name: ${r.getLong(0)} -> ${r.getLong(2)}"))
+    }
+  }
+
   test("LshBuckets matches the literal hyperplane formulation bit for bit") {
     // the native expression replaced a tree of 16×8 when(dot≥0) chains
     // against 64-element array literals; recall floors only stay
@@ -252,8 +273,7 @@ class SimSpec extends SparkSpec {
     val plan = planOf(fromDisk)
     assert(plan.contains("dynamicpruning") || plan.contains("DynamicPruning"),
       plan.take(600))
-    // nProbe=1 takes assignCells' scalar-cell shape — must run, not
-    // throw UNRESOLVED_COLUMN on `cells` (guard admits nProbe >= 1)
+    // nProbe=1 (the guard admits nProbe >= 1) must run
     val single = index.search(q, c, "vec_id", "embedding", 3,
       nProbe = 1, rerankFactor = 2).collect()
     assert(single.nonEmpty)

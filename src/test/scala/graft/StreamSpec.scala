@@ -559,6 +559,31 @@ class StreamSpec extends SparkSpec {
     assert(streamed.toSeq === batch.toSeq)
   }
 
+  test("stream_sessionize, stream_dedup and stream_latest each run at " +
+      "least 3 micro-batches") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val fed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) fed.incrementAndGet()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+        "stream_sessionize" -> StreamQueries.streamSessionize,
+        "stream_dedup" -> StreamQueries.streamDedup,
+        "stream_latest" -> StreamQueries.streamLatest).foreach {
+      case (name, face) =>
+        TestBus.drain(spark.sparkContext); fed.set(0)
+        assert(face(spark, sf).count() > 0, name)
+        TestBus.drain(spark.sparkContext)
+        assert(fed.get >= 3, s"$name ran ${fed.get} micro-batches with input")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("sessionizeBatch on corpus: durations non-negative, events conserved") {
     val out = StreamQueries.streamSessionize(spark, sf)
     val total = out.agg(sum("n_events")).head().getLong(0)
@@ -584,35 +609,56 @@ class StreamSpec extends SparkSpec {
     assert(streamed === Seq(("gold", 2L), ("silver", 1L)))
   }
 
-  test("dedupStream key set equals batch firstEvents key set") {
-    implicit val ctx = spark.sqlContext
+  /** The first event per (user_id, event_type) by (ts, event_id): the
+    * stream_dedup oracle's rule, computed on the test side.
+    */
+  private def firstPerKey(events: Seq[Ev]): Set[Ev] =
+    events.groupBy(e => (e.user_id, e.event_type)).values
+      .map(_.minBy(e => (e.ts.getTime, e.event_id))).toSet
+
+  private def replayDedup(slices: Seq[Seq[Ev]],
+      late: Option[org.apache.spark.util.LongAccumulator]): Seq[Ev] = {
     import spark.implicits._
-    val events = Seq(
-      ev(1, 0, 1), ev(2, 5, 1), ev(3, 1, 1, "view"),
-      ev(4, 0, 2), ev(5, 9, 2), ev(6, 3, 2, "view"))
-    val ms = MemoryStream[Ev]
-    ms.addData(events)
-    val q = Streams.dedupStream(ms.toDS().toDF(), Seq("user_id", "event_type"))
-      .select("user_id", "event_type")
-      .writeStream.format("memory").queryName("ddp")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamedKeys = spark.table("ddp").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    val batchKeys = Streams.firstEvents(events.toDF(), Seq("user_id", "event_type"))
-      .collect().map(r => (r.getLong(2), r.getString(3))).toSet
-    assert(streamedKeys === Set((1L, "click"), (1L, "view"),
-      (2L, "click"), (2L, "view")))
-    assert(streamedKeys === batchKeys)
+    graft.streaming.Replay.emitted(spark, slices.map(_.toDS()),
+        org.apache.spark.sql.streaming.OutputMode.Append())(
+        Streams.dedupStream(_, late))
+      .drop("batch_id").as[Ev].collect().toSeq
   }
 
-  test("firstEvents keeps the earliest event per key deterministically") {
-    import spark.implicits._
-    val events = Seq(ev(10, 5, 7), ev(11, 2, 7), ev(12, 2, 7, "view"))
-    val out = Streams.firstEvents(events.toDF(), Seq("user_id", "event_type"))
-      .collect().map(r => (r.getString(3), r.getLong(0))).toMap
-    // within user 7/click: minute 2 beats minute 5
-    assert(out === Map("click" -> 11L, "view" -> 12L))
+  test("dedupStream: one row per key, the first by (ts, event_id)") {
+    // arrival order differs from event order; user 7/click has a later
+    // event arriving first, and a same-minute tie broken by event_id
+    val events = Seq(
+      ev(1, 0, 1), ev(2, 5, 1), ev(3, 1, 1, "view"),
+      ev(4, 0, 2), ev(5, 9, 2), ev(6, 3, 2, "view"),
+      ev(10, 5, 7), ev(12, 2, 7), ev(11, 2, 7), ev(13, 2, 7, "view"))
+    val out = replayDedup(Seq(events), None)
+    assert(out.size === 6)
+    assert(out.toSet === firstPerKey(events))
+    assert(out.filter(_.user_id == 7L).map(_.event_id).toSet === Set(11L, 13L))
+  }
+
+  test("dedupStream: a key recurring over an hour later, in a later " +
+      "batch, is emitted once") {
+    val b1 = Seq(ev(1, 0, 1), ev(2, 0, 2, "view"))
+    // 3 h later: both keys recur (a watermark-evicted dropDuplicates
+    // would emit them again), one new key appears
+    val b2 = Seq(ev(3, 180, 1), ev(4, 181, 2, "view"), ev(5, 182, 3))
+    val out = replayDedup(Seq(b1, b2), None)
+    assert(out.size === 3, out)
+    assert(out.toSet === firstPerKey(b1 ++ b2))
+  }
+
+  test("dedupStream: a later batch's earlier event for a kept key is " +
+      "dropped and counted in droppedLate") {
+    val late = spark.sparkContext.longAccumulator("dedup_late")
+    val b1 = Seq(ev(1, 10, 1), ev(2, 10, 2))
+    // e3 orders before user 1's kept (minute 10) event; e4 is a plain
+    // later duplicate; e5 is a new key
+    val b2 = Seq(ev(3, 5, 1), ev(4, 20, 2), ev(5, 1, 3))
+    val out = replayDedup(Seq(b1, b2), Some(late))
+    assert(out.map(_.event_id).toSet === Set(1L, 2L, 5L))
+    assert(late.value === 1L)
   }
 
   test("session_window: streaming (append + watermark) equals batch grouping") {
@@ -904,8 +950,13 @@ class StreamSpec extends SparkSpec {
     val bounds = e.agg(min(unix_timestamp(col("ts"))).as("lo"),
       max(unix_timestamp(col("ts"))).as("hi")).collect()(0)
     val mid = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    val base = Streams.latestBatch(e.filter(unix_timestamp(col("ts")) <= mid))
-      .select(col("user_id"), col("last_value").as("base_value"))
+    // the materialized table: latest value per user up to mid
+    val base = e.filter(unix_timestamp(col("ts")) <= mid)
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+          .orderBy(col("ts").desc, col("event_id").desc)))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("value").as("base_value"))
     val changes = e.filter(unix_timestamp(col("ts")) > mid)
       .as[Ev].collect().toSeq.sortBy(c => (c.ts.getTime, c.event_id))
     val (half1, half2) = changes.splitAt(changes.size / 2)
@@ -970,11 +1021,9 @@ class StreamSpec extends SparkSpec {
     assert(emitted === Set(
       (1L, "click", 1.0, t(10)), (1L, "purchase", 9.0, t(20)),
       (2L, "error", 0.5, t(1))))
-    // final state equals the batch twin over the full replay
-    val batch = Streams.latestBatch((b1 ++ b2).toDF()).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    assert(batch === Set((1L, "purchase", 9.0, t(20)), (2L, "error", 0.5, t(1))))
+    // the last emission per key is the latest event over the full replay
+    val last = emitted.groupBy(_._1).values.map(_.maxBy(_._4)).toSet
+    assert(last === Set((1L, "purchase", 9.0, t(20)), (2L, "error", 0.5, t(1))))
   }
 
   test("knnStream: two-batch streaming search equals one batch search " +

@@ -609,10 +609,11 @@ class StreamSpec extends SparkSpec {
     assert(streamed === Seq(("gold", 2L), ("silver", 1L)))
   }
 
-  /** The first event per (user_id, event_type) by (ts, event_id): the
-    * stream_dedup oracle's rule, computed on the test side.
+  /** The batch first events: the first event per (user_id, event_type)
+    * by (ts, event_id), the stream_dedup oracle's rule, computed on the
+    * test side.
     */
-  private def firstPerKey(events: Seq[Ev]): Set[Ev] =
+  private def firstEvents(events: Seq[Ev]): Set[Ev] =
     events.groupBy(e => (e.user_id, e.event_type)).values
       .map(_.minBy(e => (e.ts.getTime, e.event_id))).toSet
 
@@ -625,17 +626,32 @@ class StreamSpec extends SparkSpec {
       .drop("batch_id").as[Ev].collect().toSeq
   }
 
-  test("dedupStream: one row per key, the first by (ts, event_id)") {
-    // arrival order differs from event order; user 7/click has a later
-    // event arriving first, and a same-minute tie broken by event_id
+  test("dedupStream key set equals batch firstEvents key set") {
+    // arrival order differs from event order within each key
     val events = Seq(
       ev(1, 0, 1), ev(2, 5, 1), ev(3, 1, 1, "view"),
-      ev(4, 0, 2), ev(5, 9, 2), ev(6, 3, 2, "view"),
+      ev(4, 0, 2), ev(5, 9, 2), ev(6, 3, 2, "view"))
+    val out = replayDedup(Seq(events), None)
+    val streamedKeys = out.map(e => (e.user_id, e.event_type)).toSet
+    assert(streamedKeys === Set((1L, "click"), (1L, "view"),
+      (2L, "click"), (2L, "view")))
+    assert(streamedKeys === firstEvents(events).map(e => (e.user_id, e.event_type)))
+    // one row per key, and that row is the batch first event
+    assert(out.size === 4)
+    assert(out.toSet === firstEvents(events))
+  }
+
+  test("firstEvents keeps the earliest event per key deterministically") {
+    // user 7/click: a later event arrives first, and a same-minute tie
+    // is broken by event_id
+    val events = Seq(
       ev(10, 5, 7), ev(12, 2, 7), ev(11, 2, 7), ev(13, 2, 7, "view"))
     val out = replayDedup(Seq(events), None)
-    assert(out.size === 6)
-    assert(out.toSet === firstPerKey(events))
-    assert(out.filter(_.user_id == 7L).map(_.event_id).toSet === Set(11L, 13L))
+    // within user 7/click: minute 2 beats minute 5, event 11 beats 12
+    assert(out.map(e => (e.event_type, e.event_id)).toMap ===
+      Map("click" -> 11L, "view" -> 13L))
+    assert(out.size === 2)
+    assert(out.toSet === firstEvents(events))
   }
 
   test("dedupStream: a key recurring over an hour later, in a later " +
@@ -646,7 +662,7 @@ class StreamSpec extends SparkSpec {
     val b2 = Seq(ev(3, 180, 1), ev(4, 181, 2, "view"), ev(5, 182, 3))
     val out = replayDedup(Seq(b1, b2), None)
     assert(out.size === 3, out)
-    assert(out.toSet === firstPerKey(b1 ++ b2))
+    assert(out.toSet === firstEvents(b1 ++ b2))
   }
 
   test("dedupStream: a later batch's earlier event for a kept key is " +
